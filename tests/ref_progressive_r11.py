@@ -7,15 +7,14 @@ decoder."""
 
 import numpy as np
 
+from ref_bitio import _BitReader, _read_huff_sym
 from worlddatapipeline_spark.operators.multimodal import (
-    _BitReader,
     _jpeg_extend,
     _jpeg_geometry,
     _parse_dht,
     _parse_dqt,
     _parse_sof,
     _planes_to_pixels,
-    _read_huff_sym,
     _true_block_grid,
     _dct_basis,
     _JPEG_ZIGZAG,

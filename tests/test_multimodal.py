@@ -8,6 +8,7 @@ asserted here.
 import pytest
 from pyspark.sql import functions as F
 
+from ref_bitio import _BitReader, _BitWriter, _read_huff_sym
 from worlddatapipeline_spark.operators import multimodal as mm
 
 
@@ -1894,7 +1895,7 @@ def test_pack_bits_np_matches_bitwriter():
         vals = np.array(
             [int(rng.randint(0, 1 << b)) for b in nbits], dtype=np.int64
         )
-        bw = mm._BitWriter()
+        bw = _BitWriter()
         for v, b in zip(vals.tolist(), nbits.tolist()):
             bw.write(v, b)
         assert mm._pack_bits_np(vals, nbits.astype(np.int64)) == bw.flush()
@@ -1914,7 +1915,7 @@ def test_fastbits_lut_walk_matches_bitreader():
         amps = np.array(
             [int(rng.randint(0, 1 << c)) if c else 0 for c in cats]
         )
-        bw = mm._BitWriter()
+        bw = _BitWriter()
         for c, a in zip(cats.tolist(), amps.tolist()):
             code, length = dc[int(c)]
             bw.write(code, length)
@@ -1922,10 +1923,10 @@ def test_fastbits_lut_walk_matches_bitreader():
                 bw.write(int(a), int(c))
         stream = b"\x00\x00" + bw.flush() + b"\xff\xd9"
         # reference walk
-        br = mm._BitReader(stream, 2)
+        br = _BitReader(stream, 2)
         ref = []
         for c in cats.tolist():
-            s = mm._read_huff_sym(br, dec_tab)
+            s = _read_huff_sym(br, dec_tab)
             ref.append((s, br.bits(s) if s else 0))
         # fast walk
         fb = mm._FastBits(stream, 2)
@@ -1964,7 +1965,7 @@ def test_lossless_scan_matches_per_sample_reference():
         for y in range(h):
             for x in range(w):
                 for ci in range(n_comp):
-                    size = mm._read_huff_sym(br, tabs[ci])
+                    size = _read_huff_sym(br, tabs[ci])
                     if size == 16:
                         d = 32768
                     else:
@@ -2004,7 +2005,7 @@ def test_lossless_scan_matches_per_sample_reference():
         # random residual stream in the DC-category convention, with
         # large magnitudes so the mod-2^16 wrap genuinely fires
         d = rng.randint(-2047, 2048, size=h * w * n_comp)
-        bw = mm._BitWriter()
+        bw = _BitWriter()
         for v in d.tolist():
             size, amp = mm._jpeg_magnitude(int(v))
             code, length = dc[size]
@@ -2014,13 +2015,14 @@ def test_lossless_scan_matches_per_sample_reference():
         stream = bw.flush() + b"\xff\xd9"
         tabs = [dec_tab] * n_comp
         ref = reference_scan(
-            mm._BitReader(stream, 0), h, w, tabs, predictor, refs=refs
+            _BitReader(stream, 0), h, w, tabs, predictor, refs=refs
         )
-        br = mm._BitReader(stream, 0)
-        got = mm._lossless_entropy_scan(br, h, w, tabs, predictor, refs=refs)
+        got, end_pos = mm._lossless_entropy_scan(
+            stream, 0, h, w, tabs, predictor, refs=refs
+        )
         for a, b in zip(ref, got):
             assert np.array_equal(a, b), (predictor, h, w, n_comp)
-        assert br.pos == len(stream) - 2
+        assert end_pos == len(stream) - 2
 
 
 def test_jpeg_entropy_encode_matches_per_block_reference():
@@ -2070,7 +2072,7 @@ def test_jpeg_entropy_encode_matches_per_block_reference():
         h0, w0 = planes[0].shape
         hs0, vs0 = sampling[0]
         mcus_y, mcus_x = h0 // (8 * vs0), w0 // (8 * hs0)
-        bw = mm._BitWriter()
+        bw = _BitWriter()
         preds = [0] * len(planes)
         mcu_idx = 0
         for my in range(mcus_y):
@@ -2150,7 +2152,7 @@ def test_pack_bits_np_chunked_matches_single_pass(monkeypatch):
         vals = np.array(
             [int(rng.randint(0, 1 << b)) for b in nbits], dtype=np.int64
         )
-        bw = mm._BitWriter()
+        bw = _BitWriter()
         for v, b in zip(vals.tolist(), nbits.tolist()):
             bw.write(v, b)
         assert mm._pack_bits_np(vals, nbits.astype(np.int64)) == bw.flush()
@@ -2243,7 +2245,7 @@ def test_buffered_bitwriter_matches_bitwriter():
 
     rng = np.random.RandomState(5151)
     for _ in range(50):
-        ref, got = mm._BitWriter(), mm._BufferedBitWriter()
+        ref, got = _BitWriter(), mm._BufferedBitWriter()
         m = 0
         for _op in range(int(rng.randint(0, 200))):
             if rng.randint(0, 12) == 0:
@@ -2256,3 +2258,80 @@ def test_buffered_bitwriter_matches_bitwriter():
                 ref.write(v, length)
                 got.write(v, length)
         assert got.flush() == ref.flush()
+
+
+# Output schema of every codec audit: the registry's *_contract queries and
+# their DuckDB oracles depend on these column names and types.
+AUDIT_SCHEMAS = {
+    "jpeg_roundtrip_audit": "doc_id long, n_pixels long, is_jfif boolean, "
+    "max_err_le_3 boolean",
+    "jpeg420_roundtrip_audit": "doc_id long, n_pixels long, is_jfif boolean, "
+    "sof_is_420 boolean, max_err_le_3 boolean",
+    "jpeg_restart_roundtrip_audit": "doc_id long, n_pixels long, "
+    "is_jfif boolean, has_restarts boolean, max_err_le_3 boolean",
+    "jpeg_progressive_roundtrip_audit": "doc_id long, n_pixels long, "
+    "is_sof2 boolean, matches_sequential boolean, max_err_le_3 boolean",
+    "jpeg_lossless_roundtrip_audit": "doc_id long, n_pixels long, "
+    "is_sof3 boolean, gray_exact_all_predictors boolean, rgb_exact boolean",
+    "jpeg_hierarchical_roundtrip_audit": "doc_id long, n_pixels long, "
+    "is_dhp boolean, gray_exact_all_levels boolean, rgb_exact boolean",
+    "png_palette_roundtrip_audit": "doc_id long, n_pixels long, "
+    "palette_adam7_exact boolean",
+    "png_full_surface_roundtrip_audit": "doc_id long, n_pixels long, "
+    "full_surface_exact boolean",
+    "bmp_surface_roundtrip_audit": "doc_id long, n_pixels long, "
+    "bmp_surface_exact boolean",
+    "wav_pcm_surface_roundtrip_audit": "doc_id long, n_samples long, "
+    "pcm_surface_exact boolean",
+}
+
+
+@pytest.fixture(scope="module")
+def audit_docs(spark):
+    """Three docs at or above the 256-byte audit size (one exactly 256,
+    one multi-byte utf-8), one a byte short, one tiny, one NULL."""
+    text = "".join(chr(32 + (i * 37) % 95) for i in range(400))
+    return spark.createDataFrame(
+        [
+            (1, text),
+            (2, "é" * 150),  # 300 utf-8 bytes, sliced mid-character
+            (3, "z" * 256),
+            (4, "y" * 255),
+            (5, "short"),
+            (6, None),
+        ],
+        "doc_id long, text string",
+    )
+
+
+@pytest.mark.parametrize("name", sorted(AUDIT_SCHEMAS))
+def test_roundtrip_audit_harness(spark, audit_docs, name):
+    """Every codec audit keeps its output schema, drops rows shorter than
+    its 256-byte input, maps empty input to empty output, and reports
+    every property True on well-formed docs."""
+    audit = getattr(mm, name)
+    out = audit(audit_docs, "doc_id", "text")
+    assert out.schema == spark.createDataFrame([], AUDIT_SCHEMAS[name]).schema
+    rows = sorted(out.collect())
+    assert [r[0] for r in rows] == [1, 2, 3]
+    for r in rows:
+        assert r[1] == 256
+        assert all(v is True for v in r[2:]), r
+    assert audit(audit_docs.limit(0), "doc_id", "text").collect() == []
+
+
+def test_jpeg_quant_rejects_out_of_range_entries():
+    """A zero, sub-1 fractional or above-16-bit quantization entry used to
+    encode a stream the decoder refuses; the encoders now reject it."""
+    import numpy as np
+
+    px = np.arange(256, dtype=np.uint8).reshape(16, 16)
+    for bad in (0, 0.4, -3, 65536):
+        q = np.ones(64)
+        q[5] = bad
+        with pytest.raises(ValueError, match="1..65535"):
+            mm.encode_jpeg_gray8(px, quant=q)
+        with pytest.raises(ValueError, match="1..65535"):
+            mm.encode_jpeg_progressive(px, quant=q)
+    q = np.full(64, 65535)
+    assert mm._decode_jpeg(mm.encode_jpeg_gray8(px, quant=q)).shape == (256,)

@@ -145,3 +145,57 @@ def test_equi_depth_bins_router_branches_identical(spark, monkeypatch):
     assert exact == routed
     plan = routed_df._jdf.queryExecution().executedPlan().toString()
     assert "percentile" not in plan.lower()
+
+
+def test_supplier_volume_half_cent_tie_matches_oracle(spark, tmp_path):
+    """A group whose exact DECIMAL revenue ends in 5 at the third decimal
+    must round the same way on Spark and in the DuckDB oracle.  Rounding
+    the DECIMAL before the cast to DOUBLE makes it an exact half-up tie on
+    both sides; rounding the DOUBLE let the engines disagree by a cent."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from worlddatapipeline_spark import queries_ext as qx
+
+    tables = {
+        "region": {"r_regionkey": pa.array([0], pa.int32()),
+                   "r_name": ["EUROPE"]},
+        "nation": {"n_nationkey": pa.array([0, 1], pa.int32()),
+                   "n_name": ["NATION_0", "NATION_1"],
+                   "n_regionkey": pa.array([0, 0], pa.int32())},
+        "supplier": {"s_suppkey": pa.array([1, 2], pa.int64()),
+                     "s_name": ["s1", "s2"],
+                     "s_nationkey": pa.array([0, 1], pa.int32()),
+                     "s_acctbal": [0.0, 0.0]},
+        "customer": {"c_custkey": pa.array([1, 2], pa.int64()),
+                     "c_name": ["c1", "c2"],
+                     "c_nationkey": pa.array([0, 1], pa.int32()),
+                     "c_acctbal": [0.0, 0.0],
+                     "c_mktsegment": ["X", "X"]},
+        "orders": {"o_orderkey": pa.array([1, 2], pa.int64()),
+                   "o_custkey": pa.array([1, 2], pa.int64())},
+        # NATION_0: exactly 1.005 in DECIMAL(28,8); NATION_1: 1.25 * 0.9
+        "lineitem": {"l_orderkey": pa.array([1, 2], pa.int64()),
+                     "l_suppkey": pa.array([1, 2], pa.int64()),
+                     "l_extendedprice": [1.005, 1.25],
+                     "l_discount": [0.0, 0.1]},
+    }
+    for name, cols in tables.items():
+        pq.write_table(pa.table(cols), str(tmp_path / f"{name}.parquet"))
+
+    got = {
+        r["n_name"]: (r["revenue"], r["n_items"])
+        for r in qx.q_supplier_volume(spark, str(tmp_path)).collect()
+    }
+    con = duckdb.connect()
+    for name in tables:
+        con.execute(
+            f"CREATE VIEW {name} AS SELECT * FROM '{tmp_path}/{name}.parquet'"
+        )
+    want = {
+        n: (rev, cnt)
+        for _, n, rev, cnt in con.execute(qx.SQL_SUPPLIER_VOLUME).fetchall()
+    }
+    assert got == want
+    assert got["NATION_0"] == (1.01, 1)

@@ -102,3 +102,29 @@ def test_exact_percentiles_distributed_matches_percentile_bitwise(spark):
     for g, expected in ref.items():
         for p, e in zip(ps, expected):
             assert got[g][p] == e, (g, p, got[g][p], e)
+
+
+def test_exact_percentiles_distributed_null_group_key(spark):
+    """A NULL group key is a group of its own for F.percentile; the
+    distributed form must return the same percentiles for it."""
+    from worlddatapipeline_spark.operators.aggregates import (
+        exact_percentiles_distributed,
+    )
+
+    rows = [(None, float(v)) for v in (3, 1, 4, 1, 5, 9, 2, 6)] + [
+        ("a", float(v)) for v in (2, 7, 1, 8, 2, 8)
+    ]
+    df = spark.createDataFrame(rows, "g string, v double")
+    ps = [0.1, 0.5, 0.95]
+    ref = {
+        r["g"]: list(r["ref"])
+        for r in df.groupBy("g")
+        .agg(F.percentile("v", F.array(*[F.lit(p) for p in ps])).alias("ref"))
+        .collect()
+    }
+    got: dict = {}
+    for r in exact_percentiles_distributed(df, "v", ps, ["g"]).collect():
+        got.setdefault(r["g"], {})[r["p"]] = r["pct"]
+    assert set(got) == {None, "a"}
+    for g, expected in ref.items():
+        assert [got[g][p] for p in ps] == expected, g

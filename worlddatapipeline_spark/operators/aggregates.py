@@ -344,9 +344,16 @@ def exact_percentiles_distributed(
         offs, parts.select("_pid", *g).schema.add("_off", "long")
     )
     w = Window.partitionBy("_pid", *g).orderBy("_v")
+    # group keys join null-safe: a NULL key is a group of its own, as in
+    # percentile's groupBy
+    cl = parts.withColumn("_cl", F.sum("_c").over(w))
     cumf = (
-        parts.withColumn("_cl", F.sum("_c").over(w))
-        .join(F.broadcast(off_df), ["_pid", *g])
+        cl.join(
+            F.broadcast(off_df),
+            [cl["_pid"] == off_df["_pid"]]
+            + [cl[c].eqNullSafe(off_df[c]) for c in g],
+        )
+        .select(cl["*"], off_df["_off"])
         .withColumn("_cum", F.col("_cl") + F.col("_off"))
         .withColumn("_prev", F.col("_cum") - F.col("_c"))
     )
@@ -365,7 +372,7 @@ def exact_percentiles_distributed(
         parts.select(*g).schema.add("_p", "double").add("_pos", "double")
         .add("_lo", "long").add("_hi", "long"),
     )
-    cond = [cumf[c] == ranks[c] for c in g] + [
+    cond = [cumf[c].eqNullSafe(ranks[c]) for c in g] + [
         (
             (ranks["_lo"] >= cumf["_prev"]) & (ranks["_lo"] < cumf["_cum"])
         )

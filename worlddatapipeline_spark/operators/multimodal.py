@@ -63,7 +63,7 @@ Spark-side concerns (all real, all tested):
 from __future__ import annotations
 
 import functools
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -930,39 +930,6 @@ def _min_bits_per_lossless_sample(
     )
 
 
-class _BitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            byte = (self.acc >> (self.nbits - 8)) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:  # byte stuffing
-                self.out.append(0x00)
-            self.nbits -= 8
-        self.acc &= (1 << self.nbits) - 1
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.write((1 << pad) - 1, pad)  # pad with 1-bits per spec
-        return bytes(self.out)
-
-    def restart(self, m: int) -> None:
-        """Byte-align with 1-bit padding (through ``write`` so a 0xFF pad
-        byte still gets its stuffed 0x00), then emit RSTm.  The marker
-        itself is raw stream structure, never stuffed (T.81 §B.2.1)."""
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.write((1 << pad) - 1, pad)
-        self.out += bytes([0xFF, 0xD0 + (m & 7)])
-
-
 def _jpeg_magnitude(v: int) -> tuple[int, int]:
     """(size, amplitude bits): negatives as one's-complement per F.1.2.1."""
     if v == 0:
@@ -986,10 +953,11 @@ _PACK_CHUNK_SYMS = 1 << 20  # symbols per packing slice (transient-memory cap)
 
 
 def _pack_bits_np(vals: np.ndarray, nbits: np.ndarray) -> bytes:
-    """Bit-identical vectorized form of a ``_BitWriter`` stream: each
-    value's low ``nbits`` bits MSB-first in order, flush-padded with
-    1-bits to a byte boundary, every 0xFF data byte stuffed with 0x00
-    (T.81 B.1.1.5) — numpy passes instead of a per-symbol loop.
+    """Bit-identical vectorized form of a reference ``_BitWriter`` stream
+    (``tests/ref_bitio.py``): each value's low ``nbits`` bits MSB-first in
+    order, flush-padded with 1-bits to a byte boundary, every 0xFF data
+    byte stuffed with 0x00 (T.81 B.1.1.5) — numpy passes instead of a
+    per-symbol loop.
 
     Packed in ``_PACK_CHUNK_SYMS``-symbol slices with a sub-byte bit
     remainder carried between them: the single-pass form materialized
@@ -1038,8 +1006,8 @@ def _lossless_scan_bits(
 ) -> bytes:
     """Entropy-coded bytes of one interleaved 1×1-sampling lossless scan
     (category code + amplitude per sample, component-interleaved in
-    row-major order) — bit-identical to the per-sample ``_BitWriter``
-    loop, vectorized (§4.2)."""
+    row-major order) — bit-identical to a per-sample loop over the
+    reference ``_BitWriter`` (``tests/ref_bitio.py``), vectorized (§4.2)."""
     d = (
         np.stack([df.reshape(-1) for df in diffs], axis=1)
         .reshape(-1)
@@ -1085,13 +1053,14 @@ _JPEG_AC_ARRS_K = _codes_as_arrays(_JPEG_AC_CODES_K, 255)
 
 
 class _BufferedBitWriter:
-    """Drop-in ``_BitWriter`` replacement that records (value, nbits)
-    pairs and packs each segment through :func:`_pack_bits_np` at
-    flush/restart — bit-identical by construction (same MSB-first order,
+    """Buffered bit writer that records (value, nbits) pairs and packs
+    each segment through :func:`_pack_bits_np` at flush/restart —
+    bit-identical by construction (same MSB-first order,
     1-bit flush padding, 0xFF00 stuffing, raw unstuffed RSTm bytes), at
     a fraction of the per-call cost (§4.2: the per-symbol ``write`` loop
-    dominated the progressive encoder).  Pinned against ``_BitWriter``
-    by a differential test over random write/restart sequences."""
+    dominated the progressive encoder).  Pinned against the reference
+    ``_BitWriter`` in ``tests/ref_bitio.py`` by a differential test over
+    random write/restart sequences."""
 
     __slots__ = ("_vals", "_nbits", "_chunks")
 
@@ -1156,7 +1125,7 @@ def _jpeg_entropy_encode(
     n_per_mcu = sum(hs * vs for hs, vs in sampling)
     nb = mcus_y * mcus_x * n_per_mcu
     if nb == 0:
-        return _BitWriter().flush()
+        return b""
     zz = np.empty((nb, 64), dtype=np.int64)
     comp = np.empty(nb, dtype=np.int64)
     i = 0
@@ -1176,7 +1145,7 @@ def _jpeg_entropy_encode(
                         i += 1
 
     # Phase 2 — vectorized huffman symbol generation (§4.2: the per-symbol
-    # _BitWriter loop was >70 % of encode time).  Pure integer work, so the
+    # bit-writer loop was >70 % of encode time).  Pure integer work, so the
     # stream is bit-identical by construction; a differential test pins it
     # against the verbatim pre-r12 per-block loop.
     if restart_interval:
@@ -1217,7 +1186,8 @@ def _jpeg_entropy_encode(
     ac_size, ac_amp = _jpeg_magnitude_arrays(acs[bi, pj])
     nzrl = run >> 4
     # (run & 15) << 4 | size is always <= 255 (size <= 17 for int64 input
-    # sets only low bits 0-4), so the 0..255 table covers every symbol
+    # sets only low bits 0-4), so the 0..255 table covers every symbol;
+    # _jpeg_quant's entries >= 1 keep size <= 11, so no symbol aliases
     sym = ((run & 15) << 4) | ac_size
     acc_tab, acl_tab = _JPEG_AC_ARRS_K
     ac_lens = acl_tab[sym]
@@ -1274,8 +1244,9 @@ def _jpeg_entropy_encode(
     vals, nbits, item_seg = vals[live], nbits[live], item_seg[live]
 
     # Per restart segment: pack (flush-padded with 1-bits, 0xFF00-stuffed —
-    # exactly _BitWriter.restart/flush semantics), RSTm (m cycling 0-7)
-    # between segments, raw marker bytes never stuffed (T.81 §B.2.1).
+    # the restart/flush semantics of tests/ref_bitio.py's _BitWriter), RSTm
+    # (m cycling 0-7) between segments, raw marker bytes never stuffed
+    # (T.81 §B.2.1).
     n_seg = int(seg_id[-1]) + 1
     out = bytearray()
     for s in range(n_seg):
@@ -1347,11 +1318,17 @@ def _jpeg_container(h: int, w: int, q: np.ndarray, n_comp: int,
 
 
 def _jpeg_quant(quant: np.ndarray | None) -> np.ndarray:
-    return (
-        np.ones(64, dtype=np.int32)
-        if quant is None
-        else np.asarray(quant, dtype=np.int32).reshape(64)
-    )
+    """The 64-entry quantization table (all ones by default).  Entries
+    must lie in 1..65535, the range a DQT segment can carry: a 0 divides
+    by zero and a fraction below 1 truncates to 0, and either would emit a
+    stream the decoder refuses.  With every entry >= 1, 8-bit planes keep
+    |coefficient| <= 1024, so every huffman category fits Annex K."""
+    if quant is None:
+        return np.ones(64, dtype=np.int32)
+    q = np.asarray(quant).reshape(64)
+    if not ((q >= 1) & (q <= 65535)).all():
+        raise ValueError("JPEG quantization entries must lie in 1..65535")
+    return q.astype(np.int32)
 
 
 def _jpeg_prepare_planes(
@@ -1509,19 +1486,6 @@ def _jpeg_geometry(
     return hmax, vmax, mcus_x, mcus_y, n_blocks
 
 
-def _read_huff_sym(br: "_BitReader", tab: dict[tuple[int, int], int]) -> int:
-    """Read one canonical-huffman symbol (≤16 bits) — the entropy-decode
-    primitive shared by the sequential and progressive scan loops."""
-    code, length = 0, 0
-    while length < 16:
-        code = (code << 1) | br.bit()
-        length += 1
-        sym = tab.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("bad huffman code")
-
-
 def encode_jpeg_gray8(
     pixels: np.ndarray,
     quant: np.ndarray | None = None,
@@ -1581,64 +1545,6 @@ def encode_jpeg_rgb24(
     )
 
 
-class _BitReader:
-    """Entropy-segment bit reader with 0xFF00 unstuffing; raises on any
-    embedded marker mid-symbol.  Restart markers are consumed only at the
-    explicit ``restart_sync`` call sites the MCU loop schedules from the
-    DRI interval — an RSTn reached any other way is stream corruption."""
-
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data = data
-        self.pos = pos
-        self.acc = 0
-        self.nbits = 0
-
-    def _fill(self) -> None:
-        b = self.data[self.pos]
-        self.pos += 1
-        if b == 0xFF:
-            nxt = self.data[self.pos]
-            if nxt == 0x00:
-                self.pos += 1
-            else:
-                raise ValueError(f"unexpected marker FF{nxt:02X} in scan")
-        # only ever called with the accumulator drained (nbits == 0) —
-        # REPLACE it rather than shift-or, or acc grows into an unbounded
-        # bigint and decode goes quadratic in scan length (review catch r6)
-        self.acc = b
-        self.nbits = 8
-
-    def bit(self) -> int:
-        if self.nbits == 0:
-            self._fill()
-        self.nbits -= 1
-        return (self.acc >> self.nbits) & 1
-
-    def bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.bit()
-        return v
-
-    def restart_sync(self) -> int:
-        """Discard the pad bits of the current byte and consume one RSTm
-        marker; returns m (0–7) for the caller's cycle check.  After the
-        discard, ``pos`` is always AT the marker: a partially-read pad
-        byte lives in the accumulator (``_fill`` already consumed its
-        stuffed 0x00 if it was 0xFF), and an exactly-byte-aligned MCU
-        leaves no pad byte at all (T.81 §B.2.1 fill-bit rule)."""
-        self.nbits = 0
-        if (
-            self.pos + 1 >= len(self.data)
-            or self.data[self.pos] != 0xFF
-            or not (0xD0 <= self.data[self.pos + 1] <= 0xD7)
-        ):
-            raise ValueError("missing JPEG restart marker")
-        m = self.data[self.pos + 1] & 0x07
-        self.pos += 2
-        return m
-
-
 def _jpeg_extend(amp: int, size: int) -> int:
     if size == 0:
         return 0
@@ -1655,8 +1561,9 @@ def _huff_lut(
     sym}: ``(syms, lens, L)`` where indexing with the next ``L`` stream
     bits yields the symbol and its true length in one lookup (length 0 =
     invalid prefix).  Prefix-freeness makes this exactly equivalent to
-    the bit-at-a-time :func:`_read_huff_sym` walk.  Cached — the Annex-K
-    tables recur on every decode call (§4.5)."""
+    the bit-at-a-time ``_read_huff_sym`` walk kept as the reference in
+    ``tests/ref_bitio.py``.  Cached — the Annex-K tables recur on every
+    decode call (§4.5)."""
     key = tuple(sorted(tab.items()))
     hit = _HUFF_LUT_CACHE.get(key)
     if hit is not None:
@@ -1681,15 +1588,16 @@ class _FastBits:
     preprocessed in numpy: the segment runs from ``start`` to the first
     0xFF that is not a stuffed 0xFF00 pair (T.81 B.1.1.2 fill bytes —
     0xFF before another 0xFF — are NOT skipped: they terminate the
-    segment like any marker prefix, exactly as the old byte-at-a-time
-    reader rejected them; this repo's encoders never emit them); 0xFF00
-    pairs are unstuffed up front.  ``words`` holds the
-    32-bit big-endian window starting at every unstuffed byte offset
+    segment like any marker prefix, exactly as the byte-at-a-time
+    reference ``_BitReader`` in ``tests/ref_bitio.py`` rejects them; this
+    repo's encoders never emit them); 0xFF00 pairs are unstuffed up
+    front.  ``words`` holds the 32-bit big-endian window starting at
+    every unstuffed byte offset
     (python list — low per-access overhead in the per-symbol loops), so
     reading ``k ≤ 16`` bits at bit position ``p`` is
     ``(words[p >> 3] >> (32 - k - (p & 7))) & ((1 << k) - 1)``.
     ``orig_pos`` maps bits consumed back to the stuffed byte offset the
-    old byte-at-a-time reader would have reached — the contract the
+    byte-at-a-time reference reader would have reached — the contract the
     hierarchical decoder's scan-to-scan walk relies on."""
 
     __slots__ = (
@@ -1743,8 +1651,9 @@ class _FastBits:
 
     def orig_pos(self) -> int:
         """Stuffed-stream byte offset after the bytes actually consumed —
-        identical to the old reader's ``pos`` (which consumed each byte,
-        plus its stuffed 0x00, the moment any of its bits was read)."""
+        identical to the reference reader's ``pos`` (which consumed each
+        byte, plus its stuffed 0x00, the moment any of its bits was
+        read)."""
         consumed = (self.pos + 7) >> 3
         import bisect  # noqa: PLC0415
 
@@ -1832,9 +1741,10 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
         raise ValueError("JPEG missing SOF/SOS")
 
     def read_block(p, dc_lut, ac_lut, pred):
-        # table-driven fast form of the old _read_huff_sym/bits walk over
-        # the preprocessed _FastBits segment (§4.2) — one LUT hit per
-        # symbol; prefix-freeness makes it exactly equivalent
+        # table-driven fast form of the per-bit _read_huff_sym/bits walk
+        # (reference kept in tests/ref_bitio.py) over the preprocessed
+        # _FastBits segment (§4.2) — one LUT hit per symbol;
+        # prefix-freeness makes it exactly equivalent
         zz = np.zeros(64, dtype=np.int64)
         dsyms, dlens, dl = dc_lut
         asyms, alens, al = ac_lut
@@ -2368,9 +2278,10 @@ def _decode_jpeg_progressive(data: bytes) -> np.ndarray:
                 raise ValueError("bad progressive scan parameters")
             # Table-driven fast reads over preprocessed _FastBits segments
             # (§4.2) — the same LUT treatment the baseline/lossless
-            # decoders got in r11; per-bit _BitReader calls were ~90 % of
+            # decoders got in r11; per-bit reader calls were ~90 % of
             # progressive decode time.  Prefix-freeness makes the LUT walk
-            # exactly equivalent to _read_huff_sym; a differential test
+            # exactly equivalent to the per-bit _BitReader/_read_huff_sym
+            # reference in tests/ref_bitio.py; a differential test
             # pins this decoder against the verbatim pre-r12 form
             # (including truncation and bit-flip refusal parity).
             fbr = _FastBits(data, pos + 2 + seglen, ff_abs)
@@ -2671,6 +2582,77 @@ def _decode_jpeg_progressive(data: bytes) -> np.ndarray:
     return _planes_to_pixels(planes, comps, hmax, vmax, h, w)
 
 
+def _roundtrip_audit(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    shape: tuple[int, ...],
+    size_col: str,
+    checks: tuple[str, ...],
+    row_fn: Callable[[np.ndarray], tuple[bool, ...]],
+) -> DataFrame:
+    """The frame every ``*_roundtrip_audit`` codec contract shares.  Rows
+    whose ``text_col`` has fewer than ``n`` utf-8 bytes are dropped (the
+    callers' oracles apply the same predicate).  Each remaining row's
+    first ``n`` bytes become ``raw``, a uint8 array of ``shape``, and the
+    row yields ``doc_id``, ``size_col`` (= ``n``) and one boolean column
+    per name in ``checks``, filled in order from ``row_fn(raw)``.  One
+    ``row_fn`` per audit, not one function per column: most audits test
+    several properties of one encode/decode, which must run once."""
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            ids, flags = [], []
+            for i, t in zip(pdf["_id"], pdf["_text"]):
+                raw = np.frombuffer(
+                    str(t).encode("utf-8")[:n], dtype=np.uint8
+                ).reshape(shape)
+                ids.append(int(i))
+                flags.append(row_fn(raw))
+            cols = {"doc_id": ids, size_col: [n] * len(ids)}
+            for name, col in zip(checks, zip(*flags)):
+                cols[name] = [bool(v) for v in col]
+            yield pd.DataFrame(cols)
+
+    # The codec is CPU-bound per row, so parallelism must not be capped by
+    # the SOURCE layout (a small parquet arrives as one partition and one
+    # task would run every round trip serially — measured 4.4 s vs 1.2 s
+    # warm at sf0.1).  The repartition shuffle moves only (id, text)
+    # rows and is dwarfed by the per-row codec work it spreads out; at
+    # 100 TB the scan is already wide and AQE coalesces the excess.
+    width = df.sparkSession.sparkContext.defaultParallelism
+    schema = ", ".join(
+        [f"doc_id long, {size_col} long"] + [f"{c} boolean" for c in checks]
+    )
+    return (
+        df.filter(F.octet_length(F.col(text_col)) >= n)
+        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
+        .repartition(width)
+        .mapInPandas(fn, schema)
+    )
+
+
+def _is_jfif(payload: bytes) -> bool:
+    return payload[:2] == b"\xff\xd8" and payload[6:10] == b"JFIF"
+
+
+def _max_err_le_3(dec: np.ndarray, ref: np.ndarray) -> bool:
+    """The certified Q=1 envelope of the lossy JPEG audits (derivation in
+    :func:`jpeg_roundtrip_audit`): max |decoded − original| ≤ 3."""
+    d = dec.astype(np.int64).reshape(ref.shape) - ref.astype(np.int64)
+    return int(np.abs(d).max()) <= 3
+
+
+def _audit_rgb(raw: np.ndarray) -> np.ndarray:
+    """RGB derivative of a square audit image, deterministic from the text
+    alone: channel 0 = the bytes, 1 = a rolled copy, 2 = the complement."""
+    rolled = np.roll(raw.reshape(-1), 7).reshape(raw.shape)
+    return np.stack([raw, rolled, 255 - raw], axis=-1)
+
+
 def jpeg_roundtrip_audit(
     df: DataFrame, id_col: str, text_col: str, side: int = 16
 ) -> DataFrame:
@@ -2696,53 +2678,14 @@ def jpeg_roundtrip_audit(
     real decode stage has at 100 TB (where this Python baseline swaps
     for a codec library via the pinned ``_decode_bytes`` boundary).
     """
-    n = side * side
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, jfif, ok = [], [], []
-            for i, t in zip(pdf["_id"], pdf["_text"]):
-                raw = np.frombuffer(
-                    str(t).encode("utf-8")[:n], dtype=np.uint8
-                ).reshape(side, side)
-                payload = encode_jpeg_gray8(raw)
-                dec = _decode_jpeg(payload).reshape(side, side)
-                err = int(
-                    np.abs(dec.astype(np.int64) - raw.astype(np.int64)).max()
-                )
-                ids.append(int(i))
-                jfif.append(
-                    payload[:2] == b"\xff\xd8" and payload[6:10] == b"JFIF"
-                )
-                ok.append(err <= 3)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_pixels": [n] * len(ids),
-                    "is_jfif": jfif,
-                    "max_err_le_3": ok,
-                }
-            )
+    def row(raw):
+        payload = encode_jpeg_gray8(raw)
+        return _is_jfif(payload), _max_err_le_3(_decode_jpeg(payload), raw)
 
-    # The codec is CPU-bound per row, so parallelism must not be capped by
-    # the SOURCE layout (a small parquet arrives as one partition and one
-    # task would run every round trip serially — measured 4.4 s vs 1.2 s
-    # warm at sf0.1).  The repartition shuffle moves only (id, text)
-    # rows and is dwarfed by the per-row codec work it spreads out; at
-    # 100 TB the scan is already wide and AQE coalesces the excess.
-    spark = df.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    return (
-        df.filter(F.octet_length(F.col(text_col)) >= n)
-        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .repartition(width)
-        .mapInPandas(
-            fn,
-            "doc_id long, n_pixels long, is_jfif boolean, "
-            "max_err_le_3 boolean",
-        )
+    return _roundtrip_audit(
+        df, id_col, text_col, side * side, (side, side), "n_pixels",
+        ("is_jfif", "max_err_le_3"), row,
     )
 
 
@@ -2770,56 +2713,20 @@ def jpeg420_roundtrip_audit(
     IDCT gain 3.49 + final rounding 0.5 < 4, i.e. an integer deviation
     of 4+ is impossible for a correct codec.  An MCU-order slip, a
     swapped chroma block, or a broken upsampler lands far outside."""
-    n = side * side
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, jfif, sof420, ok = [], [], [], []
-            for i, t in zip(pdf["_id"], pdf["_text"]):
-                raw = np.frombuffer(
-                    str(t).encode("utf-8")[:n], dtype=np.uint8
-                ).reshape(side, side)
-                rgb = np.repeat(raw[..., None], 3, axis=2)
-                payload = encode_jpeg_rgb24(rgb, subsampling="4:2:0")
-                dec = _decode_jpeg(payload).reshape(side, side, 3)
-                err = int(
-                    np.abs(dec.astype(np.int64) - rgb.astype(np.int64)).max()
-                )
-                sof_at = payload.find(b"\xff\xc0")
-                ids.append(int(i))
-                jfif.append(
-                    payload[:2] == b"\xff\xd8" and payload[6:10] == b"JFIF"
-                )
-                sof420.append(
-                    sof_at >= 0 and payload[sof_at + 11] == 0x22
-                )
-                ok.append(err <= 3)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_pixels": [n] * len(ids),
-                    "is_jfif": jfif,
-                    "sof_is_420": sof420,
-                    "max_err_le_3": ok,
-                }
-            )
-
-    # Same shape rationale as jpeg_roundtrip_audit: CPU-bound per row, so
-    # spread across defaultParallelism instead of inheriting a narrow
-    # source layout.
-    spark = df.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    return (
-        df.filter(F.octet_length(F.col(text_col)) >= n)
-        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .repartition(width)
-        .mapInPandas(
-            fn,
-            "doc_id long, n_pixels long, is_jfif boolean, "
-            "sof_is_420 boolean, max_err_le_3 boolean",
+    def row(raw):
+        rgb = np.repeat(raw[..., None], 3, axis=2)
+        payload = encode_jpeg_rgb24(rgb, subsampling="4:2:0")
+        sof_at = payload.find(b"\xff\xc0")
+        return (
+            _is_jfif(payload),
+            sof_at >= 0 and payload[sof_at + 11] == 0x22,
+            _max_err_le_3(_decode_jpeg(payload), rgb),
         )
+
+    return _roundtrip_audit(
+        df, id_col, text_col, side * side, (side, side), "n_pixels",
+        ("is_jfif", "sof_is_420", "max_err_le_3"), row,
     )
 
 
@@ -2851,58 +2758,21 @@ def jpeg_restart_roundtrip_audit(
 
     Scale: pure Arrow-batched ``mapInPandas`` behind an explicit
     repartition — same shape as the other codec audits."""
-    n = side * side
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, jfif, rst, ok = [], [], [], []
-            for i, t in zip(pdf["_id"], pdf["_text"]):
-                raw = np.frombuffer(
-                    str(t).encode("utf-8")[:n], dtype=np.uint8
-                ).reshape(side, side)
-                payload = encode_jpeg_gray8(
-                    raw, restart_interval=restart_interval
-                )
-                dec = _decode_jpeg(payload).reshape(side, side)
-                err = int(
-                    np.abs(dec.astype(np.int64) - raw.astype(np.int64)).max()
-                )
-                sos = payload.find(b"\xff\xda")
-                scan = payload[sos:]
-                ids.append(int(i))
-                jfif.append(
-                    payload[:2] == b"\xff\xd8" and payload[6:10] == b"JFIF"
-                )
-                rst.append(
-                    b"\xff\xdd" in payload[:sos]
-                    and any(
-                        bytes([0xFF, 0xD0 + m]) in scan for m in range(8)
-                    )
-                )
-                ok.append(err <= 3)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_pixels": [n] * len(ids),
-                    "is_jfif": jfif,
-                    "has_restarts": rst,
-                    "max_err_le_3": ok,
-                }
-            )
-
-    spark = df.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    return (
-        df.filter(F.octet_length(F.col(text_col)) >= n)
-        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .repartition(width)
-        .mapInPandas(
-            fn,
-            "doc_id long, n_pixels long, is_jfif boolean, "
-            "has_restarts boolean, max_err_le_3 boolean",
+    def row(raw):
+        payload = encode_jpeg_gray8(raw, restart_interval=restart_interval)
+        sos = payload.find(b"\xff\xda")
+        scan = payload[sos:]
+        return (
+            _is_jfif(payload),
+            b"\xff\xdd" in payload[:sos]
+            and any(bytes([0xFF, 0xD0 + m]) in scan for m in range(8)),
+            _max_err_le_3(_decode_jpeg(payload), raw),
         )
+
+    return _roundtrip_audit(
+        df, id_col, text_col, side * side, (side, side), "n_pixels",
+        ("is_jfif", "has_restarts", "max_err_le_3"), row,
     )
 
 
@@ -2925,51 +2795,19 @@ def jpeg_progressive_roundtrip_audit(
     plus the SOF2 marker check and the |Δ| ≤ 3 envelope inherited from
     the sequential contract.  Scale: pure Arrow-batched ``mapInPandas``
     behind an explicit repartition, same as the other codec audits."""
-    n = side * side
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, sof2, match, ok = [], [], [], []
-            for i, t in zip(pdf["_id"], pdf["_text"]):
-                raw = np.frombuffer(
-                    str(t).encode("utf-8")[:n], dtype=np.uint8
-                ).reshape(side, side)
-                prog = encode_jpeg_progressive(raw)
-                dec_p = _decode_jpeg(prog)
-                dec_s = _decode_jpeg(encode_jpeg_gray8(raw))
-                err = int(
-                    np.abs(
-                        dec_p.astype(np.int64).reshape(side, side)
-                        - raw.astype(np.int64)
-                    ).max()
-                )
-                ids.append(int(i))
-                sof2.append(0 <= prog.find(b"\xff\xc2") < prog.find(b"\xff\xda"))
-                match.append(bool(np.array_equal(dec_p, dec_s)))
-                ok.append(err <= 3)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_pixels": [n] * len(ids),
-                    "is_sof2": sof2,
-                    "matches_sequential": match,
-                    "max_err_le_3": ok,
-                }
-            )
-
-    spark = df.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    return (
-        df.filter(F.octet_length(F.col(text_col)) >= n)
-        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .repartition(width)
-        .mapInPandas(
-            fn,
-            "doc_id long, n_pixels long, is_sof2 boolean, "
-            "matches_sequential boolean, max_err_le_3 boolean",
+    def row(raw):
+        prog = encode_jpeg_progressive(raw)
+        dec_p = _decode_jpeg(prog)
+        return (
+            0 <= prog.find(b"\xff\xc2") < prog.find(b"\xff\xda"),
+            np.array_equal(dec_p, _decode_jpeg(encode_jpeg_gray8(raw))),
+            _max_err_le_3(dec_p, raw),
         )
+
+    return _roundtrip_audit(
+        df, id_col, text_col, side * side, (side, side), "n_pixels",
+        ("is_sof2", "matches_sequential", "max_err_le_3"), row,
     )
 
 
@@ -3060,7 +2898,8 @@ def encode_jpeg_lossless(pixels: np.ndarray, predictor: int = 4) -> bytes:
     diffs = _lossless_residuals(planes, int(predictor))
     n_comp = len(planes)
     # interleaved MCU order at 1×1 sampling: one sample per component —
-    # vectorized, bit-identical to the per-sample _BitWriter loop (§4.2)
+    # vectorized, bit-identical to the per-sample reference _BitWriter
+    # loop in tests/ref_bitio.py (§4.2)
     entropy = _lossless_scan_bits(diffs, dc_codes)
 
     def seg(marker, body):
@@ -3193,8 +3032,7 @@ def _decode_jpeg_lossless(data: bytes) -> np.ndarray:
     mb = _min_bits_per_lossless_sample(tabs)
     if n_samples * mb > max(0, len(data) - scan_pos) * 8 + 64 * mb:
         raise ValueError("JPEG scan too short for declared dims")
-    br = _BitReader(data, scan_pos)
-    planes = _lossless_entropy_scan(br, h, w, tabs, predictor)
+    planes, _ = _lossless_entropy_scan(data, scan_pos, h, w, tabs, predictor)
     out = [np.clip(p, 0, 255).astype(np.uint8) for p in planes]
     if n_comp == 1:
         return out[0].reshape(-1)
@@ -3202,28 +3040,33 @@ def _decode_jpeg_lossless(data: bytes) -> np.ndarray:
 
 
 def _lossless_entropy_scan(
-    br: "_BitReader",
+    data: bytes,
+    pos: int,
     h: int,
     w: int,
     tabs: list[dict],
     predictor: int,
     refs: list[np.ndarray] | None = None,
-) -> list[np.ndarray]:
-    """Decode ONE interleaved 1×1-sampling lossless entropy scan into
-    int32 planes — shared by the standalone SOF3 decoder and both frame
-    kinds of the hierarchical decoder.  ``predictor`` in 1–7 runs the
-    Annex-H neighbor prediction (first line / line-start rules per
-    H.1.1); ``predictor == 0`` is the DIFFERENTIAL form (T.81 Annex J):
-    no spatial prediction — each decoded difference adds to the
+) -> tuple[list[np.ndarray], int]:
+    """Decode ONE interleaved 1×1-sampling lossless entropy scan starting
+    at byte ``pos`` of ``data`` into int32 planes — shared by the
+    standalone SOF3 decoder and both frame kinds of the hierarchical
+    decoder.  Returns ``(planes, end_pos)``: ``end_pos`` is the stuffed
+    byte offset just past the bytes the scan consumed, where the
+    hierarchical decoder resumes its marker walk.  ``predictor`` in 1–7
+    runs the Annex-H neighbor prediction (first line / line-start rules
+    per H.1.1); ``predictor == 0`` is the DIFFERENTIAL form (T.81 Annex
+    J): no spatial prediction — each decoded difference adds to the
     ``refs`` reference component, modulo 2^16 (J.1.1.4)."""
     n_comp = len(tabs)
     # ---- 1. huffman-decode every residual (flat, interleaved order) ----
     # table-driven fast scan: one LUT lookup per symbol over a
     # preprocessed unstuffed segment instead of ~length bit() calls
     # (§4.2); prefix-freeness makes the LUT walk exactly equivalent to
-    # _read_huff_sym, and _FastBits.orig_pos restores the byte cursor
-    # the hierarchical scan-to-scan walk needs.
-    fb = _FastBits(br.data, br.pos)
+    # the per-bit _read_huff_sym reference in tests/ref_bitio.py, and
+    # _FastBits.orig_pos restores the byte cursor the hierarchical
+    # scan-to-scan walk needs.
+    fb = _FastBits(data, pos)
     words, nbits_total = fb.words, fb.nbits
     luts = [_huff_lut(t) for t in tabs]
     n = h * w
@@ -3257,7 +3100,7 @@ def _lossless_entropy_scan(
                 )
             i += 1
     fb.pos = p
-    br.pos = fb.orig_pos()
+    end_pos = fb.orig_pos()
     d3 = np.array(res, dtype=np.int64).reshape(n, n_comp)
     # ---- 2. reconstruct each plane from its residual grid ----------------
     # mod-2^16 adds are associative, so every predictor whose recurrence
@@ -3331,7 +3174,7 @@ def _lossless_entropy_scan(
                 rows.append(cur)
             grid = np.array(rows, dtype=np.int64)
         planes.append(grid.astype(np.int32))
-    return planes
+    return planes, end_pos
 
 
 # ---------------------------------------------------------------------------
@@ -3435,7 +3278,8 @@ def encode_jpeg_hierarchical(
             + b"".join(bytes([cid, 0x00]) for cid in range(1, n_comp + 1))
             + bytes([ss, 0, 0]),
         )
-        # vectorized, bit-identical to the per-sample _BitWriter loop (§4.2)
+        # vectorized, bit-identical to the per-sample reference _BitWriter
+        # loop in tests/ref_bitio.py (§4.2)
         return sos + _lossless_scan_bits(diffs, dc_codes)
 
     if n_comp == 3:  # raw R,G,B — declare via Adobe APP14 transform=0
@@ -3607,16 +3451,13 @@ def _decode_jpeg_hierarchical(data: bytes) -> np.ndarray:
                     raise ValueError(
                         "differential frame without preceding EXP"
                     )
-                br = _BitReader(data, pos)
-                refs = _lossless_entropy_scan(
-                    br, fh, fw, tabs, 0, refs=refs
+                refs, pos = _lossless_entropy_scan(
+                    data, pos, fh, fw, tabs, 0, refs=refs
                 )
             else:
                 if not 1 <= ss <= 7:
                     raise ValueError(f"bad lossless predictor {ss}")
-                br = _BitReader(data, pos)
-                refs = _lossless_entropy_scan(br, fh, fw, tabs, ss)
-            pos = br.pos
+                refs, pos = _lossless_entropy_scan(data, pos, fh, fw, tabs, ss)
             cur = None
     if full is None or refs is None:
         raise ValueError("JPEG missing DHP/frames")
@@ -3644,63 +3485,27 @@ def jpeg_lossless_roundtrip_audit(
     prediction, residual, or interleave bug breaks equality outright.
     Scale: pure Arrow-batched ``mapInPandas`` behind an explicit
     repartition, same as the other codec audits."""
-    n = side * side
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, sof3, gray_ok, rgb_ok = [], [], [], []
-            for i, t in zip(pdf["_id"], pdf["_text"]):
-                raw = np.frombuffer(
-                    str(t).encode("utf-8")[:n], dtype=np.uint8
-                ).reshape(side, side)
-                enc0 = encode_jpeg_lossless(raw, predictor=4)
-                g_ok = all(
-                    np.array_equal(
-                        _decode_jpeg(encode_jpeg_lossless(raw, predictor=p)),
-                        raw.reshape(-1),
-                    )
-                    for p in range(1, 8)
+    def row(raw):
+        enc0 = encode_jpeg_lossless(raw, predictor=4)
+        rgb = _audit_rgb(raw)
+        return (
+            0 <= enc0.find(b"\xff\xc3") < enc0.find(b"\xff\xda"),
+            all(
+                np.array_equal(
+                    _decode_jpeg(encode_jpeg_lossless(raw, predictor=p)),
+                    raw.reshape(-1),
                 )
-                rgb = np.stack(
-                    [
-                        raw,
-                        np.roll(raw.reshape(-1), 7).reshape(side, side),
-                        255 - raw,
-                    ],
-                    axis=-1,
-                )
-                r_ok = np.array_equal(
-                    _decode_jpeg(encode_jpeg_lossless(rgb)), rgb.reshape(-1)
-                )
-                ids.append(int(i))
-                sof3.append(
-                    0 <= enc0.find(b"\xff\xc3") < enc0.find(b"\xff\xda")
-                )
-                gray_ok.append(bool(g_ok))
-                rgb_ok.append(bool(r_ok))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_pixels": [n] * len(ids),
-                    "is_sof3": sof3,
-                    "gray_exact_all_predictors": gray_ok,
-                    "rgb_exact": rgb_ok,
-                }
-            )
-
-    spark = df.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    return (
-        df.filter(F.octet_length(F.col(text_col)) >= n)
-        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .repartition(width)
-        .mapInPandas(
-            fn,
-            "doc_id long, n_pixels long, is_sof3 boolean, "
-            "gray_exact_all_predictors boolean, rgb_exact boolean",
+                for p in range(1, 8)
+            ),
+            np.array_equal(
+                _decode_jpeg(encode_jpeg_lossless(rgb)), rgb.reshape(-1)
+            ),
         )
+
+    return _roundtrip_audit(
+        df, id_col, text_col, side * side, (side, side), "n_pixels",
+        ("is_sof3", "gray_exact_all_predictors", "rgb_exact"), row,
     )
 
 
@@ -3719,71 +3524,32 @@ def jpeg_hierarchical_roundtrip_audit(
     property, so any expansion, residual, or frame-sequencing bug
     breaks it outright.  Scale: pure Arrow-batched ``mapInPandas``
     behind an explicit repartition, same as the other codec audits."""
-    n = side * side
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, dhp, gray_ok, rgb_ok = [], [], [], []
-            for i, t in zip(pdf["_id"], pdf["_text"]):
-                raw = np.frombuffer(
-                    str(t).encode("utf-8")[:n], dtype=np.uint8
-                ).reshape(side, side)
-                enc2 = encode_jpeg_hierarchical(raw, levels=2)
-                # enc2 serves both the marker check and the lv=2 decode —
-                # the encoder is a per-sample bit loop, don't run it twice
-                g_ok = np.array_equal(
-                    _decode_jpeg(enc2), raw.reshape(-1)
-                ) and all(
-                    np.array_equal(
-                        _decode_jpeg(
-                            encode_jpeg_hierarchical(raw, levels=lv)
-                        ),
-                        raw.reshape(-1),
-                    )
-                    for lv in (1, 3)
+    def row(raw):
+        # enc2 serves both the marker check and the lv=2 decode — the
+        # encoder is a per-sample bit loop, don't run it twice
+        enc2 = encode_jpeg_hierarchical(raw, levels=2)
+        rgb = _audit_rgb(raw)
+        return (
+            0 <= enc2.find(b"\xff\xde") < enc2.find(b"\xff\xc3")
+            and enc2.count(b"\xff\xc7") == 1,
+            np.array_equal(_decode_jpeg(enc2), raw.reshape(-1))
+            and all(
+                np.array_equal(
+                    _decode_jpeg(encode_jpeg_hierarchical(raw, levels=lv)),
+                    raw.reshape(-1),
                 )
-                rgb = np.stack(
-                    [
-                        raw,
-                        np.roll(raw.reshape(-1), 7).reshape(side, side),
-                        255 - raw,
-                    ],
-                    axis=-1,
-                )
-                r_ok = np.array_equal(
-                    _decode_jpeg(encode_jpeg_hierarchical(rgb, levels=2)),
-                    rgb.reshape(-1),
-                )
-                ids.append(int(i))
-                dhp.append(
-                    0 <= enc2.find(b"\xff\xde") < enc2.find(b"\xff\xc3")
-                    and enc2.count(b"\xff\xc7") == 1
-                )
-                gray_ok.append(bool(g_ok))
-                rgb_ok.append(bool(r_ok))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_pixels": [n] * len(ids),
-                    "is_dhp": dhp,
-                    "gray_exact_all_levels": gray_ok,
-                    "rgb_exact": rgb_ok,
-                }
-            )
-
-    spark = df.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    return (
-        df.filter(F.octet_length(F.col(text_col)) >= n)
-        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .repartition(width)
-        .mapInPandas(
-            fn,
-            "doc_id long, n_pixels long, is_dhp boolean, "
-            "gray_exact_all_levels boolean, rgb_exact boolean",
+                for lv in (1, 3)
+            ),
+            np.array_equal(
+                _decode_jpeg(encode_jpeg_hierarchical(rgb, levels=2)),
+                rgb.reshape(-1),
+            ),
         )
+
+    return _roundtrip_audit(
+        df, id_col, text_col, side * side, (side, side), "n_pixels",
+        ("is_dhp", "gray_exact_all_levels", "rgb_exact"), row,
     )
 
 
@@ -3800,60 +3566,31 @@ def png_palette_roundtrip_audit(
     Adam7-interlaced, all six streams pinned to exact equality.  Scale:
     pure Arrow-batched ``mapInPandas`` behind an explicit repartition,
     same as the other codec audits."""
-    n = side * side
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gray = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
-        ramp16 = np.stack(
-            [np.arange(16, dtype=np.uint8) * 17] * 3, axis=1
-        )
-        bw = np.array([[0, 0, 0], [255, 255, 255]], dtype=np.uint8)
-        cases = [  # (palette, bit depth, index fn, expected fn)
-            (gray, 8, lambda b: b, lambda b: b),
-            (ramp16, 4, lambda b: b >> 4, lambda b: (b >> 4) * 17),
-            (bw, 1, lambda b: b >> 7, lambda b: (b >> 7) * 255),
-        ]
+    gray = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
+    ramp16 = np.stack([np.arange(16, dtype=np.uint8) * 17] * 3, axis=1)
+    bw = np.array([[0, 0, 0], [255, 255, 255]], dtype=np.uint8)
+    cases = [  # (palette, bit depth, index fn, expected fn)
+        (gray, 8, lambda b: b, lambda b: b),
+        (ramp16, 4, lambda b: b >> 4, lambda b: (b >> 4) * 17),
+        (bw, 1, lambda b: b >> 7, lambda b: (b >> 7) * 255),
+    ]
 
-        def ok(raw):
-            for pal, depth, f_idx, f_want in cases:
-                idx = f_idx(raw)
-                want = f_want(raw).reshape(-1)
-                for inter in (False, True):
-                    enc = encode_png_indexed(
-                        idx, pal, bit_depth=depth, interlace=inter
-                    )
-                    if not np.array_equal(_decode_png(enc), want):
-                        return False
-            return True
+    def ok(raw):
+        for pal, depth, f_idx, f_want in cases:
+            idx = f_idx(raw)
+            want = f_want(raw).reshape(-1)
+            for inter in (False, True):
+                enc = encode_png_indexed(
+                    idx, pal, bit_depth=depth, interlace=inter
+                )
+                if not np.array_equal(_decode_png(enc), want):
+                    return False
+        return True
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, exact = [], []
-            for i, t in zip(pdf["_id"], pdf["_text"]):
-                raw = np.frombuffer(
-                    str(t).encode("utf-8")[:n], dtype=np.uint8
-                ).reshape(side, side)
-                ids.append(int(i))
-                exact.append(bool(ok(raw)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_pixels": [n] * len(ids),
-                    "palette_adam7_exact": exact,
-                }
-            )
-
-    spark = df.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    return (
-        df.filter(F.octet_length(F.col(text_col)) >= n)
-        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .repartition(width)
-        .mapInPandas(
-            fn,
-            "doc_id long, n_pixels long, palette_adam7_exact boolean",
-        )
+    return _roundtrip_audit(
+        df, id_col, text_col, side * side, (side, side), "n_pixels",
+        ("palette_adam7_exact",), lambda raw: (ok(raw),),
     )
 
 
@@ -3870,66 +3607,39 @@ def png_full_surface_roundtrip_audit(
     pin), multi-channel to the interleaved per-channel samples.  Scale:
     pure Arrow-batched ``mapInPandas`` behind an explicit repartition,
     same as the other codec audits."""
-    n = side * side
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def ok(raw: np.ndarray) -> bool:
-            r16 = raw.astype(np.uint16)
-            gray_cases = [  # (px, depth, want)
-                (raw, 8, raw),
-                ((r16 << 8) | ((r16 * 7 + 3) & 0xFF), 16, raw),
-                (raw >> 7, 1, (raw >> 7) * 255),
-                (raw >> 6, 2, (raw >> 6) * 85),
-                (raw >> 4, 4, (raw >> 4) * 17),
-            ]
-            chans = [raw, 255 - raw, raw >> 1, raw | 1]
-            multi_cases = []
-            for ct, nch in ((2, 3), (4, 2), (6, 4)):
-                px8 = np.stack(chans[:nch], axis=-1)
-                multi_cases.append((px8, ct, 8, px8))
-                px16 = (px8.astype(np.uint16) << 8) | (
-                    (px8.astype(np.uint16) * 11 + 5) & 0xFF
-                )
-                multi_cases.append((px16, ct, 16, px8))
-            for inter in (False, True):
-                for px, depth, want in gray_cases:
-                    dec = _decode_png(encode_png(px, 0, depth, inter))
-                    if not np.array_equal(dec, want.reshape(-1)):
-                        return False
-                for px, ct, depth, want in multi_cases:
-                    dec = _decode_png(encode_png(px, ct, depth, inter))
-                    if not np.array_equal(dec, want.reshape(-1)):
-                        return False
-            return True
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, exact = [], []
-            for i, t in zip(pdf["_id"], pdf["_text"]):
-                raw = np.frombuffer(
-                    str(t).encode("utf-8")[:n], dtype=np.uint8
-                ).reshape(side, side)
-                ids.append(int(i))
-                exact.append(bool(ok(raw)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_pixels": [n] * len(ids),
-                    "full_surface_exact": exact,
-                }
+    def ok(raw: np.ndarray) -> bool:
+        r16 = raw.astype(np.uint16)
+        gray_cases = [  # (px, depth, want)
+            (raw, 8, raw),
+            ((r16 << 8) | ((r16 * 7 + 3) & 0xFF), 16, raw),
+            (raw >> 7, 1, (raw >> 7) * 255),
+            (raw >> 6, 2, (raw >> 6) * 85),
+            (raw >> 4, 4, (raw >> 4) * 17),
+        ]
+        chans = [raw, 255 - raw, raw >> 1, raw | 1]
+        multi_cases = []
+        for ct, nch in ((2, 3), (4, 2), (6, 4)):
+            px8 = np.stack(chans[:nch], axis=-1)
+            multi_cases.append((px8, ct, 8, px8))
+            px16 = (px8.astype(np.uint16) << 8) | (
+                (px8.astype(np.uint16) * 11 + 5) & 0xFF
             )
+            multi_cases.append((px16, ct, 16, px8))
+        for inter in (False, True):
+            for px, depth, want in gray_cases:
+                dec = _decode_png(encode_png(px, 0, depth, inter))
+                if not np.array_equal(dec, want.reshape(-1)):
+                    return False
+            for px, ct, depth, want in multi_cases:
+                dec = _decode_png(encode_png(px, ct, depth, inter))
+                if not np.array_equal(dec, want.reshape(-1)):
+                    return False
+        return True
 
-    spark = df.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    return (
-        df.filter(F.octet_length(F.col(text_col)) >= n)
-        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .repartition(width)
-        .mapInPandas(
-            fn,
-            "doc_id long, n_pixels long, full_surface_exact boolean",
-        )
+    return _roundtrip_audit(
+        df, id_col, text_col, side * side, (side, side), "n_pixels",
+        ("full_surface_exact",), lambda raw: (ok(raw),),
     )
 
 
@@ -3944,62 +3654,31 @@ def bmp_surface_roundtrip_audit(
     ``side²`` utf-8 bytes through the same palette conventions as the
     PNG contract.  Scale: pure Arrow-batched ``mapInPandas`` behind an
     explicit repartition, same as the other codec audits."""
-    n = side * side
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gray = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
-        ramp16 = np.stack([np.arange(16, dtype=np.uint8) * 17] * 3, axis=1)
-        bw = np.array([[0, 0, 0], [255, 255, 255]], dtype=np.uint8)
+    gray = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
+    ramp16 = np.stack([np.arange(16, dtype=np.uint8) * 17] * 3, axis=1)
+    bw = np.array([[0, 0, 0], [255, 255, 255]], dtype=np.uint8)
+    cases = [  # (palette, depth, rle, index fn, expected fn)
+        (gray, 8, False, lambda b: b, lambda b: b),
+        (gray, 8, True, lambda b: b, lambda b: b),
+        # run-heavy RLE: quantized rows compress into long runs
+        (gray, 8, True, lambda b: b & 0xF0, lambda b: b & 0xF0),
+        (ramp16, 4, False, lambda b: b >> 4, lambda b: (b >> 4) * 17),
+        (bw, 1, False, lambda b: b >> 7, lambda b: (b >> 7) * 255),
+    ]
 
-        def ok(raw: np.ndarray) -> bool:
-            cases = [  # (palette, depth, rle, index fn, expected fn)
-                (gray, 8, False, lambda b: b, lambda b: b),
-                (gray, 8, True, lambda b: b, lambda b: b),
-                # run-heavy RLE: quantized rows compress into long runs
-                (gray, 8, True, lambda b: b & 0xF0, lambda b: b & 0xF0),
-                (ramp16, 4, False, lambda b: b >> 4, lambda b: (b >> 4) * 17),
-                (bw, 1, False, lambda b: b >> 7, lambda b: (b >> 7) * 255),
-            ]
-            for pal, depth, rle, f_idx, f_want in cases:
-                enc = encode_bmp_indexed(
-                    f_idx(raw), pal, bit_depth=depth, rle=rle
-                )
-                if not np.array_equal(
-                    _decode_bmp(enc), f_want(raw).reshape(-1)
-                ):
-                    return False
-            return np.array_equal(
-                _decode_bmp(encode_bmp_gray8(raw)), raw.reshape(-1)
-            )
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, exact = [], []
-            for i, t in zip(pdf["_id"], pdf["_text"]):
-                raw = np.frombuffer(
-                    str(t).encode("utf-8")[:n], dtype=np.uint8
-                ).reshape(side, side)
-                ids.append(int(i))
-                exact.append(bool(ok(raw)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_pixels": [n] * len(ids),
-                    "bmp_surface_exact": exact,
-                }
-            )
-
-    spark = df.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    return (
-        df.filter(F.octet_length(F.col(text_col)) >= n)
-        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .repartition(width)
-        .mapInPandas(
-            fn,
-            "doc_id long, n_pixels long, bmp_surface_exact boolean",
+    def ok(raw: np.ndarray) -> bool:
+        for pal, depth, rle, f_idx, f_want in cases:
+            enc = encode_bmp_indexed(f_idx(raw), pal, bit_depth=depth, rle=rle)
+            if not np.array_equal(_decode_bmp(enc), f_want(raw).reshape(-1)):
+                return False
+        return np.array_equal(
+            _decode_bmp(encode_bmp_gray8(raw)), raw.reshape(-1)
         )
+
+    return _roundtrip_audit(
+        df, id_col, text_col, side * side, (side, side), "n_pixels",
+        ("bmp_surface_exact",), lambda raw: (ok(raw),),
     )
 
 
@@ -4015,74 +3694,48 @@ def wav_pcm_surface_roundtrip_audit(
     bug breaks the pin).  Scale: pure Arrow-batched ``mapInPandas``
     behind an explicit repartition, same as the other codec audits."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def ok(raw: np.ndarray) -> bool:
-            r = raw.astype(np.int64)
-            cases = [  # (samples array, bits kwarg, expected flat bytes)
-                (raw, None, raw),
-                (
-                    (((r - 128) << 8) + ((r * 3 + 1) & 0xFF)).astype(np.int16),
-                    None,
-                    raw,
+    def ok(raw: np.ndarray) -> bool:
+        r = raw.astype(np.int64)
+        cases = [  # (samples array, bits kwarg, expected flat bytes)
+            (raw, None, raw),
+            (
+                (((r - 128) << 8) + ((r * 3 + 1) & 0xFF)).astype(np.int16),
+                None,
+                raw,
+            ),
+            (
+                (((r - 128) << 16) + ((r * 5 + 7) & 0xFFFF)).astype(
+                    np.int32
                 ),
-                (
-                    (((r - 128) << 16) + ((r * 5 + 7) & 0xFFFF)).astype(
-                        np.int32
-                    ),
-                    24,
-                    raw,
+                24,
+                raw,
+            ),
+            (
+                (((r - 128) << 24) + ((r * 9 + 11) & 0xFFFFFF)).astype(
+                    np.int32
                 ),
-                (
-                    (((r - 128) << 24) + ((r * 9 + 11) & 0xFFFFFF)).astype(
-                        np.int32
-                    ),
-                    None,
-                    raw,
-                ),
-            ]
-            for mono, bits, want in cases:
-                stereo = np.stack(
-                    [mono, mono[::-1]], axis=1
-                )  # (n, 2) interleaved frames
-                want2 = np.stack([want, want[::-1]], axis=1).reshape(-1)
-                for s, w in ((mono, want), (stereo, want2)):
-                    enc = (
-                        encode_wav_pcm(s, bits=bits)
-                        if bits
-                        else encode_wav_pcm(s)
-                    )
-                    if not np.array_equal(_decode_wav(enc), w):
-                        return False
-            return True
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, exact = [], []
-            for i, t in zip(pdf["_id"], pdf["_text"]):
-                raw = np.frombuffer(
-                    str(t).encode("utf-8")[:n], dtype=np.uint8
+                None,
+                raw,
+            ),
+        ]
+        for mono, bits, want in cases:
+            stereo = np.stack(
+                [mono, mono[::-1]], axis=1
+            )  # (n, 2) interleaved frames
+            want2 = np.stack([want, want[::-1]], axis=1).reshape(-1)
+            for s, w in ((mono, want), (stereo, want2)):
+                enc = (
+                    encode_wav_pcm(s, bits=bits)
+                    if bits
+                    else encode_wav_pcm(s)
                 )
-                ids.append(int(i))
-                exact.append(bool(ok(raw)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_samples": [n] * len(ids),
-                    "pcm_surface_exact": exact,
-                }
-            )
+                if not np.array_equal(_decode_wav(enc), w):
+                    return False
+        return True
 
-    spark = df.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    return (
-        df.filter(F.octet_length(F.col(text_col)) >= n)
-        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .repartition(width)
-        .mapInPandas(
-            fn,
-            "doc_id long, n_samples long, pcm_surface_exact boolean",
-        )
+    return _roundtrip_audit(
+        df, id_col, text_col, n, (n,), "n_samples",
+        ("pcm_surface_exact",), lambda raw: (ok(raw),),
     )
 
 

@@ -1141,23 +1141,27 @@ def q_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
     )
     # DECIMAL accumulator on both sides — same r7 sf1.0-ladder catch as
-    # top_unshipped_orders (order-dependent double-sum ulp at 10x rows)
+    # top_unshipped_orders (order-dependent double-sum ulp at 10x rows).
+    # Round the DECIMAL, then cast: a half-cent tie is exact there, while
+    # the two engines round the nearest DOUBLE to it differently.
     return j.groupBy("r_name", "n_name").agg(
         F.round(
             F.sum(
                 (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
                     "decimal(28,8)"
                 )
-            ).cast("double"),
+            ),
             2,
-        ).alias("revenue"),
+        )
+        .cast("double")
+        .alias("revenue"),
         F.count(F.lit(1)).alias("n_items"),
     )
 
 
 SQL_SUPPLIER_VOLUME = """
 SELECT r_name, n_name,
-       round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,8))) AS DOUBLE), 2) AS revenue,
+       CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,8))), 2) AS DOUBLE) AS revenue,
        count(*) AS n_items
 FROM lineitem
 JOIN orders   ON l_orderkey = o_orderkey
