@@ -2335,3 +2335,27 @@ def test_jpeg_quant_rejects_out_of_range_entries():
             mm.encode_jpeg_progressive(px, quant=q)
     q = np.full(64, 65535)
     assert mm._decode_jpeg(mm.encode_jpeg_gray8(px, quant=q)).shape == (256,)
+
+
+def test_dht_cache_tables_are_read_only():
+    """_parse_dht hands every decoder the SAME cached table for a repeated
+    DHT payload; the cache returns read-only views, so a caller cannot
+    corrupt the table for every later stream."""
+    body = bytes(
+        [0x00] + mm._JPEG_DC_BITS[1:] + mm._JPEG_DC_VALS
+        + [0x11] + mm._JPEG_AC_BITS[1:] + mm._JPEG_AC_VALS
+    )
+    first, second = {}, {}
+    mm._parse_dht(body, first)
+    mm._parse_dht(body, second)
+    assert first.keys() == second.keys() == {(0, 0), (1, 1)}
+    for key in first:
+        assert first[key] is second[key]  # one cached table per payload
+    assert dict(first[(0, 0)]) == mm._huff_lookup(mm._JPEG_DC_BITS, mm._JPEG_DC_VALS)
+    dc = first[(0, 0)]
+    code = next(iter(dc))
+    with pytest.raises(TypeError):
+        dc[code] = 99
+    with pytest.raises(TypeError):
+        del dc[code]
+    assert dict(dc) == mm._huff_lookup(mm._JPEG_DC_BITS, mm._JPEG_DC_VALS)

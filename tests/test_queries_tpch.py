@@ -71,6 +71,23 @@ def test_event_value_percentiles_router_branches_identical(spark, monkeypatch):
     assert "percentile" not in plan.lower()
 
 
+def test_route_by_rows_switches_at_the_knob(monkeypatch):
+    """The size routers' one convention: the scale path from exactly
+    ``$knob`` rows up, the reference plan below; an unset knob uses the
+    default."""
+    from worlddatapipeline_spark.session import parquet_num_rows, route_by_rows
+
+    n = parquet_num_rows(SF, "events")
+    knob = "SPARK_GRAFT_ROUTE_TEST_MIN"
+    monkeypatch.setenv(knob, str(n))
+    assert route_by_rows(SF, "events", knob, n + 1)
+    monkeypatch.setenv(knob, str(n + 1))
+    assert not route_by_rows(SF, "events", knob, 0)
+    monkeypatch.delenv(knob)
+    assert route_by_rows(SF, "events", knob, n)
+    assert not route_by_rows(SF, "events", knob, n + 1)
+
+
 def test_exact_percentiles_distributed_matches_percentile_bitwise(spark):
     """The distributed operator must replay F.percentile bit-for-bit on
     adversarial doubles: duplicates, skewed counts, tiny groups, and the

@@ -377,43 +377,59 @@ def test_filtered_cosine_topk_string_and_null_labels(spark):
     assert all(7 not in hits for hits in by_q.values())
 
 
-def test_batched_topk_ties_keep_smallest_ids(spark):
+BATCHED_TOPK = ["cosine_topk_batched", "filtered_cosine_topk"]
+
+
+def _batched_topk(op, corpus, queries, k):
+    """Run one batched top-k operator; the filtered one gets the same label
+    on every row, so its predicate mask keeps everything."""
+    if op == "filtered_cosine_topk":
+        corpus = corpus.withColumn("label", F.lit(1))
+        queries = queries.withColumn("label", F.lit(1))
+    return getattr(similarity, op)(corpus, queries, k=k)
+
+
+def _at_cosine(c):
+    """Unit 4-vector at cosine ``c`` to the query direction [1, 0, 0, 0]."""
+    return [c, float(np.sqrt(1.0 - c * c)), 0.0, 0.0]
+
+
+# (rows, k, expected ids).  exact_dups: ids 1..6 duplicate the query
+# direction (cos = 1.0, a six-way exact tie).  near_pair / near_eight:
+# raw cosines differ below 1e-6, so all round to 0.8, and the LARGER ids
+# score higher raw — a raw-score cut keeps them, the final order wants the
+# smallest.  ids 90/91 are orthogonal decoys.
+TIE_CASES = {
+    "exact_dups": ([(i, [1.0, 0.0, 0.0, 0.0]) for i in range(1, 7)], 3, [1, 2, 3]),
+    "near_pair": ([(1, _at_cosine(0.80000010)), (2, _at_cosine(0.80000040))], 1, [1]),
+    "near_eight": ([(i, _at_cosine(0.8 + i * 5e-8)) for i in range(1, 9)], 3, [1, 2, 3]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(TIE_CASES))
+@pytest.mark.parametrize("op", BATCHED_TOPK)
+def test_batched_topk_ties_keep_smallest_ids(spark, op, case):
     """The per-batch cut must select under the FINAL total order
-    (round(cos,6) DESC, vec_id ASC): with more tied duplicate vectors
-    than k, the kept ids are exactly the smallest — a raw-score
-    argpartition kept an arbitrary tie member (review catch r5)."""
-    from worlddatapipeline_spark.operators.similarity import (
-        cosine_topk_batched,
-    )
-
-    base = [1.0, 0.0, 0.0, 0.0]
+    (round(cos,6) DESC, vec_id ASC): with more rounding-tied rows than k,
+    the kept ids are exactly the smallest — a raw-score argpartition keeps
+    an arbitrary tie member, and on near ties the raw-highest one."""
+    rows, k, expect = TIE_CASES[case]
     off = [0.0, 1.0, 0.0, 0.0]
-    # ids 1..6 are EXACT duplicates of the query direction (cos = 1.0,
-    # six-way rounding tie); ids 90/91 are orthogonal decoys.
-    rows = [(i, base) for i in range(1, 7)] + [(90, off), (91, off)]
+    # one partition, so every tie member meets the same per-batch cut
     corpus = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
+        rows + [(90, off), (91, off)], "vec_id long, embedding array<double>"
+    ).coalesce(1)
     queries = spark.createDataFrame(
-        [(100, base)], "query_id long, embedding array<double>"
+        [(100, [1.0, 0.0, 0.0, 0.0])], "query_id long, embedding array<double>"
     )
-    got = sorted(
-        r["vec_id"]
-        for r in cosine_topk_batched(corpus, queries, k=3).collect()
-    )
-    assert got == [1, 2, 3]  # smallest ids win every tie, deterministically
+    got = sorted(r["vec_id"] for r in _batched_topk(op, corpus, queries, k).collect())
+    assert got == expect  # smallest ids win every tie, deterministically
 
 
-def test_batched_topk_matches_exact_reference(spark):
+@pytest.mark.parametrize("op", BATCHED_TOPK)
+def test_batched_topk_matches_exact_reference(spark, op):
     """Batched top-k equals the expression-form cosine_topk on a random
     corpus (the differential cross-check for the vectorized cut)."""
-    import numpy as np
-
-    from worlddatapipeline_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_batched,
-    )
-
     rng = np.random.default_rng(17)
     rows = [
         (i, [float(x) for x in rng.normal(size=8)]) for i in range(40)
@@ -423,9 +439,9 @@ def test_batched_topk_matches_exact_reference(spark):
         corpus.vec_id.alias("query_id"), "embedding"
     )
     a = {(r["query_id"], r["rank"]): r["vec_id"]
-         for r in cosine_topk_batched(corpus, queries, k=5).collect()}
+         for r in _batched_topk(op, corpus, queries, 5).collect()}
     b = {(r["query_id"], r["rank"]): r["vec_id"]
-         for r in cosine_topk(corpus, queries, k=5).collect()}
+         for r in similarity.cosine_topk(corpus, queries, k=5).collect()}
     assert a == b
 
 

@@ -4,7 +4,8 @@ VERDICT r11 item 7: the r11 scaling artifact ran its two legs ~15 min
 apart on a co-tenant box, so x10 ratios inherited window skew.  This tool
 runs each query's two scale legs BACK-TO-BACK (warm + best-of-2 at sf0.1,
 then immediately warm + best-of-2 at sf1.0) inside one session, so each
-query's x10 is a same-window ratio.  Usage:
+query's x10 is a same-window ratio.  Each run is timed by
+``bench._run_one``, the bench's own noop-write timer.  Usage:
 
     python tools/bench_scaling.py out.json query1 query2 ...
 
@@ -17,7 +18,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -29,6 +29,7 @@ def main() -> None:
     out_path = sys.argv[1]
     names = sys.argv[2:]
 
+    from bench import _run_one
     from worlddatapipeline_spark import get_spark
     from worlddatapipeline_spark.queries import QUERIES
 
@@ -36,11 +37,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     def run_one(name: str, sf_dir: str) -> float:
-        t0 = time.monotonic()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return time.monotonic() - t0
+        return _run_one(QUERIES, name, spark, sf_dir)
 
     results: dict[str, dict] = {}
     for name in names:

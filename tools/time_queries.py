@@ -5,7 +5,8 @@ best-of-2, noop sink).  Usage:
 
 Reads $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).  Prints one JSON
 line {"queries": {name: best_sec}, "warm": {name: warm_sec}, "sf_dir": ...}.
-Same get_spark session as bench.py so plan shapes match the bench.
+Same get_spark session and the same timed call (``bench._run_one``) as
+bench.py, so plan shapes and timings match the bench.
 """
 
 from __future__ import annotations
@@ -13,7 +14,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -22,6 +22,7 @@ def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from bench import _run_one
     from worlddatapipeline_spark import get_spark
     from worlddatapipeline_spark.queries import QUERIES
 
@@ -29,11 +30,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     def run_one(name: str) -> float:
-        t0 = time.monotonic()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return time.monotonic() - t0
+        return _run_one(QUERIES, name, spark, sf_dir)
 
     warm: dict[str, float] = {}
     best: dict[str, float] = {}

@@ -63,6 +63,7 @@ Spark-side concerns (all real, all tested):
 from __future__ import annotations
 
 import functools
+import types
 from collections.abc import Callable, Iterator
 
 import numpy as np
@@ -1429,7 +1430,10 @@ def _parse_dht(
     payload is cached (bounded, keyed on the raw bits+vals bytes): every
     stream this repo's encoders emit carries the same Annex-K pair, so
     per-image re-derivation was pure waste (§4.5); foreign tables still
-    build correctly and the cache clears itself at 64 entries."""
+    build correctly and the cache clears itself at 64 entries.  Cached
+    tables are shared by every later decode, so they are handed out as
+    read-only ``MappingProxyType`` views: a caller that mutated one would
+    corrupt every later stream carrying the same table."""
     i = 0
     while i < len(body):
         tc, th = body[i] >> 4, body[i] & 0x0F
@@ -1439,7 +1443,7 @@ def _parse_dht(
         hit = _DHT_CACHE.get(key)
         if hit is None:
             vals = list(body[i + 17 : i + 17 + nv])
-            hit = _huff_lookup(bits, vals)
+            hit = types.MappingProxyType(_huff_lookup(bits, vals))
             if len(_DHT_CACHE) > 64:
                 _DHT_CACHE.clear()
             _DHT_CACHE[key] = hit

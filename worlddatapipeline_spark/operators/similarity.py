@@ -1,22 +1,31 @@
 """Similarity search over embedding columns (array<float>).
 
-LLM-data-pipeline extension surface (BASELINE.json north_star): approximate
-nearest neighbours over ``embeddings(vec_id, embedding, label)``.
+LLM-data-pipeline extension surface (BASELINE.json north_star): nearest
+neighbours, near-duplicate pairs and dedup over
+``embeddings(vec_id, embedding, label)``.
 
-Two tiers:
-- ``cosine_topk``: brute-force exact cosine top-k for a bounded query set —
-  the correctness baseline.  Query side is broadcast; the corpus is scanned
-  once; per-corpus-partition partial top-k would be the next refinement but
-  the ranking window after a broadcast join is already shuffle-light because
-  only (query, corpus) scores move, not vectors.
-- ``lsh_topk``: random-hyperplane LSH bucketing — the 100 TB path.  Corpus
-  vectors land in sign-pattern buckets; a query only scores its own bucket
-  (and optional multi-probe neighbours).  Hyperplanes are deterministic from
-  a seed so results are reproducible across retries (same requirement as the
-  reference's seeded sequences, `behavior_executor.py:681-696`).
+Expression reference forms — ``cosine_pairs``, ``cosine_topk``,
+``lsh_topk`` and ``ivf_topk`` score with Catalyst expressions
+(``F.zip_with`` + ``F.aggregate``, codegen'd, no Python worker in the
+scoring loop).  ``cosine_topk`` is the exact correctness baseline.
+``lsh_topk`` (random-hyperplane buckets; one pandas_udf GEMM per batch
+computes every sign bit) and ``ivf_topk`` (inverted lists over sampled or
+k-means centroids) are the approximate 100 TB paths.  Hyperplanes and
+centroid samples are seeded, so results reproduce across retries (same
+requirement as the reference's seeded sequences,
+`behavior_executor.py:681-696`).
 
-All vector math is expression-level (``F.zip_with`` + ``F.aggregate``), fully
-codegen'd — no Python UDF in the scoring loop.
+Batched forms — ``cosine_pairs_batched``, ``cross_cosine_flags``,
+``cosine_topk_batched`` and ``filtered_cosine_topk`` return the same rows
+as the expression forms, scored by numpy BLAS on Python workers.  They
+share one frame: ``_collect_side`` brings the small side to the driver,
+``_matrix`` turns vectors into a float64 matrix with zero-safe L2 norms,
+and ``_gemm_stream`` broadcasts that matrix and streams the other side
+through ``mapInPandas``, one GEMM per Arrow batch.  The top-k forms cut
+each batch with ``_topk_cut`` under the final total order, and every
+top-k operator here ranks with ``_rank_topk``.  ``bucketed_cosine_dedup``
+(and ``semantic_dedup`` on top of it) runs one GEMM per bucket through
+the same ``_matrix``.
 """
 
 from __future__ import annotations
@@ -50,6 +59,172 @@ def l2_norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Rank (query_id, vec_id, cosine_sim) rows per query under the total
+    order (cosine_sim DESC, vec_id ASC) and keep ranks 1..k."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_sim").desc(), F.col("vec_id").asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _id_vec(df: DataFrame, id_col: str, vec_col: str, *extra: Column) -> DataFrame:
+    """The (id, v array<double>, *extra) projection that both sides of a
+    batched scorer read."""
+    return df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"), *extra
+    )
+
+
+def _collect_side(
+    side: DataFrame, bound: int | None = None, overflow: str = ""
+) -> pd.DataFrame:
+    """Collect the broadcast side of a batched scorer as a pandas frame.
+
+    With ``bound`` the collect is ENFORCED, not advisory: limit(bound+1)
+    keeps the probe O(bound), and a side over the bound raises
+    ``ValueError(overflow)`` with the scale-path pointer instead of OOMing
+    the driver."""
+    if bound is not None:
+        side = side.limit(bound + 1)
+    pdf = pd.DataFrame(side.collect(), columns=side.columns)
+    if bound is not None and len(pdf) > bound:
+        raise ValueError(overflow)
+    return pdf
+
+
+def _matrix(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """A frame's ``v`` vectors as a float64 matrix plus their L2 norms,
+    zero norms replaced by 1 so a zero vector scores 0, not NaN."""
+    m = np.array(list(pdf["v"]), dtype=np.float64)
+    n = np.linalg.norm(m, axis=1)
+    n[n == 0] = 1.0
+    return m, n
+
+
+def _cosines(a, an, b, bn, digits: int) -> np.ndarray:
+    """round(a·bᵀ / (|a|·|b|), digits): the division follows the matmul,
+    the same algebraic form as the expression path's dot/(|a|·|b|)."""
+    return np.round((a @ b.T) / (an[:, None] * bn[None, :]), digits)
+
+
+def _gemm_stream(
+    stream: DataFrame,
+    id_col: str,
+    vec_col: str,
+    side,
+    kernel,
+    schema: str,
+    *extra: Column,
+    spread: bool = False,
+) -> DataFrame:
+    """The shared batched-scorer frame: broadcast ``side`` once, stream
+    ``stream`` as (id, v array<double>, *extra) through ``mapInPandas``,
+    and call ``kernel(ids, m, n, pdf, side)`` on each non-empty Arrow
+    batch with its matrix and zero-safe norms; the kernel returns the
+    batch's output frame.  The stream never shuffles unless ``spread``
+    repartitions it to defaultParallelism (AQE would coalesce a small
+    scan onto one core)."""
+    bc = stream.sparkSession.sparkContext.broadcast(side)
+
+    def run(batches):
+        side_v = bc.value
+        for pdf in batches:
+            if len(pdf):
+                m, n = _matrix(pdf)
+                yield kernel(pdf["id"].to_numpy(dtype=np.int64), m, n, pdf, side_v)
+
+    df = _id_vec(stream, id_col, vec_col, *extra)
+    if spread:
+        df = df.repartition(stream.sparkSession.sparkContext.defaultParallelism)
+    return df.mapInPandas(run, schema)
+
+
+def _topk_cut(ids: np.ndarray, r: np.ndarray, q_ids: np.ndarray, k: int) -> pd.DataFrame:
+    """One batch's top-k candidates per query from rounded scores ``r``
+    (batch, n_queries); -inf marks masked pairs and is never emitted.
+
+    The cut must use the FINAL total order — (round(cos, 6) DESC, vec_id
+    ASC) — not raw scores: when a rounding tie (duplicate vectors,
+    last-ulp matmul noise) straddles a raw-score cut, argpartition keeps
+    an arbitrary member while the global window (and the SQL oracle) want
+    the smallest id, and the dropped row can never be recovered
+    downstream.  A batch-local top-k under the same
+    total order the final window uses is always a superset of that
+    batch's global-top-k members.  Vectorized: rows are pre-ordered by
+    vec_id once, then ONE stable column argsort makes row position the
+    ascending-id tie-break for every query at C speed (no per-query
+    Python loop)."""
+    kk = min(k, len(ids))
+    perm = np.argsort(ids, kind="stable")
+    ids_s = ids[perm]
+    r_s = r[perm]
+    # O(b) argpartition with a tie-slack window instead of a full
+    # O(b log b) column sort: take the kk-th largest rounded score per
+    # column, widen the cut to cover every row tied at-or-above it (so no
+    # tie member the final total order would keep can be dropped), then
+    # stable-sort only that slice.  Slice rows are re-sorted to ascending
+    # row index first, so the stable score sort still breaks ties by
+    # ascending vec_id, bit-identical to the full-sort path.
+    n_rows = len(ids_s)
+    if kk < n_rows:
+        thresh = -np.partition(-r_s, kk - 1, axis=0)[kk - 1]
+        kk2 = int((r_s >= thresh).sum(axis=0).max())
+    else:
+        kk2 = kk
+    if kk2 < n_rows:
+        part = np.argpartition(-r_s, kk2 - 1, axis=0)[:kk2]
+        part.sort(axis=0)
+        sub = np.take_along_axis(r_s, part, axis=0)
+        ord2 = np.argsort(-sub, axis=0, kind="stable")[:kk]
+        top = np.take_along_axis(part, ord2, axis=0)  # (kk, n_q)
+    else:
+        top = np.argsort(-r_s, axis=0, kind="stable")[:kk]  # (kk, n_q)
+    out_s = np.take_along_axis(r_s, top, axis=0).T.ravel()
+    out_c = ids_s[top].T.ravel()
+    out_q = np.repeat(q_ids, kk)
+    keep = np.isfinite(out_s)
+    return pd.DataFrame(
+        {"query_id": out_q[keep], "vec_id": out_c[keep], "cosine_sim": out_s[keep]}
+    )
+
+
+def _batched_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    vec_col: str,
+    id_col: str,
+    query_id_col: str,
+    attrs: tuple[Column, Column] | None = None,
+) -> DataFrame:
+    """Shared body of the batched top-k operators.  ``attrs`` is an
+    optional (query-side, corpus-side) pair of int64 key expressions: a
+    corpus row then only scores against queries with an equal key
+    (others score -inf before the cut)."""
+    q_extra = [attrs[0].alias("a")] if attrs else []
+    q = _collect_side(_id_vec(queries, query_id_col, vec_col, *q_extra))
+    qm, qn = _matrix(q)
+    q_ids = q["id"].to_numpy(dtype=np.int64)
+    q_attrs = q["a"].to_numpy(dtype=np.int64) if attrs else None
+
+    def kernel(ids, m, n, pdf, side):
+        q_ids_b, qm_b, qa_b = side
+        sims = (m / n[:, None]) @ qm_b.T  # (batch, n_queries)
+        sims[ids[:, None] == q_ids_b[None, :]] = -np.inf  # self-matches
+        if qa_b is not None:  # predicate mask
+            ca = pdf["a"].to_numpy(dtype=np.int64)
+            sims[ca[:, None] != qa_b[None, :]] = -np.inf
+        return _topk_cut(ids, np.round(sims, 6), q_ids_b, k)
+
+    c_extra = [attrs[1].alias("a")] if attrs else []
+    cand = _gemm_stream(
+        corpus, id_col, vec_col, (q_ids, qm / qn[:, None], q_attrs), kernel,
+        "query_id long, vec_id long, cosine_sim double", *c_extra,
+    )
+    return _rank_topk(cand, k)
 
 
 def cosine_pairs(
@@ -118,61 +293,27 @@ def cosine_pairs_batched(
     the oracle's round(…, 6), and the sim is computed as dot/(|a|·|b|) in
     the same algebraic form as the expression path.
     """
-    # ENFORCED bound on the broadcast side (the docstring contract used to
-    # be advisory): limit(max+1) makes the probe cost O(max_collect), and a
-    # corpus over the bound fails fast with the scale-path pointer instead
-    # of OOMing the driver.
-    rows = (
-        corpus.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .limit(max_collect + 1)
-        .collect()
+    side = _collect_side(
+        _id_vec(corpus, id_col, vec_col),
+        max_collect,
+        f"cosine_pairs_batched collects the corpus (> {max_collect} rows); "
+        "prune candidates first with lsh_topk/ivf_topk, or raise "
+        "max_collect if the driver can hold the matrix.",
     )
-    if len(rows) > max_collect:
-        raise ValueError(
-            f"cosine_pairs_batched collects the corpus (> {max_collect} rows); "
-            "prune candidates first with lsh_topk/ivf_topk, or raise "
-            "max_collect if the driver can hold the matrix."
-        )
-    b_ids = np.array([r["id"] for r in rows], dtype=np.int64)
-    bm = np.array([r["v"] for r in rows], dtype=np.float64)
-    bn = np.linalg.norm(bm, axis=1)
-    bn[bn == 0] = 1.0
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast((b_ids, bm, bn))
+    bm, bn = _matrix(side)
 
-    def score(batches):
-        ids_b, bm_b, bn_b = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            aids = pdf["id"].to_numpy(dtype=np.int64)
-            am = np.array(list(pdf["v"]), dtype=np.float64)
-            an = np.linalg.norm(am, axis=1)
-            an[an == 0] = 1.0
-            sims = np.round(
-                (am @ bm_b.T) / (an[:, None] * bn_b[None, :]), round_digits
-            )
-            keep = (aids[:, None] < ids_b[None, :]) & (sims >= threshold)
-            ai, bi = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "id_a": aids[ai],
-                    "id_b": ids_b[bi],
-                    "cosine_sim": sims[ai, bi],
-                }
-            )
-
-    par = spark.sparkContext.defaultParallelism
-    return (
-        corpus.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
+    def pairs(aids, am, an, pdf, side_v):
+        ids_b, bm_b, bn_b = side_v
+        sims = _cosines(am, an, bm_b, bn_b, round_digits)
+        keep = (aids[:, None] < ids_b[None, :]) & (sims >= threshold)
+        ai, bi = np.nonzero(keep)
+        return pd.DataFrame(
+            {"id_a": aids[ai], "id_b": ids_b[bi], "cosine_sim": sims[ai, bi]}
         )
-        .repartition(par)
-        .mapInPandas(score, "id_a long, id_b long, cosine_sim double")
+
+    return _gemm_stream(
+        corpus, id_col, vec_col, (side["id"].to_numpy(dtype=np.int64), bm, bn),
+        pairs, "id_a long, id_b long, cosine_sim double", spread=True,
     )
 
 
@@ -210,13 +351,7 @@ def cosine_topk(
             dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")), 6
         ).alias("cosine_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(scored, k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -320,10 +455,7 @@ def lsh_topk(
             ).alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(scored, k)
 
 
 def ivf_topk(
@@ -435,14 +567,7 @@ def _ivf_with_cents(
             dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")), 6
         ).alias("cosine_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.dropDuplicates(["query_id", "vec_id"])
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(scored.dropDuplicates(["query_id", "vec_id"]), k)
 
 
 def kmeans_centroids(
@@ -565,88 +690,7 @@ def cosine_topk_batched(
     np.dot's pairwise summation can differ from the sequential expression
     form in the last ulp — both are exact at the oracle's round(…, 6).
     """
-    q_rows = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    ).collect()
-    q_ids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    qm = np.array([r["qv"] for r in q_rows], dtype=np.float64)
-    qn = np.linalg.norm(qm, axis=1)
-    qn[qn == 0] = 1.0
-    qm = qm / qn[:, None]
-    sc = corpus.sparkSession.sparkContext
-    bq = sc.broadcast((q_ids, qm))
-
-    def score(batches):
-        ids_b, qm_b = bq.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            cm = np.array(list(pdf["cv"]), dtype=np.float64)
-            cn = np.linalg.norm(cm, axis=1)
-            cn[cn == 0] = 1.0
-            sims = (cm / cn[:, None]) @ qm_b.T  # (batch, n_queries)
-            sims[cids[:, None] == ids_b[None, :]] = -np.inf  # self-matches
-            # The per-batch cut must use the FINAL total order —
-            # (round(cos, 6) DESC, vec_id ASC) — not raw scores: when a
-            # rounding tie (duplicate vectors, last-ulp matmul noise)
-            # straddles the raw-score cut, argpartition keeps an arbitrary
-            # member while the global window (and the SQL oracle) want the
-            # smallest id, and the dropped row can never be recovered
-            # downstream (review catch r5).  A batch-local top-k under the
-            # same total order the final window uses is always a superset
-            # of that batch's global-top-k members.  Vectorized: rows are
-            # pre-ordered by vec_id once, then ONE stable column argsort
-            # makes row position the ascending-id tie-break for every
-            # query at C speed (no per-query Python loop — review catch).
-            r = np.round(sims, 6)
-            kk = min(k, len(cids))
-            perm = np.argsort(cids, kind="stable")
-            cids_s = cids[perm]
-            r_s = r[perm]
-            # O(b) argpartition with a tie-slack window instead of a full
-            # O(b log b) column sort (review catch r5): take the kk-th
-            # largest rounded score per column, widen the cut to cover every
-            # row tied at-or-above it (so no tie member the final total
-            # order would keep can be dropped), then stable-sort only that
-            # slice.  Slice rows are re-sorted to ascending row index first,
-            # so the stable score sort still breaks ties by ascending
-            # vec_id, bit-identical to the full-sort path.
-            n_rows = len(cids_s)
-            if kk < n_rows:
-                thresh = -np.partition(-r_s, kk - 1, axis=0)[kk - 1]
-                kk2 = int((r_s >= thresh).sum(axis=0).max())
-            else:
-                kk2 = kk
-            if kk2 < n_rows:
-                part = np.argpartition(-r_s, kk2 - 1, axis=0)[:kk2]
-                part.sort(axis=0)
-                sub = np.take_along_axis(r_s, part, axis=0)
-                ord2 = np.argsort(-sub, axis=0, kind="stable")[:kk]
-                top = np.take_along_axis(part, ord2, axis=0)  # (kk, n_q)
-            else:
-                top = np.argsort(-r_s, axis=0, kind="stable")[:kk]  # (kk, n_q)
-            out_s = np.take_along_axis(r_s, top, axis=0).T.ravel()
-            out_c = cids_s[top].T.ravel()
-            out_q = np.repeat(ids_b, kk)
-            keep = np.isfinite(out_s)
-            yield pd.DataFrame(
-                {
-                    "query_id": out_q[keep],
-                    "vec_id": out_c[keep],
-                    "cosine_sim": out_s[keep],
-                }
-            )
-
-    cand = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    ).mapInPandas(score, "query_id long, vec_id long, cosine_sim double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id").asc()
-    )
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _batched_topk(corpus, queries, k, vec_col, id_col, query_id_col)
 
 
 def bucketed_cosine_dedup(
@@ -691,10 +735,8 @@ def bucketed_cosine_dedup(
             return pdf.iloc[0:0][["id", "bucket"]].assign(dup_of=np.int64(0))
         pdf = pdf.sort_values("id").reset_index(drop=True)
         ids = pdf["id"].to_numpy(dtype=np.int64)
-        m = np.array(list(pdf["v"]), dtype=np.float64)
-        n = np.linalg.norm(m, axis=1)
-        n[n == 0] = 1.0
-        sims = np.round((m @ m.T) / (n[:, None] * n[None, :]), round_digits)
+        m, n = _matrix(pdf)
+        sims = _cosines(m, n, m, n, round_digits)
         hit = np.tril(sims >= thr, k=-1)  # [j, i] with i < j in id order
         removed = hit.any(axis=1)
         first = hit.argmax(axis=1)  # min row index == min id (sorted)
@@ -797,57 +839,31 @@ def cross_cosine_flags(
 
     Returns (id, n_hits, max_sim) for corpus rows with at least one hit.
     """
-    rows = (
-        probes.select(F.col(vec_col).cast("array<double>").alias("v"))
-        .limit(max_probes + 1)
-        .collect()
+    side = _collect_side(
+        probes.select(F.col(vec_col).cast("array<double>").alias("v")),
+        max_probes,
+        f"cross_cosine_flags collects the probe set (> {max_probes} "
+        "rows); decontamination probes are the held-out set — shard the "
+        "probe matrix or raise max_probes if the driver can hold it.",
     )
-    if len(rows) > max_probes:
-        raise ValueError(
-            f"cross_cosine_flags collects the probe set (> {max_probes} "
-            "rows); decontamination probes are the held-out set — shard the "
-            "probe matrix or raise max_probes if the driver can hold it."
-        )
-    pm = np.array([r["v"] for r in rows], dtype=np.float64)
-    pn = np.linalg.norm(pm, axis=1)
-    pn[pn == 0] = 1.0
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast((pm, pn))
     thr = float(threshold)
 
-    def score(batches):
-        pm_b, pn_b = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            am = np.array(list(pdf["v"]), dtype=np.float64)
-            an = np.linalg.norm(am, axis=1)
-            an[an == 0] = 1.0
-            sims = np.round(
-                (am @ pm_b.T) / (an[:, None] * pn_b[None, :]), round_digits
-            )
-            hits = sims >= thr
-            n_hits = hits.sum(axis=1)
-            keep = n_hits > 0
-            yield pd.DataFrame(
-                {
-                    "id": ids[keep],
-                    "n_hits": n_hits[keep].astype(np.int64),
-                    "max_sim": sims[keep].max(axis=1),
-                }
-            )
-
-    par = spark.sparkContext.defaultParallelism
-    return (
-        corpus.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
+    def flags(ids, am, an, pdf, side_v):
+        sims = _cosines(am, an, *side_v, round_digits)
+        n_hits = (sims >= thr).sum(axis=1)
+        keep = n_hits > 0
+        return pd.DataFrame(
+            {
+                "id": ids[keep],
+                "n_hits": n_hits[keep].astype(np.int64),
+                "max_sim": sims[keep].max(axis=1),
+            }
         )
-        .repartition(par)
-        .mapInPandas(score, "id long, n_hits long, max_sim double")
-        .withColumnRenamed("id", id_col)
-    )
+
+    return _gemm_stream(
+        corpus, id_col, vec_col, _matrix(side), flags,
+        "id long, n_hits long, max_sim double", spread=True,
+    ).withColumnRenamed("id", id_col)
 
 
 def int8_quantize(
@@ -915,10 +931,11 @@ def filtered_cosine_topk(
     Same batched-BLAS shape as ``cosine_topk_batched`` — the corpus never
     shuffles, queries broadcast once — with the predicate applied INSIDE
     the scoring kernel as a mask on the similarity matrix (mismatched
-    attributes score -inf before the per-batch top-k).  Pre-filtering the
-    corpus per query would re-scan it n_queries times; post-filtering the
-    top-k would under-fill it.  The mask costs one vectorized comparison
-    per batch and keeps both exactness and the single-scan plan.
+    attributes score -inf before the same tie-safe per-batch top-k cut).
+    Pre-filtering the corpus per query would re-scan it n_queries times;
+    post-filtering the top-k would under-fill it.  The mask costs one
+    vectorized comparison per batch and keeps both exactness and the
+    single-scan plan.
     """
     # attributes of ANY type (string, int, nullable) are compared by their
     # 64-bit hash, computed JVM-side so the Arrow column is a non-null
@@ -930,56 +947,10 @@ def filtered_cosine_topk(
             col.isNotNull(), F.xxhash64(col.cast("string"))
         ).otherwise(F.lit(sentinel))
 
-    q_rows = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-        _attr_hash(F.col(attr_col), -2).alias("qa"),
-    ).collect()
-    q_ids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    q_attrs = np.array([r["qa"] for r in q_rows], dtype=np.int64)
-    qm = np.array([r["qv"] for r in q_rows], dtype=np.float64)
-    qn = np.linalg.norm(qm, axis=1)
-    qn[qn == 0] = 1.0
-    qm = qm / qn[:, None]
-    sc = corpus.sparkSession.sparkContext
-    bq = sc.broadcast((q_ids, qm, q_attrs))
-
-    def score(batches):
-        ids_b, qm_b, qa_b = bq.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            cas = pdf["ca"].to_numpy(dtype=np.int64)
-            cm = np.array(list(pdf["cv"]), dtype=np.float64)
-            cn = np.linalg.norm(cm, axis=1)
-            cn[cn == 0] = 1.0
-            sims = (cm / cn[:, None]) @ qm_b.T  # (batch, n_queries)
-            sims[cids[:, None] == ids_b[None, :]] = -np.inf  # self-matches
-            sims[cas[:, None] != qa_b[None, :]] = -np.inf  # predicate mask
-            kk = min(k, len(cids))
-            top = np.argpartition(-sims, kk - 1, axis=0)[:kk]
-            out_q = np.repeat(ids_b, kk)
-            out_c = cids[top.T.ravel()]
-            out_s = np.take_along_axis(sims, top, axis=0).T.ravel()
-            keep = np.isfinite(out_s)
-            yield pd.DataFrame(
-                {
-                    "query_id": out_q[keep],
-                    "vec_id": out_c[keep],
-                    "cosine_sim": np.round(out_s[keep], 6),
-                }
-            )
-
-    cand = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-        _attr_hash(F.col(attr_col), -1).alias("ca"),
-    ).mapInPandas(score, "query_id long, vec_id long, cosine_sim double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id").asc()
+    return _batched_topk(
+        corpus, queries, k, vec_col, id_col, query_id_col,
+        (_attr_hash(F.col(attr_col), -2), _attr_hash(F.col(attr_col), -1)),
     )
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def topk_self_contract(out: DataFrame) -> DataFrame:

@@ -28,12 +28,7 @@ from .operators import similarity as sim_ops
 from .operators import stateful as stateful_ops
 from .operators import text as text_ops
 from .operators import windows as win_ops
-from .session import load_tables
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_tables(spark, sf_dir, list(names))
-    return [tabs[n] for n in names]
+from .session import _t
 
 
 # ---------------------------------------------------------------------------

@@ -16,16 +16,12 @@ from pyspark.sql import functions as F
 
 from .operators import bloom as bloom_ops
 from .session import (
+    _t,
     drain_memory_sink,
-    load_tables,
     materialize_and_release,
+    route_by_rows,
     streaming_events,
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_tables(spark, sf_dir, list(names))
-    return [tabs[n] for n in names]
 
 
 # ---------------------------------------------------------------------------
@@ -3592,11 +3588,7 @@ def q_equi_depth_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's own interpolation expression anyway (pinned by
     ``test_equi_depth_bins_router_branches_identical``).  Measured
     sf1.0: boundary aggregate 5.47 s → 2.77 s."""
-    import os  # noqa: PLC0415
-
     from pyspark.sql.functions import broadcast  # noqa: PLC0415
-
-    from .session import parquet_num_rows  # noqa: PLC0415
 
     (orders,) = _t(spark, sf_dir, "orders")
     cents = orders.select(
@@ -3605,9 +3597,7 @@ def q_equi_depth_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents")
     )
     qs = [i / 8.0 for i in range(1, 8)]
-    if parquet_num_rows(sf_dir, "orders") < int(
-        os.environ.get("SPARK_GRAFT_PCT_DIST_MIN", "500000")
-    ):
+    if not route_by_rows(sf_dir, "orders", "SPARK_GRAFT_PCT_DIST_MIN", 500_000):
         bounds = cents.agg(
             F.percentile("cents", F.array(*[F.lit(q) for q in qs])).alias("bs")
         )

@@ -38,14 +38,9 @@ from .operators import similarity as sim_ops
 from .operators import simulate as sim_gen
 from .operators import stateful as stateful_ops
 from .operators import windows as win_ops
-from .session import drain_memory_sink, load_tables, streaming_events
+from .session import _t, drain_memory_sink, streaming_events
 from .sources import listings as listing_src
 from .streaming import monitor as monitor_ops
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_tables(spark, sf_dir, list(names))
-    return [tabs[n] for n in names]
 
 
 # ---------------------------------------------------------------------------

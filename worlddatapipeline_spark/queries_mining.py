@@ -14,16 +14,12 @@ from pyspark.sql import functions as F
 
 from .operators import mining as mining_ops
 from .session import (
+    _t,
     drain_memory_sink,
-    load_tables,
     materialize_and_release,
+    route_by_rows,
     streaming_events,
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_tables(spark, sf_dir, list(names))
-    return [tabs[n] for n in names]
 
 
 # ---------------------------------------------------------------------------
@@ -751,17 +747,15 @@ def q_fuzzy_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
       and 8.5 s at sf1.0 — SLOWER than the quadratic plan at both
       bench scales; its win starts at the ~sf2 crossover.
 
-    The router picks the block join while the roster count is at or
-    under ``SPARK_GRAFT_FUZZY_FASTSS_MIN`` (default 200 000 — just
-    above the measured sf1.0 roster, below the extrapolated ~sf2
-    crossover where the n²/10⁴ term overtakes FastSS's fixed stages)
-    and the FastSS form above it, so a 100× corpus runs the linear
-    plan instead of 22.5 G levenshtein pairs.  The roster size is read
-    from the parquet footer on the driver (the statistic Spark's own
-    planner uses) — no job, no data pass; a count() action here cost
-    0.35 s, more than the whole routed query."""
-    import os  # noqa: PLC0415
-
+    The router (``session.route_by_rows``) picks the block join while
+    the roster count is under ``SPARK_GRAFT_FUZZY_FASTSS_MIN`` (default
+    200 000 — just above the measured sf1.0 roster, below the
+    extrapolated ~sf2 crossover where the n²/10⁴ term overtakes FastSS's
+    fixed stages) and the FastSS form at or above it, so a 100× corpus
+    runs the linear plan instead of 22.5 G levenshtein pairs.  The
+    roster size is read from the parquet footer on the driver (the
+    statistic Spark's own planner uses) — no job, no data pass; a count()
+    action here cost 0.35 s, more than the whole routed query."""
     (customer,) = _t(spark, sf_dir, "customer")
     clean = customer.select(
         F.col("c_custkey").alias("key"), F.col("c_name").alias("name")
@@ -774,12 +768,7 @@ def q_fuzzy_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("substr(name, 11 + CAST(key % 5 AS INT))"),
         ).alias("dname"),
     )
-    from .session import parquet_num_rows  # noqa: PLC0415
-
-    n_roster = parquet_num_rows(sf_dir, "customer")
-    if n_roster <= int(
-        os.environ.get("SPARK_GRAFT_FUZZY_FASTSS_MIN", "200000")
-    ):
+    if not route_by_rows(sf_dir, "customer", "SPARK_GRAFT_FUZZY_FASTSS_MIN", 200_000):
         # Reference block-join plan: fastest while n²/10⁴ lev pairs cost
         # less than FastSS's fixed stages (measured: wins at sf0.1 AND
         # sf1.0; see docstring table).

@@ -26,12 +26,7 @@ from pyspark.sql import functions as F
 
 from .operators import aggregates as agg_ops
 from .operators import joins as join_ops
-from .session import load_tables
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_tables(spark, sf_dir, list(names))
-    return [tabs[n] for n in names]
+from .session import _t, route_by_rows
 
 
 # ---------------------------------------------------------------------------
@@ -594,14 +589,8 @@ def q_event_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     empirical 60/60 formula pin in the operator); measured sf1.0:
     3.28 s → 2.96 s, and the single-reducer eval is gone from the plan.
     """
-    import os  # noqa: PLC0415
-
-    from .session import parquet_num_rows  # noqa: PLC0415
-
     (events,) = _t(spark, sf_dir, "events")
-    if parquet_num_rows(sf_dir, "events") < int(
-        os.environ.get("SPARK_GRAFT_PCT_DIST_MIN", "500000")
-    ):
+    if not route_by_rows(sf_dir, "events", "SPARK_GRAFT_PCT_DIST_MIN", 500_000):
         return (
             events.groupBy("event_type")
             .agg(

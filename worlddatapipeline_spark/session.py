@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -140,9 +140,9 @@ def streaming_events(spark: SparkSession, sf_dir: str):
 def parquet_num_rows(sf_dir: str, name: str) -> int:
     """Exact row count of one input table from the parquet FOOTER — the
     same statistic Spark's own scan planning reads — without scheduling
-    a job.  Used by size-routed plan choices (e.g. the
-    ``fuzzy_record_linkage`` hybrid), where a full count action would
-    cost more than the routing decision saves.  Handles both a single
+    a job.  Used by ``route_by_rows`` for size-routed plan choices
+    (e.g. the ``fuzzy_record_linkage`` hybrid), where a full count action
+    would cost more than the routing decision saves.  Handles both a single
     ``<name>.parquet`` file (the driver's testdata layout) and a
     Spark-written directory of part files."""
     import pyarrow.parquet as pq  # noqa: PLC0415
@@ -155,6 +155,16 @@ def parquet_num_rows(sf_dir: str, name: str) -> int:
             if f.endswith(".parquet")
         )
     return pq.ParquetFile(path).metadata.num_rows
+
+
+def route_by_rows(sf_dir: str, table: str, knob: str, default: int) -> bool:
+    """The size routers' one decision: True (take the scale-path plan)
+    when ``table`` has AT LEAST ``$knob`` rows (``default`` when the env
+    var is unset), False (keep the reference plan) below it.  The count
+    comes from the parquet footer (``parquet_num_rows``) — no job, no data
+    pass.  ``knob=0`` therefore always routes to the scale path, and a
+    knob above the table size always keeps the reference plan."""
+    return parquet_num_rows(sf_dir, table) >= int(os.environ.get(knob, str(default)))
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
@@ -207,3 +217,10 @@ def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None
         df.createOrReplaceTempView(n)
         out[n] = df
     return out
+
+
+def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
+    """``load_tables`` for the named tables, returned in argument order —
+    the query builders' ``(orders, lineitem) = _t(spark, sf_dir, ...)``."""
+    tabs = load_tables(spark, sf_dir, list(names))
+    return [tabs[n] for n in names]
