@@ -37,6 +37,26 @@ def test_cli_scan_and_reconcile(spark, tmp_path, capsys):
     assert stats == {"verified": 1, "missing": 1, "untracked": 1}
 
 
+@pytest.mark.parametrize("export", [True, False])
+def test_cli_sequence_frames(spark, tmp_path, capsys, export):
+    """`frames` is sequences x resample_points, from the export's observed
+    row count when there is a destination, else from a count."""
+    maps = str(tmp_path / "maps")
+    spark.createDataFrame([("Demo",)], "map_name string").write.parquet(maps)
+    man = tmp_path / "job.json"
+    man.write_text(json.dumps({"sequences_per_map": 2, "resample_points": 12,
+                               "n_segments": 3, "steps_per_segment": 10}))
+    argv = ["sequence", "--maps", maps, "--manifest", str(man)]
+    if export:
+        argv += ["--out", str(tmp_path / "cams")]
+    assert main(argv) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out == {"frames": 2 * 12}
+    if export:
+        back = spark.read.csv(str(tmp_path / "cams" / "transform"), header=True)
+        assert back.count() == 2 * 12
+
+
 def test_cli_query_dispatch(spark, capsys):
     rc = main(["query", "catalog_stats", "--sf-dir", "/root/testdata/sf0.001"])
     assert rc == 0

@@ -85,6 +85,64 @@ def test_export_csv_schemas(spark, tmp_path):
     assert r["fov"] == 90.0 and r["width"] == 1920 and r["focal_length"] == 35.0
 
 
+def _poses(spark):
+    return spark.createDataFrame(
+        [("s1", 0, 100.0, 0.0, 0.0, 5.0, 45.0, 0.0),
+         ("s1", 1, 200.0, 0.0, 0.0, 5.0, 46.0, 0.0),
+         ("s2", 0, 300.0, 10.0, 0.0, 6.0, 47.0, 0.0)],
+        ["sequence_id", "frame", "x", "y", "z", "pitch", "yaw", "roll"],
+    )
+
+
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_write_camera_csvs_keeps_caller_cache(spark, tmp_path):
+    """A frame the caller persisted is still cached after the export."""
+    from pyspark import StorageLevel
+
+    from worlddatapipeline_spark.operators import export
+
+    poses = _poses(spark).persist()
+    try:
+        poses.count()
+        held = _persistent_rdds(spark)
+        assert export.write_camera_csvs(poses, str(tmp_path / "cam")) == 3
+        assert poses.storageLevel != StorageLevel.NONE
+        assert held <= _persistent_rdds(spark)
+    finally:
+        poses.unpersist()
+
+
+@pytest.mark.parametrize("case", ["ok", "out_dir_is_file", "second_write_fails"])
+def test_write_camera_csvs_releases_own_cache(spark, tmp_path, case):
+    """An uncached frame is persisted only for the two writes: no cached
+    RDD outlives the call, also when a write raises (after the first write
+    has filled the cache, in the ``second_write_fails`` case)."""
+    from worlddatapipeline_spark.operators import export
+
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import AnalysisException
+
+    out_dir, mode = tmp_path / "cam", "overwrite"
+    if case == "out_dir_is_file":
+        out_dir.write_text("not a directory")
+        raises = Py4JJavaError  # the transform write cannot create its dir
+    elif case == "second_write_fails":
+        (out_dir / "extrinsic").mkdir(parents=True)
+        mode, raises = "errorifexists", AnalysisException
+    before = _persistent_rdds(spark)
+    if case == "ok":
+        assert export.write_camera_csvs(_poses(spark), str(out_dir)) == 3
+    else:
+        with pytest.raises(raises):
+            export.write_camera_csvs(_poses(spark), str(out_dir), mode=mode)
+    if case == "second_write_fails":
+        assert (out_dir / "transform" / "_SUCCESS").exists()
+    assert _persistent_rdds(spark) <= before
+
+
 def test_extrinsics_expr_matches_pandas_udf(spark):
     """Differential: the codegen Column form and the numpy pandas-UDF form
     produce identical matrices (same IEEE ops, trig within 1 ulp)."""

@@ -81,6 +81,22 @@ def test_scan_directory(spark, tmp_path):
     assert rel == {"a.txt": 5, "sub/b.bin": 8}
 
 
+@pytest.mark.parametrize("case", ["no_files", "all_excluded"])
+def test_scan_directory_empty_tree(spark, tmp_path, case):
+    """A tree with nothing to list is an empty four-column frame, not a
+    schema-inference error."""
+    (tmp_path / "sub").mkdir()
+    if case == "all_excluded":
+        (tmp_path / "a.txt").write_text("hello")
+        (tmp_path / "sub" / "b.url").write_text("x")
+    out = listings.scan_directory(spark, str(tmp_path), exclude_exts=["txt", "url"])
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("path", "string"), ("relpath", "string"),
+        ("size", "bigint"), ("mtime", "bigint"),
+    ]
+    assert out.count() == 0
+
+
 def test_python_datasource_parity_with_expression_parse(spark, tmp_path):
     """The Spark 4 Python DataSource (bos_listing) and the expression
     parser are independent implementations of the same line format — they

@@ -3,11 +3,14 @@
 Each test feeds a tiny fixture through one job type and checks the shape +
 the manifest-driven knobs (template merge, date suffix, exclusions)."""
 
+import re
+from collections import Counter
 from datetime import date
 
 import pytest
 from pyspark.sql import functions as F
 
+from worlddatapipeline_spark.operators import export as export_ops
 from worlddatapipeline_spark.plans import pipelines
 
 
@@ -71,9 +74,31 @@ def test_sequence_job_deterministic_and_exports(spark, tmp_path):
     per_seq = sum(1 for r in a if r["sequence_id"] == "Demo_000")
     assert per_seq == 16
     out_dir = str(tmp_path / "cams")
-    pipelines.run_sequence_job(spark, maps, man, output_dir=out_dir)
+    out = pipelines.run_sequence_job(spark, maps, man, output_dir=out_dir)
     t = spark.read.csv(f"{out_dir}/transform", header=True)
     assert t.count() == 32
+    # both layouts hold exactly the rows of their row builders
+    for layout, rows in (("transform", export_ops.transform_rows(out)),
+                         ("extrinsic", export_ops.extrinsic_rows(out))):
+        back = spark.read.schema(rows.schema).csv(
+            f"{out_dir}/{layout}", header=True
+        ).select(*rows.columns)
+        assert Counter(map(tuple, back.collect())) == Counter(
+            map(tuple, rows.collect())
+        )
+        for d in (tmp_path / "cams" / layout).iterdir():
+            if d.is_dir():
+                parts = [f for f in d.iterdir() if f.name.startswith("part-")]
+                assert len(parts) == 1, d
+    # the per-sequence stages run on every core: the job rows are
+    # repartitioned by number (which adaptive execution never coalesces)
+    # below the simulation's grouped pandas stage
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    below = plan.split("FlatMapGroupsInPandas", 1)[1]
+    assert re.search(
+        r"Exchange hashpartitioning\(sequence_id#\d+, \d+\), REPARTITION_BY_NUM",
+        below,
+    ), plan
 
 
 def test_render_plan_prefix_match_and_date_suffix(spark):

@@ -27,6 +27,7 @@ import argparse
 import json
 import sys
 
+from .operators import export as export_ops
 from .plans import pipelines
 from .plans.manifests import load_manifest
 from .session import get_spark, load_tables
@@ -114,10 +115,12 @@ def main(argv: list[str] | None = None) -> int:
         n = plan.count()
         print(json.dumps({"maps": n, "to_bake": plan.filter("should_bake").count()}))
     elif args.cmd == "sequence":
-        out = pipelines.run_sequence_job(
+        out, dest = pipelines.sequence_poses(
             spark, spark.read.parquet(args.maps), _manifest(args), output_dir=args.out,
         )
-        print(json.dumps({"frames": out.count()}))
+        # the export observes its row count, so only a run without one counts
+        frames = export_ops.write_camera_csvs(out, dest) if dest else out.count()
+        print(json.dumps({"frames": frames}))
     elif args.cmd == "render-plan":
         plan = pipelines.run_render_plan(
             spark, spark.read.parquet(args.sequences), spark.read.parquet(args.maps),

@@ -13,11 +13,18 @@ Reproduces the reference's three camera CSV artifacts per sequence
 Writes are `df.write.csv(header=True)` partitioned by sequence — at scale
 `partitionBy(sequence_id)` produces one directory per sequence with the CSV
 parts inside, the distributed equivalent of the per-sequence files.
+
+`write_camera_csvs` computes the pose lineage once for both layouts: the
+two writes read one persisted copy of the poses (simulation, resample and
+angle stages included), which it releases when the writes end, and the
+transform row count comes from an observed metric on the first write, so
+a caller that reports it needs no extra pass.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geometry import CM_TO_M, with_extrinsics_expr
@@ -87,12 +94,27 @@ def extrinsic_rows(poses: DataFrame) -> DataFrame:
 
 def write_camera_csvs(
     poses: DataFrame, out_dir: str, mode: str = "overwrite"
-) -> None:
+) -> int:
     """Write transform + extrinsic CSVs partitioned by sequence_id —
-    the distributed form of the reference's per-sequence files."""
-    transform_rows(poses).write.mode(mode).partitionBy("sequence_id").csv(
-        f"{out_dir}/transform", header=True
-    )
-    extrinsic_rows(poses).write.mode(mode).partitionBy("sequence_id").csv(
-        f"{out_dir}/extrinsic", header=True
-    )
+    the distributed form of the reference's per-sequence files.
+
+    Both layouts derive from one pose lineage, so ``poses`` is persisted
+    for the two writes (and released afterwards, also on failure) unless
+    the caller already cached it.  Returns the number of transform rows,
+    observed during the write itself."""
+    owned = poses.storageLevel == StorageLevel.NONE
+    if owned:
+        poses = poses.persist()
+    try:
+        obs = Observation()
+        rows = transform_rows(poses).observe(obs, F.count(F.lit(1)).alias("rows"))
+        rows.write.mode(mode).partitionBy("sequence_id").csv(
+            f"{out_dir}/transform", header=True
+        )
+        extrinsic_rows(poses).write.mode(mode).partitionBy("sequence_id").csv(
+            f"{out_dir}/extrinsic", header=True
+        )
+        return int(obs.get["rows"])
+    finally:
+        if owned:
+            poses.unpersist()

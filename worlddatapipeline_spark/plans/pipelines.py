@@ -158,7 +158,29 @@ def run_sequence_job(
     fixed-speed fit, arc-length resample, derive + sanitize angles, and
     return camera-ready pose rows.  When ``output_dir`` (or the manifest's
     ``output_base_dir``) is set, also writes the reference's camera CSV
-    layout (`camera_exporter.py:383-437`)."""
+    layout (`camera_exporter.py:383-437`).
+
+    The job rows are repartitioned by number on ``sequence_id`` before the
+    simulation.  They are a few KB, so adaptive execution, which sizes
+    shuffle partitions by bytes, would coalesce them into one partition and
+    run the CPU-bound simulation as a single task; a repartition by number
+    is never coalesced, so every core gets a share of the sequences."""
+    out, dest = sequence_poses(spark, maps, manifest, output_dir)
+    if dest:
+        export_ops.write_camera_csvs(out, dest)
+    return out
+
+
+def sequence_poses(
+    spark: SparkSession,
+    maps: DataFrame,
+    manifest: dict | None = None,
+    output_dir: str | None = None,
+) -> tuple[DataFrame, str | None]:
+    """`run_sequence_job` without the export: the lazy pose rows and the
+    CSV destination (``output_dir``, else the merged manifest's
+    ``output_base_dir``, else ``None``), for a caller that writes them
+    itself and wants `write_camera_csvs`'s row count."""
     m = merge_manifest(manifest or {}, defaults=SEQUENCE_DEFAULTS)
     nseq = int(m["sequences_per_map"])
     jobs = (
@@ -178,8 +200,11 @@ def run_sequence_job(
             ).alias("seed"),
         )
     )
+    # by number, which AQE never coalesces (see run_sequence_job)
     poses = sim_ops.simulate_jobs(
-        jobs.select("sequence_id", "seed"),
+        jobs.select("sequence_id", "seed").repartition(
+            spark.sparkContext.defaultParallelism, "sequence_id"
+        ),
         n_segments=int(m["n_segments"]),
         steps_per_segment=int(m["steps_per_segment"]),
         speed=float(m["speed"]),
@@ -209,10 +234,7 @@ def run_sequence_job(
         F.col("pitch_l").alias("pitch"),
         F.lit(0.0).alias("roll"),
     )
-    dest = output_dir or m.get("output_base_dir")
-    if dest:
-        export_ops.write_camera_csvs(out, dest)
-    return out
+    return out, output_dir or m.get("output_base_dir")
 
 
 def run_render_plan(
