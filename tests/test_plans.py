@@ -662,6 +662,11 @@ _SMJ_OK = {
     # TPC-H-shaped fact⋈fact (Q2/Q20 analogs)
     "excess_stock_suppliers",
     "min_cost_supplier",
+    # TPC-H Q5/Q7-shaped lineitem⋈orders on orderkey: each fact side is
+    # pruned by its own broadcast dimension hops, then the two facts meet
+    # in the one orderkey shuffle (plans/r11/*_after.txt)
+    "local_supplier_volume",
+    "nation_pair_volume",
     # users×brands candidate anti-join against the interaction fact
     "negative_sampling_pairs",
     # r9: internal-plan capture surfaced these (VERDICT r8 item 4).
