@@ -18,12 +18,18 @@ def _fmt(spark, df):
 
 
 def _plan(spark, name):
-    """Formatted plan of a registry query.  Queries that eagerly
-    materialize (persist + localCheckpoint release, the r11 multi-reader
-    pattern) return a lineage-truncated ExistingRDD scan — for those,
-    capture the PRE-checkpoint plan at the truncation point (the same
-    interception tools/plan_audit.py uses) and assert over captured +
-    final text together."""
+    """Formatted plan of a registry query (see `_built_plan`)."""
+    return _built_plan(spark, lambda: QUERIES[name](spark, SF))
+
+
+def _built_plan(spark, build):
+    """Formatted plan of the frame ``build()`` returns.  Builders that
+    keep a barrier (``session.materialize_and_release``: persist + eager
+    localCheckpoint, only where two readers share no exchange) return a
+    lineage-truncated ExistingRDD scan — for those, capture the
+    PRE-checkpoint plan at the truncation point (the same interception
+    tools/plan_audit.py uses) and assert over captured + final text
+    together."""
     from pyspark.sql.classic.dataframe import DataFrame as _CDF
 
     captured = []
@@ -38,7 +44,7 @@ def _plan(spark, name):
 
     _CDF.localCheckpoint = lc
     try:
-        df = QUERIES[name](spark, SF)
+        df = build()
     finally:
         _CDF.localCheckpoint = orig
     final = _fmt(spark, df)
@@ -269,23 +275,8 @@ def test_minhash_bucket_guard_shares_join_exchange(spark):
 def test_bloom_probe_is_map_side(spark):
     """The Bloom prefilter must evaluate BEFORE any join/exchange on the
     corpus side: the probe filter sits under the first Exchange above the
-    train-shingle scan, so pruned rows never shuffle.  Inspects the LAZY
-    frame builder — the registry query materializes through
-    materialize_and_release, whose checkpoint truncates the visible plan."""
-    from worlddatapipeline_spark.queries_analytics import (
-        bloom_decontamination_frame,
-    )
-
-    out, cached = bloom_decontamination_frame(spark, SF)
-    try:
-        plan = out._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-    finally:
-        for c in cached:
-            c.unpersist()
+    train-shingle scan, so pruned rows never shuffle."""
+    plan = _plan(spark, "bloom_decontamination")
     assert "CartesianProduct" not in plan
     # the probe is an ArrowEvalPython/pythonUDF stage feeding a Filter
     assert "pythonUDF" in plan or "ArrowEvalPython" in plan
@@ -389,7 +380,7 @@ def test_bm25_broadcasts_query_side_no_python(spark):
     queries = spark.createDataFrame(
         [("q1", "spark join table")], "query_id string, query_text string"
     )
-    df = bm25_topk(docs, queries, materialize=False)
+    df = bm25_topk(docs, queries)
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
@@ -537,14 +528,13 @@ def test_skyline_prunes_at_scan_and_broadcasts_frontier(spark):
     from worlddatapipeline_spark.operators.aggregates import skyline_2d
 
     part = load_tables(spark, SF, ["part"])["part"]
-    df = skyline_2d(
-        part.select("p_partkey", "p_retailprice", "p_size"),
-        "p_retailprice",
-        "p_size",
-        materialize=False,
-    )
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    plan = _built_plan(
+        spark,
+        lambda: skyline_2d(
+            part.select("p_partkey", "p_retailprice", "p_size"),
+            "p_retailprice",
+            "p_size",
+        ),
     )
     assert "MapInPandas" in plan
     # prune sits on the scan: no shuffle between FileScan and MapInPandas
@@ -634,6 +624,11 @@ _SINGLE_EXCHANGE_OK = {
     "rfm_segments",
     # two 1-row aggs + the 10-row decile-prefix window (VERDICT r8 item 3)
     "gini_purchase_concentration",
+    # lazy builders: each reader of a 1-row scalar aggregate shows its own
+    # SinglePartition exchange in the static plan (the value-range bounds
+    # read by both halves; the attribution sweep read by 3 union branches)
+    "attribution_window_sweep",
+    "distribution_drift",
 }
 
 # Queries allowed to contain SortMergeJoin: all large⋈large by design
@@ -715,3 +710,80 @@ def test_fingerprints_smj_only_where_large_large():
     assert rogue == set(), (
         f"new sort-merge joins (did a broadcast fall back?): {sorted(rogue)}"
     )
+
+
+def test_plan_fingerprints_match_committed():
+    """The committed PLAN_FINGERPRINTS.json is the live plan of every
+    registry query: re-fingerprint them all in a fresh process (a fresh
+    get_spark() session, not this module's test-mutated one) and require
+    zero changes, so the registry-wide invariants above check real plans."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "tools/plan_audit.py", "--diff",
+         "PLAN_FINGERPRINTS.json"],
+        cwd=root, capture_output=True, text=True, timeout=1200,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    diffs = [ln for ln in proc.stdout.splitlines() if ln.startswith("DIFF ")]
+    assert "0 fingerprint changes" in proc.stdout, "\n".join(diffs)
+
+
+# Registry queries whose call tree reaches no persist + localCheckpoint
+# barrier: the builder returns a lazy plan and running it pins nothing.
+_LAZY_QUERIES = [
+    "attribution_window_sweep",
+    "bloom_decontamination",
+    "bm25_topk_search",
+    "cuped_adjusted_ab",
+    "daily_autocorrelation",
+    "degree_assortativity",
+    "did_readout",
+    "distribution_drift",
+    "dow_seasonality",
+    "embedding_ivf_recall",
+    "hybrid_rank_fusion",
+    "lead_lag_correlation",
+    "minhash_candidates",
+    "negative_sampling_pairs",
+    "pmi_term_pairs",
+    "seasonal_decompose",
+    "session_conformance",
+    "simhash_exact_containment",
+    "simhash_near_dups",
+    "theil_sen_trend",
+    "triangle_count",
+]
+# their query literals are Python-list frames, which plan as a Scan
+# ExistingRDD of their own; the checkpoint and pinned-RDD checks still hold
+_PY_LIST_LITERALS = {"bm25_topk_search", "hybrid_rank_fusion"}
+
+
+@pytest.mark.parametrize("name", _LAZY_QUERIES)
+def test_lazy_query_has_no_barrier(spark, name):
+    from pyspark.sql.classic.dataframe import DataFrame as _CDF
+
+    checkpoints = []
+    orig = _CDF.localCheckpoint
+
+    def lc(self, *a, **k):
+        checkpoints.append(1)
+        return orig(self, *a, **k)
+
+    def ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = ids()
+    _CDF.localCheckpoint = lc
+    try:
+        df = QUERIES[name](spark, SF)
+    finally:
+        _CDF.localCheckpoint = orig
+    assert checkpoints == []
+    if name not in _PY_LIST_LITERALS:
+        assert "Scan ExistingRDD" not in _fmt(spark, df)
+    df.collect()
+    assert ids() - before == set()

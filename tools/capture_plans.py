@@ -33,8 +33,9 @@ def main() -> None:
     spark = get_spark(app_name="wdp-capture-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Queries that eagerly materialize (persist + localCheckpoint release)
-    # return a lineage-truncated ExistingRDD scan; capture the
+    # Builders that keep a barrier (session.materialize_and_release) and
+    # the iterative graph kernels return a lineage-truncated ExistingRDD
+    # scan; capture the
     # PRE-checkpoint plan at each truncation point (the plan_audit /
     # test_plans interception) so the committed file shows the physical
     # plan that actually executed.

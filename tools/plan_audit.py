@@ -14,9 +14,10 @@ plans used to fingerprint as ``{}``): while a query function runs, the
 sweep monkeypatches
 
 * ``DataFrame.localCheckpoint`` — records the formatted PRE-checkpoint
-  plan of every frame the query materializes internally (this covers
-  ``materialize_and_release``, the iterative graph kernels' per-iteration
-  checkpoints, and the round-trip staging frames), and
+  plan of every frame the query materializes internally (this covers the
+  few builders that keep a ``materialize_and_release`` barrier, the
+  iterative graph kernels' per-iteration checkpoints, and the round-trip
+  staging frames), and
 * ``StreamingQuery.awaitTermination`` — records the executed micro-batch
   physical plan (``explainInternal``) of every real streaming run.
 
@@ -39,10 +40,11 @@ do run when fingerprinted; default sf0.001 keeps that cheap.
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Formatted-mode explain renders each Exchange as a numbered node with its
 # partitioning on a separate "Arguments:" line — 'Exchange hashpartitioning'

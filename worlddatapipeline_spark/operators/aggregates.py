@@ -177,7 +177,6 @@ def skyline_2d(
     y_col: str,
     minimize_x: bool = True,
     maximize_y: bool = True,
-    materialize: bool = True,
 ) -> DataFrame:
     """Pareto frontier (skyline) over two numeric criteria.
 
@@ -243,18 +242,13 @@ def skyline_2d(
             keep_sorted[1:] = sy_sorted[1:] >= run[:-1]  # drop only strict
             yield pdf.iloc[np.sort(order[keep_sorted])]
 
-    # persisted: the remnant feeds BOTH semi-join sides (frontier build +
-    # probe); without a barrier the corpus scan + prune would run twice.
-    # Cache-cheap by construction (it is the pruned survivors), released
-    # via the same materialize pattern the dedup operators use.
-    # ``materialize=False`` returns the fully lazy plan with NO persist —
-    # for plan inspection or composing (persist/checkpoint yourself; the
-    # compose pays the second scan otherwise).
+    # Barrier: the remnant is read by the frontier build (distinct +
+    # window) and by the semi-join probe, which share no exchange, so the
+    # lazy plan runs the scan + Python prune twice (A/B: lazy 1.13×).
+    # Cache-cheap by construction (it is the pruned survivors).
     from ..session import materialize_and_release  # noqa: PLC0415
 
-    remnant = staged.mapInPandas(local_prune, staged.schema)
-    if materialize:
-        remnant = remnant.persist()
+    remnant = staged.mapInPandas(local_prune, staged.schema).persist()
 
     w_glob = (
         Window.orderBy(F.col("__sx").desc(), F.col("__sy").desc())
@@ -270,8 +264,6 @@ def skyline_2d(
     out = remnant.join(
         broadcast(frontier_pairs), ["__sx", "__sy"], "left_semi"
     ).drop("__sx", "__sy")
-    if not materialize:
-        return out
     return materialize_and_release(out, remnant)
 
 

@@ -12,7 +12,7 @@ Scale design
 - MinHash-LSH: fused Arrow-pass signatures (`fused_minhash_signatures`:
   word-blake2b + vectorized shingle mix + minimum.reduceat over all hash
   functions at once) → band buckets → self-join per bucket over the
-  persisted 16-bytes/doc signature frame.  Candidate pairs only ever meet
+  16-bytes/doc signature frame.  Candidate pairs only ever meet
   inside a band bucket, so the shuffle is O(docs × bands), never O(docs²).
   (`minhash_signatures`/`minhash_signature` remain as the JVM xxhash64
   expression forms for array-typed callers.)
@@ -261,13 +261,12 @@ def minhash_lsh_candidates(
     combined aggregation, not an extra full shuffle.
     """
     rows_per_band = num_hashes // bands
-    # fused Arrow-pass signatures + persist: the banded self-join below reads
-    # the signature frame on BOTH sides; without a materialization barrier
-    # the full text scan + signature pass would execute twice.  The persisted
-    # frame is (1 + num_hashes) longs per doc — cache-cheap at any scale.
+    # the banded self-join reads the signature frame on BOTH sides through
+    # one (band, bucket) exchange, which Spark reuses, so the text scan +
+    # signature pass runs once
     with_sig = fused_minhash_signatures(
         df, text_col, id_col, num_hashes, shingle_n
-    ).persist()
+    )
     banded = with_sig.select(
         "id",
         F.explode(
@@ -301,7 +300,7 @@ def minhash_lsh_candidates(
             .drop("__bsz")
         )
     a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
+    return (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -311,11 +310,6 @@ def minhash_lsh_candidates(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    # Candidate set is LSH-bounded and small; materializing it releases the
-    # signature cache immediately instead of leaking it to ContextCleaner.
-    from ..session import materialize_and_release  # noqa: PLC0415
-
-    return materialize_and_release(pairs, with_sig)
 
 
 # Finite-by-default pair-generation cap for exact Jaccard: no caller gets a
@@ -574,10 +568,12 @@ def ngram_jaccard_pairs(
             )
             .filter(F.col("jaccard") >= threshold)
         )
-        # Materialize the (candidate-bounded) pair set and release the
-        # shingle+df cache — also means downstream iterative consumers
-        # (dup_cluster_representatives' star rounds) re-read a checkpointed
-        # pair frame instead of re-deriving postings each round.
+        # Barrier: ranked is read by the prefix-pair branch (shuffled by
+        # shingle) and by docsets (grouped by id), which share no exchange
+        # (A/B: lazy 1.24×).  Materialize the (candidate-bounded) pair set
+        # and release the cache — downstream iterative consumers
+        # (dup_cluster_representatives' star rounds) then re-read a
+        # checkpointed pair frame instead of re-deriving postings.
         from ..session import materialize_and_release  # noqa: PLC0415
 
         return materialize_and_release(out, ranked)
@@ -824,17 +820,14 @@ def simhash_near_dups(
     Hamming distance <= max_hamming.  (Pigeonhole: hamming<=bands-1 is always
     caught.)
 
-    Signatures come from ``fused_simhash_signatures`` (one Arrow pass) and
-    the tiny (id, sig) frame is persisted before fan-out: the banding explode
-    + bucket groupBy would otherwise re-run the whole text scan per
-    downstream stage (Catalyst has no materialization barrier), and 16 bytes
-    × docs is the cheapest possible cache at any corpus scale.
+    Signatures come from ``fused_simhash_signatures`` (one Arrow pass),
+    read once by the banding explode.
     """
     bits = 63
     chunk = (bits + bands - 1) // bands
     with_sig = fused_simhash_signatures(
         df, text_col, id_col, shingle_n=shingle_n
-    ).persist()
+    )
     mask = (1 << chunk) - 1
     chunks = with_sig.select(
         "id",
@@ -883,17 +876,12 @@ def simhash_near_dups(
     )
     pairs = buckets.select(F.explode(pair_arr).alias("p")).select("p.*")
     ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    out = (
+    return (
         pairs.withColumn("hamming", ham)
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
         .distinct()
     )
-    # Verified pair set is Hamming-bounded and small; release the signature
-    # cache now rather than leaking it to ContextCleaner.
-    from ..session import materialize_and_release  # noqa: PLC0415
-
-    return materialize_and_release(out, with_sig)
 
 
 def dup_cluster_representatives(

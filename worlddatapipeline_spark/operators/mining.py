@@ -79,11 +79,11 @@ def association_rules(
     the product passes int64 while the quotient (≤ n * 1e6 only in the
     degenerate single-occurrence case) still fits BIGINT.
     """
-    # The incidence frame feeds FOUR consumers (pair self-join ×2, item
-    # counts, basket total); without a persist each re-derives it from the
-    # source — the executed plan showed 0 ReusedExchange and ~5 scans of a
-    # fact-fact join upstream.  Persist + eager-checkpoint the (small,
-    # item-domain-bounded) result, then release — the dedup-module pattern.
+    # Barrier: the incidence frame is read by the basket-keyed pair
+    # self-join and by the item counts and basket total, which share no
+    # exchange with it, so the lazy plan re-runs the upstream fact-fact
+    # join (0 ReusedExchange, ~5 scans; A/B: lazy 1.50×).  Persist +
+    # eager-checkpoint the (small, item-domain-bounded) result, then release.
     inc = basket_incidence(df, basket_col, item_col, max_items).persist()
     pairs = (
         inc.alias("a")
@@ -149,8 +149,9 @@ def cooccurrence_cosine(
 
     Returns (item_a, item_b, n_ab, cos2_ppm) with item_a < item_b.
     """
-    # Same multi-consumer shape as association_rules — persist, checkpoint
-    # the (item²-bounded) pair result, release the cache.
+    # Barrier, as in association_rules: the pair self-join and the item
+    # counts share no exchange over inc (A/B: lazy 1.29×) — persist,
+    # checkpoint the (item²-bounded) pair result, release the cache.
     inc = basket_incidence(df, context_col, item_col, max_items).persist()
     pairs = (
         inc.alias("a")

@@ -65,7 +65,6 @@ def bm25_topk(
     id_col: str = "doc_id",
     qid_col: str = "query_id",
     qtext_col: str = "query_text",
-    materialize: bool = True,
 ) -> DataFrame:
     """Top-k documents per query under Lucene BM25.
 
@@ -86,11 +85,8 @@ def bm25_topk(
     re-tokenizes the corpus, which costs one more scan but removes the
     full-vocabulary postings shuffle AND the postings persist entirely; at
     100 TB a full-corpus (id, term, tf) exchange dwarfs a second columnar
-    scan.  ``materialize`` now only controls the eager materialization of
-    the (≤ k·|queries|-row) result (plan-inspection callers pass False).
+    scan.
     """
-    from ..session import materialize_and_release
-
     toks = docs.select(
         F.col(id_col).alias("id"), tokenize(F.col(text_col)).alias("ts")
     )
@@ -125,10 +121,6 @@ def bm25_topk(
         .groupBy("id", "dl", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    # qp feeds two consumers (df, scoring) but is query-vocab-bounded —
-    # persisting it costs KBs and saves the second corpus pass.
-    if materialize:
-        qp = qp.persist()
     dfreq = qp.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
 
     scored = (
@@ -157,11 +149,8 @@ def bm25_topk(
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("id").asc()
     )
-    out = (
+    return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", F.col("id").alias("doc_id"), "score", "rank")
     )
-    if not materialize:
-        return out
-    return materialize_and_release(out, qp)

@@ -268,26 +268,29 @@ def fixed_speed_truncate(
         *[F.lead(c).over(w).alias(f"__n_{c}") for c in pos_cols],
     )
     kept = withnext.filter(F.col("__cum") <= maxd)
-    # boundary row: the last kept vertex whose next vertex crosses maxd
-    crossing = kept.filter(
-        F.col("__next_cum").isNotNull() & (F.col("__next_cum") > maxd)
-    )
+    # the last kept vertex whose next vertex crosses maxd also emits the
+    # boundary row, so the input is read once (no union of two branches)
+    crosses = F.col("__next_cum").isNotNull() & (F.col("__next_cum") > maxd)
     t = (F.lit(maxd) - F.col("__cum")) / (F.col("__next_cum") - F.col("__cum"))
-    boundary = crossing.select(
-        seq_col,
-        (F.col(order_col) + 0.5).alias(order_col),  # synthetic half-index
-        F.lit(maxd).alias("__cum"),
+    row = F.struct(
+        F.col(order_col).cast("double").alias(order_col),
+        F.col("__cum").alias("cum_dist"),
+        *[F.col(c).cast("double").alias(c) for c in pos_cols],
+    )
+    boundary = F.struct(
+        (F.col(order_col) + 0.5).cast("double").alias(order_col),  # half-index
+        F.lit(maxd).cast("double").alias("cum_dist"),
         *[
             (F.col(c) + t * (F.col(f"__n_{c}") - F.col(c))).alias(c)
             for c in pos_cols
         ],
-        F.lit(None).cast("double").alias("__next_cum"),
-        *[F.lit(None).cast("double").alias(f"__n_{c}") for c in pos_cols],
     )
-    return (
-        kept.unionByName(boundary)
-        .select(seq_col, F.col(order_col).cast("double").alias(order_col), F.col("__cum").alias("cum_dist"), *pos_cols)
-    )
+    return kept.select(
+        seq_col,
+        F.explode(
+            F.when(crosses, F.array(row, boundary)).otherwise(F.array(row))
+        ).alias("__p"),
+    ).select(seq_col, "__p.*")
 
 
 def time_grid_ffill(

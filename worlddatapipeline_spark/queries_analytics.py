@@ -28,16 +28,8 @@ from .session import (
 # Bloom-pruned decontamination (LLM-pipeline extension)
 # ---------------------------------------------------------------------------
 
-def bloom_decontamination_frame(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, tuple[DataFrame, ...]]:
-    """Lazy plan builder for `q_bloom_decontamination` — returns (result,
-    persisted intermediates).  Split out so plan-shape tests can inspect
-    the REAL physical plan (the query wrapper materializes through
-    ``materialize_and_release``, whose checkpoint truncates lineage down
-    to a Scan ExistingRDD).
-
-    Train-side decontamination with a broadcast Bloom prefilter: flag
+def q_bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Train-side decontamination with a broadcast Bloom prefilter: flag
     TRAIN documents containing any 5-word shingle from the (small) TEST
     split — the mirror image of `train_test_decontamination`, which audits
     the test side.
@@ -74,24 +66,12 @@ def bloom_decontamination_frame(
             ).alias("h"),
         )
     )
-    # ONE persisted per-doc-distinct shingle frame (r11): the b>=90 filter
-    # applies after the per-doc explode, so the previous two separately
-    # persisted children (test distinct + train distinct) each re-shingled
-    # every document — two full md5-explode passes.  Deduping (doc_id, b,
-    # h) once up front costs the same exchange the train distinct already
-    # paid and makes both splits cheap cache filters; the train side needs
-    # NO further distinct (already per-doc distinct).
-    sh_d = shingled.distinct().persist()
-    # persisted: the ref side is read THREE times (bloom sizing count,
-    # position collect, exact verify join); the global distinct over the
-    # (already per-doc-deduped) test slice is a small second exchange.
-    test_shingles = (
-        sh_d.filter(F.col("b") >= 90).select("h").distinct().persist()
-    )
-    # Both the per-doc totals and the bloom-pruned candidate branch read
-    # the sh_d cache — at 100 TB prefer writing sh_d bucketed by doc_id
-    # once per corpus release rather than caching (durable form of the
-    # same multi-reader pattern).
+    # ONE per-doc-distinct shingle frame (r11): deduping (doc_id, b, h)
+    # once up front makes both splits filters of the same exchange, so the
+    # corpus is md5-exploded once; the train side needs NO further
+    # distinct (already per-doc distinct).
+    sh_d = shingled.distinct()
+    test_shingles = sh_d.filter(F.col("b") >= 90).select("h").distinct()
     train = sh_d.filter(F.col("b") < 80).select("doc_id", "h")
 
     totals = train.groupBy("doc_id").agg(
@@ -107,26 +87,14 @@ def bloom_decontamination_frame(
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_contaminated"))
     )
-    out = (
-        totals.join(contaminated, "doc_id", "inner")
-        .select(
-            "doc_id",
-            "n_shingles",
-            "n_contaminated",
-            F.round(F.col("n_contaminated") / F.col("n_shingles"), 6).alias(
-                "contamination_ratio"
-            ),
-        )
+    return totals.join(contaminated, "doc_id", "inner").select(
+        "doc_id",
+        "n_shingles",
+        "n_contaminated",
+        F.round(F.col("n_contaminated") / F.col("n_shingles"), 6).alias(
+            "contamination_ratio"
+        ),
     )
-    return out, (test_shingles, sh_d)
-
-
-def q_bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See `bloom_decontamination_frame` (the plan lives there).  This
-    wrapper materializes the small per-doc audit and releases both shingle
-    caches (otherwise they linger until ContextCleaner GC — ADVICE r3)."""
-    out, cached = bloom_decontamination_frame(spark, sf_dir)
-    return materialize_and_release(out, *cached)
 
 
 SQL_BLOOM_DECONTAMINATION = """
@@ -706,17 +674,13 @@ def count_triangles_in_projection(ps: DataFrame) -> DataFrame:
     q_triangle_count and its known-graph unit test both call, so the test
     exercises the shipped algorithm rather than a copy."""
     a, b = ps.alias("a"), ps.alias("b")
-    # edges feeds all three triangle-join aliases — persist so the O(d²)
-    # projection self-join + distinct runs once, not three times (r11; the
-    # plan previously scanned the source six times).
     edges = (
         a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.p") < F.col("b.p")))
         .select(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
         .distinct()
-        .persist()
     )
     e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
-    out = (
+    return (
         e1.join(e2, F.col("e1.v") == F.col("e2.u"))
         .join(
             e3,
@@ -725,7 +689,6 @@ def count_triangles_in_projection(ps: DataFrame) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
-    return materialize_and_release(out, edges)
 
 
 def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2236,7 +2199,6 @@ def q_curation_pipeline_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators import text as text_ops
     from .operators.dedup import normalize_text
-    from .session import materialize_and_release
 
     (documents,) = _t(spark, sf_dir, "documents")
     kept = documents.filter(
@@ -2265,11 +2227,10 @@ def q_curation_pipeline_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         % 100
     )
     words = F.split(F.col("text"), " ")
-    # One persisted doc-level frame carries the split AND the shingle
-    # array, so the quality filter + md5 fingerprint + dedup window run
-    # ONCE; the shingle branch and the final stats branch both read the
-    # cache instead of re-deriving the scan (the plan previously scanned
-    # documents ~6x).  Cached rows hold 16-byte binary shingle digests
+    # Barrier: sp is read by the shingle-window branch and by the
+    # anti-join, which share no exchange, so the lazy plan runs the
+    # quality filter + md5 fingerprint + dedup window twice (A/B: lazy
+    # 4.0×).  Cached rows hold 16-byte binary shingle digests
     # (collision-identical to the md5 hex the comparison is defined on),
     # never the text column.
     sp = deduped.select(

@@ -3885,16 +3885,11 @@ def q_minhash_verified_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         documents, "text", "doc_id", num_hashes=32, bands=8, shingle_n=3,
         max_bucket=None,
     )
-    # exact feeds 2 consumers (count + semi-join), hence the persist.
-    exact = (
-        dedup_ops.ngram_jaccard_pairs(
-            documents, "text", "doc_id", n=3, threshold=0.8, max_df=None
-        )
-        .select("id_a", "id_b")
-        .persist()
-    )
+    exact = dedup_ops.ngram_jaccard_pairs(
+        documents, "text", "doc_id", n=3, threshold=0.8, max_df=None
+    ).select("id_a", "id_b")
     verified = exact.join(cands, ["id_a", "id_b"], "left_semi")
-    out = (
+    return (
         exact.agg(F.count(F.lit(1)).alias("n_exact_pairs"))
         .crossJoin(verified.agg(F.count(F.lit(1)).alias("__n_hits")))
         .select(
@@ -3906,9 +3901,6 @@ def q_minhash_verified_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("recall_floor_met"),
         )
     )
-    from .session import materialize_and_release  # noqa: PLC0415
-
-    return materialize_and_release(out, exact)
 
 
 SQL_MINHASH_VERIFIED_DUPS = """
@@ -4633,9 +4625,10 @@ def q_embedding_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = corpus.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    # exact feeds two consumers (count + semi-join): persist the
-    # (5·|queries|-row) frame so the brute-force GEMM pass runs once
-    # instead of twice (r11; plan showed the corpus scanned 7x).
+    # Barrier: exact is read by its count and by the semi-join with the
+    # LSH leg, which share no exchange, so the lazy plan runs the
+    # brute-force GEMM pass twice (A/B: lazy 1.24×).  Persist the
+    # (5·|queries|-row) frame.
     exact = (
         sim_ops.cosine_topk_batched(corpus, queries, k=5)
         .select("query_id", "vec_id")
@@ -4680,17 +4673,14 @@ def q_embedding_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = corpus.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    # Same two-consumer persist as q_embedding_lsh_recall (r11).
-    exact = (
-        sim_ops.cosine_topk_batched(corpus, queries, k=5)
-        .select("query_id", "vec_id")
-        .persist()
+    exact = sim_ops.cosine_topk_batched(corpus, queries, k=5).select(
+        "query_id", "vec_id"
     )
     approx = sim_ops.ivf_topk(
         corpus, queries, k=5, n_centroids=16, n_probe=4
     ).select("query_id", "vec_id")
     hits = exact.join(approx, ["query_id", "vec_id"], "left_semi")
-    out = (
+    return (
         exact.agg(F.count(F.lit(1)).alias("__n_exact"))
         .crossJoin(hits.agg(F.count(F.lit(1)).alias("__n_hit")))
         .crossJoin(queries.agg(F.count(F.lit(1)).alias("n_queries")))
@@ -4701,9 +4691,6 @@ def q_embedding_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    from .session import materialize_and_release  # noqa: PLC0415
-
-    return materialize_and_release(out, exact)
 
 
 SQL_EMBEDDING_IVF_RECALL = """

@@ -184,9 +184,6 @@ def q_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     (this corpus spans 30 days).  Two partial-agg shuffles on tiny keys;
     the day-calendar aggregate is broadcast back."""
     (events,) = _t(spark, sf_dir, "events")
-    # ONE fact scan into a calendar-bounded (type, day) aggregate; every
-    # downstream branch (dow counts, weekday calendar, day total) derives
-    # from the persisted base so the scan never re-runs
     base = (
         events.select(
             "event_type",
@@ -195,7 +192,6 @@ def q_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "day")
         .agg(F.count(F.lit(1)).alias("n_d"))
         .withColumn("dow", F.expr("(day + 3) % 7"))
-        .persist()
     )
     counts = base.groupBy("event_type", "dow").agg(
         F.sum("n_d").alias("n_td")
@@ -210,7 +206,7 @@ def q_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("d_all")
     )
     wt = Window.partitionBy("event_type")
-    out = (
+    return (
         counts.withColumn("n_t", F.sum("n_td").over(wt))
         .join(F.broadcast(cal), "dow")
         .crossJoin(F.broadcast(d_total))
@@ -224,7 +220,6 @@ def q_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("idx_ppm"),
         )
     )
-    return materialize_and_release(out, base)
 
 
 SQL_DOW_SEASONALITY = """
@@ -467,15 +462,12 @@ def q_daily_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily-count frame is one fact scan + date groupBy; the 7 lag
     self-joins run on that tiny aggregate (broadcast)."""
     (events,) = _t(spark, sf_dir, "events")
-    # daily feeds both sides of the lag join — persist the calendar-sized
-    # aggregate so the fact scan runs once, release on return
     daily = (
         events.select(
             F.expr("unix_micros(ts) div 86400000000").alias("day")
         )
         .groupBy("day")
         .agg(F.count(F.lit(1)).alias("y"))
-        .persist()
     )
     lags = spark.range(1, 8).select(F.col("id").cast("int").alias("lag"))
     pairs = (
@@ -497,7 +489,7 @@ def q_daily_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("yy").cast("decimal(38,0)") * F.col("yy"))).alias("syy"),
         F.sum((F.col("x").cast("decimal(38,0)") * F.col("yy"))).alias("sxy"),
     )
-    out = m.select(
+    return m.select(
         "lag",
         "n",
         F.expr(
@@ -510,7 +502,6 @@ def q_daily_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AS BIGINT)"
         ).alias("r2_ppm"),
     )
-    return materialize_and_release(out, daily)
 
 
 SQL_DAILY_AUTOCORRELATION = """
@@ -635,11 +626,10 @@ def q_pmi_term_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= 50)
         .select("term", F.col("n_docs").alias("n_term"))
     )
-    # inc feeds both sides of the pair self-join and the population count
-    # (persisted; ≤ 50·n_docs rows).  inc_all itself is derived twice —
-    # once for the vocabulary, once pruned — two corpus scans; at 100 TB
-    # write the tokenized incidence to durable storage once per release
-    # instead of re-tokenizing (the bloom-module note).
+    # inc_all is derived twice — once for the vocabulary, once pruned —
+    # two corpus scans; at 100 TB write the tokenized incidence to durable
+    # storage once per release instead of re-tokenizing (the bloom-module
+    # note).
     # r12 A/B (VERDICT r11 item 6): persisting inc_all in-query was
     # measured SLOWER-to-wash at both scales (interleaved best-of-2 warm,
     # noop sink — sf0.1: 1.48/1.54 s current vs 1.53/1.64 s persisted;
@@ -647,7 +637,7 @@ def q_pmi_term_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is ~n_docs·vocab rows and its materialization costs more than the
     # second tokenize pass saves.  Kept the two-scan form; the durable
     # once-per-release incidence table above remains the 100 TB answer.
-    inc = inc_all.join(F.broadcast(top), "term").persist()
+    inc = inc_all.join(F.broadcast(top), "term")
     n_docs = inc.agg(
         F.countDistinct("doc_id").cast("long").alias("n_pop")
     )
@@ -664,7 +654,7 @@ def q_pmi_term_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_ab"))
         .filter(F.col("n_ab") >= 5)
     )
-    out = pairs.crossJoin(F.broadcast(n_docs)).select(
+    return pairs.crossJoin(F.broadcast(n_docs)).select(
         "term_a",
         "term_b",
         "n_ab",
@@ -673,7 +663,6 @@ def q_pmi_term_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             " div (CAST(n_a AS DECIMAL(38,0)) * n_b) AS BIGINT)"
         ).alias("lift_ppm"),
     )
-    return materialize_and_release(out, inc)
 
 
 SQL_PMI_TERM_PAIRS = """
@@ -1052,9 +1041,11 @@ def q_kaplan_meier_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded, not data-bounded)."""
     (events,) = _t(spark, sf_dir, "events")
     anchor = events.agg(F.max(F.unix_micros("ts")).alias("t_anchor"))
-    # per_user feeds the per-duration rollup AND the population total;
-    # risk feeds the death-time array AND the output rows — persist both
-    # (user-sized / calendar-sized), release after the checkpoint
+    # Barrier: per_user is read by the per-duration rollup and by the
+    # population total; risk by the death-time array and by the output
+    # rows.  Neither pair shares an exchange, so the lazy plan re-runs the
+    # per-user aggregate and the risk window (A/B: lazy 1.26×).  Persist
+    # both (user-sized / calendar-sized), release after the checkpoint.
     per_user = (
         events.groupBy("user_id")
         .agg(
@@ -1315,7 +1306,6 @@ def q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("event_type", "day")
         .agg(F.sum("v_us").alias("y_us"))
-        .persist()
     )
     pairs = (
         daily.alias("a")
@@ -1337,7 +1327,7 @@ def q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("slope_us").asc(), F.col("d1").asc(), F.col("d2").asc()
     )
     wall = Window.partitionBy("event_type")
-    out = (
+    return (
         pairs.withColumn("i", F.row_number().over(w))
         .withColumn("n_pairs", F.count(F.lit(1)).over(wall))
         .filter(F.expr("i = (n_pairs + 1) div 2"))
@@ -1347,7 +1337,6 @@ def q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_pairs",
         )
     )
-    return materialize_and_release(out, daily)
 
 
 SQL_THEIL_SEN_TREND = """
@@ -1679,8 +1668,7 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output is the weekday seasonal profile per type plus the mean
     absolute residual — the seasonal-strength readout.  One fact scan
     into the calendar-bounded daily aggregate; every window extends the
-    same (type) partitioning; the detrended frame feeds two consumers so
-    it is persisted and released."""
+    same (type) partitioning."""
     (events,) = _t(spark, sf_dir, "events")
     daily = (
         events.select(
@@ -1708,13 +1696,12 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("(day + 3) % 7").alias("dow"),
             (F.col("y_us") - F.expr("sum_w div 7")).alias("det_us"),
         )
-        .persist()
     )
     seasonal = detrended.groupBy("event_type", "dow").agg(
         F.expr("sum(det_us) div count(1)").alias("seasonal_us"),
         F.count(F.lit(1)).alias("n_days"),
     )
-    out = (
+    return (
         detrended.join(F.broadcast(seasonal), ["event_type", "dow"])
         .groupBy("event_type", "dow")
         .agg(
@@ -1725,7 +1712,6 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("mean_abs_resid_us"),
         )
     )
-    return materialize_and_release(out, detrended)
 
 
 SQL_SEASONAL_DECOMPOSE = """
@@ -1903,7 +1889,6 @@ def q_cuped_adjusted_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
                 % 2
             ).cast("int"),
         )
-        .persist()
     )
     theta = per_user.agg(
         F.count(F.lit(1)).alias("n"),
@@ -1929,13 +1914,12 @@ def q_cuped_adjusted_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
             "post_us - (theta_ppm * (pre_us - mean_pre_us)) div 1000000"
         ),
     )
-    out = adjusted.groupBy("arm").agg(
+    return adjusted.groupBy("arm").agg(
         F.count(F.lit(1)).alias("n_users"),
         F.expr("sum(post_us) div count(1)").alias("mean_raw_us"),
         F.expr("sum(adj_us) div count(1)").alias("mean_adj_us"),
         F.first("theta_ppm").alias("theta_ppm"),
     )
-    return materialize_and_release(out, per_user)
 
 
 SQL_CUPED_ADJUSTED_AB = """
@@ -2063,7 +2047,7 @@ def q_lead_lag_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     single quotient, which silently NULLs in Spark past n·Σxy ≈ 1e16
     where DuckDB HUGEINT still succeeds — ranked so rk = 1 is the
     strongest alignment.  The two daily series come from ONE fact scan
-    (conditional aggregate), persisted against the 15 lag joins."""
+    (conditional aggregate)."""
     (events,) = _t(spark, sf_dir, "events")
     daily = (
         events.filter(F.col("event_type").isin("click", "purchase"))
@@ -2076,7 +2060,6 @@ def q_lead_lag_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("event_type") == "purchase", 1).otherwise(0)
             ).cast("long").alias("yy"),
         )
-        .persist()
     )
     lags = spark.range(-7, 8).select(F.col("id").cast("int").alias("lag"))
     pairs = (
@@ -2110,8 +2093,7 @@ def q_lead_lag_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("r2_ppm"),
     )
     wr = Window.orderBy(F.col("r2_ppm").desc(), F.col("lag").asc())
-    out = scored.withColumn("rk", F.row_number().over(wr))
-    return materialize_and_release(out, daily)
+    return scored.withColumn("rk", F.row_number().over(wr))
 
 
 SQL_LEAD_LAG_CORRELATION = """
@@ -2338,12 +2320,10 @@ def q_did_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("int"),
         )
     )
-    # cells feeds both the DiD derivation and the returned grid — persist
-    # the 4-row aggregate so the fact scan runs once, release on return
     cells = per_user_period.groupBy("cohort", "post").agg(
         F.count(F.lit(1)).alias("n_users"),
         F.expr("sum(v_us) div count(1)").alias("mean_us"),
-    ).persist()
+    )
     wide = cells.groupBy().pivot("cohort", [0, 1]).agg(
         F.min(F.when(F.col("post") == 0, F.col("mean_us"))).alias("pre"),
         F.min(F.when(F.col("post") == 1, F.col("mean_us"))).alias("post_m"),
@@ -2354,10 +2334,9 @@ def q_did_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
             - (F.col("0_post_m") - F.col("0_pre"))
         ).alias("did_us")
     )
-    out = cells.crossJoin(F.broadcast(did)).select(
+    return cells.crossJoin(F.broadcast(did)).select(
         "cohort", "post", "n_users", "mean_us", "did_us"
     )
-    return materialize_and_release(out, cells)
 
 
 SQL_DID_READOUT = """
@@ -2407,11 +2386,6 @@ def q_negative_sampling_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem, orders, part = _t(
         spark, sf_dir, "lineitem", "orders", "part"
     )
-    # interacted feeds two consumers (the users projection and the
-    # anti-join), so without a persist the lineitem ⋈ orders fact-fact
-    # join ran TWICE (plan showed 7 parquet scans).  The frame is
-    # dimension-bounded (≤ |customers| × 25 brands) — persist + eager
-    # release (r11, guide §2.4).
     interacted = (
         lineitem.join(
             orders.select("o_orderkey", "o_custkey"),
@@ -2423,7 +2397,6 @@ def q_negative_sampling_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("o_custkey").alias("cust"), "p_brand")
         .distinct()
-        .persist()
     )
     users = interacted.select("cust").distinct()
     brands = part.select("p_brand").distinct()
@@ -2437,11 +2410,10 @@ def q_negative_sampling_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled = candidates.withColumn("rk", F.row_number().over(wr)).filter(
         F.col("rk") <= 2
     )
-    out = sampled.groupBy("p_brand", "rk").agg(
+    return sampled.groupBy("p_brand", "rk").agg(
         F.count(F.lit(1)).alias("n_negatives"),
         F.min("cust").alias("min_cust"),
     )
-    return materialize_and_release(out, interacted)
 
 
 SQL_NEGATIVE_SAMPLING_PAIRS = """
@@ -2787,14 +2759,12 @@ def q_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
     wt = Window.partitionBy("event_type", "half")
-    # shares feeds both halves of the full join — persist the tiny
-    # (type x half x 20-bin) frame so the fact scan runs once
     shares = binned.withColumn("tot", F.sum("n").over(wt)).select(
         "event_type",
         "half",
         "bin",
         F.expr("(n * 1000000) div tot").alias("ppm"),
-    ).persist()
+    )
     a = shares.filter(F.col("half") == 0).select(
         "event_type", "bin", F.col("ppm").alias("a_ppm")
     )
@@ -2807,7 +2777,7 @@ def q_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("a_ppm", F.lit(0)).alias("a_ppm"),
         F.coalesce("b_ppm", F.lit(0)).alias("b_ppm"),
     )
-    out = joined.groupBy("event_type").agg(
+    return joined.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_bins"),
         F.sum(
             F.expr(
@@ -2816,7 +2786,6 @@ def q_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).cast("long").alias("drift_score"),
     )
-    return materialize_and_release(out, shares)
 
 
 SQL_DISTRIBUTION_DRIFT = """
@@ -2988,7 +2957,7 @@ def q_session_conformance(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "",
         ).alias("path")
-    ).persist()
+    )
     wtop = Window.orderBy(F.col("n").desc(), F.col("path").asc())
     modal = (
         paths.groupBy("path")
@@ -2997,7 +2966,7 @@ def q_session_conformance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") == 1)
         .select(F.col("path").alias("modal_path"))
     )
-    out = (
+    return (
         paths.crossJoin(F.broadcast(modal))
         .select(F.levenshtein("path", F.col("modal_path")).alias("d"))
         .select(F.expr("d div 4").alias("dist_band"), "d")
@@ -3008,7 +2977,6 @@ def q_session_conformance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("d").alias("max_dist"),
         )
     )
-    return materialize_and_release(out, paths)
 
 
 SQL_SESSION_CONFORMANCE = """
@@ -3064,13 +3032,11 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_partkey") * 2).alias("src"),
         (F.col("l_suppkey") * 2 + 1).alias("dst"),
     ).distinct()
-    # both feeds the degree aggregate AND both sides of the pair join —
-    # persist so the distinct-edge scan runs once, release on return
     both = edges.unionByName(
         edges.select(
             F.col("dst").alias("src"), F.col("src").alias("dst")
         )
-    ).persist()
+    )
     deg = both.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     pairs = (
         both.join(deg.withColumnRenamed("src", "a"), F.col("src") == F.col("a"))
@@ -3093,7 +3059,7 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("dy").cast("decimal(38,0)") * F.col("dy")).alias("syy"),
         F.sum(F.col("dx").cast("decimal(38,0)") * F.col("dy")).alias("sxy"),
     )
-    out = m.select(
+    return m.select(
         F.col("n").alias("n_endpoint_pairs"),
         F.expr(
             "CAST(CASE WHEN n * sxy - sx * sy < 0 THEN -1 ELSE 1 END"
@@ -3105,7 +3071,6 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AS BIGINT)"
         ).alias("r2_ppm"),
     )
-    return materialize_and_release(out, both)
 
 
 SQL_DEGREE_ASSORTATIVITY = """
@@ -3324,9 +3289,6 @@ def q_attribution_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     day = 86400000000
-    # the one-row sweep aggregate feeds three union branches — persist so
-    # the scan/join/aggregate subtree runs once (the committed fingerprint
-    # showed the whole tree tripled without it)
     sweep = nearest.agg(
         F.count(F.lit(1)).alias("n_purchases"),
         *[
@@ -3343,7 +3305,7 @@ def q_attribution_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias(f"v_{d}d")
             for d in (1, 3, 7)
         ],
-    ).persist()
+    )
     rows = [
         sweep.select(
             F.lit(f"{d}d").alias("lookback"),
@@ -3358,7 +3320,7 @@ def q_attribution_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = rows[0]
     for r in rows[1:]:
         out = out.unionByName(r)
-    return materialize_and_release(out, sweep)
+    return out
 
 
 SQL_ATTRIBUTION_WINDOW_SWEEP = """
@@ -3515,8 +3477,9 @@ def q_short_text_editdups(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring_index(F.col("t"), " ", 1).alias("tok1"),
         F.expr("length(t) div 8").alias("lband"),
     )
-    # short feeds three consumers (block sizing + both join sides);
-    # persist the tiny (doc_id, 60-char) frame once.
+    # Barrier: short is read by the block-size aggregate and by both
+    # sides of the pair join, whose shuffles share no exchange, so the
+    # lazy plan re-reads and re-normalizes the corpus (A/B: lazy 1.76×).
     short = short.persist()
     blocks = short.groupBy("tok1", "lband").agg(
         F.count(F.lit(1)).alias("block_n")

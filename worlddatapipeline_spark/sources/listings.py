@@ -76,11 +76,6 @@ def parse_bos_listing(lines: DataFrame, value_col: str = "value") -> DataFrame:
     return parsed.filter((F.col("kind") == "prefix") | (F.col("key") != ""))
 
 
-def read_bos_listing(spark: SparkSession, path: str) -> DataFrame:
-    """`spark.read.text` + parse — one call for the common case."""
-    return parse_bos_listing(spark.read.text(path))
-
-
 def scan_directory(
     spark: SparkSession, root: str, exclude_exts: list[str] | None = None
 ) -> DataFrame:
