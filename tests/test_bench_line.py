@@ -4,9 +4,10 @@ empty per_query because durations only existed in the oversized first
 line).  These pin the size-bounded serializer."""
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import _compact_summary_line  # noqa: E402
 

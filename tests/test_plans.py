@@ -29,7 +29,9 @@ def _built_plan(spark, build):
     lineage-truncated ExistingRDD scan — for those, capture the
     PRE-checkpoint plan at the truncation point (the same interception
     tools/plan_audit.py uses) and assert over captured + final text
-    together."""
+    together.  Driver-side literals are ``session.literal_frame`` Arrow
+    tables (``LocalTableScan``), so ``Scan ExistingRDD`` in a plan means a
+    checkpoint and nothing else."""
     from pyspark.sql.classic.dataframe import DataFrame as _CDF
 
     captured = []
@@ -693,6 +695,15 @@ def test_fingerprints_no_errors():
     assert errs == {}, f"fingerprint sweep recorded errors: {errs}"
 
 
+def test_fingerprints_no_python_rdd_scan():
+    """Driver-side literals go through ``session.literal_frame`` (an Arrow
+    ``LocalTableScan``); a frame built from a Python list would plan as a
+    Python-RDD scan and show up here."""
+    fps = _fingerprints()
+    offenders = sorted(n for n, fp in fps.items() if fp.get("scan_python_rdd"))
+    assert offenders == [], f"plans scan a Python RDD: {offenders}"
+
+
 def test_fingerprints_single_exchange_only_on_bounded_frames():
     fps = _fingerprints()
     multi = {n for n, fp in fps.items() if fp.get("exchange_single", 0) > 1}
@@ -757,9 +768,6 @@ _LAZY_QUERIES = [
     "theil_sen_trend",
     "triangle_count",
 ]
-# their query literals are Python-list frames, which plan as a Scan
-# ExistingRDD of their own; the checkpoint and pinned-RDD checks still hold
-_PY_LIST_LITERALS = {"bm25_topk_search", "hybrid_rank_fusion"}
 
 
 @pytest.mark.parametrize("name", _LAZY_QUERIES)
@@ -783,7 +791,6 @@ def test_lazy_query_has_no_barrier(spark, name):
     finally:
         _CDF.localCheckpoint = orig
     assert checkpoints == []
-    if name not in _PY_LIST_LITERALS:
-        assert "Scan ExistingRDD" not in _fmt(spark, df)
+    assert "Scan ExistingRDD" not in _fmt(spark, df)
     df.collect()
     assert ids() - before == set()

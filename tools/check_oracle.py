@@ -11,10 +11,11 @@ from __future__ import annotations
 
 import decimal
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def norm_cell(v):

@@ -77,6 +77,10 @@ FEATURES = {
     "scan_parquet": r"Scan parquet|FileScan parquet|Arguments: parquet,",
     "scan_other": r"LocalTableScan|Scan ExistingRDD|\bRowDataSourceScan\b"
                   r"|Scan JDBCRelation|BatchScan|OneRowRelation",
+    # a frame built from a Python list (``createDataFrame(list)``): its
+    # ``Scan ExistingRDD`` carries this on its Arguments line, a checkpoint's
+    # does not — literals go through ``session.literal_frame`` instead
+    "scan_python_rdd": r"applySchemaToPythonRDD",
     # Spark 4 recursive-CTE execution node (the amortization query plans
     # through UnionLoop with an un-planned LogicalRelation child)
     "recursive_loop": r"\bUnionLoop\b",

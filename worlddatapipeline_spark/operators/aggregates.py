@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import literal_frame
+
 
 def conditional_stats(df: DataFrame, specs: dict[str, "F.Column"]) -> DataFrame:
     """One-row statistics frame from named aggregate expressions.
@@ -327,13 +329,13 @@ def exact_percentiles_distributed(
         offs.append((r["_pid"], *key, running.get(key, 0)))
         running[key] = running.get(key, 0) + r["_t"]
     if not offs:
-        return spark.createDataFrame(
-            [], parts.select(*g).schema.add("p", "double").add(
-                "pct", "double"
-            )
+        return literal_frame(
+            spark,
+            [],
+            parts.select(*g).schema.add("p", "double").add("pct", "double"),
         )
-    off_df = spark.createDataFrame(
-        offs, parts.select("_pid", *g).schema.add("_off", "long")
+    off_df = literal_frame(
+        spark, offs, parts.select("_pid", *g).schema.add("_off", "long")
     )
     w = Window.partitionBy("_pid", *g).orderBy("_v")
     # group keys join null-safe: a NULL key is a group of its own, as in
@@ -359,7 +361,8 @@ def exact_percentiles_distributed(
                 (*key, float(p), pos, int(math.floor(pos)),
                  int(math.ceil(pos)))
             )
-    ranks = spark.createDataFrame(
+    ranks = literal_frame(
+        spark,
         rank_rows,
         parts.select(*g).schema.add("_p", "double").add("_pos", "double")
         .add("_lo", "long").add("_hi", "long"),

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geometry import CM_TO_M, with_extrinsics_expr
+from ..session import literal_frame
 
 INTRINSIC_DEFAULTS = {
     "fov": 90.0,
@@ -45,7 +46,8 @@ def intrinsic_df(spark: SparkSession, overrides: dict | None = None) -> DataFram
     (`camera_exporter.py:163-171,383-390`)."""
     vals = dict(INTRINSIC_DEFAULTS)
     vals.update(overrides or {})
-    return spark.createDataFrame(
+    return literal_frame(
+        spark,
         [
             (
                 float(vals["fov"]),
@@ -57,15 +59,8 @@ def intrinsic_df(spark: SparkSession, overrides: dict | None = None) -> DataFram
                 float(vals["focal_length"]),
             )
         ],
-        [
-            "fov",
-            "aspect_ratio",
-            "width",
-            "height",
-            "sensor_width",
-            "sensor_height",
-            "focal_length",
-        ],
+        "fov double, aspect_ratio double, width bigint, height bigint, "
+        "sensor_width double, sensor_height double, focal_length double",
     )
 
 

@@ -35,6 +35,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import literal_frame
+
 
 @dataclass
 class Constraint:
@@ -152,8 +154,10 @@ def check_constraints(df: DataFrame, constraints: list[Constraint]) -> DataFrame
             )
             reports.append(orphans)
     if not reports:  # empty suite -> empty report, not IndexError
-        return df.sparkSession.createDataFrame(
-            [], "check_name string, n_violations long, passed boolean"
+        return literal_frame(
+            df.sparkSession,
+            [],
+            "check_name string, n_violations long, passed boolean",
         )
     out = reports[0]
     for r in reports[1:]:

@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import literal_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     """Dot product of two array<numeric> columns (zip_with + aggregate).
@@ -660,7 +662,8 @@ def kmeans_centroids(
         if cache:
             work.unpersist()
 
-    return spark.createDataFrame(
+    return literal_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
         "cid int, cvec array<double>",
     )

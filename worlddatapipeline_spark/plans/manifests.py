@@ -114,8 +114,10 @@ def manifest_rows_to_df(spark, manifests: list[dict]):
     get_json_object processing (SURVEY §1.1 #3 Spark mapping)."""
     from pyspark.sql import functions as F
 
+    from ..session import literal_frame
+
     rows = [(m.get("type", ""), json.dumps(m, sort_keys=True)) for m in manifests]
-    df = spark.createDataFrame(rows, ["job_type", "manifest_json"])
+    df = literal_frame(spark, rows, "job_type string, manifest_json string")
     return df.withColumn(
         "output_base_dir",
         F.get_json_object("manifest_json", "$.output_base_dir"),

@@ -28,7 +28,7 @@ from .operators import similarity as sim_ops
 from .operators import stateful as stateful_ops
 from .operators import text as text_ops
 from .operators import windows as win_ops
-from .session import _t
+from .session import _t, literal_frame
 
 
 # ---------------------------------------------------------------------------
@@ -418,9 +418,10 @@ def q_value_band_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval containment (bucketed-equi-join path of
     operators/joins.py::range_join)."""
     (events,) = _t(spark, sf_dir, "events")
-    bands = spark.createDataFrame(
+    bands = literal_frame(
+        spark,
         [("low", 0, 49), ("mid", 50, 149), ("high", 150, 10**9)],
-        ["band", "lo", "hi"],
+        "band string, lo bigint, hi bigint",
     )
     pts = events.select(
         "event_id", F.floor("value").cast("long").alias("v"), "value"

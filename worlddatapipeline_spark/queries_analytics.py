@@ -18,10 +18,12 @@ from .operators import bloom as bloom_ops
 from .session import (
     _t,
     drain_memory_sink,
+    literal_frame,
     materialize_and_release,
     route_by_rows,
     streaming_events,
 )
+from .streaming.monitor import run_stream_to_memory
 
 
 # ---------------------------------------------------------------------------
@@ -808,32 +810,7 @@ def q_csv_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays OUT of the CSV contract: decimal text round-trips are where
     cross-tool drift lives (the same reason the camera sinks fix their
     format strings)."""
-    import shutil
-    import tempfile
-
-    (orders,) = _t(spark, sf_dir, "orders")
-    base = tempfile.mkdtemp(prefix="wdp_csv_")
-    path = base + "/orders"
-    try:
-        sub = orders.select("o_orderkey", "o_custkey", "o_orderstatus")
-        sub.write.mode("overwrite").option("header", True).csv(path)
-        back = (
-            spark.read.schema(
-                "o_orderkey long, o_custkey long, o_orderstatus string"
-            )
-            .option("header", True)
-            .csv(path)
-        )
-        rows = back.groupBy("o_orderstatus").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("o_custkey").alias("custkey_sum"),
-            F.max("o_orderkey").alias("max_orderkey"),
-        ).collect()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "o_orderstatus string, n long, custkey_sum long, max_orderkey long"
-    )
+    return _roundtrip_stats(spark, sf_dir, "csv", {"header": True})
 
 
 SQL_CSV_ROUNDTRIP_STATS = """
@@ -848,11 +825,11 @@ GROUP BY o_orderstatus
 def _roundtrip_stats(
     spark: SparkSession, sf_dir: str, fmt: str, options: dict | None = None
 ) -> DataFrame:
-    """Shared body for the ORC / JSON-lines / XML round-trips: write the
-    exact (integer/string) order columns in ``fmt``, read back with an
-    explicit schema, aggregate, and hash-match against the ORIGINAL parquet
-    table.  Eager + try/finally like the CSV form so the temp dir never
-    leaks."""
+    """Shared body for the CSV / ORC / JSON-lines / XML round-trips: write
+    the exact (integer/string) order columns in ``fmt`` with ``options``,
+    read them back with an explicit schema and the same options, aggregate,
+    and hash-match against the ORIGINAL parquet table.  Eager (the rows are
+    collected inside try/finally), so the temp dir never leaks."""
     import shutil
     import tempfile
 
@@ -877,8 +854,8 @@ def _roundtrip_stats(
         ).collect()
     finally:
         shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "o_orderstatus string, n long, custkey_sum long, max_orderkey long"
+    return literal_frame(
+        spark, rows, "o_orderstatus string, n long, custkey_sum long, max_orderkey long"
     )
 
 
@@ -1213,9 +1190,7 @@ def q_streaming_ewma_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = spark.read.parquet(out).collect()
     finally:
         shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "user_id long, event_id long, ewma double"
-    )
+    return literal_frame(spark, rows, "user_id long, event_id long, ewma double")
 
 
 # ---------------------------------------------------------------------------
@@ -1616,7 +1591,7 @@ def q_bm25_topk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.search import bm25_topk
 
     (documents,) = _t(spark, sf_dir, "documents")
-    queries = spark.createDataFrame(_BM25_QUERIES, "query_id string, query_text string")
+    queries = literal_frame(spark, _BM25_QUERIES, "query_id string, query_text string")
     return bm25_topk(documents, queries, k=5)
 
 
@@ -1690,12 +1665,10 @@ def q_hybrid_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import cosine_topk_batched
 
     documents, embeddings = _t(spark, sf_dir, "documents", "embeddings")
-    queries_txt = spark.createDataFrame(
-        _BM25_QUERIES, "query_id string, query_text string"
+    queries_txt = literal_frame(
+        spark, _BM25_QUERIES, "query_id string, query_text string"
     )
-    anchors = spark.createDataFrame(
-        _HYBRID_ANCHORS, "query_id string, anchor_id long"
-    )
+    anchors = literal_frame(spark, _HYBRID_ANCHORS, "query_id string, anchor_id long")
     lex = bm25_topk(documents, queries_txt, k=20).select(
         "query_id",
         F.col("doc_id").alias("id"),
@@ -2375,7 +2348,7 @@ def q_streaming_cdc_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()
     finally:
         shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, "custkey long, val double")
+    return literal_frame(spark, rows, "custkey long, val double")
 
 
 # ---------------------------------------------------------------------------
@@ -2778,8 +2751,8 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = rolled.collect()
     finally:
         shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "hour_start string, n_pairs long, paired_revenue double"
+    return literal_frame(
+        spark, rows, "hour_start string, n_pairs long, paired_revenue double"
     )
 
 
@@ -3151,8 +3124,8 @@ def q_version_diff_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "op string, n_rows long, bal_sum double, roundtrip_ok boolean"
+    return literal_frame(
+        spark, rows, "op string, n_rows long, bal_sum double, roundtrip_ok boolean"
     )
 
 
@@ -3282,8 +3255,8 @@ def q_pyds_listing_parse_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "kind string, brand string, n long, total_size long"
+    return literal_frame(
+        spark, rows, "kind string, brand string, n long, total_size long"
     )
 
 
@@ -3642,7 +3615,8 @@ def q_countmin_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_under = sum(1 for k in exact if ests[k] < exact[k])
     n_over_bound = sum(1 for k in exact if ests[k] > exact[k] + eps * total)
     all_exact = all(ests[k] == exact[k] for k in exact)
-    return spark.createDataFrame(
+    return literal_frame(
+        spark,
         [(len(exact), n_under, n_over_bound, bool(all_exact))],
         "n_types long, n_underestimates long, n_over_bound long, all_exact boolean",
     )
@@ -3978,7 +3952,8 @@ def q_observed_metrics_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows = per_type.collect()          # the action that fires the observation
     m = obs.get
-    return spark.createDataFrame(
+    return literal_frame(
+        spark,
         [(
             m["n_rows"],
             m["total_value_us"],
@@ -4063,14 +4038,7 @@ def q_streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame
         )
     )
     sink = "stream_enrich_" + uuid.uuid4().hex[:8]
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream_to_memory(enriched, sink)
     return drain_memory_sink(spark, sink)
 
 
@@ -4425,7 +4393,8 @@ def _kcore_contract_body(spark, sf_dir, graph_ops) -> DataFrame:
     min_deg, n_core = row["m"], row["n"]
     n_nodes, n_edges = row["nn"], row["ne"] // 2
     excluded_viol = row["nv"]
-    return spark.createDataFrame(
+    return literal_frame(
+        spark,
         [(
             n_nodes,
             n_edges,

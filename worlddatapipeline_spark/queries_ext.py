@@ -38,7 +38,7 @@ from .operators import similarity as sim_ops
 from .operators import simulate as sim_gen
 from .operators import stateful as stateful_ops
 from .operators import windows as win_ops
-from .session import _t, drain_memory_sink, streaming_events
+from .session import _t, drain_memory_sink, literal_frame, streaming_events
 from .sources import listings as listing_src
 from .streaming import monitor as monitor_ops
 
@@ -63,9 +63,7 @@ def _synth_listing_lines(part: DataFrame) -> DataFrame:
     pre = part.select("p_brand").distinct().select(
         F.concat(F.lit("PRE  scenes/"), F.col("p_brand"), F.lit("/")).alias("value")
     )
-    total = obj.sparkSession.createDataFrame(
-        [("TOTAL 42 OBJECTS",)], "value string"
-    )
+    total = literal_frame(obj.sparkSession, [("TOTAL 42 OBJECTS",)], "value string")
     return obj.unionByName(pre).unionByName(total)
 
 
@@ -424,7 +422,8 @@ def q_value_band_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DuckDB folds it in DECIMAL — exactly 49.99 → 49.99000…02 as a double —
     # while Python's float add gives 49.98999…95; events landing in that
     # 2-ulp gap flipped the sf0.1 hash.)
-    bands = events.sparkSession.createDataFrame(
+    bands = literal_frame(
+        events.sparkSession,
         [(i, (2500 * i) / 100.0, (2500 * i + 2499) / 100.0) for i in range(20)],
         "band_id int, lo double, hi double",
     )
@@ -753,8 +752,8 @@ def q_prefix_join_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     `Demo` → `Demo001` matching, `run_render_job_headless.py:636-650`):
     part names matched to a broadcast dim of name prefixes."""
     (part,) = _t(spark, sf_dir, "part")
-    prefixes = spark.createDataFrame(
-        [("small",), ("red",), ("blue",), ("gre",)], "prefix string"
+    prefixes = literal_frame(
+        spark, [("small",), ("red",), ("blue",), ("gre",)], "prefix string"
     )
     j = join_ops.prefix_join(
         part.select("p_partkey", "p_name", "p_retailprice"),
@@ -1021,7 +1020,8 @@ def q_persistent_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
+    return literal_frame(
+        spark,
         rows, "c_mktsegment string, n_rows long, total_bal double, version string"
     )
 
@@ -1301,6 +1301,10 @@ pseg AS (
 )"""
 
 
+# the eight (sequence_id, seed) jobs that simulate_trajectories and
+# simulate_contract run, and the oracle replays
+_SIM_JOBS = [(f"seq_{i:03d}", 1000 + i) for i in range(8)]
+
 _SIM_BEHAVIOR_NAME_CASE = (
     "CASE s.beh WHEN 0 THEN 'random_roam' WHEN 1 THEN 'translate_forward'"
     " WHEN 2 THEN 'translate_backward' WHEN 3 THEN 'translate_left'"
@@ -1313,10 +1317,7 @@ def q_simulate_trajectories(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (sequence_id, seed) job row, deterministic per seed; summarized per
     sequence.  Oracle-checked since r4: the explicit-LCG generator replays
     as a DuckDB recursive CTE (_sim_replay_cte) bit-identically."""
-    jobs = spark.createDataFrame(
-        [(f"seq_{i:03d}", 1000 + i) for i in range(8)],
-        "sequence_id string, seed long",
-    )
+    jobs = literal_frame(spark, _SIM_JOBS, "sequence_id string, seed long")
     poses = sim_gen.simulate_jobs(jobs, n_segments=6, steps_per_segment=20)
     return (
         poses.groupBy("sequence_id")
@@ -1332,7 +1333,7 @@ def q_simulate_trajectories(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_SIMULATE_TRAJECTORIES = (
     "WITH RECURSIVE "
     + _sim_replay_cte(
-        [(f"seq_{i:03d}", 1000 + i) for i in range(8)],
+        _SIM_JOBS,
         n_segments=6,
         steps=20,
     )
@@ -2713,7 +2714,8 @@ def q_embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     corpus = _planted_kmeans_corpus(embeddings)
     if corpus is None:  # sub-64-row table: empty on both sides, not a fail
-        return spark.createDataFrame(
+        return literal_frame(
+            spark,
             [],
             "cluster long, n_vectors long, cluster_in_range boolean, "
             "size_positive boolean, sizes_sum_to_corpus boolean",
@@ -2782,7 +2784,8 @@ def q_behavior_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     checked since r4 — the recursive-CTE sim replay (_sim_replay_cte) feeds
     the same bracketing/interval/lerp restatement that oracles
     behavior_resample_checked."""
-    jobs = spark.createDataFrame(
+    jobs = literal_frame(
+        spark,
         [(f"seq_{i:03d}", 3000 + i) for i in range(6)],
         "sequence_id string, seed long",
     )
@@ -2891,7 +2894,8 @@ def q_behavior_resample_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("event_id") * 37) % 360 - 180).cast("double").alias("yaw"),
         ((F.col("event_id") * 17) % 120 - 60).cast("double").alias("pitch"),
     )
-    seg_def = spark.createDataFrame(
+    seg_def = literal_frame(
+        spark,
         [(0, 0, 12), (1, 13, 24), (2, 25, 33)],
         "s int, start_idx int, end_idx int",
     )
@@ -3262,8 +3266,8 @@ def q_scene_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     same-first-letter suggestions.  Probe set broadcast; one pass over
     names."""
     (part,) = _t(spark, sf_dir, "part")
-    probes = spark.createDataFrame(
-        [("small ring",), ("RED WIDGET",), ("zzz unknown",)], "probe string"
+    probes = literal_frame(
+        spark, [("small ring",), ("RED WIDGET",), ("zzz unknown",)], "probe string"
     )
     names = part.select("p_partkey", "p_name").withColumn(
         "lname", F.lower("p_name")
@@ -3389,7 +3393,8 @@ def q_weighted_behavior_choice(spark: SparkSession, sf_dir: str) -> DataFrame:
     join against the 4-row behavior table; the draw is an explicit LCG on the
     row key, so retries/engines reproduce it exactly."""
     (events,) = _t(spark, sf_dir, "events")
-    behaviors = spark.createDataFrame(
+    behaviors = literal_frame(
+        spark,
         [
             ("IDLE", 0.0, 0.2),
             ("ROTATE", 0.2, 0.5),
@@ -4299,14 +4304,7 @@ def q_streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
     sink = "stream_dedup_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    monitor_ops.run_stream_to_memory(agg, sink)
     return drain_memory_sink(spark, sink)
 
 
@@ -4349,14 +4347,7 @@ def q_streaming_hourly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = "stream_hourly_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    monitor_ops.run_stream_to_memory(agg, sink)
     return drain_memory_sink(spark, sink)
 
 
@@ -4817,7 +4808,8 @@ def q_streaming_stall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.awaitTermination()
 
         run_batch()
-        sentinel = spark.createDataFrame(
+        sentinel = literal_frame(
+            spark,
             [("__sentinel__", int(max_us) + 60_000_000, "rendering", 0)],
             "task_id string, event_us long, status string, frame_count long",
         )
@@ -4832,8 +4824,8 @@ def q_streaming_stall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "task_id string, last_status string, max_frames long"
+    return literal_frame(
+        spark, rows, "task_id string, last_status string, max_frames long"
     )
 
 
@@ -4996,7 +4988,8 @@ def q_semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     corpus = _planted_kmeans_corpus(embeddings)
     if corpus is None:  # sub-64-row table: empty on both sides, not a fail
-        return spark.createDataFrame(
+        return literal_frame(
+            spark,
             [],
             "vec_id long, cluster long, dup_of long, "
             "order_ok boolean, cluster_in_range boolean",
@@ -5207,14 +5200,7 @@ def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = "stream_sessions_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    monitor_ops.run_stream_to_memory(agg, sink)
     return drain_memory_sink(spark, sink)
 
 
@@ -5379,10 +5365,7 @@ def q_simulate_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside the walkable bounds (the simulator's NavMesh-projection stand-in
     must never emit an off-mesh point).  Emits (violations=0,
     deterministic=true) against a constant oracle."""
-    jobs = spark.createDataFrame(
-        [(f"seq_{i:03d}", 1000 + i) for i in range(8)],
-        "sequence_id string, seed long",
-    )
+    jobs = literal_frame(spark, _SIM_JOBS, "sequence_id string, seed long")
     bounds = (-5000.0, -5000.0, 5000.0, 5000.0)
 
     def run_hash():

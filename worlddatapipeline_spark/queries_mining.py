@@ -20,6 +20,7 @@ from .session import (
     route_by_rows,
     streaming_events,
 )
+from .streaming.monitor import run_stream_to_memory
 
 
 # ---------------------------------------------------------------------------
@@ -2202,14 +2203,7 @@ def q_streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = "stream_trend_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream_to_memory(agg, sink)
     drained = drain_memory_sink(spark, sink)
     wr = Window.partitionBy("win_start").orderBy(
         F.col("n_events").desc(), F.col("event_type").asc()
@@ -3672,14 +3666,7 @@ def q_streaming_ohlc_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = "stream_ohlc_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream_to_memory(agg, sink)
     return drain_memory_sink(spark, sink)
 
 

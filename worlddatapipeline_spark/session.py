@@ -62,6 +62,47 @@ def get_spark(
     return b.getOrCreate()
 
 
+def literal_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """The engine's one way to turn driver-side values into a frame: job
+    manifests, intrinsics, band and probe tables, rows a staged round-trip
+    collected back.
+
+    ``rows`` are tuples (or ``Row``s from ``collect()``) matched to
+    ``schema`` by position; ``schema`` is a DDL string or a ``StructType``.
+    The rows become a ``pyarrow.Table`` typed by ``to_arrow_schema``, which
+    Spark plans as a ``LocalTableScan`` held in the JVM with exact size
+    statistics.  A Python list handed to ``createDataFrame`` would plan as
+    ``Scan ExistingRDD`` over a Python RDD: unknown size to the optimizer,
+    and a Python worker re-unpickling it on every action.  So in a plan
+    ``Scan ExistingRDD`` means a checkpoint, never a literal.
+
+    An empty ``rows`` gives an empty frame of the schema.  Columns whose
+    type Spark converts before storing (dates, timestamps, structs, and
+    arrays or maps holding them) pass through the schema's own
+    ``toInternal``, as on the list path, so a naive ``datetime`` is read in
+    the process's local zone there and here alike instead of being
+    shifted.  A row of the wrong width raises.
+    """
+    import pyarrow as pa  # noqa: PLC0415
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+    from pyspark.sql.types import StructType  # noqa: PLC0415
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows, strict=True)) or [()] * len(schema.fields)
+    arrays = [
+        pa.array(
+            [f.dataType.toInternal(v) for v in col]
+            if f.dataType.needConversion() else col,
+            type=a.type,
+        )
+        for f, a, col in zip(schema.fields, arrow_schema, cols, strict=True)
+    ]
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
+
+
 def materialize_and_release(result, *cached):
     """Materialize ``result`` with an eager ``localCheckpoint``, then
     unpersist the ``cached`` frames it derived from — the one barrier

@@ -22,20 +22,15 @@ from __future__ import annotations
 
 import os
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import literal_frame
 
 # 'date time size STORAGE_CLASS key...' — key may contain spaces; storage
 # class is a single token (reference handles this at scene_copy.py:191-226)
 _OBJ_RE = (
     r"^\s*(\d{4}-\d{2}-\d{2})\s+(\d{2}:\d{2}:\d{2})\s+(\d+)\s+(\S+)\s+(.*\S)\s*$"
-)
-
-
-_SCAN_SCHEMA = pa.schema(
-    [("path", pa.string()), ("relpath", pa.string()),
-     ("size", pa.int64()), ("mtime", pa.int64())]
 )
 
 
@@ -85,13 +80,11 @@ def scan_directory(
 
     Driver-side walk (listing is metadata-scale); the returned frame feeds
     the distributed operators (content hash, reconcile, stats).  The walk
-    is handed to Spark as a ``pyarrow.Table`` with an explicit schema, so
-    it plans as a ``LocalTableScan`` held in the JVM: later actions on the
-    listing start no Python worker to re-unpickle it (a list of tuples
-    would plan as ``Scan ExistingRDD``, a Python RDD), and an empty tree
-    gives an empty four-column frame instead of a schema-inference error.
+    becomes a frame through ``session.literal_frame``, so it plans as a
+    ``LocalTableScan`` held in the JVM (later actions on the listing start
+    no Python worker), and an empty tree gives an empty four-column frame.
     """
-    cols: dict[str, list] = {"path": [], "relpath": [], "size": [], "mtime": []}
+    rows = []
     exclude_exts = [e.lower() for e in (exclude_exts or [])]
     for dirpath, _dirnames, filenames in os.walk(root):
         for fn in filenames:
@@ -103,11 +96,12 @@ def scan_directory(
                 st = os.stat(full)
             except OSError:
                 continue
-            cols["path"].append(full)
-            cols["relpath"].append(os.path.relpath(full, root))
-            cols["size"].append(int(st.st_size))
-            cols["mtime"].append(int(st.st_mtime))
-    return spark.createDataFrame(pa.table(cols, schema=_SCAN_SCHEMA))
+            rows.append(
+                (full, os.path.relpath(full, root), int(st.st_size), int(st.st_mtime))
+            )
+    return literal_frame(
+        spark, rows, "path string, relpath string, size bigint, mtime bigint"
+    )
 
 
 def first_level_folders(listing: DataFrame, key_col: str = "key") -> DataFrame:

@@ -130,8 +130,8 @@ def run_stream_to_memory(
     stream_df: DataFrame, query_name: str, output_mode: str = "complete"
 ):
     """Execute a streaming aggregation with availableNow into an in-memory
-    sink and return the finished query — the test/validation harness for the
-    streaming surface."""
+    sink and return the finished query — the one memory-sink runner: the
+    streaming parity queries call it, then ``session.drain_memory_sink``."""
     q = (
         stream_df.writeStream.format("memory")
         .queryName(query_name)
