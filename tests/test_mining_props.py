@@ -129,8 +129,10 @@ def test_average_hash_robust_to_pixel_noise(spark):
         np.uint8
     )
     rows = [
-        (1, bytearray(mm.encode_bmp_gray8(img.astype(np.uint8)))),
-        (2, bytearray(mm.encode_bmp_gray8(noisy))),
+        (1, bytearray(
+            mm.encode_bmp_indexed(img.astype(np.uint8), mm._GRAY_PALETTE)
+        )),
+        (2, bytearray(mm.encode_bmp_indexed(noisy, mm._GRAY_PALETTE))),
     ]
     df = spark.createDataFrame(rows, "media_id long, data binary")
     out = {r.media_id: r.ahash for r in mm.average_hash_64(df).collect()}
@@ -148,7 +150,7 @@ def test_average_hash_bit63_wraps_signed(spark):
     img = np.full((64, 64), 50, dtype=np.uint8)
     img[56:, 56:] = 200
     df = spark.createDataFrame(
-        [(1, bytearray(mm.encode_bmp_gray8(img)))],
+        [(1, bytearray(mm.encode_bmp_indexed(img, mm._GRAY_PALETTE)))],
         "media_id long, data binary",
     )
     row = mm.average_hash_64(df).collect()[0]

@@ -107,7 +107,7 @@ def test_bmp_roundtrip_with_row_padding():
     import numpy as np
 
     px = np.array([[10, 20, 30], [40, 50, 60]], dtype=np.uint8)  # w=3 → 1 pad byte
-    data = mm.encode_bmp_gray8(px)
+    data = mm.encode_bmp_indexed(px, mm._GRAY_PALETTE)
     assert data[:2] == b"BM"
     # pixel offset = 14 + 40 + 1024; row size padded to 4
     import struct
@@ -130,7 +130,8 @@ def test_bmp_24bit_and_topdown_decode():
     assert out.tolist() == [1, 2, 3, 4, 5, 6]  # pad stripped
     # bottom-up multi-row ordering: encoder writes bottom row first
     px = np.array([[9], [7]], dtype=np.uint8)
-    assert mm._decode_bytes(mm.encode_bmp_gray8(px)).tolist() == [9, 7]
+    bmp = mm.encode_bmp_indexed(px, mm._GRAY_PALETTE)
+    assert mm._decode_bytes(bmp).tolist() == [9, 7]
 
 
 def test_wav_roundtrip_8bit_and_16bit():
@@ -179,12 +180,12 @@ def test_png_roundtrip_multirow():
     import numpy as np
 
     px = np.array([[10, 20, 30], [40, 50, 60]], dtype=np.uint8)
-    data = mm.encode_png_gray8(px)
+    data = mm.encode_png(px, 0)
     assert data[:8] == mm.PNG_SIG
     assert mm._decode_bytes(data).tolist() == [10, 20, 30, 40, 50, 60]
     # 1-D input becomes a single scanline
     row = np.arange(256, dtype=np.uint8)
-    assert mm._decode_bytes(mm.encode_png_gray8(row)).tolist() == list(range(256))
+    assert mm._decode_bytes(mm.encode_png(row, 0)).tolist() == list(range(256))
 
 
 def test_png_all_filter_types_decode():
@@ -348,7 +349,7 @@ def test_png_chunk_crc_mismatch_falls_back_to_stub():
     import numpy as np
     import pytest
 
-    good = mm.encode_png_gray8(np.arange(12, dtype=np.uint8).reshape(3, 4))
+    good = mm.encode_png(np.arange(12, dtype=np.uint8).reshape(3, 4), 0)
     assert mm._decode_png(good).tolist() == list(range(12))
     # flip one bit inside the IDAT body (after signature + IHDR chunk:
     # 8 sig + 25 IHDR; IDAT body starts at +8 more)
@@ -519,8 +520,8 @@ def test_decode_bytes_swap_point_contract():
 
     row = np.arange(32, dtype=np.uint8)
     for enc in (
-        mm.encode_bmp_gray8,
-        mm.encode_png_gray8,
+        lambda r: mm.encode_bmp_indexed(r, mm._GRAY_PALETTE),
+        lambda r: mm.encode_png(r, 0),
         lambda r: mm.encode_wav_pcm(r, 8000),
     ):
         payload = enc(row)
@@ -1360,11 +1361,11 @@ def test_png_adam7_gray_roundtrip():
     rng = np.random.default_rng(42)
     for shape in [(8, 8), (17, 13), (1, 9), (9, 1), (2, 2), (7, 5)]:
         px = rng.integers(0, 256, shape, dtype=np.uint8)
-        enc = mm.encode_png_gray8(px, interlace=True)
+        enc = mm.encode_png(px, 0, interlace=True)
         assert mm._decode_png(enc).tolist() == px.reshape(-1).tolist(), shape
         # and the interlaced stream differs from the sequential one while
         # decoding identically
-        assert mm._decode_png(mm.encode_png_gray8(px)).tolist() == (
+        assert mm._decode_png(mm.encode_png(px, 0)).tolist() == (
             px.reshape(-1).tolist()
         )
 
@@ -1505,7 +1506,7 @@ def test_hostile_headers_refuse_per_format():
 
     # --- BMP: header declaring more rows than the payload carries
     img = np.arange(64, dtype=np.uint8).reshape(8, 8)
-    bmp = bytearray(mm.encode_bmp_gray8(img))
+    bmp = bytearray(mm.encode_bmp_indexed(img, mm._GRAY_PALETTE))
     struct.pack_into("<i", bmp, 22, 60000)  # h: 8 -> 60000
     expect_stub(bytes(bmp), "buffer is smaller|fewer bytes")
 
@@ -1733,7 +1734,9 @@ def test_bmp_surface_roundtrip_indexed_and_rle():
         mm._decode_bmp(rle_oob)
     # negative width must refuse, not bypass the cap via a negative
     # product and silently decode empty (review catch r10)
-    neg = bytearray(mm.encode_bmp_gray8(np.zeros((4, 4), dtype=np.uint8)))
+    neg = bytearray(mm.encode_bmp_indexed(
+        np.zeros((4, 4), dtype=np.uint8), mm._GRAY_PALETTE
+    ))
     struct.pack_into("<i", neg, 18, -4)
     with pytest.raises(ValueError, match="bad BMP dimensions"):
         mm._decode_bmp(bytes(neg))

@@ -185,6 +185,37 @@ def test_merge_upsert_parquet_crash_before_pointer_commit_not_torn(
     assert {r["k"]: r["bal"] for r in out.collect()} == {1: 10.0, 2: 99.0}
 
 
+def test_purge_rows_crash_before_pointer_commit_not_torn(
+    spark, tmp_path, monkeypatch
+):
+    """A purge that crashes AFTER the version rename but BEFORE the pointer
+    commit leaves the old rows readable; the retry completes the purge and
+    leaves exactly one version."""
+    from worlddatapipeline_spark.operators import reconcile
+
+    path = str(tmp_path / "tbl")
+    spark.createDataFrame([(1, 10.0), (2, 20.0)], ["k", "bal"]).write.parquet(path)
+    reconcile.merge_upsert_parquet(
+        spark, path, spark.createDataFrame([(3, 30.0)], ["k", "bal"]), ["k"]
+    )
+    keys = spark.createDataFrame([(2,)], ["k"])
+
+    def boom(*a, **kw):
+        raise RuntimeError("simulated crash before pointer commit")
+
+    monkeypatch.setattr(reconcile.os, "replace", boom)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        reconcile.purge_rows(spark, path, ["k"], keys)
+    monkeypatch.undo()
+    # pointer still names the pre-purge version; its rows stay readable
+    live = {r["k"]: r["bal"] for r in reconcile.read_parquet_table(spark, path).collect()}
+    assert live == {1: 10.0, 2: 20.0, 3: 30.0}
+    # retry overwrites the orphaned version dir, commits, drops history
+    out = reconcile.purge_rows(spark, path, ["k"], keys)
+    assert {r["k"]: r["bal"] for r in out.collect()} == {1: 10.0, 3: 30.0}
+    assert reconcile.table_versions(path) == ["_v00000002"]
+
+
 def test_concurrent_merge_fails_fast_on_live_lease(spark, tmp_path):
     """A second writer against a live lease must raise immediately — two
     concurrent merges can never interleave their pointer commits."""
@@ -760,8 +791,16 @@ def test_delta_layout_guard_on_destructive_maintenance(spark, tmp_path):
         reconcile.purge_rows(spark, path, ["id"], keys)
     with pytest.raises(ValueError, match="delta-spark is not importable"):
         reconcile.vacuum_table(path)
-    # the log directory is untouched
+    # merge goes through the same lease, so it refuses too — every time:
+    # a second merge must not sweep the log and the root data files
+    root_files = sorted(os.listdir(path))
+    src = spark.createDataFrame([(2, "b")], "id long, name string")
+    for _ in range(2):
+        with pytest.raises(ValueError, match="delta-spark is not importable"):
+            reconcile.merge_upsert_parquet(spark, path, src, ["id"])
+    # the log directory and the root files are untouched
     assert os.path.isdir(os.path.join(path, "_delta_log"))
+    assert sorted(os.listdir(path)) == root_files
 
 
 def test_child_session_with_semantics_mirrors_caller_confs(spark):

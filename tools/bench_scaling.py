@@ -19,10 +19,11 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF01 = "/root/testdata/sf0.1"
-SF10 = "/root/repo/.localdata/sf1.0"
+SF10 = os.path.join(REPO, ".localdata", "sf1.0")
 
 
 def main() -> None:

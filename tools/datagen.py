@@ -3,8 +3,8 @@
 Mimics the driver-generated tables at /root/testdata/sf* (schemas, value
 domains, and distributions reverse-engineered from the sf0.01/sf0.1 parquet)
 so the full oracle sweep and bench can run one or two notches above the
-largest driver scale factor.  Output lives under /root/repo/.localdata/
-(gitignored) — the driver's own testdata is never touched.
+largest given scale factor.  Output lives under ``.localdata/`` at the
+checkout root (gitignored); the given test data is never touched.
 
 Deterministic under a fixed seed.  Usage:
 
@@ -192,6 +192,9 @@ def gen(sf: float, out: str) -> None:
 
 if __name__ == "__main__":
     sf = float(sys.argv[1]) if len(sys.argv) > 1 else 0.5
-    out = sys.argv[2] if len(sys.argv) > 2 else f"/root/repo/.localdata/sf{sf}"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
+        repo, ".localdata", f"sf{sf}"
+    )
     print(f"generating sf={sf} -> {out}")
     gen(sf, out)

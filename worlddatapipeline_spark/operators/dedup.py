@@ -903,9 +903,9 @@ def dup_cluster_representatives(
     Scale: input is the PAIR set (already candidate-bounded by the upstream
     LSH), never the corpus; the star kernel shuffles only (id, id) edges.
     """
-    from .graph import connected_components_star
+    from .graph import connected_components
 
-    comps = connected_components_star(
+    comps = connected_components(
         pairs.select(id_a, id_b), src=id_a, dst=id_b, id_col="doc_id"
     )
     return comps.withColumnRenamed("component", "representative")

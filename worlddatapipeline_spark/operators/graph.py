@@ -4,13 +4,11 @@ Reference analog: NavMesh connectivity analysis
 (`navmesh_connectivity.py:19-233`) — sample points, KNN(k=8) candidate edges,
 BFS islands, island-ratio filter, spawn-point selection (SURVEY.md §2.9).
 
-Spark design: connected components as iterative min-label propagation over
-DataFrames (no GraphFrames dependency — it is not baked into this
-environment).  Each iteration is one join + one aggregate; ``localCheckpoint``
-truncates lineage so the loop does not re-execute history.  Convergence is
-O(graph diameter) iterations; for the reference's island graphs (diameter ~
-tens) that is fast, and the same loop is the standard scalable CC formulation
-for billion-edge graphs (cf. the large-star/small-star literature).
+Spark design: connected components as alternating large-star / small-star
+rounds over DataFrames (no GraphFrames dependency — it is not baked into
+this environment).  Each round is pure joins + aggregates;
+``localCheckpoint`` truncates lineage so the loop does not re-execute
+history, and convergence is O(log² n) rounds regardless of graph diameter.
 """
 
 from __future__ import annotations
@@ -67,74 +65,7 @@ def knn_edges(
     return pairs.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k).drop("rank")
 
 
-def connected_components_minlabel(
-    edges: DataFrame,
-    vertices: DataFrame | None = None,
-    src: str = "src",
-    dst: str = "dst",
-    id_col: str = "id",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Connected components via iterative min-label propagation — kept as
-    the DIFFERENTIAL CROSS-CHECK for the star kernel, not the default.
-
-    SCALE.md's measured crossover shows the large-star/small-star kernel at
-    or below min-label wall time at every point, and min-label needs
-    O(diameter) rounds: on a long-diameter graph a bounded ``max_iter``
-    SILENTLY under-merges (labels stop propagating mid-chain with no error).
-    ``connected_components`` therefore delegates to the star kernel; this
-    form survives for tests that diff the two implementations against each
-    other (tests/test_graph.py::test_star_cc_matches_min_label).
-
-    Reference analog: BFS island detection (`navmesh_connectivity.py:158-180`)
-    — a driver-side BFS with a visited set; here a data-parallel fixpoint:
-    label(v) ← min(label(v), min over neighbours(label(u))) until stable.
-
-    Returns (id, component) where component = min vertex id in the component.
-    Undirected: edges are symmetrized internally.
-    """
-    sym = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .unionByName(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .distinct()
-    )
-    if vertices is None:
-        verts = sym.select(F.col("s").alias(id_col)).distinct()
-    else:
-        verts = vertices.select(F.col(id_col)).distinct()
-    labels = verts.select(F.col(id_col), F.col(id_col).alias("component"))
-    labels = labels.localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        # neighbour minimum label
-        nbr_min = (
-            sym.join(labels, sym["d"] == labels[id_col])
-            .groupBy(F.col("s").alias(id_col))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        new_labels = (
-            labels.join(nbr_min, id_col, "left")
-            .select(
-                id_col,
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_component"), F.col("component"))
-                ).alias("component"),
-            )
-        )
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), id_col)
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
-
-
-def connected_components_star(
+def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     src: str = "src",
@@ -142,11 +73,14 @@ def connected_components_star(
     id_col: str = "id",
     max_iter: int = 30,
 ) -> DataFrame:
-    """Connected components via alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") — the
-    100 TB path SCALE.md reserves for graphs whose diameter makes per-hop
-    min-label propagation too slow: convergence is O(log² n) rounds
-    regardless of diameter, vs O(diameter) for `connected_components`.
+    """Connected components — the engine's one kernel: alternating
+    large-star / small-star rounds (Kiveris et al., "Connected Components
+    in MapReduce and Beyond").  Convergence is O(log² n) rounds regardless
+    of diameter, so a bounded ``max_iter`` cannot silently under-merge the
+    way per-hop min-label propagation does on long-diameter graphs
+    (SCALE.md's measured crossover has star at or below min-label wall
+    time at every point).  Min-label propagation survives only as the
+    test oracle ``tests/ref_graph.py::connected_components_minlabel``.
 
     Each round is two edge transforms (pure joins + groupBy.min — no Python):
     - large-star: every neighbour v > u links to m(u) = min(N(u) ∪ {u})
@@ -154,8 +88,8 @@ def connected_components_star(
     Fixpoint when the edge multiset stops changing; afterwards every node's
     minimum neighbour IS its component root.
 
-    Returns (id, component), identical output contract (and, for the same
-    graph, identical result) to `connected_components`.
+    Returns (id, component) where component = min vertex id in the
+    component.  Undirected: edges are symmetrized internally.
     """
     def _canon(df: DataFrame) -> DataFrame:
         # undirected pair set, canonical orientation (x < y), no self-loops
@@ -239,7 +173,7 @@ def connected_components_star(
         # Unreachable in practice (O(log² n) rounds vs max_iter=30), but
         # the safety claim must be enforced, not assumed.
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds"
+            f"connected_components did not converge in {max_iter} rounds"
         )
 
     # Converged state is a star forest in canonical (root < member) form, so
@@ -259,29 +193,6 @@ def connected_components_star(
     return verts.join(roots, id_col, "left").select(
         id_col,
         F.coalesce(F.col("component"), F.col(id_col)).alias("component"),
-    )
-
-
-def connected_components(
-    edges: DataFrame,
-    vertices: DataFrame | None = None,
-    src: str = "src",
-    dst: str = "dst",
-    id_col: str = "id",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Connected components — the engine's default kernel.
-
-    Delegates to the large-star/small-star kernel
-    (``connected_components_star``): SCALE.md's measured crossover has star
-    at-or-below min-label wall time at every point, and star converges in
-    O(log² n) rounds regardless of diameter, so a bounded ``max_iter``
-    cannot silently under-merge the way per-hop min-label propagation does
-    on long-diameter graphs.  ``connected_components_minlabel`` remains as
-    the differential cross-check.
-    """
-    return connected_components_star(
-        edges, vertices, src=src, dst=dst, id_col=id_col, max_iter=max_iter
     )
 
 
@@ -471,7 +382,6 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 100,
-    steps_per_pass: int = 1,
     assume_undirected_canonical: bool = False,
 ) -> DataFrame:
     """k-core decomposition by iterative peeling: repeatedly drop nodes of
@@ -484,20 +394,15 @@ def k_core(
     TWICE — once under the `keep.count()` convergence probe and once under
     the localCheckpoint — so each round paid the degree-aggregate and
     semi-join stages two times.  This form materializes each pass exactly
-    once (the eager localCheckpoint), batches ``steps_per_pass`` peel
-    steps lazily into that single plan, and probes convergence with an
-    EDGE count over the already-checkpointed blocks — one trivial
-    shuffle-free job, because edge-count fixpoint ⟺ node fixpoint (every
-    node present in the edge list has degree >= 1, so any dropped node
-    removes at least one edge).  Peeling is monotone and its fixpoint
-    unique, so batching steps cannot change the result, only when
-    convergence is observed.  ``steps_per_pass`` defaults to 1: under AQE
-    each peel step is its own stage-job chain whether or not it shares a
-    materialization, so batching only helps graphs with deep peeling
-    chains (raise it for those); measured on the sf0.01 contract graph,
-    1 step/pass + the seeded probe is the job-count floor.  ``max_iter``
-    counts passes and raises rather than silently returning a
-    non-fixpoint.
+    once (the eager localCheckpoint), one peel step per pass, and probes
+    convergence with an EDGE count over the already-checkpointed blocks —
+    one trivial shuffle-free job, because edge-count fixpoint ⟺ node
+    fixpoint (every node present in the edge list has degree >= 1, so any
+    dropped node removes at least one edge).  Measured on the sf0.01
+    contract graph, one step per pass + the seeded probe is the job-count
+    floor: under AQE each peel step is its own stage-job chain whether or
+    not it shares a materialization.  ``max_iter`` counts passes and
+    raises rather than silently returning a non-fixpoint.
 
     Input edges are treated as UNDIRECTED (symmetrized + dedup'd here) —
     unless ``assume_undirected_canonical`` is set, in which case the
@@ -544,10 +449,7 @@ def k_core(
     # instead of paying a second full confirming pass.
     prev_edges = e.count()
     for _ in range(max_iter):
-        e2 = e
-        for _ in range(steps_per_pass):
-            e2 = _peel_once(e2)
-        e = e2.localCheckpoint(eager=True)
+        e = _peel_once(e).localCheckpoint(eager=True)
         n_edges = e.count()
         if n_edges == prev_edges or n_edges == 0:
             break

@@ -120,31 +120,8 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def encode_bmp_gray8(pixels: np.ndarray) -> bytes:
-    """Encode a (h, w) uint8 array as a REAL 8-bit grayscale BMP.
-
-    Pure-struct format, no codec library needed: BITMAPFILEHEADER (14 B) +
-    BITMAPINFOHEADER (40 B) + identity grayscale palette (256×BGRA) + pixel
-    rows bottom-up, each padded to a 4-byte boundary.  Any stock image
-    viewer/PIL opens the output; ``_decode_bmp`` round-trips it exactly.
-    """
-    import struct  # noqa: PLC0415
-
-    px = np.ascontiguousarray(pixels, dtype=np.uint8)
-    if px.ndim == 1:
-        px = px[None, :]
-    h, w = px.shape
-    row_size = (w + 3) & ~3
-    img_size = row_size * h
-    offset = 14 + 40 + 256 * 4
-    header = struct.pack("<2sIHHI", b"BM", offset + img_size, 0, 0, offset)
-    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 8, 0, img_size, 2835, 2835, 256, 0)
-    palette = bytes(
-        b for i in range(256) for b in (i, i, i, 0)
-    )  # identity grayscale, BGRA
-    rows = np.zeros((h, row_size), dtype=np.uint8)
-    rows[:, :w] = px
-    return header + info + palette + rows[::-1].tobytes()  # bottom-up
+# identity grayscale palette: an 8-bit gray image is an indexed image over it
+_GRAY_PALETTE = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
 
 
 def encode_bmp_indexed(
@@ -384,32 +361,6 @@ def _png_raw_scanlines(px: np.ndarray, bitd: int, interlace: bool) -> bytes:
         out[:, 1:] = grid
         parts.append(out.tobytes())
     return b"".join(parts)
-
-
-def encode_png_gray8(pixels: np.ndarray, interlace: bool = False) -> bytes:
-    """Encode a (h, w) uint8 array as a REAL 8-bit grayscale PNG.
-
-    Pure stdlib: zlib deflate for IDAT, struct for chunk framing,
-    zlib.crc32 for chunk CRCs — no codec library.  Scanlines are written
-    with filter type 0 (None); ``interlace=True`` emits the Adam7
-    seven-pass layout (spec §8.2).  Any stock viewer/PIL opens the output
-    and ``_decode_png`` round-trips it exactly.
-    """
-    import struct  # noqa: PLC0415
-    import zlib  # noqa: PLC0415
-
-    px = np.ascontiguousarray(pixels, dtype=np.uint8)
-    if px.ndim == 1:
-        px = px[None, :]
-    h, w = px.shape
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 1 if interlace else 0)
-    raw = _png_raw_scanlines(px, 8, interlace)
-    return (
-        PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(raw, 6))
-        + _png_chunk(b"IEND", b"")
-    )
 
 
 def encode_png_indexed(
@@ -3571,7 +3522,7 @@ def png_palette_roundtrip_audit(
     pure Arrow-batched ``mapInPandas`` behind an explicit repartition,
     same as the other codec audits."""
 
-    gray = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
+    gray = _GRAY_PALETTE
     ramp16 = np.stack([np.arange(16, dtype=np.uint8) * 17] * 3, axis=1)
     bw = np.array([[0, 0, 0], [255, 255, 255]], dtype=np.uint8)
     cases = [  # (palette, bit depth, index fn, expected fn)
@@ -3652,14 +3603,14 @@ def bmp_surface_roundtrip_audit(
 ) -> DataFrame:
     """BMP classic-surface codec contract (r10): indexed 1/4/8-bit
     (sub-byte MSB-first packing), BI_RLE8 (run-heavy AND high-entropy
-    inputs, so both the run and the many-short-runs paths execute), and
-    the pre-existing gray8 path — 6 encode/decode round-trips per
-    qualifying row, expected output closed-form from the row's first
-    ``side²`` utf-8 bytes through the same palette conventions as the
-    PNG contract.  Scale: pure Arrow-batched ``mapInPandas`` behind an
-    explicit repartition, same as the other codec audits."""
+    inputs, so both the run and the many-short-runs paths execute) — 5
+    encode/decode round-trips per qualifying row, expected output
+    closed-form from the row's first ``side²`` utf-8 bytes through the
+    same palette conventions as the PNG contract.  Scale: pure
+    Arrow-batched ``mapInPandas`` behind an explicit repartition, same as
+    the other codec audits."""
 
-    gray = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
+    gray = _GRAY_PALETTE
     ramp16 = np.stack([np.arange(16, dtype=np.uint8) * 17] * 3, axis=1)
     bw = np.array([[0, 0, 0], [255, 255, 255]], dtype=np.uint8)
     cases = [  # (palette, depth, rle, index fn, expected fn)
@@ -3676,9 +3627,7 @@ def bmp_surface_roundtrip_audit(
             enc = encode_bmp_indexed(f_idx(raw), pal, bit_depth=depth, rle=rle)
             if not np.array_equal(_decode_bmp(enc), f_want(raw).reshape(-1)):
                 return False
-        return np.array_equal(
-            _decode_bmp(encode_bmp_gray8(raw)), raw.reshape(-1)
-        )
+        return True
 
     return _roundtrip_audit(
         df, id_col, text_col, side * side, (side, side), "n_pixels",
@@ -3846,7 +3795,10 @@ def synthesize_media(
                         "width": n, "height": 1, "channels": 1,
                         "sample_rate": None, "n_frames": 1, "duration_s": None,
                     }
-                    payload = encode_bmp_gray8(b[None, :]) if n else None
+                    payload = (
+                        encode_bmp_indexed(b[None, :], _GRAY_PALETTE)
+                        if n else None
+                    )
                 elif sel == 1:
                     meta = {
                         "modality": "audio", "format": "wav",
@@ -3861,7 +3813,7 @@ def synthesize_media(
                         "width": n, "height": 1, "channels": 1,
                         "sample_rate": None, "n_frames": 1, "duration_s": None,
                     }
-                    payload = encode_png_gray8(b[None, :]) if n else None
+                    payload = encode_png(b[None, :], 0) if n else None
                 rows.append((int(mid), payload, meta))
             yield pd.DataFrame(rows, columns=["media_id", "data", "meta"])
 
@@ -4108,7 +4060,7 @@ def synthesize_pattern_bmps(
                 img = np.where(
                     np.kron(bits, np.ones((8, 8), dtype=np.uint8)), 200, 50
                 ).astype(np.uint8)
-                out.append((int(rid), encode_bmp_gray8(img)))
+                out.append((int(rid), encode_bmp_indexed(img, _GRAY_PALETTE)))
             yield pd.DataFrame(out, columns=["media_id", "data"])
 
     from pyspark.sql.types import (  # noqa: PLC0415

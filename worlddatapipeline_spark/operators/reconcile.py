@@ -85,17 +85,18 @@ def _is_delta_table(path: str) -> bool:
     return _HAS_DELTA and os.path.isdir(os.path.join(path, "_delta_log"))
 
 
-def _guard_delta_layout(path: str, op: str) -> None:
-    """Refuse destructive versioned-parquet maintenance on a directory
-    that carries a ``_delta_log`` when delta-spark is NOT importable:
-    without the library the routing predicate is false, and the pointer-
-    file sweep would rmtree the Delta log — silent table destruction
-    (review catch r7).  With the library present the caller routes to the
-    native Delta path instead."""
+def _guard_delta_layout(path: str) -> None:
+    """Refuse to write the versioned-parquet layout into a directory that
+    carries a ``_delta_log`` when delta-spark is NOT importable: without
+    the library the routing predicate is false, so a merge would read the
+    Delta data files as a legacy layout and the next sweep would rmtree
+    the Delta log — silent table destruction.  With the library present
+    the caller routes to the native Delta path instead.  Called only from
+    ``_acquire_lease``, which every versioned-table writer goes through."""
     if not _HAS_DELTA and os.path.isdir(os.path.join(path, "_delta_log")):
         raise ValueError(
-            f"{op}: {path} is a Delta table but delta-spark is not "
-            "importable — refusing destructive maintenance on its layout"
+            f"{path} is a Delta table but delta-spark is not importable — "
+            "refusing to write its layout as a versioned-parquet table"
         )
 
 
@@ -113,7 +114,9 @@ def _acquire_lease(path: str, ttl_s: float = 3600.0) -> str:
     if a rival claims it in that window the ``O_EXCL`` create loses and
     this writer still fails fast.  A live lease always raises
     ``ConcurrentMergeError`` immediately; callers retry on their own
-    schedule rather than queueing blind."""
+    schedule rather than queueing blind.  The Delta-layout guard runs
+    first, so no writer can reach the layout without it."""
+    _guard_delta_layout(path)
     os.makedirs(path, exist_ok=True)
     lease = os.path.join(path, "_LEASE")
     payload = f"pid={os.getpid()} expires={time.time() + ttl_s:.3f}\n"
@@ -242,6 +245,122 @@ def read_parquet_table(spark, path: str, version: str | None = None) -> DataFram
     return spark.read.parquet(os.path.join(path, v))
 
 
+def _commit_pointer(path: str, version: str) -> None:
+    """Point the table's ``_CURRENT`` at ``version``: the name goes to a
+    temp file, which is fsync'd and ``os.replace``d onto ``_CURRENT`` —
+    the single atomic commit point on POSIX/HDFS.  Readers resolve the
+    pointer and see the old version or the new one, never a torn mix and
+    never a missing table.  The only code that writes ``_CURRENT``."""
+    tmp = os.path.join(path, "._CURRENT.tmp")
+    with open(tmp, "w", encoding="utf-8") as fh:
+        fh.write(version)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, os.path.join(path, "_CURRENT"))
+
+
+def _sweep(path: str, keep: set[str], drop_legacy: bool) -> list[str]:
+    """Drop crashed-run ``_staging-*`` orphans and every ``_v*`` version
+    directory outside ``keep``; with ``drop_legacy``, also every other
+    entry but the pointer and the lease (the root files of the
+    pre-versioned layout).  Returns the removed version names, sorted."""
+    removed = []
+    for entry in os.listdir(path):
+        if entry in keep or entry in ("_CURRENT", "_LEASE"):
+            continue
+        full = os.path.join(path, entry)
+        if entry.startswith("_staging-"):
+            shutil.rmtree(full, ignore_errors=True)
+        elif entry.startswith("_v") and os.path.isdir(full):
+            shutil.rmtree(full, ignore_errors=True)
+            removed.append(entry)
+        elif drop_legacy:
+            if os.path.isdir(full):
+                shutil.rmtree(full, ignore_errors=True)
+            else:
+                os.remove(full)
+    return sorted(removed)
+
+
+def _commit_version(
+    spark,
+    path: str,
+    rewrite,
+    lease_ttl_s: float,
+    keep_versions: int | None,
+) -> DataFrame:
+    """Commit ``rewrite(live table)`` as the table's next version and return
+    the re-read table — the one write path of the versioned layout::
+
+        <path>/_CURRENT        pointer file, contains e.g. "_v00000002"
+        <path>/_v00000001      previous version (kept for rollback)
+        <path>/_v00000002      live version
+        <path>/_LEASE          single-writer lease, held while committing
+
+    Commit protocol — no step ever mutates data a reader can be holding:
+
+    1. take the lease (``_acquire_lease``, which also runs the Delta-layout
+       guard) and read the live table;
+    2. materialize the rewrite into ``<path>/_staging-<next>`` (never
+       ``mode("overwrite")`` on the path being read — Spark plans lazily
+       and would truncate its own input mid-job);
+    3. ``os.rename`` staging → ``<path>/_v<next>`` (same-directory rename;
+       the new version is still unreferenced, so a crash here leaves the
+       live pointer — and therefore the table — untouched);
+    4. ``_commit_pointer`` — the single atomic commit point;
+    5. ``_sweep`` what the retention policy drops, then re-read.
+
+    Retention: ``keep_versions`` keeps the newest ``max(2, keep_versions)``
+    version directories plus the one just replaced, so a rollback target
+    always survives (repoint ``_CURRENT`` by hand).  The root files of a
+    never-versioned table are the "previous version" of the first commit
+    and are removed only once a versioned predecessor exists.
+    ``keep_versions=None`` is a history purge: only the new version
+    survives, legacy root files included.
+
+    Orphans from a crashed run (staging dirs, an unreferenced ``_v<next>``)
+    are swept by the next commit, so every writer is idempotently
+    retryable after a crash at ANY step.
+
+    Object-store caveat: ``os.replace`` is atomic on POSIX filesystems and
+    HDFS but S3-class stores have no atomic rename — there, bind step 4 to
+    a table-format commit (Delta/Iceberg ``MERGE INTO``) or a
+    conditional-PUT of the pointer object; the other steps stay identical.
+
+    Concurrent writers: the lease (``O_EXCL``-claimed, TTL ``lease_ttl_s``)
+    arbitrates — a second writer against a live lease raises
+    ``ConcurrentMergeError`` immediately instead of silently racing the
+    pointer; a crashed writer's lease expires and the next commit takes
+    over and sweeps its orphans.  Readers never take the lease: they only
+    resolve ``_CURRENT``, so reads stay lock-free at any concurrency.
+    """
+    lease = _acquire_lease(path, ttl_s=lease_ttl_s)
+    try:
+        table = read_parquet_table(spark, path)
+        cur = _table_current_version(path)
+        n = int(cur.lstrip("_v")) if cur else 0
+        new_v = f"_v{n + 1:08d}"
+        staging = os.path.join(path, f"_staging-{new_v}")
+        # sweep orphans a crashed previous attempt may have left behind
+        shutil.rmtree(staging, ignore_errors=True)
+        shutil.rmtree(os.path.join(path, new_v), ignore_errors=True)
+
+        rewrite(table).write.mode("overwrite").parquet(staging)
+        os.rename(staging, os.path.join(path, new_v))
+        _commit_pointer(path, new_v)
+
+        if keep_versions is None:
+            _sweep(path, {new_v}, drop_legacy=True)
+        else:
+            keep = {new_v, *table_versions(path)[-max(2, int(keep_versions)):]}
+            if cur:
+                keep.add(cur)
+            _sweep(path, keep, drop_legacy=cur is not None)
+        return read_parquet_table(spark, path)
+    finally:
+        _release_lease(lease)
+
+
 def merge_upsert_parquet(
     spark,
     path: str,
@@ -251,56 +370,18 @@ def merge_upsert_parquet(
     lease_ttl_s: float = 3600.0,
     keep_versions: int = 2,
 ) -> DataFrame:
-    """Persistent MERGE into a parquet table via versioned directories and
-    an atomic pointer-file commit.  Returns the re-read merged table.
-
-    The write path is the part `merge_upsert` alone leaves open
-    (`scene_registry.py:224-239` commits in SQLite).  Layout after the
-    first merge::
-
-        <path>/_CURRENT        pointer file, contains e.g. "_v00000002"
-        <path>/_v00000001      previous version (kept for rollback)
-        <path>/_v00000002      live version
-
-    Commit protocol — no step ever mutates data a reader can be holding:
-
-    1. materialize the merged result into ``<path>/_staging-<next>``
-       (never ``mode("overwrite")`` on the path being read — Spark plans
-       lazily and would truncate its own input mid-job);
-    2. ``os.rename`` staging → ``<path>/_v<next>`` (same-directory rename;
-       the new version is still unreferenced, so a crash here leaves the
-       live pointer — and therefore the table — untouched);
-    3. write the new version name to a temp file, fsync, and
-       ``os.replace`` it onto ``_CURRENT`` — the single atomic commit
-       point on POSIX/HDFS.  Readers resolve the pointer and see the old
-       version or the new one, never a torn mix and never a missing table;
-    4. garbage-collect versions older than the PREVIOUS one — the previous
-       version survives until the next successful merge, so there is
-       always a rollback target (repoint ``_CURRENT`` by hand).
-
-    Orphans from a crashed run (staging dirs, an unreferenced ``_v<next>``)
-    are swept at the start of the next merge; the merge is therefore
-    idempotently retryable after a crash at ANY step.
-
-    Object-store caveat: ``os.replace`` is atomic on POSIX filesystems and
-    HDFS but S3-class stores have no atomic rename — there, bind step 3 to
-    a table-format commit (Delta/Iceberg ``MERGE INTO``) or a
-    conditional-PUT of the pointer object; steps 1-2 and the merge compute
-    stay identical.
-
-    Concurrent writers: a single-writer LEASE (``<path>/_LEASE``,
-    ``O_EXCL``-claimed, TTL ``lease_ttl_s``) arbitrates — a second merge
-    against a live lease raises ``ConcurrentMergeError`` immediately
-    instead of silently racing the pointer; a crashed writer's lease
-    expires and the next merge takes over and sweeps its orphans.  Readers
-    never take the lease: they only resolve ``_CURRENT``, so reads stay
-    lock-free at any concurrency.
+    """Persistent MERGE into a parquet table; returns the re-read merged
+    table.  The write path is the part `merge_upsert` alone leaves open
+    (`scene_registry.py:224-239` commits in SQLite): the merged result is
+    committed as the table's next version by ``_commit_version``, which
+    documents the layout, the crash-safe commit protocol and the
+    single-writer lease (TTL ``lease_ttl_s``).
 
     ``keep_versions`` is the retention horizon (Delta's
     ``delta.logRetentionDuration`` analog, counted in versions rather than
-    time): GC keeps the newest ``keep_versions`` directories, minimum 2 so
-    the rollback target always survives.  ``vacuum_table`` trims further on
-    demand.
+    time): the sweep keeps the newest ``keep_versions`` directories,
+    minimum 2 so the rollback target always survives.  ``vacuum_table``
+    trims further on demand.
 
     Schema evolution is automatic, as in Delta's ``mergeSchema``: source
     columns absent from the target are appended (NULL for unmatched target
@@ -376,52 +457,11 @@ def merge_upsert_parquet(
             finally:
                 spark.catalog.dropGlobalTempView(gview)
         return read_parquet_table(spark, path)
-    lease = _acquire_lease(path, ttl_s=lease_ttl_s)
-    try:
-        target = read_parquet_table(spark, path)
-        merged = merge_upsert(target, source, keys, update_cols)
-
-        cur = _table_current_version(path)
-        n = int(cur.lstrip("_v")) if cur else 0
-        new_v = f"_v{n + 1:08d}"
-        staging = os.path.join(path, f"_staging-{new_v}")
-        # sweep orphans a crashed previous attempt may have left behind
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(os.path.join(path, new_v), ignore_errors=True)
-
-        merged.write.mode("overwrite").parquet(staging)
-        os.rename(staging, os.path.join(path, new_v))
-
-        tmp = os.path.join(path, "._CURRENT.tmp")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write(new_v)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, os.path.join(path, "_CURRENT"))
-
-        # GC: keep the newest `keep_versions` directories (min 2: live +
-        # rollback target).  Legacy root files (from the pre-versioned
-        # layout) are the "previous version" of the first merge — they are
-        # removed only once a versioned predecessor exists.
-        horizon = max(2, int(keep_versions))
-        keep = {"_CURRENT", "_LEASE", new_v}
-        keep.update(table_versions(path)[-horizon:])
-        if cur:
-            keep.add(cur)
-        for entry in os.listdir(path):
-            if entry in keep:
-                continue
-            full = os.path.join(path, entry)
-            if entry.startswith("_v") or entry.startswith("_staging-"):
-                shutil.rmtree(full, ignore_errors=True)
-            elif cur is not None:
-                if os.path.isdir(full):
-                    shutil.rmtree(full, ignore_errors=True)
-                else:
-                    os.remove(full)
-        return read_parquet_table(spark, path)
-    finally:
-        _release_lease(lease)
+    return _commit_version(
+        spark, path,
+        lambda target: merge_upsert(target, source, keys, update_cols),
+        lease_ttl_s, keep_versions,
+    )
 
 
 def purge_rows(
@@ -439,10 +479,9 @@ def purge_rows(
     this purge is deliberately not rollback-able (the Delta
     DELETE-then-VACUUM(0) story as one atomic-feeling step).
 
-    Same lease + staging + pointer-swap protocol as ``merge_upsert_parquet``
-    (crash at any step leaves the table readable; retry completes), with
-    the delete expressed as a broadcast-friendly left_anti join.  Returns
-    the re-read table.
+    Committed by ``_commit_version`` like a merge (crash at any step
+    leaves the table readable; retry completes), with the delete expressed
+    as a broadcast-friendly left_anti join.  Returns the re-read table.
 
     Delta routing (review catch r7 — the pointer-file surgery below would
     rmtree ``_delta_log`` on a Delta table): on a real Delta table the
@@ -451,7 +490,6 @@ def purge_rows(
     session so the retention-check override never leaks into shared conf
     (the kcore_contract scoping pattern).
     """
-    _guard_delta_layout(path, "purge_rows")
     if _is_delta_table(path):
         tgt = DeltaTable.forPath(spark, path)
         cond = " AND ".join(f"t.`{k}` = u.`{k}`" for k in keys)
@@ -466,42 +504,13 @@ def purge_rows(
         )
         DeltaTable.forPath(child, path).vacuum(0)
         return read_parquet_table(spark, path)
-    lease = _acquire_lease(path, ttl_s=lease_ttl_s)
-    try:
-        target = read_parquet_table(spark, path)
-        kept = target.join(key_rows.select(*keys).distinct(), keys, "left_anti")
-
-        cur = _table_current_version(path)
-        n = int(cur.lstrip("_v")) if cur else 0
-        new_v = f"_v{n + 1:08d}"
-        staging = os.path.join(path, f"_staging-{new_v}")
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(os.path.join(path, new_v), ignore_errors=True)
-
-        kept.write.mode("overwrite").parquet(staging)
-        os.rename(staging, os.path.join(path, new_v))
-
-        tmp = os.path.join(path, "._CURRENT.tmp")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write(new_v)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, os.path.join(path, "_CURRENT"))
-
-        # history purge: the point of the operation — nothing readable may
-        # retain the deleted rows, so every older version and legacy root
-        # file goes, not just the beyond-horizon ones
-        for entry in os.listdir(path):
-            if entry in {"_CURRENT", "_LEASE", new_v}:
-                continue
-            full = os.path.join(path, entry)
-            if os.path.isdir(full):
-                shutil.rmtree(full, ignore_errors=True)
-            else:
-                os.remove(full)
-        return read_parquet_table(spark, path)
-    finally:
-        _release_lease(lease)
+    return _commit_version(
+        spark, path,
+        lambda target: target.join(
+            key_rows.select(*keys).distinct(), keys, "left_anti"
+        ),
+        lease_ttl_s, keep_versions=None,  # history purge
+    )
 
 
 def vacuum_table(path: str, keep_last: int = 1) -> list[str]:
@@ -519,7 +528,6 @@ def vacuum_table(path: str, keep_last: int = 1) -> list[str]:
     """
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1 (the live version)")
-    _guard_delta_layout(path, "vacuum_table")
     if _is_delta_table(path):
         # version-COUNT trimming has no Delta analog (Delta vacuums by
         # retention TIME) and the _v*/_CURRENT sweep below would destroy
@@ -530,20 +538,11 @@ def vacuum_table(path: str, keep_last: int = 1) -> list[str]:
         )
     lease = _acquire_lease(path)
     try:
-        versions = table_versions(path)
+        keep = set(table_versions(path)[-keep_last:])
         cur = _table_current_version(path)
-        keep = set(versions[-keep_last:])
         if cur is not None:
             keep.add(cur)
-        removed = []
-        for entry in os.listdir(path):
-            full = os.path.join(path, entry)
-            if entry.startswith("_staging-"):
-                shutil.rmtree(full, ignore_errors=True)
-            elif entry.startswith("_v") and os.path.isdir(full) and entry not in keep:
-                shutil.rmtree(full, ignore_errors=True)
-                removed.append(entry)
-        return sorted(removed)
+        return _sweep(path, keep, drop_legacy=False)
     finally:
         _release_lease(lease)
 

@@ -999,7 +999,8 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     large/small-star kernel, O(log²n) rounds regardless of graph diameter.
     Per-hop min-label propagation under a fixed iteration cap under-merged
     at sf0.1, exactly the failure mode that made star the default
-    (SCALE.md); min-label survives as the differential cross-check."""
+    (SCALE.md); min-label survives as the test oracle
+    tests/ref_graph.py::connected_components_minlabel."""
     (lineitem,) = _t(spark, sf_dir, "lineitem")
     # Disjoint parity encoding (2k part / 2k+1 supplier) — an offset
     # encoding collides once partkey reaches the offset (~sf50).
@@ -1202,7 +1203,7 @@ _ALL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 # (50/50 green), so the window is (a) the three round-10 NEW queries —
 # png_full_surface_contract (every IHDR-legal color-type × depth combo),
 # wav_pcm_surface_contract (integer PCM 8/16/24/32-bit, mono+stereo) and
-# bmp_surface_contract (indexed 1/4/8-bit + BI_RLE8 + gray8); (b) every
+# bmp_surface_contract (indexed 1/4/8-bit + BI_RLE8); (b) every
 # query whose implementation changed in round 10 — embedding_kmeans /
 # semantic_dedup_keep (planted-corpus gate tightened to
 # count+countDistinct, DISTINCT mirrored in the oracle guards — ADVICE

@@ -1673,8 +1673,8 @@ WHERE strlen(text) >= 256
 def q_bmp_surface_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BMP classic-surface codec contract (round 10 — indexed 1/4/8-bit
     with MSB-first sub-byte packing, BI_RLE8 on both run-heavy and
-    high-entropy inputs, gray8): every document with >= 256 utf-8 bytes
-    drives 6 encode/decode round-trips whose expected output is
+    high-entropy inputs): every document with >= 256 utf-8 bytes
+    drives 5 encode/decode round-trips whose expected output is
     closed-form from the raw bytes — exact equality pinned.  See
     operators/multimodal.py::bmp_surface_roundtrip_audit."""
     from .operators import multimodal as mm

@@ -30,9 +30,16 @@ max replay lag has passed, exactly like compacted-topic retention.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..operators.reconcile import (
+    _commit_pointer,
+    _table_current_version,
+    read_parquet_table,
+)
 
 
 def cdc_state_merge(
@@ -108,16 +115,15 @@ def cdc_stream_into_dir(
     skips the already-consumed files.  To start over, use a fresh
     ``state_dir`` (which holds the checkpoint too).
 
-    Commit protocol mirrors the persistent MERGE: version directory first,
-    then an fsync'd pointer tmp + atomic rename; versions older than the
-    previous are GC'd so a long-running stream holds at most two state
-    copies, and a crash between write and pointer-swap leaves the prior
-    version live.
+    Each version directory is written whole, then published by reconcile's
+    ``_commit_pointer`` (protocol on ``reconcile._commit_version``), so a
+    crash between write and pointer swap leaves the prior version live;
+    versions older than the previous are GC'd so a long-running stream
+    holds at most two state copies.
     """
     spark = snapshot.sparkSession
     os.makedirs(state_dir, exist_ok=True)
-    pointer = os.path.join(state_dir, "_CURRENT")
-    if not os.path.isfile(pointer):
+    if _table_current_version(state_dir) is None:
         seed = snapshot.withColumn(op_col, F.lit(upsert_ops[0]))
         for c in seq_cols:
             if c not in seed.columns:
@@ -131,16 +137,15 @@ def cdc_stream_into_dir(
         _commit_pointer(state_dir, "v0")
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        cur = _read_current(spark, state_dir)
+        prev = _table_current_version(state_dir)
         merged = cdc_state_merge(
-            cur, batch_df, key_cols, seq_cols, op_col, upsert_ops, delete_op
+            read_parquet_table(spark, state_dir), batch_df, key_cols,
+            seq_cols, op_col, upsert_ops, delete_op,
         )
         version = f"v{batch_id + 1}_{os.getpid()}"
         merged.write.mode("overwrite").parquet(os.path.join(state_dir, version))
-        prev = _commit_pointer(state_dir, version)
+        _commit_pointer(state_dir, version)
         # GC: keep live + previous; drop anything older (bounded disk)
-        import shutil
-
         keep = {version, prev, "_checkpoint"}
         for d in os.listdir(state_dir):
             if d.startswith("v") and d not in keep:
@@ -154,29 +159,6 @@ def cdc_stream_into_dir(
     )
 
 
-def _commit_pointer(state_dir: str, version: str) -> str | None:
-    """fsync'd tmp + atomic rename of the ``_CURRENT`` pointer; returns the
-    previously live version (None on first commit)."""
-    pointer = os.path.join(state_dir, "_CURRENT")
-    prev = None
-    if os.path.isfile(pointer):
-        with open(pointer, encoding="utf-8") as fh:
-            prev = fh.read().strip()
-    tmp = pointer + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(version)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, pointer)
-    return prev
-
-
-def _read_current(spark, state_dir: str) -> DataFrame:
-    with open(os.path.join(state_dir, "_CURRENT"), encoding="utf-8") as fh:
-        version = fh.read().strip()
-    return spark.read.parquet(os.path.join(state_dir, version))
-
-
 def current_state(spark, state_dir: str) -> DataFrame:
     """Read back the latest committed state version."""
-    return _read_current(spark, state_dir)
+    return read_parquet_table(spark, state_dir)
