@@ -4,16 +4,17 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+import ref_geometry
 from worlddatapipeline_spark.functions import geometry
 
 
 def test_rotation_identity():
-    r = geometry.rotation_matrices(np.array([0.0]), np.array([0.0]), np.array([0.0]))
+    r = ref_geometry.rotation_matrices(np.array([0.0]), np.array([0.0]), np.array([0.0]))
     assert np.allclose(r[0], np.eye(3))
 
 
 def test_rotation_yaw_90():
-    r = geometry.rotation_matrices(np.array([0.0]), np.array([90.0]), np.array([0.0]))
+    r = ref_geometry.rotation_matrices(np.array([0.0]), np.array([90.0]), np.array([0.0]))
     # yaw 90° about Z maps x-axis -> y-axis
     assert np.allclose(r[0] @ np.array([1, 0, 0]), [0, 1, 0], atol=1e-12)
 
@@ -21,7 +22,7 @@ def test_rotation_yaw_90():
 def test_rotation_orthonormal_property():
     rng = np.random.default_rng(2)
     p, y, r = (rng.uniform(-180, 180, 50) for _ in range(3))
-    mats = geometry.rotation_matrices(p, y, r)
+    mats = ref_geometry.rotation_matrices(p, y, r)
     for m in mats:
         assert np.allclose(m @ m.T, np.eye(3), atol=1e-10)
         assert np.linalg.det(m) == pytest.approx(1.0)
@@ -29,7 +30,7 @@ def test_rotation_orthonormal_property():
 
 def test_view_matrix_inverts_camera():
     """[Rᵀ|−Rᵀt] maps the camera position to the origin."""
-    m = geometry.view_matrices(
+    m = ref_geometry.view_matrices(
         np.array([100.0]), np.array([200.0]), np.array([300.0]),
         np.array([10.0]), np.array([20.0]), np.array([30.0]),
     ).reshape(4, 4)
@@ -44,12 +45,12 @@ def test_with_extrinsics_spark(spark):
         [("s", 0, 100.0, 0.0, 0.0, 0.0, 0.0, 0.0)],
         ["sequence_id", "frame", "x", "y", "z", "pitch", "yaw", "roll"],
     )
-    out = geometry.with_extrinsics(df).collect()[0]
+    out = ref_geometry.with_extrinsics(df).collect()[0]
     # zero rotation: Rᵀ = I; translation = -t*0.01
     assert out["m00"] == pytest.approx(1.0)
     assert out["m03"] == pytest.approx(-1.0)  # -100cm * 0.01
     assert out["m33"] == pytest.approx(1.0)
-    golden = geometry.view_matrices(
+    golden = ref_geometry.view_matrices(
         np.array([100.0]), np.array([0.0]), np.array([0.0]),
         np.array([0.0]), np.array([0.0]), np.array([0.0]),
     )[0]
@@ -156,7 +157,7 @@ def test_extrinsics_expr_matches_pandas_udf(spark):
     df = spark.createDataFrame(
         rows, "frame long, x double, y double, z double, pitch double, yaw double, roll double"
     )
-    a = geometry.with_extrinsics(df).orderBy("frame").collect()
+    a = ref_geometry.with_extrinsics(df).orderBy("frame").collect()
     b = geometry.with_extrinsics_expr(df).orderBy("frame").collect()
     names = [f"m{i}{j}" for i in range(4) for j in range(4)]
     for ra, rb in zip(a, b):

@@ -794,3 +794,25 @@ def test_lazy_query_has_no_barrier(spark, name):
     assert "Scan ExistingRDD" not in _fmt(spark, df)
     df.collect()
     assert ids() - before == set()
+
+
+# Jobs a warm build of each benchmark catalog query may launch inside
+# ``QUERIES[name](spark, dir)``: input tables come from the schema memo, so
+# only embedding_topk's query-side collect remains.
+_WARM_BUILD_JOBS = {
+    "region_rollup": 0,
+    "supplier_volume": 0,
+    "doc_quality": 0,
+    "dedup_docs_exact": 0,
+    "embedding_topk": 1,
+    "jpeg_roundtrip_contract": 0,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_WARM_BUILD_JOBS))
+def test_warm_build_job_budget(spark, name):
+    from test_schema_memo import jobs_launched
+
+    QUERIES[name](spark, SF)
+    _, jobs = jobs_launched(spark, lambda: QUERIES[name](spark, SF))
+    assert jobs == _WARM_BUILD_JOBS[name]

@@ -3,6 +3,7 @@
 import numpy as np
 import pytest
 
+import ref_stateful
 from worlddatapipeline_spark.operators import stateful, windows
 
 
@@ -46,7 +47,7 @@ def test_unwrap_pandas_matches_window_form(spark):
         [("s", i, float(a)) for i, a in enumerate(angles)], ["seq", "ord", "angle"]
     )
     a = (
-        stateful.unwrap_pandas(df, "seq", "ord", "angle")
+        ref_stateful.unwrap_pandas(df, "seq", "ord", "angle")
         .orderBy("ord")
         .select("unwrapped")
         .collect()

@@ -23,9 +23,11 @@ partition is guaranteed by the sort).
 Covered:
 - rate limiter (yaw): `transform_track.py:215-228`,
 - rate limiter with range clamp (pitch): `transform_track.py:233-262`,
-- rate-limited approach toward a target: `behavior_executor.py:122-195`,
-- numpy-based angle unwrap (cross-check for the closed-form window version in
-  windows.py): `transform_track.py:133-155`.
+- rate-limited approach toward a target: `behavior_executor.py:122-195`.
+
+The numpy angle unwrap of `transform_track.py:133-155` is closed-form in
+windows.py (``unwrap_angle``); its scan form is the test oracle
+``tests/ref_stateful.py::unwrap_pandas``.
 """
 
 from __future__ import annotations
@@ -171,32 +173,6 @@ def rate_limit(
             pdf[value_col].to_numpy(dtype=np.float64), max_step, lo, hi,
             prev=state,  # type: ignore[arg-type]
         )
-
-    return _sorted_scan(df, seq_col, order_col, out_col, run)
-
-
-def unwrap_pandas(
-    df: DataFrame,
-    seq_col: str,
-    order_col: str,
-    angle_col: str,
-    out_col: str = "unwrapped",
-) -> DataFrame:
-    """numpy unwrap per sequence (degrees) — reference
-    `transform_track.py:133-155`.  Used as a differential cross-check against
-    the closed-form window version (windows.unwrap_angle)."""
-
-    def run(pdf: pd.DataFrame, state: object) -> tuple[np.ndarray, object]:
-        a = pdf[angle_col].to_numpy(dtype=np.float64)
-        if len(a) == 0:
-            return a, state
-        if state is None:
-            out = np.degrees(np.unwrap(np.radians(a)))
-        else:
-            # seed with the previous unwrapped value so continuity holds
-            # across the batch boundary, then drop the seed
-            out = np.degrees(np.unwrap(np.radians(np.concatenate(([state], a)))))[1:]
-        return out, float(out[-1])
 
     return _sorted_scan(df, seq_col, order_col, out_col, run)
 

@@ -24,6 +24,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -85,7 +86,6 @@ def literal_frame(spark: SparkSession, rows, schema) -> DataFrame:
     """
     import pyarrow as pa  # noqa: PLC0415
     from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
-    from pyspark.sql.types import StructType  # noqa: PLC0415
 
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
@@ -165,37 +165,20 @@ def drain_memory_sink(spark: SparkSession, sink: str):
 
 
 def streaming_events(spark: SparkSession, sf_dir: str):
-    """Normalized ``readStream`` over the driver's events.parquet — the ONE
-    place the stream-side ts normalization lives (review catch r5: eleven
-    streaming parity queries carried verbatim copies).  Mirrors
-    ``load_tables``' batch normalization: the driver's ts encoding has
-    flipped between TIMESTAMP(NANOS)-read-as-long and TIMESTAMP_NTZ across
-    rounds, and every streaming query must normalize identically or
-    silently diverge from its batch oracle.  Also pins nanosAsLong and the
-    UTC session timezone (driver sessions don't carry get_spark's
-    configs; withWatermark/window bucketing must agree with DuckDB's
-    epoch_us)."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:  # pragma: no cover - conf may be fixed on some builds
-        pass
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    from pyspark.sql import functions as F  # noqa: PLC0415
-    from pyspark.sql.types import LongType, TimestampNTZType  # noqa: PLC0415
-
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    """Normalized ``readStream`` over the input events.parquet — the ONE
+    place a stream over that table is opened.  It pins
+    the same confs and applies the same ``_normalize_timestamps`` as
+    ``load_tables``, because every streaming query must normalize `ts`
+    exactly as its batch oracle does or silently diverge from it.  The raw
+    schema comes from the memoized ``_read_parquet``."""
+    _pin_read_confs(spark)
+    raw_schema = _read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if isinstance(raw_schema["ts"].dataType, LongType):
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    elif isinstance(raw_schema["ts"].dataType, TimestampNTZType):
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return _normalize_timestamps(stream, "events")
 
 
 def parquet_num_rows(sf_dir: str, name: str) -> int:
@@ -228,12 +211,100 @@ def route_by_rows(sf_dir: str, table: str, knob: str, default: int) -> bool:
     return parquet_num_rows(sf_dir, table) >= int(os.environ.get(knob, str(default)))
 
 
+# The parquet confs that change the schema Spark infers from a footer.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+# abspath -> (stamp, schema Spark inferred): one entry per input table.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _schema_stamp(spark: SparkSession, path: str) -> tuple:
+    """(inode, mtime_ns, size) of the file — of every file under it, by
+    relative path, when ``path`` is a directory of parts — plus the
+    inference confs' values."""
+    def sig(f):
+        st = os.stat(f)
+        return st.st_ino, st.st_mtime_ns, st.st_size
+
+    if os.path.isdir(path):
+        files = tuple(sorted(
+            (os.path.relpath(os.path.join(d, f), path), *sig(os.path.join(d, f)))
+            for d, _, fs in os.walk(path) for f in fs
+        ))
+    else:
+        files = sig(path)
+    return files, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema inference job run
+    only when the files or the inference confs changed since the last
+    read of ``path`` in this process; otherwise the schema Spark inferred
+    then is handed back to the reader.
+
+    The stamp is taken before inference, so a file that changes in
+    between is stored under its old stamp and re-inferred on the next
+    read; concurrent callers at worst infer twice."""
+    path = os.path.abspath(path)
+    stamp = _schema_stamp(spark, path)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (stamp, df.schema)
+    return df
+
+
+def _pin_read_confs(spark: SparkSession) -> None:
+    """The confs every input-table read relies on.  A session built
+    without get_spark carries neither: nanosAsLong makes TIMESTAMP(NANOS)
+    readable at all, and the UTC session tz makes the NTZ->TIMESTAMP cast
+    and window bucketing agree with DuckDB's ``epoch_us``."""
+    try:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    except Exception:  # pragma: no cover - conf may be fixed on some builds
+        pass
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def _normalize_timestamps(df: DataFrame, name: str) -> DataFrame:
+    """Every timestamp column of table ``name`` as a session-tz TIMESTAMP.
+
+    `events.ts` may arrive as TIMESTAMP(NANOS) (read as long nanos under
+    nanosAsLong) or as plain TIMESTAMP(MICROS, isAdjustedToUTC=false) — the
+    latter surfaces as TIMESTAMP_NTZ, which `unix_micros`/`withWatermark`
+    reject.
+    With the session tz pinned UTC the NTZ->TIMESTAMP cast is wall-clock
+    preserving.  Works on batch and streaming frames alike."""
+    from pyspark.sql import functions as F  # noqa: PLC0415
+    from pyspark.sql.types import LongType, TimestampNTZType  # noqa: PLC0415
+
+    for f in df.schema.fields:
+        if isinstance(f.dataType, TimestampNTZType):
+            df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
+        elif name == "events" and f.name == "ts" and isinstance(f.dataType, LongType):
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
+
+
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Register the driver's parquet tables as temp views and return them.
+    """Register the input parquet tables as temp views and return them.
 
     Mirrors the reference's catalog-open step (`scene_registry.py:16-25` opens
-    SQLite; here we attach parquet).  Column pruning + predicate pushdown then
-    happen automatically at the parquet scan.
+    SQLite once; here we attach parquet).  Column pruning + predicate
+    pushdown then happen automatically at the parquet scan.  Timestamp
+    columns are normalized by ``_normalize_timestamps``.
+
+    Schemas are memoized per process (``_read_parquet``): the key is the
+    table's absolute path, and an entry holds the file's (inode,
+    mtime_ns, size) — every part's, for a directory — and the values of
+    the parquet inference confs.  Only the schema Spark itself inferred
+    is cached, never data, so a warm call launches no Spark job; a
+    changed file or conf invalidates the entry and re-runs inference.
     """
     names = names or [
         "region",
@@ -247,34 +318,11 @@ def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None
         "documents",
         "embeddings",
     ]
-    # Timestamp normalization.  The driver's parquet has shipped `events.ts`
-    # as TIMESTAMP(NANOS) (read as long nanos under nanosAsLong) in one round
-    # and plain TIMESTAMP(MICROS, isAdjustedToUTC=false) in another — the
-    # latter surfaces as TIMESTAMP_NTZ, which `unix_micros`/`withWatermark`
-    # reject.  Normalize every variant to a session-tz TIMESTAMP here, once,
-    # so no query has to care.  Session tz is pinned UTC (get_spark above), so
-    # the NTZ→TIMESTAMP cast is wall-clock preserving and epoch semantics
-    # match DuckDB's `epoch_us` exactly.
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    # The driver builds its OWN SparkSession (not get_spark), so the UTC
-    # session tz from the builder is not guaranteed.  The NTZ->TIMESTAMP cast
-    # below is wall-clock->instant and reads the session tz at runtime; pin
-    # it here so epoch semantics always match DuckDB's epoch_us.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, TimestampNTZType
-
+    _pin_read_confs(spark)
     out = {}
     for n in names:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))
-        for f in df.schema.fields:
-            if isinstance(f.dataType, TimestampNTZType):
-                df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
-            elif n == "events" and f.name == "ts" and isinstance(f.dataType, LongType):
-                df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        df = _read_parquet(spark, os.path.join(sf_dir, f"{n}.parquet"))
+        df = _normalize_timestamps(df, n)
         df.createOrReplaceTempView(n)
         out[n] = df
     return out
