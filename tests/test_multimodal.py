@@ -2362,3 +2362,98 @@ def test_dht_cache_tables_are_read_only():
     with pytest.raises(TypeError):
         del dc[code]
     assert dict(dc) == mm._huff_lookup(mm._JPEG_DC_BITS, mm._JPEG_DC_VALS)
+
+
+_JPEG_ENCODER_SHA256 = {
+    "gray8": "c8db82b3b0b8ccb8911598b14404eff47c0066504fc4dd4415cb75c1d95e3d44",
+    "gray8_rst2": "e7e453a1089aa9031e8b66008941c68d8ab2a3a6d9217221f04c19e61cb88473",
+    "gray8_dqt16": "45ed18ef48d0462c4b87fa002cf9f2813c0253cafdbae1d5f87377e0b13589c2",
+    "rgb24_444": "fbfb58ae439bc1d807a1214fc333929cb8cf7a76c105fba703697229dc08b1e5",
+    "rgb24_420": "58cc9819e9f5e42f66628d2634dde3655ca050dbe0804c1f00fbc9e70472f798",
+    "prog": "27851a6f006d2df3b6544d345c87326e62509871590f24bec5928dd6cdadf9e0",
+    "prog_bands": "273d32eebbc13b43bf28ab332c76493f8f1e5fcaf0401193870ee00e39871030",
+    "prog_rst1": "9e4f2f39a996d000e54c70d3a1db77d691d434c5c39a43d5d8b4cc80b7e8610f",
+    "lossless_p1": "1db09bf1c195f7e1eae3b9ccac14cf5265373962d456a67c9d4bd9c3b0f6a753",
+    "lossless_p2": "6ca7191d651697a1defe31b293105b13d2ecf4c828fdd906383a63649d9c1221",
+    "lossless_p3": "38f051ff41135993329cb91bfc3ee62c1f0e4d1c17f7d44c9493e7df13ba7ba8",
+    "lossless_p4": "6f4ab2dcf14abfdb7f6cbc4609add95489fb31a3614e35d5418f66c21557276f",
+    "lossless_p5": "4d7236f9a7231599603d14f321d9c8dfee6efc3df72621e362a4bc1d8bad17ff",
+    "lossless_p6": "6301ddde1978635bd559bfa2f97386348dc2c40bfd3a80646499c81f8b264e78",
+    "lossless_p7": "15b616029f3987e5e8b0917ac608a9b262b2f7dfdad5df1a05894dee875e5bb8",
+    "lossless_rgb": "0fa3ddf742c9d5b4e709f50157069b6d7fb310d0e00723d672b5ecff58ce5157",
+    "hier_l1": "812c081e2bfc6f071d0594e8ae76a02aa8c7871ed8f35cf9d303d58b38b2be46",
+    "hier_l2": "00f238d36b6034a2b4c4fd85cec97822d8660cce30d8ab0ba51ac3d7294e7edc",
+    "hier_l3": "b65cb8adf5a2afd04cf083debd97fcf2e247cde47376501ade552f0fa3407837",
+    "hier_rgb_l2": "3e5712630c2794c1368d35cada7cad94726bf580475299e8fd1c32f05e5d9929",
+}
+
+
+def test_jpeg_encoder_bytes_pinned():
+    """Every JPEG encoder's output is pinned byte for byte on seeded
+    inputs: sequential gray (plain, restart interval 2, a quant entry >
+    255 that forces SOF1 and a 16-bit DQT), sequential RGB at 4:4:4 and
+    4:2:0, progressive (default, two AC bands, restart interval 1),
+    lossless gray at all 7 predictors plus RGB, and hierarchical gray at
+    1-3 levels plus RGB at 2.  A change to any container or scan layout
+    shows up here as a hash mismatch."""
+    import hashlib
+
+    import numpy as np
+
+    rng = np.random.default_rng(1414)
+    gray = rng.integers(0, 256, (19, 23), dtype=np.uint8)
+    rgb = rng.integers(0, 256, (21, 18, 3), dtype=np.uint8)
+    q16 = np.arange(1, 65, dtype=np.int32) * 7
+    q16[5] = 300
+    streams = {
+        "gray8": mm.encode_jpeg_gray8(gray),
+        "gray8_rst2": mm.encode_jpeg_gray8(gray, restart_interval=2),
+        "gray8_dqt16": mm.encode_jpeg_gray8(gray, quant=q16),
+        "rgb24_444": mm.encode_jpeg_rgb24(rgb),
+        "rgb24_420": mm.encode_jpeg_rgb24(rgb, subsampling="4:2:0"),
+        "prog": mm.encode_jpeg_progressive(rgb),
+        "prog_bands": mm.encode_jpeg_progressive(
+            rgb, ac_bands=[(1, 5), (6, 63)]
+        ),
+        "prog_rst1": mm.encode_jpeg_progressive(gray, restart_interval=1),
+        **{
+            f"lossless_p{p}": mm.encode_jpeg_lossless(gray, predictor=p)
+            for p in range(1, 8)
+        },
+        "lossless_rgb": mm.encode_jpeg_lossless(rgb),
+        **{
+            f"hier_l{lv}": mm.encode_jpeg_hierarchical(gray, levels=lv)
+            for lv in (1, 2, 3)
+        },
+        "hier_rgb_l2": mm.encode_jpeg_hierarchical(rgb, levels=2),
+    }
+    assert b"\xff\xc1" in streams["gray8_dqt16"]
+    got = {k: hashlib.sha256(v).hexdigest() for k, v in streams.items()}
+    assert got == _JPEG_ENCODER_SHA256
+
+
+def test_jpeg_lossless_standalone_cap_boundary():
+    """A lossless stream without DHP keeps its own 4,194,304-sample cap,
+    checked before the scan-length floor: one row past 2048x2048 refuses
+    as over the cap, 2048x2048 itself passes the cap and refuses as too
+    short for its 8x8 scan.  The hierarchical pyramid budget must not
+    leak into streams that declare no pyramid."""
+    import struct
+
+    import numpy as np
+
+    img = np.arange(64, dtype=np.uint8).reshape(8, 8)
+    good = mm.encode_jpeg_lossless(img)
+    k = good.index(b"\xff\xc3")
+    for (h, w), match, refuse in [
+        ((2049, 2048), "decode cap", None),
+        ((2048, 2048), "too short", "decode cap"),
+    ]:
+        patched = bytearray(good)
+        struct.pack_into(">HH", patched, k + 5, h, w)
+        patched = bytes(patched)
+        with pytest.raises(ValueError, match=match) as err:
+            mm._decode_jpeg(patched)
+        if refuse is not None:
+            assert refuse not in str(err.value)
+        assert mm._decode_bytes(patched).tolist() == list(patched)
