@@ -1307,8 +1307,8 @@ def test_jpeg_hierarchical_intermediate_levels_are_real_images():
     raw = rng.integers(0, 256, (32, 32), dtype=np.uint8)
     # what the encoder's pyramid builder produces at level 1
     want = mm._hier_downsample(raw.astype(np.int32))
-    # decode only the initial frame: reuse the SOF3 standalone decoder on
-    # a re-assembled non-hierarchical stream with the same scan bytes
+    # decode only the initial frame: a re-assembled stream without DHP
+    # (a one-frame pyramid) carrying the same scan bytes
     enc = mm.encode_jpeg_hierarchical(raw, levels=2)
     s3 = enc.index(b"\xff\xc3")
     exp = enc.index(b"\xff\xdf")

@@ -4,8 +4,8 @@ VERDICT r11 item 7: the r11 scaling artifact ran its two legs ~15 min
 apart on a co-tenant box, so x10 ratios inherited window skew.  This tool
 runs each query's two scale legs BACK-TO-BACK (warm + best-of-2 at sf0.1,
 then immediately warm + best-of-2 at sf1.0) inside one session, so each
-query's x10 is a same-window ratio.  Each run is timed by
-``bench._run_one``, the bench's own noop-write timer.  Usage:
+query's x10 is a same-window ratio.  Each leg is one
+``bench._bench_suite`` call, the bench's own timing loop.  Usage:
 
     python tools/bench_scaling.py out.json query1 query2 ...
 
@@ -30,31 +30,27 @@ def main() -> None:
     out_path = sys.argv[1]
     names = sys.argv[2:]
 
-    from bench import _run_one
+    from bench import _bench_suite
     from worlddatapipeline_spark import get_spark
     from worlddatapipeline_spark.queries import QUERIES
 
     spark = get_spark(app_name="wdp-bench-scaling")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def run_one(name: str, sf_dir: str) -> float:
-        return _run_one(QUERIES, name, spark, sf_dir)
-
     results: dict[str, dict] = {}
     for name in names:
-        spark.sparkContext.setJobDescription(f"scaling:{name}")
-        try:
-            run_one(name, SF01)  # warm (plan + JIT + footer caches)
-            t01 = min(run_one(name, SF01) for _ in range(2))
-            run_one(name, SF10)
-            t10 = min(run_one(name, SF10) for _ in range(2))
+        errors: dict[str, str] = {}
+        t01 = _bench_suite(QUERIES, [name], spark, SF01, errors)[name]
+        if t01 is not None:
+            t10 = _bench_suite(QUERIES, [name], spark, SF10, errors)[name]
+        if errors:
+            results[name] = {"error": errors[name][:200]}
+        else:
             results[name] = {
-                "sf0.1": round(t01, 3),
-                "sf1.0": round(t10, 3),
+                "sf0.1": t01,
+                "sf1.0": t10,
                 "x10": round(t10 / t01, 2) if t01 > 0 else None,
             }
-        except Exception as exc:  # noqa: BLE001
-            results[name] = {"error": str(exc)[:200]}
         print(name, results[name], flush=True)
     with open(out_path, "w", encoding="utf-8") as fh:
         json.dump(

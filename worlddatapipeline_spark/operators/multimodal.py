@@ -1209,63 +1209,118 @@ def _jpeg_entropy_encode(
     return bytes(out)
 
 
+def _jpeg_seg(marker: int, body: bytes) -> bytes:
+    """One marker segment: 0xFF, the marker byte, the big-endian length
+    (body plus the two length bytes), the body.  Every JPEG encoder lists
+    its container through this and the builders below."""
+    import struct  # noqa: PLC0415
+
+    return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
+
+
+def _jpeg_stream(*parts: bytes) -> bytes:
+    """SOI, the listed segments and entropy-coded scans, EOI."""
+    return b"".join((b"\xff\xd8", *parts, b"\xff\xd9"))
+
+
+def _jpeg_app(raw_rgb: bool) -> bytes:
+    """The colour-space declaration.  JFIF APP0 for YCbCr or grayscale;
+    JFIF mandates YCbCr for 3-component streams, so raw R,G,B components
+    (the lossless encoders' colour case — losslessness is the point)
+    declare Adobe APP14 with transform=0 instead, or external decoders
+    would colour-convert and misrender."""
+    import struct  # noqa: PLC0415
+
+    if raw_rgb:
+        return _jpeg_seg(0xEE, b"Adobe" + struct.pack(">HHHB", 100, 0, 0, 0))
+    return _jpeg_seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+
+
+def _jpeg_dqt(q: np.ndarray) -> bytes:
+    """Quantization table 0: pq=0 (8-bit) when every value fits, pq=1
+    (16-bit big-endian) otherwise."""
+    import struct  # noqa: PLC0415
+
+    if int(q.max()) > 255:
+        return _jpeg_seg(
+            0xDB, bytes([0x10]) + b"".join(struct.pack(">H", int(v)) for v in q)
+        )
+    return _jpeg_seg(0xDB, bytes([0x00]) + bytes(int(v) for v in q))
+
+
+def _jpeg_sof(
+    marker: int, h: int, w: int, sampling: list[tuple[int, int]]
+) -> bytes:
+    """Frame header (SOF0/1/2/3/7, and DHP, which shares its layout):
+    8-bit precision, components 1..n with their (hs, vs) sampling
+    factors, every component on quantization table 0."""
+    import struct  # noqa: PLC0415
+
+    return _jpeg_seg(
+        marker,
+        struct.pack(">BHHB", 8, h, w, len(sampling))
+        + b"".join(
+            bytes([cid, (hs << 4) | vs, 0])
+            for cid, (hs, vs) in enumerate(sampling, 1)
+        ),
+    )
+
+
+def _jpeg_dht(ac: bool) -> bytes:
+    """The Annex-K DC table as table 0, followed by the Annex-K AC table
+    as table 0 when ``ac`` (the lossless processes code DC-style
+    differences only)."""
+    body = bytes([0x00]) + bytes(_JPEG_DC_BITS[1:]) + bytes(_JPEG_DC_VALS)
+    if ac:
+        body += bytes([0x10]) + bytes(_JPEG_AC_BITS[1:]) + bytes(_JPEG_AC_VALS)
+    return _jpeg_seg(0xC4, body)
+
+
+def _jpeg_dri(restart_interval: int) -> bytes:
+    """DRI segment, or nothing when ``restart_interval`` is 0."""
+    import struct  # noqa: PLC0415
+
+    if not restart_interval:
+        return b""
+    return _jpeg_seg(0xDD, struct.pack(">H", restart_interval))
+
+
+def _jpeg_sos(
+    comp_ids, ss: int, se: int, ah: int = 0, al: int = 0
+) -> bytes:
+    """Scan header binding each listed component to huffman tables 0/0:
+    spectral selection ``ss``..``se`` (the predictor in ``ss`` for the
+    lossless processes) and the successive-approximation nibbles."""
+    ids = list(comp_ids)
+    return _jpeg_seg(
+        0xDA,
+        bytes([len(ids)])
+        + b"".join(bytes([cid, 0x00]) for cid in ids)
+        + bytes([ss, se, (ah << 4) | al]),
+    )
+
+
 def _jpeg_container(h: int, w: int, q: np.ndarray, n_comp: int,
                     entropy: bytes,
                     sampling: list[tuple[int, int]] | None = None,
                     restart_interval: int = 0) -> bytes:
-    """Assemble the JFIF byte stream around an entropy-coded scan: APP0,
-    8-bit DQT (table 0), SOF0 with per-component sampling factors
+    """Assemble the sequential JFIF byte stream around an entropy-coded
+    scan: APP0, DQT (table 0), SOF0 with per-component sampling factors
     (default 1×1 everywhere), the Annex-K DC/AC table pair, a DRI segment
     when ``restart_interval`` > 0, SOS binding every component to them."""
-    import struct  # noqa: PLC0415
-
     sampling = sampling or [(1, 1)] * n_comp
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    app0 = seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    # pq=0 (8-bit) table when every value fits; pq=1 (16-bit big-endian)
-    # otherwise — and since T.81 forbids Pq=1 under SOF0 (baseline), the
-    # frame marker is then SOF1 (extended sequential, huffman, same scan
-    # layout at 8-bit precision) so the stream stays spec-conforming for
+    # T.81 forbids a 16-bit (pq=1) DQT under SOF0 (baseline), so such a
+    # table makes the frame SOF1 (extended sequential, huffman, same scan
+    # layout at 8-bit precision) and the stream stays spec-conforming for
     # stock decoders (review catch r7).
-    pq16 = int(q.max()) > 255
-    if pq16:
-        dqt = seg(
-            0xFFDB,
-            bytes([0x10])
-            + b"".join(struct.pack(">H", int(v)) for v in q),
-        )
-    else:
-        dqt = seg(0xFFDB, bytes([0x00]) + bytes(int(v) for v in q))
-    dri = (
-        seg(0xFFDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    sof = seg(
-        0xFFC1 if pq16 else 0xFFC0,
-        struct.pack(">BHHB", 8, h, w, n_comp)
-        + b"".join(
-            bytes([cid, (hs << 4) | vs, 0])
-            for cid, (hs, vs) in zip(range(1, n_comp + 1), sampling)
-        ),
-    )
-    dht = seg(
-        0xFFC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS[1:]) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS[1:]) + bytes(_JPEG_AC_VALS),
-    )
-    sos = seg(
-        0xFFDA,
-        bytes([n_comp])
-        + b"".join(bytes([cid, 0x00]) for cid in range(1, n_comp + 1))
-        + bytes([0, 63, 0]),
-    )
-    return (
-        b"\xff\xd8" + app0 + dqt + sof + dht + dri + sos + entropy
-        + b"\xff\xd9"
+    return _jpeg_stream(
+        _jpeg_app(raw_rgb=False),
+        _jpeg_dqt(q),
+        _jpeg_sof(0xC1 if int(q.max()) > 255 else 0xC0, h, w, sampling),
+        _jpeg_dht(ac=True),
+        _jpeg_dri(restart_interval),
+        _jpeg_sos(range(1, n_comp + 1), 0, 63),
+        entropy,
     )
 
 
@@ -1349,7 +1404,8 @@ def _jpeg_prepare_planes(
 
 
 def _parse_dqt(body: bytes, qtables: dict[int, np.ndarray]) -> None:
-    """DQT segment parse shared by both decoders — pq=0: 8-bit entries;
+    """DQT segment parse shared by the sequential and progressive
+    decoders (the lossless processes carry no DQT) — pq=0: 8-bit entries;
     pq=1: 16-bit big-endian; any other precision nibble is stream
     corruption — refuse (→ byte-view stub) rather than misparse the byte
     span and dequantize with garbage (review catch r7)."""
@@ -1376,9 +1432,9 @@ _DHT_CACHE: dict = {}
 def _parse_dht(
     body: bytes, htables: dict[tuple[int, int], dict[tuple[int, int], int]]
 ) -> None:
-    """DHT segment parse shared by both decoders: one or more canonical
-    tables per segment, keyed (tc, th).  The decoder dict for each table
-    payload is cached (bounded, keyed on the raw bits+vals bytes): every
+    """DHT segment parse shared by the sequential, progressive and
+    lossless-frame decoders: one or more canonical tables per segment,
+    keyed (tc, th).  The decoder dict for each table payload is cached (bounded, keyed on the raw bits+vals bytes): every
     stream this repo's encoders emit carries the same Annex-K pair, so
     per-image re-derivation was pure waste (§4.5); foreign tables still
     build correctly and the cache clears itself at 64 entries.  Cached
@@ -1403,7 +1459,8 @@ def _parse_dht(
 
 
 def _parse_sof(body: bytes) -> tuple[int, int, list[tuple[int, int, int, int]]]:
-    """SOF frame-header parse + validation shared by both decoders:
+    """SOF frame-header parse + validation shared by the sequential,
+    progressive and lossless-frame decoders (DHP shares the layout):
     returns ``(h, w, comps)`` with comps as (id, hs, vs, tq).  A single-
     component frame is normalized to 1×1 sampling — its scans are
     non-interleaved by definition (T.81 §A.2.2), so declared factors
@@ -1430,7 +1487,8 @@ def _parse_sof(body: bytes) -> tuple[int, int, list[tuple[int, int, int, int]]]:
 def _jpeg_geometry(
     comps: list[tuple[int, int, int, int]], h: int, w: int
 ) -> tuple[int, int, int, int, int]:
-    """Interleaved-MCU geometry (T.81 §A.2.3) shared by both decoders:
+    """Interleaved-MCU geometry (T.81 §A.2.3) shared by the sequential
+    and progressive decoders:
     returns ``(hmax, vmax, mcus_x, mcus_y, n_blocks)``."""
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
@@ -1439,6 +1497,40 @@ def _jpeg_geometry(
     mcus_x, mcus_y = -(-w // (8 * hmax)), -(-h // (8 * vmax))
     n_blocks = mcus_x * mcus_y * sum(hs * vs for _, hs, vs, _ in comps)
     return hmax, vmax, mcus_x, mcus_y, n_blocks
+
+
+class _JpegMarkers:
+    """The marker walk all JPEG decoders share: checks SOI, then yields
+    ``(marker, body)`` per marker segment — 0xFF alignment check, length
+    field, body — until EOI or until fewer than ``tail`` bytes remain.
+    ``start`` is the offset of the segment just yielded and ``pos`` the
+    offset just past it; a decoder that consumes an entropy-coded scan
+    moves ``pos`` past the scan and the walk resumes there."""
+
+    __slots__ = ("data", "tail", "start", "pos")
+
+    def __init__(self, data: bytes, tail: int = 4) -> None:
+        if data[:2] != b"\xff\xd8":
+            raise ValueError("not a JPEG")
+        self.data, self.tail, self.start, self.pos = data, tail, 0, 2
+
+    def __iter__(self) -> _JpegMarkers:
+        return self
+
+    def __next__(self) -> tuple[int, bytes]:
+        import struct  # noqa: PLC0415
+
+        data, pos = self.data, self.pos
+        if pos + self.tail > len(data):
+            raise StopIteration
+        if data[pos] != 0xFF:
+            raise ValueError("bad JPEG marker alignment")
+        marker = data[pos + 1]
+        if marker == 0xD9:  # EOI
+            raise StopIteration
+        (seglen,) = struct.unpack_from(">H", data, pos + 2)
+        self.start, self.pos = pos, pos + 2 + seglen
+        return marker, data[pos + 4 : self.pos]
 
 
 def encode_jpeg_gray8(
@@ -1553,7 +1645,7 @@ class _FastBits:
     ``(words[p >> 3] >> (32 - k - (p & 7))) & ((1 << k) - 1)``.
     ``orig_pos`` maps bits consumed back to the stuffed byte offset the
     byte-at-a-time reference reader would have reached — the contract the
-    hierarchical decoder's scan-to-scan walk relies on."""
+    lossless-frame decoder's scan-to-scan walk relies on."""
 
     __slots__ = (
         "words", "nbits", "pos", "start", "_drops", "term", "term_pos"
@@ -1629,9 +1721,9 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
     sampling-factor layout — 4:4:4, 4:2:0 (interleaved 16×16 MCUs, the
     layout virtually all real JPEGs use), 4:2:2, 4:4:0 — with
     nearest-neighbor chroma upsampling.  SOF2 (huffman progressive)
-    delegates to ``_decode_jpeg_progressive``, SOF3 (huffman lossless) to
-    ``_decode_jpeg_lossless``, DHP (hierarchical sequences, Annex J) to
-    ``_decode_jpeg_hierarchical``; arithmetic coding, bare differential
+    delegates to ``_decode_jpeg_progressive``; SOF3 (huffman lossless)
+    and DHP (hierarchical sequences, Annex J) delegate to
+    ``_decode_jpeg_lossless_frames``; arithmetic coding, bare differential
     frames, and differential-DCT hierarchical frames raise ValueError so
     ``_decode_bytes`` falls back to the byte-view stub (the documented
     swap point for a full codec library at deployment).
@@ -1641,9 +1733,6 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
     """
     import struct  # noqa: PLC0415
 
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
     qtables: dict[int, np.ndarray] = {}
     htables: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
     comps: list[tuple[int, int, int, int]] = []  # (id, hs, vs, tq)
@@ -1651,26 +1740,18 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
     scan_comps: list[tuple[int, int, int]] = []  # (id, dc_table, ac_table)
     scan_pos = None
     restart_interval = 0
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("bad JPEG marker alignment")
-        marker = data[pos + 1]
-        if marker == 0xD9:  # EOI
-            break
-        (seglen,) = struct.unpack_from(">H", data, pos + 2)
-        body = data[pos + 4 : pos + 2 + seglen]
+    walk = _JpegMarkers(data)
+    for marker, body in walk:
         # SOF1 (extended sequential, huffman) shares SOF0's scan layout at
         # 8-bit precision — only the Pq=1 DQT allowance differs — so it
         # decodes on the same path; SOF2 (progressive, huffman) delegates
-        # to the multi-scan decoder; SOF3 (lossless, huffman) to the
-        # predictive decoder; everything else (arithmetic, hierarchical,
+        # to the multi-scan decoder; SOF3 (lossless, huffman) and DHP to
+        # the lossless-frame decoder; everything else (arithmetic, bare
         # differential) refuses to the stub.
         if marker == 0xC2:
             return _decode_jpeg_progressive(data)
-        if marker == 0xC3:
-            return _decode_jpeg_lossless(data)
-        if marker == 0xDE:  # DHP: hierarchical sequence (Annex J)
-            return _decode_jpeg_hierarchical(data)
+        if marker in (0xC3, 0xDE):  # SOF3, or DHP (hierarchical, Annex J)
+            return _decode_jpeg_lossless_frames(data)
         # bare differential frames (SOF5-7 without a DHP reference) are
         # illegal; arithmetic stays refused (see NOTES_round9.md)
         if marker in (0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
@@ -1689,9 +1770,8 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
             for si in range(ns):
                 cid, tabs = body[1 + 2 * si], body[2 + 2 * si]
                 scan_comps.append((cid, tabs >> 4, tabs & 0x0F))
-            scan_pos = pos + 2 + seglen
+            scan_pos = walk.pos
             break
-        pos += 2 + seglen
     if h is None or scan_pos is None or not comps:
         raise ValueError("JPEG missing SOF/SOS")
 
@@ -1932,8 +2012,6 @@ def encode_jpeg_progressive(
     contiguously so successive approximation still transmits every
     coefficient exactly and the progressive==sequential bit-identity
     contract holds for ANY band split."""
-    import struct  # noqa: PLC0415
-
     ac_bands = list(ac_bands) if ac_bands is not None else [(1, 63)]
     want = 1
     for ss, se in ac_bands:
@@ -1979,14 +2057,7 @@ def encode_jpeg_progressive(
             if on_restart is not None:
                 on_restart()
 
-    scans: list[tuple[bytes, bytes]] = []
-
-    def sos_body(comp_ids, ss, se, ah, al):
-        return (
-            bytes([len(comp_ids)])
-            + b"".join(bytes([cid, 0x00]) for cid in comp_ids)
-            + bytes([ss, se, (ah << 4) | al])
-        )
+    scans: list[bytes] = []  # SOS segment, entropy bytes, SOS, …
 
     # scan 1: DC first, Al=1 (signed arithmetic shift per G.1.2.1)
     bw1 = _BufferedBitWriter()
@@ -2006,7 +2077,7 @@ def encode_jpeg_progressive(
             bw1.write(code, length)
             if size:
                 bw1.write(amp, size)
-    scans.append((sos_body(range(1, n_comp + 1), 0, 0, 0, 1), bw1.flush()))
+    scans += [_jpeg_sos(range(1, n_comp + 1), 0, 0, 0, 1), bw1.flush()]
 
     # scan 2: DC refinement — the deferred low bit, raw, one per block
     bw2 = _BufferedBitWriter()
@@ -2014,7 +2085,7 @@ def encode_jpeg_progressive(
         maybe_restart(bw2, unit_i)
         for ci, by, bx in unit:
             bw2.write(int(coefs[ci][by, bx, 0]) & 1, 1)
-    scans.append((sos_body(range(1, n_comp + 1), 0, 0, 1, 0), bw2.flush()))
+    scans += [_jpeg_sos(range(1, n_comp + 1), 0, 0, 1, 0), bw2.flush()]
 
     for ss, se in ac_bands:
         for ci in range(n_comp):
@@ -2048,7 +2119,7 @@ def encode_jpeg_progressive(
                     if run:
                         code, length = ac_codes[0x00]  # EOB, run of 1
                         bwa.write(code, length)
-            scans.append((sos_body([ci + 1], ss, se, 0, 1), bwa.flush()))
+            scans += [_jpeg_sos([ci + 1], ss, se, 0, 1), bwa.flush()]
 
     for ss, se in ac_bands:
         for ci in range(n_comp):
@@ -2104,44 +2175,16 @@ def encode_jpeg_progressive(
                         bwr.write(code, length)
                         for bit in pending:
                             bwr.write(bit, 1)
-            scans.append((sos_body([ci + 1], ss, se, 1, 0), bwr.flush()))
+            scans += [_jpeg_sos([ci + 1], ss, se, 1, 0), bwr.flush()]
 
-    def seg(marker, body):
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    pq16 = int(q.max()) > 255
-    if pq16:
-        dqt = seg(
-            0xFFDB,
-            bytes([0x10]) + b"".join(struct.pack(">H", int(v)) for v in q),
-        )
-    else:
-        dqt = seg(0xFFDB, bytes([0x00]) + bytes(int(v) for v in q))
-    out = [
-        b"\xff\xd8",
-        seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"),
-        dqt,
-        seg(
-            0xFFC2,
-            struct.pack(">BHHB", 8, h, w, n_comp)
-            + b"".join(
-                bytes([cid, (hs << 4) | vs, 0])
-                for cid, (hs, vs) in zip(range(1, n_comp + 1), sampling)
-            ),
-        ),
-        seg(
-            0xFFC4,
-            bytes([0x00]) + bytes(_JPEG_DC_BITS[1:]) + bytes(_JPEG_DC_VALS)
-            + bytes([0x10]) + bytes(_JPEG_AC_BITS[1:]) + bytes(_JPEG_AC_VALS),
-        ),
-    ]
-    if restart_interval:
-        out.append(seg(0xFFDD, struct.pack(">H", restart_interval)))
-    for body, entropy in scans:
-        out.append(seg(0xFFDA, body))
-        out.append(entropy)
-    out.append(b"\xff\xd9")
-    return b"".join(out)
+    return _jpeg_stream(
+        _jpeg_app(raw_rgb=False),
+        _jpeg_dqt(q),
+        _jpeg_sof(0xC2, h, w, sampling),
+        _jpeg_dht(ac=True),
+        _jpeg_dri(restart_interval),
+        *scans,
+    )
 
 
 def _decode_jpeg_progressive(data: bytes) -> np.ndarray:
@@ -2158,9 +2201,6 @@ def _decode_jpeg_progressive(data: bytes) -> np.ndarray:
     the marker walk)."""
     import struct  # noqa: PLC0415
 
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
     qtables: dict[int, np.ndarray] = {}
     htables: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
     comps: list[tuple[int, int, int, int]] = []
@@ -2185,14 +2225,10 @@ def _decode_jpeg_progressive(data: bytes) -> np.ndarray:
             p += 1
         return len(data)
 
-    while pos + 2 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("bad JPEG marker alignment")
-        marker = data[pos + 1]
-        if marker == 0xD9:
-            break
-        (seglen,) = struct.unpack_from(">H", data, pos + 2)
-        body = data[pos + 4 : pos + 2 + seglen]
+    # a 2-byte tail: the walk must also read a marker cut short after its
+    # first two bytes (and refuse it), as the reference decoder does
+    walk = _JpegMarkers(data, tail=2)
+    for marker, body in walk:
         if marker == 0xDD:
             (restart_interval,) = struct.unpack_from(">H", body, 0)
         elif marker == 0xDB:
@@ -2207,7 +2243,7 @@ def _decode_jpeg_progressive(data: bytes) -> np.ndarray:
             # alone costs that much)
             if n_blocks * 64 > 268_435_456:
                 raise ValueError("JPEG dimensions exceed decode cap")
-            if n_blocks > max(0, len(data) - pos) * 8 + 64:
+            if n_blocks > max(0, len(data) - walk.start) * 8 + 64:
                 raise ValueError("JPEG scan too short for declared dims")
             coefs = [
                 np.zeros((mcus_y * vs, mcus_x * hs, 64), dtype=np.int64)
@@ -2239,7 +2275,7 @@ def _decode_jpeg_progressive(data: bytes) -> np.ndarray:
             # reference in tests/ref_bitio.py; a differential test
             # pins this decoder against the verbatim pre-r12 form
             # (including truncation and bit-flip refusal parity).
-            fbr = _FastBits(data, pos + 2 + seglen, ff_abs)
+            fbr = _FastBits(data, walk.pos, ff_abs)
             words, navail = fbr.words, fbr.nbits
             p = 0
 
@@ -2511,9 +2547,7 @@ def _decode_jpeg_progressive(data: bytes) -> np.ndarray:
                                 eobrun -= 1
             got_scan = True
             fbr.pos = p
-            pos = next_marker(fbr.orig_pos())
-            continue
-        pos += 2 + seglen
+            walk.pos = next_marker(fbr.orig_pos())
     if h is None or not got_scan or not coefs:
         raise ValueError("JPEG missing SOF/SOS")
     a = _dct_basis()
@@ -2819,6 +2853,33 @@ def _lossless_residuals(
     return diffs
 
 
+def _lossless_planes(
+    pixels: np.ndarray, predictor: int, encoder: str
+) -> list[np.ndarray]:
+    """Input prep shared by the two lossless encoders: predictor range
+    check, 1-D promotion, one int32 plane per channel (gray or R,G,B)."""
+    if not 1 <= int(predictor) <= 7:
+        raise ValueError(f"bad lossless predictor {predictor}")
+    px = np.ascontiguousarray(pixels, dtype=np.uint8)
+    if px.ndim == 1:
+        px = px[None, :]
+    if px.ndim == 2:
+        return [px.astype(np.int32)]
+    if px.ndim == 3 and px.shape[2] == 3:
+        return [px[..., ch].astype(np.int32) for ch in range(3)]
+    raise ValueError(f"{encoder} expects (h,w) or (h,w,3)")
+
+
+def _lossless_scan(diffs: list[np.ndarray], ss: int) -> bytes:
+    """One interleaved lossless scan over every component: SOS (``ss`` =
+    the predictor, 0 in differential frames) and the residuals coded
+    with the Annex-K DC table — vectorized, bit-identical to the
+    per-sample reference _BitWriter loop in tests/ref_bitio.py (§4.2)."""
+    return _jpeg_sos(range(1, len(diffs) + 1), ss, 0) + _lossless_scan_bits(
+        diffs, _JPEG_DC_CODES_K
+    )
+
+
 def encode_jpeg_lossless(pixels: np.ndarray, predictor: int = 4) -> bytes:
     """Encode gray (h, w) or RGB (h, w, 3) uint8 pixels as a LOSSLESS
     JPEG (SOF3, huffman, T.81 Annex H): each sample's prediction residual
@@ -2835,163 +2896,16 @@ def encode_jpeg_lossless(pixels: np.ndarray, predictor: int = 4) -> bytes:
     JFIF-mandated YCbCr conversion (grayscale keeps JFIF APP0, where it is
     accurate).  Restart intervals and point transforms are not emitted
     (and the decoder refuses them — untested paths refuse to the stub)."""
-    import struct  # noqa: PLC0415
-
-    if not 1 <= int(predictor) <= 7:
-        raise ValueError(f"bad lossless predictor {predictor}")
-    px = np.ascontiguousarray(pixels, dtype=np.uint8)
-    if px.ndim == 1:
-        px = px[None, :]
-    if px.ndim == 2:
-        planes = [px.astype(np.int32)]
-    elif px.ndim == 3 and px.shape[2] == 3:
-        planes = [px[..., ch].astype(np.int32) for ch in range(3)]
-    else:
-        raise ValueError("encode_jpeg_lossless expects (h,w) or (h,w,3)")
+    planes = _lossless_planes(pixels, predictor, "encode_jpeg_lossless")
     h, w = planes[0].shape
-    dc_codes = _JPEG_DC_CODES_K
-    diffs = _lossless_residuals(planes, int(predictor))
-    n_comp = len(planes)
-    # interleaved MCU order at 1×1 sampling: one sample per component —
-    # vectorized, bit-identical to the per-sample reference _BitWriter
-    # loop in tests/ref_bitio.py (§4.2)
-    entropy = _lossless_scan_bits(diffs, dc_codes)
-
-    def seg(marker, body):
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    # Container declaration: JFIF mandates YCbCr for 3-component streams,
-    # but SOF3 color here is raw R,G,B (losslessness is the point) — a JFIF
-    # APP0 would make external decoders color-convert and misrender.  Emit
-    # Adobe APP14 with transform=0 (= RGB, no transform) for color, and
-    # keep JFIF APP0 only for grayscale, where it is accurate.
-    if n_comp == 3:
-        app = seg(
-            0xFFEE, b"Adobe" + struct.pack(">HHHB", 100, 0, 0, 0)
-        )
-    else:
-        app = seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    return b"".join(
-        [
-            b"\xff\xd8",
-            app,
-            seg(
-                0xFFC3,
-                struct.pack(">BHHB", 8, h, w, n_comp)
-                + b"".join(
-                    bytes([cid, 0x11, 0]) for cid in range(1, n_comp + 1)
-                ),
-            ),
-            seg(
-                0xFFC4,
-                bytes([0x00]) + bytes(_JPEG_DC_BITS[1:])
-                + bytes(_JPEG_DC_VALS),
-            ),
-            seg(
-                0xFFDA,
-                bytes([n_comp])
-                + b"".join(bytes([cid, 0x00]) for cid in range(1, n_comp + 1))
-                + bytes([int(predictor), 0, 0]),  # Ss=predictor, Se=0, Pt=0
-            ),
-            entropy,
-            b"\xff\xd9",
-        ]
+    return _jpeg_stream(
+        _jpeg_app(raw_rgb=len(planes) == 3),
+        _jpeg_sof(0xC3, h, w, [(1, 1)] * len(planes)),
+        _jpeg_dht(ac=False),
+        _lossless_scan(
+            _lossless_residuals(planes, int(predictor)), int(predictor)
+        ),
     )
-
-
-def _decode_jpeg_lossless(data: bytes) -> np.ndarray:
-    """Lossless-JPEG decode (SOF3, huffman, T.81 Annex H): sequential
-    predictive reconstruction — each sample = predictor(a, b, c) +
-    huffman-decoded residual, exact by construction.  Supports all 7
-    predictors, 1- or 3-component interleaved scans at 1×1 sampling.
-    Restart intervals, nonzero point transforms, and subsampled lossless
-    scans refuse to the byte-view stub (no in-repo encoder emits them —
-    untested paths refuse).  Returns the same flat uint8 convention as
-    ``_decode_jpeg``."""
-    import struct  # noqa: PLC0415
-
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    htables: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    comps: list[tuple[int, int, int, int]] = []
-    h = w = None
-    predictor = 0
-    scan_pos = None
-    scan_tabs: list[int] = []
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("bad JPEG marker alignment")
-        marker = data[pos + 1]
-        if marker == 0xD9:
-            break
-        (seglen,) = struct.unpack_from(">H", data, pos + 2)
-        body = data[pos + 4 : pos + 2 + seglen]
-        if marker == 0xDD:
-            (ri,) = struct.unpack_from(">H", body, 0)
-            if ri:
-                raise ValueError(
-                    "restart intervals in lossless scans unsupported"
-                )
-        elif marker == 0xC3:
-            h, w, comps = _parse_sof(body)
-        elif marker == 0xC4:
-            _parse_dht(body, htables)
-        elif marker == 0xDA:
-            ns = body[0]
-            # the scan's component sequence must equal the frame's —
-            # order defines the interleave, so a reordered or duplicated
-            # list would silently decode wrong pixels; refuse instead
-            # (review catch r8, same 'refuse rather than misparse'
-            # contract as the DQT precision guard)
-            scan_cids = [body[1 + 2 * si] for si in range(ns)]
-            if scan_cids != [c[0] for c in comps]:
-                raise ValueError("lossless scan component order mismatch")
-            for si in range(ns):
-                scan_tabs.append(body[2 + 2 * si] >> 4)
-            ss, se, aa = body[1 + 2 * ns : 4 + 2 * ns]
-            if not 1 <= ss <= 7:
-                raise ValueError(f"bad lossless predictor {ss}")
-            if se != 0 or (aa >> 4) != 0:
-                raise ValueError("bad lossless scan parameters")
-            if (aa & 0x0F) != 0:
-                raise ValueError("lossless point transform unsupported")
-            predictor = ss
-            scan_pos = pos + 2 + seglen
-            break
-        pos += 2 + seglen
-    if h is None or scan_pos is None or not comps:
-        raise ValueError("JPEG missing SOF/SOS")
-    if any(hs != 1 or vs != 1 for _, hs, vs, _ in comps):
-        raise ValueError("subsampled lossless scan unsupported")
-    if len(scan_tabs) != len(comps):
-        raise ValueError("partial lossless scan")
-    n_comp = len(comps)
-    n_samples = h * w * n_comp
-    # untrusted-header guards: a lossless sample costs >= 2 bits
-    # (category-0 symbol).  The absolute cap is 64x TIGHTER than the DCT
-    # paths' (4M samples vs 256M) because this entropy loop is per-SAMPLE
-    # pure Python — at the DCT cap a crafted header could pin an executor
-    # for an hour before refusing (review catch r8); 4M ≈ 2048x2048 gray,
-    # far above any contract/audit input, decodes in seconds.
-    if n_samples > 4_194_304:
-        raise ValueError("JPEG dimensions exceed decode cap")
-    tabs = []
-    for dc in scan_tabs:
-        tab = htables.get((0, dc))
-        if tab is None:
-            raise ValueError("missing DC huffman table")
-        tabs.append(tab)
-    # scan-length floor from the PARSED tables' shortest code, not a fixed
-    # 2-bit assumption (ADVICE r9 — see _min_bits_per_lossless_sample)
-    mb = _min_bits_per_lossless_sample(tabs)
-    if n_samples * mb > max(0, len(data) - scan_pos) * 8 + 64 * mb:
-        raise ValueError("JPEG scan too short for declared dims")
-    planes, _ = _lossless_entropy_scan(data, scan_pos, h, w, tabs, predictor)
-    out = [np.clip(p, 0, 255).astype(np.uint8) for p in planes]
-    if n_comp == 1:
-        return out[0].reshape(-1)
-    return np.stack(out, axis=-1).reshape(-1)
 
 
 def _lossless_entropy_scan(
@@ -3004,11 +2918,11 @@ def _lossless_entropy_scan(
     refs: list[np.ndarray] | None = None,
 ) -> tuple[list[np.ndarray], int]:
     """Decode ONE interleaved 1×1-sampling lossless entropy scan starting
-    at byte ``pos`` of ``data`` into int32 planes — shared by the
-    standalone SOF3 decoder and both frame kinds of the hierarchical
-    decoder.  Returns ``(planes, end_pos)``: ``end_pos`` is the stuffed
-    byte offset just past the bytes the scan consumed, where the
-    hierarchical decoder resumes its marker walk.  ``predictor`` in 1–7
+    at byte ``pos`` of ``data`` into int32 planes — every SOF3 and SOF7
+    frame ``_decode_jpeg_lossless_frames`` decodes.  Returns
+    ``(planes, end_pos)``: ``end_pos`` is the stuffed byte offset just
+    past the bytes the scan consumed, where that decoder resumes its
+    marker walk.  ``predictor`` in 1–7
     runs the Annex-H neighbor prediction (first line / line-start rules
     per H.1.1); ``predictor == 0`` is the DIFFERENTIAL form (T.81 Annex
     J): no spatial prediction — each decoded difference adds to the
@@ -3196,127 +3110,92 @@ def encode_jpeg_hierarchical(
     rule matches ``encode_jpeg_lossless``: Adobe APP14 transform=0 for
     raw-RGB color, JFIF APP0 for grayscale.  Restart intervals and point
     transforms are not emitted (decoder refuses them)."""
-    import struct  # noqa: PLC0415
-
     if not 1 <= int(levels) <= 8:
         raise ValueError(f"bad hierarchical level count {levels}")
-    if not 1 <= int(predictor) <= 7:
-        raise ValueError(f"bad lossless predictor {predictor}")
-    px = np.ascontiguousarray(pixels, dtype=np.uint8)
-    if px.ndim == 1:
-        px = px[None, :]
-    if px.ndim == 2:
-        planes = [px.astype(np.int32)]
-    elif px.ndim == 3 and px.shape[2] == 3:
-        planes = [px[..., ch].astype(np.int32) for ch in range(3)]
-    else:
-        raise ValueError("encode_jpeg_hierarchical expects (h,w) or (h,w,3)")
+    planes = _lossless_planes(pixels, predictor, "encode_jpeg_hierarchical")
     h, w = planes[0].shape
-    n_comp = len(planes)
+    ones = [(1, 1)] * len(planes)
     pyr = [planes]
     for _ in range(int(levels) - 1):
         pyr.append([_hier_downsample(p) for p in pyr[-1]])
-    dc_codes = _JPEG_DC_CODES_K
-
-    def seg(marker, body):
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    def sof_body(fh, fw):
-        return struct.pack(">BHHB", 8, fh, fw, n_comp) + b"".join(
-            bytes([cid, 0x11, 0]) for cid in range(1, n_comp + 1)
-        )
-
-    def scan_seg(diffs, ss):
-        sos = seg(
-            0xFFDA,
-            bytes([n_comp])
-            + b"".join(bytes([cid, 0x00]) for cid in range(1, n_comp + 1))
-            + bytes([ss, 0, 0]),
-        )
-        # vectorized, bit-identical to the per-sample reference _BitWriter
-        # loop in tests/ref_bitio.py (§4.2)
-        return sos + _lossless_scan_bits(diffs, dc_codes)
-
-    if n_comp == 3:  # raw R,G,B — declare via Adobe APP14 transform=0
-        app = seg(0xFFEE, b"Adobe" + struct.pack(">HHHB", 100, 0, 0, 0))
-    else:
-        app = seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+    coarse = pyr[-1]
+    ch, cw = coarse[0].shape
     parts = [
-        b"\xff\xd8",
-        app,
-        seg(0xFFDE, sof_body(h, w)),  # DHP: full-resolution frame header
-        seg(
-            0xFFC4,
-            bytes([0x00]) + bytes(_JPEG_DC_BITS[1:]) + bytes(_JPEG_DC_VALS),
+        _jpeg_app(raw_rgb=len(planes) == 3),
+        _jpeg_sof(0xDE, h, w, ones),  # DHP: full-resolution frame header
+        _jpeg_dht(ac=False),
+        _jpeg_sof(0xC3, ch, cw, ones),
+        _lossless_scan(
+            _lossless_residuals(coarse, int(predictor)), int(predictor)
         ),
     ]
-    coarse = pyr[-1]
-    parts.append(seg(0xFFC3, sof_body(*coarse[0].shape)))
-    parts.append(
-        scan_seg(_lossless_residuals(coarse, int(predictor)), int(predictor))
-    )
     ref = coarse
     for level in range(int(levels) - 2, -1, -1):
         tgt = pyr[level]
         th, tw = tgt[0].shape
-        parts.append(seg(0xFFDF, bytes([0x11])))  # EXP: 2× both dimensions
         up = [_hier_expand(r, th, tw) for r in ref]
-        parts.append(seg(0xFFC7, sof_body(th, tw)))
-        parts.append(scan_seg([t - u for t, u in zip(tgt, up)], 0))
+        parts += [
+            _jpeg_seg(0xDF, bytes([0x11])),  # EXP: 2× both dimensions
+            _jpeg_sof(0xC7, th, tw, ones),
+            _lossless_scan([t - u for t, u in zip(tgt, up)], 0),
+        ]
         ref = tgt
-    parts.append(b"\xff\xd9")
-    return b"".join(parts)
+    return _jpeg_stream(*parts)
 
 
-def _decode_jpeg_hierarchical(data: bytes) -> np.ndarray:
-    """Hierarchical-JPEG decode (T.81 Annex J, huffman lossless frames):
-    DHP gives the full dims; the decoder then folds frames left to right,
-    keeping per-component int32 reference planes — a non-differential
-    SOF3 frame (must be first) establishes them via Annex-H prediction,
-    and each EXP + SOF7 pair expands the references 2× (normative
-    J.1.1.2 bilinear, trimmed to the frame dims) and adds the decoded
-    differences modulo 2^16 (J.1.1.4).  Supports 1- or 3-component
-    interleaved scans at 1×1 sampling.  Refusal set (untested paths
-    refuse to the byte-view stub): DCT / differential-DCT / arithmetic
-    hierarchical frames (SOF0/1/2/5/6/9-15), restart intervals, point
-    transforms, EXP modes other than 2×2, a differential frame without a
-    preceding EXP, and any frame/DHP dimension mismatch.  Returns the
-    same flat uint8 convention as ``_decode_jpeg``."""
+def _decode_jpeg_lossless_frames(data: bytes) -> np.ndarray:
+    """Lossless-JPEG decode (huffman, T.81 Annex H) of a standalone SOF3
+    stream or a hierarchical sequence (Annex J): the decoder folds frames
+    left to right, keeping per-component int32 reference planes.  DHP,
+    when present, gives the full dims; a stream without DHP is a
+    one-frame pyramid whose SOF3 sets them.  A non-differential SOF3
+    frame (must be first) establishes the planes via Annex-H prediction
+    (all 7 predictors), and each EXP + SOF7 pair expands them 2×
+    (normative J.1.1.2 bilinear, trimmed to the frame dims) and adds the
+    decoded differences modulo 2^16 (J.1.1.4).  Supports 1- or
+    3-component interleaved scans at 1×1 sampling.  Refusal set (untested
+    paths refuse to the byte-view stub): DCT / differential-DCT /
+    arithmetic hierarchical frames (SOF0/1/2/5/6/9-15), restart
+    intervals, point transforms, subsampled scans, EXP modes other than
+    2×2, a differential frame without a preceding EXP, and any frame/DHP
+    dimension mismatch.  Returns the same flat uint8 convention as
+    ``_decode_jpeg``."""
     import struct  # noqa: PLC0415
 
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
     htables: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    full = None  # (h, w, comps) from DHP
+    full = None  # (h, w, comps) from DHP, or from the lone SOF3 without one
+    pyramid = False  # a DHP declared a hierarchical sequence
+    kind = "lossless"  # names the process in refusal messages
     refs: list[np.ndarray] | None = None
     cur = None  # (h, w, comps, differential) of the frame awaiting its scan
     pending_exp = False
     total_budget = 0
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("bad JPEG marker alignment")
-        marker = data[pos + 1]
-        if marker == 0xD9:
-            break
-        (seglen,) = struct.unpack_from(">H", data, pos + 2)
-        body = data[pos + 4 : pos + 2 + seglen]
-        pos += 2 + seglen
-        if marker == 0xDE:
+    walk = _JpegMarkers(data)
+    for marker, body in walk:
+        if marker == 0xDE or (marker == 0xC3 and full is None):
             if full is not None:
                 raise ValueError("duplicate DHP segment")
+            pyramid = marker == 0xDE
+            kind = "hierarchical" if pyramid else "lossless"
             full = _parse_sof(body)
             if any(hs != 1 or vs != 1 for _, hs, vs, _ in full[2]):
-                raise ValueError("subsampled hierarchical scan unsupported")
-            # per-sample pure-Python entropy loops across ALL frames: cap
-            # the PYRAMID total.  Mandatory EXP doubling before every
+                raise ValueError(f"subsampled {kind} scan unsupported")
+            # the entropy loops run per sample in pure Python, so the
+            # absolute cap is 64x TIGHTER than the DCT paths' (4M samples
+            # vs 256M): at the DCT cap a crafted header could pin an
+            # executor for an hour before refusing (review catch r8);
+            # 4M ≈ 2048x2048 gray decodes in seconds.  A pyramid caps its
+            # TOTAL over all frames: mandatory EXP doubling before every
             # differential frame bounds the sum at 4/3 × full size, plus a
             # constant for degenerate tiny pyramids whose halving floors
             # at 1×1 (frame count ≤ log2(dim) + 1, structurally enforced)
-            total_budget = full[0] * full[1] * len(full[2]) * 2 + 1024
-            if total_budget > 2 * 4_194_304:
+            n_full = full[0] * full[1] * len(full[2])
+            total_budget = n_full * 2 + 1024 if pyramid else n_full
+            if total_budget > (2 if pyramid else 1) * 4_194_304:
                 raise ValueError("JPEG dimensions exceed decode cap")
-        elif marker == 0xDF:
+            if pyramid:
+                continue
+        if marker == 0xDF:
             if len(body) != 1 or body[0] != 0x11:
                 raise ValueError("EXP mode unsupported")
             if refs is None:
@@ -3327,9 +3206,7 @@ def _decode_jpeg_hierarchical(data: bytes) -> np.ndarray:
         elif marker == 0xDD:
             (ri,) = struct.unpack_from(">H", body, 0)
             if ri:
-                raise ValueError(
-                    "restart intervals in hierarchical scans unsupported"
-                )
+                raise ValueError(f"restart intervals in {kind} scans unsupported")
         elif marker in (0xC3, 0xC7):
             if full is None:
                 raise ValueError("hierarchical frame before DHP")
@@ -3359,16 +3236,19 @@ def _decode_jpeg_hierarchical(data: bytes) -> np.ndarray:
                 raise ValueError("hierarchical scan before its frame")
             fh, fw, fcomps, differential = cur
             ns = body[0]
+            # the scan's component sequence must equal the frame's —
+            # order defines the interleave, so a reordered or duplicated
+            # list would silently decode wrong pixels; refuse instead
+            # (review catch r8, same 'refuse rather than misparse'
+            # contract as the DQT precision guard)
             scan_cids = [body[1 + 2 * si] for si in range(ns)]
             if scan_cids != [c[0] for c in fcomps]:
                 raise ValueError("lossless scan component order mismatch")
-            tabs = []
-            for si in range(ns):
-                tab = htables.get((0, body[2 + 2 * si] >> 4))
-                if tab is None:
-                    raise ValueError("missing DC huffman table")
-                tabs.append(tab)
             ss, se, aa = body[1 + 2 * ns : 4 + 2 * ns]
+            if differential and ss != 0:
+                raise ValueError(f"bad differential scan predictor {ss}")
+            if not differential and not 1 <= ss <= 7:
+                raise ValueError(f"bad lossless predictor {ss}")
             if se != 0 or (aa >> 4) != 0:
                 raise ValueError("bad lossless scan parameters")
             if (aa & 0x0F) != 0:
@@ -3377,16 +3257,18 @@ def _decode_jpeg_hierarchical(data: bytes) -> np.ndarray:
             total_budget -= n_samples
             if total_budget < 0:
                 raise ValueError("JPEG dimensions exceed decode cap")
-            # floor from the parsed tables' shortest code (ADVICE r9 —
-            # see _min_bits_per_lossless_sample)
+            tabs = []
+            for si in range(ns):
+                tab = htables.get((0, body[2 + 2 * si] >> 4))
+                if tab is None:
+                    raise ValueError("missing DC huffman table")
+                tabs.append(tab)
+            # a sample costs at least the parsed tables' shortest code
+            # (ADVICE r9 — see _min_bits_per_lossless_sample)
             mb = _min_bits_per_lossless_sample(tabs)
-            if n_samples * mb > max(0, len(data) - pos) * 8 + 64 * mb:
+            if n_samples * mb > max(0, len(data) - walk.pos) * 8 + 64 * mb:
                 raise ValueError("JPEG scan too short for declared dims")
             if differential:
-                if ss != 0:
-                    raise ValueError(
-                        f"bad differential scan predictor {ss}"
-                    )
                 if pending_exp:
                     # the frame must actually BE the 2x expansion of the
                     # reference (ceil-halving inverse) — an EXP followed by
@@ -3406,16 +3288,17 @@ def _decode_jpeg_hierarchical(data: bytes) -> np.ndarray:
                     raise ValueError(
                         "differential frame without preceding EXP"
                     )
-                refs, pos = _lossless_entropy_scan(
-                    data, pos, fh, fw, tabs, 0, refs=refs
-                )
-            else:
-                if not 1 <= ss <= 7:
-                    raise ValueError(f"bad lossless predictor {ss}")
-                refs, pos = _lossless_entropy_scan(data, pos, fh, fw, tabs, ss)
+            # ss is 0 in a differential scan: add to the expanded refs
+            refs, walk.pos = _lossless_entropy_scan(
+                data, walk.pos, fh, fw, tabs, ss, refs=refs
+            )
             cur = None
+            if not pyramid:
+                break  # one-frame stream: nothing after its scan is read
     if full is None or refs is None:
-        raise ValueError("JPEG missing DHP/frames")
+        raise ValueError(
+            "JPEG missing DHP/frames" if pyramid else "JPEG missing SOF/SOS"
+        )
     if cur is not None or pending_exp:
         raise ValueError("hierarchical stream truncated mid-frame")
     if refs[0].shape != (full[0], full[1]):
