@@ -1434,10 +1434,11 @@ def _parse_dht(
 ) -> None:
     """DHT segment parse shared by the sequential, progressive and
     lossless-frame decoders: one or more canonical tables per segment,
-    keyed (tc, th).  The decoder dict for each table payload is cached (bounded, keyed on the raw bits+vals bytes): every
-    stream this repo's encoders emit carries the same Annex-K pair, so
-    per-image re-derivation was pure waste (§4.5); foreign tables still
-    build correctly and the cache clears itself at 64 entries.  Cached
+    keyed (tc, th).  The decoder dict for each table payload is cached
+    (bounded, keyed on the raw bits+vals bytes): every stream this repo's
+    encoders emit carries the same Annex-K pair, so per-image
+    re-derivation was pure waste (§4.5); foreign tables still build
+    correctly and the cache clears itself at 64 entries.  Cached
     tables are shared by every later decode, so they are handed out as
     read-only ``MappingProxyType`` views: a caller that mutated one would
     corrupt every later stream carrying the same table."""
@@ -1488,8 +1489,8 @@ def _jpeg_geometry(
     comps: list[tuple[int, int, int, int]], h: int, w: int
 ) -> tuple[int, int, int, int, int]:
     """Interleaved-MCU geometry (T.81 §A.2.3) shared by the sequential
-    and progressive decoders:
-    returns ``(hmax, vmax, mcus_x, mcus_y, n_blocks)``."""
+    and progressive decoders: returns ``(hmax, vmax, mcus_x, mcus_y,
+    n_blocks)``."""
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
     if any(hmax % c[1] or vmax % c[2] for c in comps):
