@@ -635,8 +635,10 @@ def test_jpeg_422_and_440_layouts_decode():
             )
             for c in planes[1:]
         ]
-        ent = mm._jpeg_entropy_encode([y_pad, *chroma], q, sampling=sampling)
-        payload = mm._jpeg_container(h, w, q, 3, ent, sampling=sampling)
+        ent = mm._jpeg_entropy_encode(
+            [p[None] for p in (y_pad, *chroma)], q, sampling=sampling
+        )
+        payload = mm._jpeg_container(h, w, q, 3, ent, sampling=sampling)[0]
         dec = mm._decode_jpeg(payload).reshape(h, w, 3)
         assert np.abs(dec.astype(int) - px.astype(int)).max() <= 3
 
@@ -2121,9 +2123,9 @@ def test_jpeg_entropy_encode_matches_per_block_reference():
         else:
             px = rng.randint(0, 256, size=(h, w)).astype(np.uint8)
         q = mm._jpeg_quant(quant)
-        _h, _w, planes, sampling = mm._jpeg_prepare_planes(px, sub)
-        ref = reference_entropy_encode(planes, q, sampling, ri)
-        got = mm._jpeg_entropy_encode(planes, q, sampling, ri)
+        _h, _w, planes, sampling = mm._jpeg_prepare_planes(px[None], sub)
+        ref = reference_entropy_encode([p[0] for p in planes], q, sampling, ri)
+        got = mm._jpeg_entropy_encode(planes, q, sampling, ri)[0]
         assert got == ref, (h, w, color, sub, ri)
         n_cases += 1
     assert n_cases == 60
@@ -2134,11 +2136,12 @@ def test_jpeg_entropy_encode_matches_per_block_reference():
         np.tile(np.arange(256, dtype=np.uint8), 4).reshape(32, 32),
     ]:
         q = mm._jpeg_quant(None)
-        _h, _w, planes, sampling = mm._jpeg_prepare_planes(px, "4:4:4")
+        _h, _w, planes, sampling = mm._jpeg_prepare_planes(px[None], "4:4:4")
         for ri in (0, 1, 3):
             assert mm._jpeg_entropy_encode(
                 planes, q, sampling, ri
-            ) == reference_entropy_encode(planes, q, sampling, ri)
+            )[0] == reference_entropy_encode([p[0] for p in planes], q,
+                                             sampling, ri)
 
 
 def test_pack_bits_np_chunked_matches_single_pass(monkeypatch):
@@ -2457,3 +2460,144 @@ def test_jpeg_lossless_standalone_cap_boundary():
         if refuse is not None:
             assert refuse not in str(err.value)
         assert mm._decode_bytes(patched).tolist() == list(patched)
+
+
+def test_encode_jpeg_batch_matches_batch_of_one():
+    """One vectorized encode of an image stack must give every image the
+    bytes of its own batch-of-one encode (``encode_jpeg_gray8`` /
+    ``encode_jpeg_rgb24``): stacks of 1 and of several images, shapes
+    that are not multiples of 8, restart intervals 0-3, gray and RGB at
+    4:4:4 and 4:2:0."""
+    import numpy as np
+
+    rng = np.random.default_rng(1515)
+    n_cases = 0
+    for h, w in [(8, 8), (16, 16), (13, 29), (1, 1), (24, 17)]:
+        for ri in (0, 1, 2, 3):
+            for n in (1, 5):
+                gray = rng.integers(0, 256, (n, h, w), dtype=np.uint8)
+                got = mm._encode_jpeg_batch(gray, restart_interval=ri)
+                assert len(got) == n
+                for img, payload in zip(gray, got):
+                    assert payload == mm.encode_jpeg_gray8(
+                        img, restart_interval=ri
+                    ), (h, w, ri, n)
+                    n_cases += 1
+                for sub in ("4:4:4", "4:2:0"):
+                    rgb = rng.integers(0, 256, (n, h, w, 3), dtype=np.uint8)
+                    got = mm._encode_jpeg_batch(
+                        rgb, subsampling=sub, restart_interval=ri
+                    )
+                    for img, payload in zip(rgb, got):
+                        assert payload == mm.encode_jpeg_rgb24(
+                            img, subsampling=sub, restart_interval=ri
+                        ), (h, w, ri, n, sub)
+                        n_cases += 1
+    assert n_cases == 5 * 4 * 6 * 3
+    assert mm._encode_jpeg_batch(np.zeros((0, 8, 8), dtype=np.uint8)) == []
+
+
+def test_encode_jpeg_batch_splits_after_stuffed_ff_at_segment_end():
+    """A segment whose last packed byte is 0xFF carries its stuffed 0x00
+    with it: the batch split must not hand that 0x00 to the next segment
+    or the next image.  Seeds are searched for an image whose scan ends
+    on a stuffed 0xFF, and one whose restart segment does; each is then
+    encoded in the middle of a stack."""
+    import numpy as np
+
+    ends = {0: [b"\xff\x00\xff\xd9"],
+            1: [bytes([0xFF, 0x00, 0xFF, 0xD0 + m]) for m in range(8)]}
+    found = {}
+    for seed in range(400):
+        img = np.random.default_rng(seed).integers(
+            0, 256, (16, 16), dtype=np.uint8
+        )
+        for ri, marks in ends.items():
+            one = mm.encode_jpeg_gray8(img, restart_interval=ri)
+            if ri not in found and any(m in one for m in marks):
+                found[ri] = img
+        if len(found) == 2:
+            break
+    assert sorted(found) == [0, 1]
+    rng = np.random.default_rng(16)
+    for ri, img in found.items():
+        stack = rng.integers(0, 256, (5, 16, 16), dtype=np.uint8)
+        stack[2] = img
+        got = mm._encode_jpeg_batch(stack, restart_interval=ri)
+        want = [mm.encode_jpeg_gray8(x, restart_interval=ri) for x in stack]
+        assert got == want, ri
+        assert mm._max_err_le_3(mm._decode_jpeg(got[2]), img), ri
+
+
+def test_stacked_fdct_matches_per_block_matmul():
+    """The shared FDCT runs one stacked ``a @ blocks @ a.T`` over every
+    block; its coefficients must equal the per-block 2-D matmul bit for
+    bit (an einsum form does not), before and after quantization."""
+    import numpy as np
+
+    a = mm._dct_basis()
+    rng = np.random.default_rng(1717)
+    planes = rng.integers(0, 256, (50, 40, 56)).astype(np.float64)
+    planes[:10] = np.round(planes[:10] * 0.587 + 0.299 * planes[10:20])
+    blocks = np.ascontiguousarray(
+        planes.reshape(50, 5, 8, 7, 8).transpose(0, 1, 3, 2, 4)
+    ) - 128.0
+    stacked = a @ blocks @ a.T
+    flat_blocks = blocks.reshape(-1, 8, 8)
+    per_block = np.stack([a @ b @ a.T for b in flat_blocks])
+    assert np.array_equal(stacked.reshape(-1, 8, 8), per_block)
+    for quant in (None, np.full(64, 3), np.arange(1, 65)):
+        q = mm._jpeg_quant(quant)
+        qmat = q[np.argsort(mm._JPEG_ZIGZAG)].reshape(8, 8)
+        (got,) = mm._quantized_block_coefs([planes], q)
+        want = np.round(per_block / qmat).astype(np.int64).reshape(-1, 64)
+        assert np.array_equal(
+            got.reshape(-1, 64), want[:, mm._JPEG_ZIGZAG]
+        ), quant
+
+
+def test_encode_jpeg_batch_small_pack_chunks(monkeypatch):
+    """The packer's transient-memory cap slices the whole batch's symbol
+    stream; with tiny slices the carried sub-byte remainders cross
+    segment and image boundaries, and every stream must stay identical."""
+    import numpy as np
+
+    rng = np.random.default_rng(1818)
+    gray = rng.integers(0, 256, (6, 13, 21), dtype=np.uint8)
+    rgb = rng.integers(0, 256, (4, 18, 11, 3), dtype=np.uint8)
+    want = [
+        mm._encode_jpeg_batch(gray, restart_interval=ri) for ri in (0, 2)
+    ] + [mm._encode_jpeg_batch(rgb, subsampling="4:2:0", restart_interval=1)]
+    monkeypatch.setattr(mm, "_PACK_CHUNK_SYMS", 7)
+    got = [
+        mm._encode_jpeg_batch(gray, restart_interval=ri) for ri in (0, 2)
+    ] + [mm._encode_jpeg_batch(rgb, subsampling="4:2:0", restart_interval=1)]
+    assert got == want
+
+
+def test_jpeg_truncation_refuses_with_value_error():
+    """Every prefix of every JPEG encoder's output either decodes or
+    refuses with ValueError — the refusal ``_decode_jpeg`` documents;
+    no IndexError or struct.error from a marker segment cut short."""
+    import numpy as np
+
+    rng = np.random.default_rng(1919)
+    gray = rng.integers(0, 256, (16, 16), dtype=np.uint8)
+    rgb = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
+    streams = {
+        "sequential": mm.encode_jpeg_gray8(gray),
+        "restart": mm.encode_jpeg_gray8(gray, restart_interval=1),
+        "4:2:0": mm.encode_jpeg_rgb24(rgb, subsampling="4:2:0"),
+        "progressive": mm.encode_jpeg_progressive(gray),
+        "lossless": mm.encode_jpeg_lossless(gray),
+        "hierarchical": mm.encode_jpeg_hierarchical(gray, levels=2),
+    }
+    for name, payload in streams.items():
+        decoded = 0
+        for cut in range(len(payload) + 1):
+            try:
+                mm._decode_jpeg(payload[:cut])
+                decoded += 1
+            except ValueError:
+                pass
+        assert decoded >= 1, name  # the whole stream at least

@@ -892,11 +892,10 @@ def _jpeg_magnitude(v: int) -> tuple[int, int]:
 
 def _jpeg_magnitude_arrays(d: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Vectorized :func:`_jpeg_magnitude` over an int64 array: (size, amp)
-    arrays with the identical category / one's-complement convention."""
-    a = np.abs(d)
-    size = np.zeros(d.shape, dtype=np.int64)
-    for k in range(1, 18):  # exact bit_length for |d| < 2^17
-        size += a >= (1 << (k - 1))
+    arrays with the identical category / one's-complement convention.
+    ``frexp``'s exponent is the bit length of every |d| < 2^53 (float64
+    holds it exactly), and 0 maps to 0."""
+    size = np.frexp(np.abs(d))[1].astype(np.int64)
     amp = np.where(d >= 0, d, d + np.left_shift(1, size) - 1)
     return size, amp
 
@@ -904,32 +903,33 @@ def _jpeg_magnitude_arrays(d: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 _PACK_CHUNK_SYMS = 1 << 20  # symbols per packing slice (transient-memory cap)
 
 
-def _pack_bits_np(vals: np.ndarray, nbits: np.ndarray) -> bytes:
-    """Bit-identical vectorized form of a reference ``_BitWriter`` stream
-    (``tests/ref_bitio.py``): each value's low ``nbits`` bits MSB-first in
-    order, flush-padded with 1-bits to a byte boundary, every 0xFF data
-    byte stuffed with 0x00 (T.81 B.1.1.5) — numpy passes instead of a
-    per-symbol loop.
+def _pack_segments_np(
+    vals: np.ndarray, nbits: np.ndarray, seg_ends: np.ndarray
+) -> list[bytes]:
+    """Bit-identical vectorized form of one reference ``_BitWriter``
+    stream (``tests/ref_bitio.py``) per segment, all packed in one pass:
+    each value's low ``nbits`` bits MSB-first in order, each segment
+    flush-padded with 1-bits to a byte boundary, every 0xFF data byte
+    stuffed with 0x00 (T.81 B.1.1.5), which stays with its segment.
+    ``seg_ends`` holds the symbol index one past each segment.
 
     Packed in ``_PACK_CHUNK_SYMS``-symbol slices with a sub-byte bit
     remainder carried between them: the single-pass form materialized
     several int64 arrays of length total-bits (~25× the output stream in
     transient memory), which an uncapped encoder-side image could turn
     into hundreds of MB (ADVICE r11).  Slicing bounds the transient to
-    the chunk while producing the identical bit stream — only the final
-    padded total is byte-aligned, so the remainder never survives the
-    last chunk."""
+    the chunk while producing the identical bit stream — each segment
+    ends byte-aligned, so the remainder never survives the last chunk."""
     vals = vals.astype(np.int64, copy=False)
     nbits = nbits.astype(np.int64, copy=False)
-    total = int(nbits.sum())
-    pad = (-total) % 8
-    if pad:
-        vals = np.append(vals, (1 << pad) - 1)
-        nbits = np.append(nbits, pad)
-        total += pad
-    if total == 0:
-        return b""
-    pieces: list[np.ndarray] = []
+    seg_ends = np.asarray(seg_ends, dtype=np.int64)
+    bit_ends = np.concatenate(([0], np.cumsum(nbits)))[seg_ends]
+    seg_bits = np.diff(bit_ends, prepend=0)
+    pad = (-seg_bits) % 8  # a zero-width pad symbol where already aligned
+    vals = np.insert(vals, seg_ends, (1 << pad) - 1)
+    nbits = np.insert(nbits, seg_ends, pad)
+    byte_ends = (bit_ends + np.cumsum(pad)) // 8
+    pieces: list[np.ndarray] = [np.empty(0, dtype=np.uint8)]
     carry = np.empty(0, dtype=np.uint8)
     for lo in range(0, len(vals), _PACK_CHUNK_SYMS):
         v = vals[lo : lo + _PACK_CHUNK_SYMS]
@@ -946,11 +946,19 @@ def _pack_bits_np(vals: np.ndarray, nbits: np.ndarray) -> bytes:
         keep = (len(bits) // 8) * 8
         pieces.append(np.packbits(bits[:keep]))
         carry = bits[keep:]
-    packed = np.concatenate(pieces) if len(pieces) > 1 else pieces[0]
+    packed = np.concatenate(pieces)
     ff = np.flatnonzero(packed == 0xFF)
     if len(ff):
         packed = np.insert(packed, ff + 1, 0)
-    return packed.tobytes()
+        byte_ends += np.searchsorted(ff, byte_ends)
+    buf = packed.tobytes()
+    bounds = [0, *byte_ends.tolist()]
+    return [buf[lo:hi] for lo, hi in zip(bounds, bounds[1:])]
+
+
+def _pack_bits_np(vals: np.ndarray, nbits: np.ndarray) -> bytes:
+    """:func:`_pack_segments_np` over one segment: the whole stream."""
+    return _pack_segments_np(vals, nbits, [len(vals)])[0]
 
 
 def _lossless_scan_bits(
@@ -966,12 +974,7 @@ def _lossless_scan_bits(
         .astype(np.int64)
     )
     size, amp = _jpeg_magnitude_arrays(d)
-    top = int(size.max(initial=0))
-    ctab = np.zeros(top + 1, dtype=np.int64)
-    ltab = np.zeros(top + 1, dtype=np.int64)
-    for s in range(top + 1):
-        if s in dc_codes:
-            ctab[s], ltab[s] = dc_codes[s]
+    ctab, ltab = _codes_as_arrays(dc_codes, int(size.max(initial=0)))
     lens = ltab[size]
     if not lens.all():  # category outside the table = the old KeyError
         raise KeyError(int(size[np.argmin(lens)]))
@@ -1049,75 +1052,61 @@ def _jpeg_entropy_encode(
     q: np.ndarray,
     sampling: list[tuple[int, int]] | None = None,
     restart_interval: int = 0,
-) -> bytes:
-    """Shared baseline entropy encoder over already-padded uint8-valued
-    float planes: interleaved MCU order — per MCU, ``vs×hs`` 8×8 blocks
-    per component (row-major), one DC predictor per component, Annex-K
-    tables for every component.  ``sampling`` gives each plane's (hs, vs)
-    factor; the default all-(1,1) degenerates to one block per plane per
-    MCU — bit-identical to the pre-subsampling encoder.  Each plane must
-    arrive padded to its own MCU-aligned shape (8·hs·mcus_x wide).
-    ``restart_interval`` > 0 emits an RSTm marker (m cycling 0–7) after
-    every that-many MCUs — byte-aligned, DC predictors reset — matching a
-    DRI segment the container must then declare (T.81 §B.2.4.4): the
-    resynchronization layout real encoders emit so one corrupt bit can't
-    poison a whole scan, and the unit a parallel decoder splits on."""
+) -> list[bytes]:
+    """Shared baseline entropy encoder: one (n, ph, pw) stack of padded
+    uint8-valued float planes per component in, the n images' scans out.
+    Interleaved MCU order — per MCU, ``vs×hs`` 8×8 blocks per component
+    (row-major), one DC predictor per component, Annex-K tables for every
+    component.  ``sampling`` gives each plane's (hs, vs) factor (default
+    all-(1,1): one block per plane per MCU); each plane must arrive padded
+    to its own MCU-aligned shape (8·hs·mcus_x wide).  ``restart_interval``
+    > 0 emits an RSTm marker (m cycling 0–7) after every that-many MCUs —
+    byte-aligned, DC predictors reset — matching a DRI segment the
+    container must then declare (T.81 §B.2.4.4): the resynchronization
+    layout real encoders emit so one corrupt bit can't poison a whole
+    scan, and the unit a parallel decoder splits on."""
     sampling = sampling or [(1, 1)] * len(planes)
-    a = _dct_basis()
-    qmat = q[np.argsort(_JPEG_ZIGZAG)].reshape(8, 8)
-    h0, w0 = planes[0].shape
+    n, h0, w0 = planes[0].shape
     hs0, vs0 = sampling[0]
     mcus_y, mcus_x = h0 // (8 * vs0), w0 // (8 * hs0)
-
-    # Phase 1 — FDCT + quantize every block in MCU-interleaved order,
-    # with the EXACT per-block 2-D matmul expression the old _encode_block
-    # used (a batched einsum differs in the last ulp and flips np.round at
-    # .5 boundaries — see _quantized_block_coefs), collecting the zigzag
-    # coefficient rows and each block's component index.
+    n_mcu = mcus_y * mcus_x
     n_per_mcu = sum(hs * vs for hs, vs in sampling)
-    nb = mcus_y * mcus_x * n_per_mcu
+    nb = n * n_mcu * n_per_mcu
     if nb == 0:
-        return b""
-    zz = np.empty((nb, 64), dtype=np.int64)
-    comp = np.empty(nb, dtype=np.int64)
-    i = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            for ci, plane in enumerate(planes):
-                hs, vs = sampling[ci]
-                for byy in range(vs):
-                    for bxx in range(hs):
-                        by, bx = (my * vs + byy) * 8, (mx * hs + bxx) * 8
-                        block = plane[by : by + 8, bx : bx + 8] - 128.0
-                        qc = np.round((a @ block @ a.T) / qmat).astype(
-                            np.int64
-                        )
-                        zz[i] = qc.reshape(-1)[_JPEG_ZIGZAG]
-                        comp[i] = ci
-                        i += 1
+        return [b""] * n
+
+    # Segments are (image, restart interval) pairs, numbered image-major.
+    n_seg1 = -(-n_mcu // restart_interval) if restart_interval else 1
+    mcu = np.arange(n * n_mcu)
+    seg_of_mcu = (mcu // n_mcu) * n_seg1
+    if restart_interval:
+        seg_of_mcu += (mcu % n_mcu) // restart_interval
+
+    # Phase 1 — one stacked FDCT + quantize per component (bit-identical
+    # to per-block 2-D matmuls, unlike einsum: see _quantized_block_coefs),
+    # each component's blocks in scan order with its DC turned into first
+    # differences (reset to 0 at segment starts), then interleaved into
+    # per-image MCU order as zigzag rows.
+    units = []
+    for coefs, (hs, vs) in zip(_quantized_block_coefs(planes, q), sampling):
+        u = (
+            coefs.reshape(n, mcus_y, vs, mcus_x, hs, 64)
+            .transpose(0, 1, 3, 2, 4, 5)
+            .reshape(n * n_mcu, hs * vs, 64)
+        )
+        dc, sg = u[..., 0].reshape(-1), np.repeat(seg_of_mcu, hs * vs)
+        pr = np.concatenate(([0], dc[:-1]))
+        pr[np.concatenate(([True], sg[1:] != sg[:-1]))] = 0
+        u[..., 0] = (dc - pr).reshape(n * n_mcu, hs * vs)
+        units.append(u)
+    zz = np.concatenate(units, axis=1).reshape(nb, 64)
+    seg_id = np.repeat(seg_of_mcu, n_per_mcu)
 
     # Phase 2 — vectorized huffman symbol generation (§4.2: the per-symbol
     # bit-writer loop was >70 % of encode time).  Pure integer work, so the
     # stream is bit-identical by construction; a differential test pins it
     # against the verbatim pre-r12 per-block loop.
-    if restart_interval:
-        seg_id = (
-            np.repeat(np.arange(mcus_y * mcus_x), n_per_mcu)
-            // restart_interval
-        )
-    else:
-        seg_id = np.zeros(nb, dtype=np.int64)
-
-    # DC: per-component first differences, reset to 0 at segment starts.
-    dc = zz[:, 0]
-    dc_diff = np.empty(nb, dtype=np.int64)
-    for ci in range(len(planes)):
-        m = comp == ci
-        dcc, sg = dc[m], seg_id[m]
-        pr = np.concatenate(([0], dcc[:-1]))
-        pr[np.concatenate(([True], sg[1:] != sg[:-1]))] = 0
-        dc_diff[m] = dcc - pr
-    dc_size, dc_amp = _jpeg_magnitude_arrays(dc_diff)
+    dc_size, dc_amp = _jpeg_magnitude_arrays(zz[:, 0])
     if int(dc_size.max(initial=0)) > 16:  # beyond any DHT = old KeyError
         raise KeyError(int(dc_size.max()))
     dcc_tab, dcl_tab = _JPEG_DC_ARRS_K
@@ -1195,18 +1184,19 @@ def _jpeg_entropy_encode(
     live = nbits > 0  # zero-size DC amplitudes carry no bits
     vals, nbits, item_seg = vals[live], nbits[live], item_seg[live]
 
-    # Per restart segment: pack (flush-padded with 1-bits, 0xFF00-stuffed —
-    # the restart/flush semantics of tests/ref_bitio.py's _BitWriter), RSTm
-    # (m cycling 0-7) between segments, raw marker bytes never stuffed
-    # (T.81 §B.2.1).
-    n_seg = int(seg_id[-1]) + 1
-    out = bytearray()
-    for s in range(n_seg):
-        lo, hi = np.searchsorted(item_seg, [s, s + 1])
-        if s:
-            out += bytes([0xFF, 0xD0 + ((s - 1) & 7)])
-        out += _pack_bits_np(vals[lo:hi], nbits[lo:hi])
-    return bytes(out)
+    # Pack every segment in one pass (flush-padded with 1-bits, 0xFF00-
+    # stuffed — the restart/flush semantics of tests/ref_bitio.py's
+    # _BitWriter), then join each image's segments with RSTm (m cycling
+    # 0-7), raw marker bytes never stuffed (T.81 §B.2.1).
+    segs = _pack_segments_np(
+        vals, nbits, np.searchsorted(item_seg, np.arange(1, n * n_seg1 + 1))
+    )
+    for k in range(len(segs)):
+        if k % n_seg1:
+            segs[k] = bytes([0xFF, 0xD0 + ((k % n_seg1 - 1) & 7)]) + segs[k]
+    return [
+        b"".join(segs[k : k + n_seg1]) for k in range(0, len(segs), n_seg1)
+    ]
 
 
 def _jpeg_seg(marker: int, body: bytes) -> bytes:
@@ -1301,27 +1291,28 @@ def _jpeg_sos(
 
 
 def _jpeg_container(h: int, w: int, q: np.ndarray, n_comp: int,
-                    entropy: bytes,
+                    scans: list[bytes],
                     sampling: list[tuple[int, int]] | None = None,
-                    restart_interval: int = 0) -> bytes:
-    """Assemble the sequential JFIF byte stream around an entropy-coded
-    scan: APP0, DQT (table 0), SOF0 with per-component sampling factors
-    (default 1×1 everywhere), the Annex-K DC/AC table pair, a DRI segment
-    when ``restart_interval`` > 0, SOS binding every component to them."""
+                    restart_interval: int = 0) -> list[bytes]:
+    """Assemble one sequential JFIF byte stream around each entropy-coded
+    scan of a batch, the header built once: APP0, DQT (table 0), SOF0
+    with per-component sampling factors (default 1×1 everywhere), the
+    Annex-K DC/AC table pair, a DRI segment when ``restart_interval`` >
+    0, SOS binding every component to them."""
     sampling = sampling or [(1, 1)] * n_comp
     # T.81 forbids a 16-bit (pq=1) DQT under SOF0 (baseline), so such a
     # table makes the frame SOF1 (extended sequential, huffman, same scan
     # layout at 8-bit precision) and the stream stays spec-conforming for
     # stock decoders (review catch r7).
-    return _jpeg_stream(
+    head = b"".join((
         _jpeg_app(raw_rgb=False),
         _jpeg_dqt(q),
         _jpeg_sof(0xC1 if int(q.max()) > 255 else 0xC0, h, w, sampling),
         _jpeg_dht(ac=True),
         _jpeg_dri(restart_interval),
         _jpeg_sos(range(1, n_comp + 1), 0, 63),
-        entropy,
-    )
+    ))
+    return [_jpeg_stream(head, scan) for scan in scans]
 
 
 def _jpeg_quant(quant: np.ndarray | None) -> np.ndarray:
@@ -1338,34 +1329,37 @@ def _jpeg_quant(quant: np.ndarray | None) -> np.ndarray:
     return q.astype(np.int32)
 
 
+def _jpeg_one(pixels: np.ndarray) -> np.ndarray:
+    """One image as a batch of one (a 1-D array is one row of pixels)."""
+    px = np.ascontiguousarray(pixels, dtype=np.uint8)
+    return (px[None, :] if px.ndim == 1 else px)[None]
+
+
 def _jpeg_prepare_planes(
-    pixels: np.ndarray, subsampling: str
+    stack: np.ndarray, subsampling: str
 ) -> tuple[int, int, list[np.ndarray], list[tuple[int, int]]]:
-    """Shared encoder prep (sequential + progressive): 1-D promotion,
+    """Shared encoder prep (sequential + progressive) over a stack of
+    same-shape images, (n, h, w) gray or (n, h, w, 3) RGB uint8:
     RGB→YCbCr (BT.601 full-range), edge padding to the MCU grid, and 2×2
     box-average chroma subsampling for 4:2:0.  Returns
-    ``(h, w, planes, sampling)`` with float64 planes already padded to
-    their MCU-aligned shapes.
+    ``(h, w, planes, sampling)`` with one (n, ph, pw) float64 stack per
+    component, already padded to its MCU-aligned shape.
 
     The float expressions here are deliberately shared VERBATIM by both
     encoders: the progressive==sequential decode bit-identity contract
     requires identical plane values, and a rephrased expression can
     differ in the last ulp, flipping ``np.round`` at .5 boundaries
     (round-7 lesson; see ``_quantized_block_coefs``)."""
-    px = np.ascontiguousarray(pixels, dtype=np.uint8)
-    if px.ndim == 1:
-        px = px[None, :]
-    if px.ndim == 2:
-        h, w = px.shape
-        ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-        plane = np.pad(
-            px.astype(np.float64), ((0, ph - h), (0, pw - w)), mode="edge"
-        )
-        return h, w, [plane], [(1, 1)]
-    if px.ndim != 3 or px.shape[2] != 3:
+    if stack.ndim != 3 and (stack.ndim != 4 or stack.shape[3] != 3):
         raise ValueError("JPEG encoder expects (h, w) or (h, w, 3) pixels")
-    h, w = px.shape[:2]
-    fpx = px.astype(np.float64)
+    n, h, w = stack.shape[:3]
+
+    def pad(p, m):  # edge-replicate rows and columns to multiples of m
+        return np.pad(p, ((0, 0), (0, -h % m), (0, -w % m)), mode="edge")
+
+    if stack.ndim == 3:
+        return h, w, [pad(stack.astype(np.float64), 8)], [(1, 1)]
+    fpx = stack.astype(np.float64)
     r, g, b = fpx[..., 0], fpx[..., 1], fpx[..., 2]
     ycc = [
         0.299 * r + 0.587 * g + 0.114 * b,                    # Y
@@ -1373,28 +1367,18 @@ def _jpeg_prepare_planes(
         128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b,        # Cr
     ]
     if subsampling == "4:4:4":
-        ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-        planes = [
-            np.pad(
-                np.clip(np.round(p), 0, 255),
-                ((0, ph - h), (0, pw - w)),
-                mode="edge",
-            )
-            for p in ycc
-        ]
+        planes = [pad(np.clip(np.round(p), 0, 255), 8) for p in ycc]
         return h, w, planes, [(1, 1)] * 3
     if subsampling != "4:2:0":
         raise ValueError(f"unsupported subsampling {subsampling!r}")
     # 4:2:0: MCU is 16×16 luma pixels — pad everything to 16-multiples
     # (edge replication), box-average the UNROUNDED chroma planes 2×2
     # (one rounding step instead of two), round/clip each stored plane.
-    ph, pw = -(-h // 16) * 16, -(-w // 16) * 16
-    full = [
-        np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge") for p in ycc
-    ]
+    full = [pad(p, 16) for p in ycc]
+    ph, pw = full[0].shape[1:]
     planes = [np.clip(np.round(full[0]), 0, 255)] + [
         np.clip(
-            np.round(c.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))),
+            np.round(c.reshape(n, ph // 2, 2, pw // 2, 2).mean(axis=(2, 4))),
             0,
             255,
         )
@@ -1447,6 +1431,8 @@ def _parse_dht(
         tc, th = body[i] >> 4, body[i] & 0x0F
         bits = [0] + list(body[i + 1 : i + 17])
         nv = sum(bits)
+        if i + 17 + nv > len(body):
+            raise ValueError("truncated JPEG huffman table")
         key = bytes(body[i + 1 : i + 17 + nv])
         hit = _DHT_CACHE.get(key)
         if hit is None:
@@ -1468,6 +1454,8 @@ def _parse_sof(body: bytes) -> tuple[int, int, list[tuple[int, int, int, int]]]:
     don't shape the data."""
     import struct  # noqa: PLC0415
 
+    if len(body) < 6:
+        raise ValueError("truncated JPEG frame header")
     prec, h, w, nc = struct.unpack_from(">BHHB", body, 0)
     if prec != 8:
         raise ValueError("non-8-bit JPEG unsupported")
@@ -1500,10 +1488,37 @@ def _jpeg_geometry(
     return hmax, vmax, mcus_x, mcus_y, n_blocks
 
 
+def _parse_sos(
+    body: bytes,
+) -> tuple[list[tuple[int, int, int]], int, int, int, int]:
+    """SOS header parse shared by every decoder: ``(comps, ss, se, ah,
+    al)`` with comps as (component id, DC table, AC table) in scan
+    order; a header cut short raises ValueError."""
+    if not body or len(body) < 4 + 2 * body[0]:
+        raise ValueError("truncated JPEG scan header")
+    ns = body[0]
+    comps = [
+        (body[1 + 2 * si], body[2 + 2 * si] >> 4, body[2 + 2 * si] & 0x0F)
+        for si in range(ns)
+    ]
+    ss, se, aa = body[1 + 2 * ns : 4 + 2 * ns]
+    return comps, ss, se, aa >> 4, aa & 0x0F
+
+
+def _parse_dri(body: bytes) -> int:
+    """The restart interval a DRI segment declares."""
+    if len(body) < 2:
+        raise ValueError("truncated JPEG restart interval")
+    return int.from_bytes(body[:2], "big")
+
+
 class _JpegMarkers:
     """The marker walk all JPEG decoders share: checks SOI, then yields
     ``(marker, body)`` per marker segment — 0xFF alignment check, length
     field, body — until EOI or until fewer than ``tail`` bytes remain.
+    A length field cut short raises ValueError; a body cut short is
+    yielded as it is, and each parser refuses one it cannot read (a
+    decoder that never reads the segment may still decode its scans).
     ``start`` is the offset of the segment just yielded and ``pos`` the
     offset just past it; a decoder that consumes an entropy-coded scan
     moves ``pos`` past the scan and the walk resumes there."""
@@ -1519,8 +1534,6 @@ class _JpegMarkers:
         return self
 
     def __next__(self) -> tuple[int, bytes]:
-        import struct  # noqa: PLC0415
-
         data, pos = self.data, self.pos
         if pos + self.tail > len(data):
             raise StopIteration
@@ -1529,7 +1542,9 @@ class _JpegMarkers:
         marker = data[pos + 1]
         if marker == 0xD9:  # EOI
             raise StopIteration
-        (seglen,) = struct.unpack_from(">H", data, pos + 2)
+        if pos + 4 > len(data):
+            raise ValueError("truncated JPEG marker segment")
+        seglen = int.from_bytes(data[pos + 2 : pos + 4], "big")
         self.start, self.pos = pos, pos + 2 + seglen
         return marker, data[pos + 4 : self.pos]
 
@@ -1551,14 +1566,7 @@ def encode_jpeg_gray8(
     px = np.ascontiguousarray(pixels, dtype=np.uint8)
     if px.ndim == 3:
         raise ValueError("encode_jpeg_gray8 expects (h, w); use rgb24")
-    h, w, planes, _ = _jpeg_prepare_planes(px, "4:4:4")
-    q = _jpeg_quant(quant)
-    entropy = _jpeg_entropy_encode(
-        planes, q, restart_interval=restart_interval
-    )
-    return _jpeg_container(
-        h, w, q, 1, entropy, restart_interval=restart_interval
-    )
+    return _encode_jpeg_batch(_jpeg_one(px), quant, "4:4:4", restart_interval)[0]
 
 
 def encode_jpeg_rgb24(
@@ -1582,14 +1590,24 @@ def encode_jpeg_rgb24(
     px = np.ascontiguousarray(pixels, dtype=np.uint8)
     if px.ndim != 3 or px.shape[2] != 3:
         raise ValueError("encode_jpeg_rgb24 expects (h, w, 3)")
-    h, w, planes, sampling = _jpeg_prepare_planes(px, subsampling)
+    return _encode_jpeg_batch(px[None], quant, subsampling, restart_interval)[0]
+
+
+def _encode_jpeg_batch(
+    stack: np.ndarray,
+    quant: np.ndarray | None = None,
+    subsampling: str = "4:4:4",
+    restart_interval: int = 0,
+) -> list[bytes]:
+    """Sequential JFIF streams for a stack of same-shape images, (n, h, w)
+    gray or (n, h, w, 3) RGB uint8, in one vectorized pass and under one
+    container header.  ``encode_jpeg_gray8`` and ``encode_jpeg_rgb24``
+    are its batch of one."""
+    h, w, planes, sampling = _jpeg_prepare_planes(stack, subsampling)
     q = _jpeg_quant(quant)
-    entropy = _jpeg_entropy_encode(
-        planes, q, sampling=sampling, restart_interval=restart_interval
-    )
+    scans = _jpeg_entropy_encode(planes, q, sampling, restart_interval)
     return _jpeg_container(
-        h, w, q, 3, entropy, sampling=sampling,
-        restart_interval=restart_interval,
+        h, w, q, len(planes), scans, sampling, restart_interval
     )
 
 
@@ -1732,8 +1750,6 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
     grayscale values, or interleaved per-channel RGB byte samples (the
     ``_decode_bmp`` 24-bit convention), cropped to the true SOF dims.
     """
-    import struct  # noqa: PLC0415
-
     qtables: dict[int, np.ndarray] = {}
     htables: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
     comps: list[tuple[int, int, int, int]] = []  # (id, hs, vs, tq)
@@ -1759,7 +1775,7 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
                       0xCB, 0xCD, 0xCE, 0xCF):
             raise ValueError(f"unsupported JPEG SOF type FF{marker:02X}")
         if marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack_from(">H", body, 0)
+            restart_interval = _parse_dri(body)
         if marker == 0xDB:  # DQT
             _parse_dqt(body, qtables)
         elif marker in (0xC0, 0xC1):  # SOF0 baseline / SOF1 ext. sequential
@@ -1767,10 +1783,7 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
         elif marker == 0xC4:  # DHT
             _parse_dht(body, htables)
         elif marker == 0xDA:  # SOS
-            ns = body[0]
-            for si in range(ns):
-                cid, tabs = body[1 + 2 * si], body[2 + 2 * si]
-                scan_comps.append((cid, tabs >> 4, tabs & 0x0F))
+            scan_comps = _parse_sos(body)[0]
             scan_pos = walk.pos
             break
     if h is None or scan_pos is None or not comps:
@@ -1954,29 +1967,27 @@ def _true_block_grid(h, w, hs, vs, hmax, vmax) -> tuple[int, int]:
 def _quantized_block_coefs(
     planes: list[np.ndarray], q: np.ndarray,
 ) -> list[np.ndarray]:
-    """FDCT + quantize every 8×8 block of each (MCU-padded) plane;
-    returns per-plane (bh, bw, 64) int64 arrays in ZIGZAG order — the
-    shared coefficient form both progressive scan encoders read.
+    """FDCT + quantize every 8×8 block of each (n, ph, pw) MCU-padded
+    plane stack; returns per-plane (n, bh, bw, 64) int64 arrays in ZIGZAG
+    order — the one FDCT the sequential and progressive encoders share.
 
-    Deliberately the EXACT per-block expression ``_encode_block`` uses
-    (2-D matmuls, same operation order): a vectorized einsum differs in
-    the last ulp, which flips np.round at .5 boundaries and breaks the
-    progressive==sequential bit-identity contract (caught by the golden
-    round-trip test)."""
+    One stacked ``a @ blocks @ a.T`` over every block gives the same bits
+    as the per-block 2-D matmul (both run one BLAS product per 8×8 pair),
+    which ``test_stacked_fdct_matches_per_block_matmul`` pins; an
+    ``einsum`` form does NOT — it differs in the last ulp, which flips
+    np.round at .5 boundaries and breaks the progressive==sequential
+    bit-identity contract (caught by the golden round-trip test)."""
     a = _dct_basis()
     qmat = q[np.argsort(_JPEG_ZIGZAG)].reshape(8, 8)
     out = []
     for plane in planes:
-        bh, bw = plane.shape[0] // 8, plane.shape[1] // 8
-        arr = np.zeros((bh, bw, 64), dtype=np.int64)
-        for by in range(bh):
-            for bx in range(bw):
-                block = (
-                    plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] - 128.0
-                )
-                qc = np.round((a @ block @ a.T) / qmat).astype(np.int64)
-                arr[by, bx] = qc.reshape(-1)[_JPEG_ZIGZAG]
-        out.append(arr)
+        n, ph, pw = plane.shape
+        bh, bw = ph // 8, pw // 8
+        blocks = np.ascontiguousarray(
+            plane.reshape(n, bh, 8, bw, 8).transpose(0, 1, 3, 2, 4)
+        ) - 128.0
+        qc = np.round((a @ blocks @ a.T) / qmat).astype(np.int64)
+        out.append(qc.reshape(n, bh, bw, 64)[..., _JPEG_ZIGZAG])
     return out
 
 
@@ -2026,14 +2037,16 @@ def encode_jpeg_progressive(
             f"ac_bands must cover the whole 1..63 spectrum, got {ac_bands}"
         )
     q = _jpeg_quant(quant)
-    h, w, planes, sampling = _jpeg_prepare_planes(pixels, subsampling)
+    h, w, planes, sampling = _jpeg_prepare_planes(
+        _jpeg_one(pixels), subsampling
+    )
     n_comp = len(planes)
     hmax = max(s[0] for s in sampling)
     vmax = max(s[1] for s in sampling)
     hs0, vs0 = sampling[0]
-    mcus_y = planes[0].shape[0] // (8 * vs0)
-    mcus_x = planes[0].shape[1] // (8 * hs0)
-    coefs = _quantized_block_coefs(planes, q)
+    mcus_y = planes[0].shape[1] // (8 * vs0)
+    mcus_x = planes[0].shape[2] // (8 * hs0)
+    coefs = [c[0] for c in _quantized_block_coefs(planes, q)]
     dc_codes = _JPEG_DC_CODES_K
     ac_codes = _JPEG_AC_CODES_K
 
@@ -2200,8 +2213,6 @@ def _decode_jpeg_progressive(data: bytes) -> np.ndarray:
     is cycle-checked 0–7, and resets the DC predictors and EOB run.
     Arithmetic-coded progressive (SOF10) never reaches here (refused at
     the marker walk)."""
-    import struct  # noqa: PLC0415
-
     qtables: dict[int, np.ndarray] = {}
     htables: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
     comps: list[tuple[int, int, int, int]] = []
@@ -2231,7 +2242,7 @@ def _decode_jpeg_progressive(data: bytes) -> np.ndarray:
     walk = _JpegMarkers(data, tail=2)
     for marker, body in walk:
         if marker == 0xDD:
-            (restart_interval,) = struct.unpack_from(">H", body, 0)
+            restart_interval = _parse_dri(body)
         elif marker == 0xDB:
             _parse_dqt(body, qtables)
         elif marker == 0xC2:
@@ -2256,16 +2267,12 @@ def _decode_jpeg_progressive(data: bytes) -> np.ndarray:
         elif marker == 0xDA:
             if not comps:
                 raise ValueError("JPEG scan before SOF")
-            ns = body[0]
-            scom = []
-            for si in range(ns):
-                cid, tabs_b = body[1 + 2 * si], body[2 + 2 * si]
-                ci = next(
-                    i for i, c in enumerate(comps) if c[0] == cid
-                )
-                scom.append((ci, tabs_b >> 4, tabs_b & 0x0F))
-            ss, se, aa = body[1 + 2 * ns : 4 + 2 * ns]
-            ah, al = aa >> 4, aa & 0x0F
+            sos_comps, ss, se, ah, al = _parse_sos(body)
+            ns = len(sos_comps)
+            scom = [
+                (next(i for i, c in enumerate(comps) if c[0] == cid), td, ta)
+                for cid, td, ta in sos_comps
+            ]
             if ss > se or se > 63 or al > 13:
                 raise ValueError("bad progressive scan parameters")
             # Table-driven fast reads over preprocessed _FastBits segments
@@ -2555,8 +2562,9 @@ def _decode_jpeg_progressive(data: bytes) -> np.ndarray:
     inv_zz = np.argsort(_JPEG_ZIGZAG)
     planes = []
     # Per-block 2-D matmuls, the EXACT expression the sequential decoder
-    # uses — a batched einsum differs in the last ulp and flips the final
-    # pixel rounding, breaking progressive==sequential bit-identity.
+    # uses.  A stacked ``@`` gives the same bits; an einsum differs in the
+    # last ulp and flips the final pixel rounding, breaking
+    # progressive==sequential bit-identity (see _quantized_block_coefs).
     for ci, (cid, hs, vs, tq) in enumerate(comps):
         if tq not in qtables:
             raise ValueError("missing quantization table")
@@ -2580,28 +2588,28 @@ def _roundtrip_audit(
     shape: tuple[int, ...],
     size_col: str,
     checks: tuple[str, ...],
-    row_fn: Callable[[np.ndarray], tuple[bool, ...]],
+    batch_fn: Callable[[np.ndarray], list[tuple[bool, ...]]],
 ) -> DataFrame:
     """The frame every ``*_roundtrip_audit`` codec contract shares.  Rows
     whose ``text_col`` has fewer than ``n`` utf-8 bytes are dropped (the
     callers' oracles apply the same predicate).  Each remaining row's
-    first ``n`` bytes become ``raw``, a uint8 array of ``shape``, and the
+    first ``n`` bytes become a uint8 array of ``shape``, and each Arrow
+    batch hands ``batch_fn`` its rows as one (rows, *shape) stack.  Every
     row yields ``doc_id``, ``size_col`` (= ``n``) and one boolean column
-    per name in ``checks``, filled in order from ``row_fn(raw)``.  One
-    ``row_fn`` per audit, not one function per column: most audits test
-    several properties of one encode/decode, which must run once."""
+    per name in ``checks``, filled in order from its tuple in
+    ``batch_fn(raws)``: one tuple per row, not one function per column,
+    since most audits test several properties of one encode/decode."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids, flags = [], []
-            for i, t in zip(pdf["_id"], pdf["_text"]):
-                raw = np.frombuffer(
-                    str(t).encode("utf-8")[:n], dtype=np.uint8
-                ).reshape(shape)
-                ids.append(int(i))
-                flags.append(row_fn(raw))
+            ids = [int(i) for i in pdf["_id"]]
+            raws = np.frombuffer(
+                b"".join(str(t).encode("utf-8")[:n] for t in pdf["_text"]),
+                dtype=np.uint8,
+            ).reshape(len(ids), *shape)
+            flags = batch_fn(raws)
             cols = {"doc_id": ids, size_col: [n] * len(ids)}
             for name, col in zip(checks, zip(*flags)):
                 cols[name] = [bool(v) for v in col]
@@ -2664,18 +2672,20 @@ def jpeg_roundtrip_audit(
     filtered out (the caller's oracle applies the same predicate).
 
     Scale: a pure Arrow-batched ``mapInPandas`` — no shuffle, constant
-    memory per batch; the codec is the per-row work, exactly the shape a
-    real decode stage has at 100 TB (where this Python baseline swaps
-    for a codec library via the pinned ``_decode_bytes`` boundary).
+    memory per batch.  Each Arrow batch is encoded in one vectorized call
+    (``_encode_jpeg_batch``, whose batch of one is ``encode_jpeg_gray8``)
+    and each stream decoded on its own — the shape a real decode stage
+    has at 100 TB (where this Python baseline swaps for a codec library
+    via the pinned ``_decode_bytes`` boundary).
     """
 
-    def row(raw):
-        payload = encode_jpeg_gray8(raw)
+    def row(payload, raw):
         return _is_jfif(payload), _max_err_le_3(_decode_jpeg(payload), raw)
 
     return _roundtrip_audit(
         df, id_col, text_col, side * side, (side, side), "n_pixels",
-        ("is_jfif", "max_err_le_3"), row,
+        ("is_jfif", "max_err_le_3"),
+        lambda raws: list(map(row, _encode_jpeg_batch(raws), raws)),
     )
 
 
@@ -2702,11 +2712,10 @@ def jpeg420_roundtrip_audit(
     budget as the grayscale contract — coefficient rounding ≤ 0.5 ×
     IDCT gain 3.49 + final rounding 0.5 < 4, i.e. an integer deviation
     of 4+ is impossible for a correct codec.  An MCU-order slip, a
-    swapped chroma block, or a broken upsampler lands far outside."""
+    swapped chroma block, or a broken upsampler lands far outside.
+    Each Arrow batch is encoded in one ``_encode_jpeg_batch`` call."""
 
-    def row(raw):
-        rgb = np.repeat(raw[..., None], 3, axis=2)
-        payload = encode_jpeg_rgb24(rgb, subsampling="4:2:0")
+    def row(payload, rgb):
         sof_at = payload.find(b"\xff\xc0")
         return (
             _is_jfif(payload),
@@ -2714,9 +2723,13 @@ def jpeg420_roundtrip_audit(
             _max_err_le_3(_decode_jpeg(payload), rgb),
         )
 
+    def check(raws):
+        rgbs = np.repeat(raws[..., None], 3, axis=3)
+        return list(map(row, _encode_jpeg_batch(rgbs, None, "4:2:0"), rgbs))
+
     return _roundtrip_audit(
         df, id_col, text_col, side * side, (side, side), "n_pixels",
-        ("is_jfif", "sof_is_420", "max_err_le_3"), row,
+        ("is_jfif", "sof_is_420", "max_err_le_3"), check,
     )
 
 
@@ -2747,10 +2760,10 @@ def jpeg_restart_roundtrip_audit(
     alone shifts whole blocks).
 
     Scale: pure Arrow-batched ``mapInPandas`` behind an explicit
-    repartition — same shape as the other codec audits."""
+    repartition — same shape as the other codec audits, each Arrow batch
+    encoded in one ``_encode_jpeg_batch`` call."""
 
-    def row(raw):
-        payload = encode_jpeg_gray8(raw, restart_interval=restart_interval)
+    def row(payload, raw):
         sos = payload.find(b"\xff\xda")
         scan = payload[sos:]
         return (
@@ -2760,9 +2773,13 @@ def jpeg_restart_roundtrip_audit(
             _max_err_le_3(_decode_jpeg(payload), raw),
         )
 
+    def check(raws):
+        payloads = _encode_jpeg_batch(raws, restart_interval=restart_interval)
+        return list(map(row, payloads, raws))
+
     return _roundtrip_audit(
         df, id_col, text_col, side * side, (side, side), "n_pixels",
-        ("is_jfif", "has_restarts", "max_err_le_3"), row,
+        ("is_jfif", "has_restarts", "max_err_le_3"), check,
     )
 
 
@@ -2797,7 +2814,8 @@ def jpeg_progressive_roundtrip_audit(
 
     return _roundtrip_audit(
         df, id_col, text_col, side * side, (side, side), "n_pixels",
-        ("is_sof2", "matches_sequential", "max_err_le_3"), row,
+        ("is_sof2", "matches_sequential", "max_err_le_3"),
+        lambda raws: list(map(row, raws)),
     )
 
 
@@ -3161,8 +3179,6 @@ def _decode_jpeg_lossless_frames(data: bytes) -> np.ndarray:
     2×2, a differential frame without a preceding EXP, and any frame/DHP
     dimension mismatch.  Returns the same flat uint8 convention as
     ``_decode_jpeg``."""
-    import struct  # noqa: PLC0415
-
     htables: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
     full = None  # (h, w, comps) from DHP, or from the lone SOF3 without one
     pyramid = False  # a DHP declared a hierarchical sequence
@@ -3205,7 +3221,7 @@ def _decode_jpeg_lossless_frames(data: bytes) -> np.ndarray:
         elif marker == 0xC4:
             _parse_dht(body, htables)
         elif marker == 0xDD:
-            (ri,) = struct.unpack_from(">H", body, 0)
+            ri = _parse_dri(body)
             if ri:
                 raise ValueError(f"restart intervals in {kind} scans unsupported")
         elif marker in (0xC3, 0xC7):
@@ -3236,23 +3252,22 @@ def _decode_jpeg_lossless_frames(data: bytes) -> np.ndarray:
             if cur is None:
                 raise ValueError("hierarchical scan before its frame")
             fh, fw, fcomps, differential = cur
-            ns = body[0]
+            sos_comps, ss, se, ah, al = _parse_sos(body)
+            ns = len(sos_comps)
             # the scan's component sequence must equal the frame's —
             # order defines the interleave, so a reordered or duplicated
             # list would silently decode wrong pixels; refuse instead
             # (review catch r8, same 'refuse rather than misparse'
             # contract as the DQT precision guard)
-            scan_cids = [body[1 + 2 * si] for si in range(ns)]
-            if scan_cids != [c[0] for c in fcomps]:
+            if [c[0] for c in sos_comps] != [c[0] for c in fcomps]:
                 raise ValueError("lossless scan component order mismatch")
-            ss, se, aa = body[1 + 2 * ns : 4 + 2 * ns]
             if differential and ss != 0:
                 raise ValueError(f"bad differential scan predictor {ss}")
             if not differential and not 1 <= ss <= 7:
                 raise ValueError(f"bad lossless predictor {ss}")
-            if se != 0 or (aa >> 4) != 0:
+            if se != 0 or ah != 0:
                 raise ValueError("bad lossless scan parameters")
-            if (aa & 0x0F) != 0:
+            if al != 0:
                 raise ValueError("lossless point transform unsupported")
             n_samples = fh * fw * ns
             total_budget -= n_samples
@@ -3344,7 +3359,8 @@ def jpeg_lossless_roundtrip_audit(
 
     return _roundtrip_audit(
         df, id_col, text_col, side * side, (side, side), "n_pixels",
-        ("is_sof3", "gray_exact_all_predictors", "rgb_exact"), row,
+        ("is_sof3", "gray_exact_all_predictors", "rgb_exact"),
+        lambda raws: list(map(row, raws)),
     )
 
 
@@ -3388,7 +3404,8 @@ def jpeg_hierarchical_roundtrip_audit(
 
     return _roundtrip_audit(
         df, id_col, text_col, side * side, (side, side), "n_pixels",
-        ("is_dhp", "gray_exact_all_levels", "rgb_exact"), row,
+        ("is_dhp", "gray_exact_all_levels", "rgb_exact"),
+        lambda raws: list(map(row, raws)),
     )
 
 
@@ -3429,7 +3446,8 @@ def png_palette_roundtrip_audit(
 
     return _roundtrip_audit(
         df, id_col, text_col, side * side, (side, side), "n_pixels",
-        ("palette_adam7_exact",), lambda raw: (ok(raw),),
+        ("palette_adam7_exact",),
+        lambda raws: [(ok(raw),) for raw in raws],
     )
 
 
@@ -3478,7 +3496,8 @@ def png_full_surface_roundtrip_audit(
 
     return _roundtrip_audit(
         df, id_col, text_col, side * side, (side, side), "n_pixels",
-        ("full_surface_exact",), lambda raw: (ok(raw),),
+        ("full_surface_exact",),
+        lambda raws: [(ok(raw),) for raw in raws],
     )
 
 
@@ -3515,7 +3534,8 @@ def bmp_surface_roundtrip_audit(
 
     return _roundtrip_audit(
         df, id_col, text_col, side * side, (side, side), "n_pixels",
-        ("bmp_surface_exact",), lambda raw: (ok(raw),),
+        ("bmp_surface_exact",),
+        lambda raws: [(ok(raw),) for raw in raws],
     )
 
 
@@ -3572,7 +3592,8 @@ def wav_pcm_surface_roundtrip_audit(
 
     return _roundtrip_audit(
         df, id_col, text_col, n, (n,), "n_samples",
-        ("pcm_surface_exact",), lambda raw: (ok(raw),),
+        ("pcm_surface_exact",),
+        lambda raws: [(ok(raw),) for raw in raws],
     )
 
 

@@ -53,16 +53,23 @@ def word_like_token_count(text: Column) -> Column:
     return F.regexp_count(text, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"))
 
 
+def _char_count(text: Column, chars: str) -> Column:
+    """How many characters of ``text`` are in ``chars``: the length lost
+    when ``translate`` deletes them, a per-character table lookup where a
+    negated-class ``regexp_replace`` ran the regex engine."""
+    return F.length(text) - F.length(F.translate(text, chars, ""))
+
+
 def punct_ratio(text: Column) -> Column:
     """Punctuation chars / total chars (0 for empty text)."""
     n = F.length(text)
-    p = F.length(F.regexp_replace(text, r"[^.,;:!?'\"()\[\]{}-]", ""))
+    p = _char_count(text, ".,;:!?'\"()[]{}-")
     return F.when(n == 0, F.lit(0.0)).otherwise(p / n)
 
 
 def uppercase_ratio(text: Column) -> Column:
     n = F.length(text)
-    u = F.length(F.regexp_replace(text, r"[^A-Z]", ""))
+    u = _char_count(text, "ABCDEFGHIJKLMNOPQRSTUVWXYZ")
     return F.when(n == 0, F.lit(0.0)).otherwise(u / n)
 
 
