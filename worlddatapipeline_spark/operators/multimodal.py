@@ -2725,7 +2725,8 @@ def jpeg420_roundtrip_audit(
 
     def check(raws):
         rgbs = np.repeat(raws[..., None], 3, axis=3)
-        return list(map(row, _encode_jpeg_batch(rgbs, None, "4:2:0"), rgbs))
+        payloads = _encode_jpeg_batch(rgbs, subsampling="4:2:0")
+        return list(map(row, payloads, rgbs))
 
     return _roundtrip_audit(
         df, id_col, text_col, side * side, (side, side), "n_pixels",
