@@ -565,6 +565,26 @@ def test_distinctive_terms_sample_broadcast(spark):
     assert "LessThan(doc_id,50)" in plan
 
 
+def test_global_index_sequence_over_sorted_range(spark):
+    """global_index is Spark's distributed sequence over a sort within
+    range partitions: the optimizer must never drop the sort (the index
+    would then follow shuffle arrival order), and no Python stage is
+    left in the plan."""
+    import re
+
+    plan = _plan(spark, "stable_row_index")
+    assert "MapInPandas" not in plan
+    # formatted tree, top-down, with column-pruning Projects skipped
+    tree = plan.split("\n\n")[0]
+    nodes = re.findall(r"\+- (\w+) \((\d+)\)", tree)
+    nodes = [(op, i) for op, i in nodes if op != "Project"]
+    k = [op for op, _ in nodes].index("AttachDistributedSequence")
+    assert [op for op, _ in nodes[k + 1:k + 3]] == ["Sort", "Exchange"]
+    exchange_id = nodes[k + 2][1]
+    details = plan.split(f"({exchange_id}) Exchange")[1]
+    assert details.split("\n\n")[0].count("Arguments: rangepartitioning(") == 1
+
+
 def test_trimmed_mean_single_sort_shuffle(spark):
     """Rank and count windows share ONE per-type exchange; the trim is a
     codegen'd comparison, not a second shuffle."""
@@ -621,10 +641,10 @@ _SINGLE_EXCHANGE_OK = {
     "kaplan_meier_churn",
     "minhash_verified_dups",
     "short_text_editdups",
-    # global_index per-partition size rollup: <= shuffle-partition rows
-    "curriculum_order_stats",
+    # 1-row aggregates: the max-ts anchor (read by the per-user frame and
+    # by its user count) and the user count the three tilings share
     "rfm_segments",
-    # two 1-row aggs + the 10-row decile-prefix window (VERDICT r8 item 3)
+    # the 1-row user count + the 10-row decile window (VERDICT r8 item 3)
     "gini_purchase_concentration",
     # lazy builders: each reader of a 1-row scalar aggregate shows its own
     # SinglePartition exchange in the static plan (the value-range bounds
@@ -750,21 +770,25 @@ _LAZY_QUERIES = [
     "bloom_decontamination",
     "bm25_topk_search",
     "cuped_adjusted_ab",
+    "curriculum_order_stats",
     "daily_autocorrelation",
     "degree_assortativity",
     "did_readout",
     "distribution_drift",
     "dow_seasonality",
     "embedding_ivf_recall",
+    "gini_purchase_concentration",
     "hybrid_rank_fusion",
     "lead_lag_correlation",
     "minhash_candidates",
     "negative_sampling_pairs",
     "pmi_term_pairs",
+    "rfm_segments",
     "seasonal_decompose",
     "session_conformance",
     "simhash_exact_containment",
     "simhash_near_dups",
+    "stable_row_index",
     "theil_sen_trend",
     "triangle_count",
 ]

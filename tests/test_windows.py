@@ -332,10 +332,18 @@ def test_merge_intervals_null_bounds_dropped(spark):
 
 def test_global_index_dense_and_ordered(spark):
     """Indices are exactly 0..n-1 and monotone in the requested total
-    order, across many range partitions."""
+    order, across many range partitions; chained multi-column ntile_global
+    tilings equal window ntile, including m % n != 0, m < n and an empty
+    input."""
     import random
 
-    from worlddatapipeline_spark.operators.windows import global_index
+    from pyspark.sql import Window
+
+    from worlddatapipeline_spark.operators.windows import (
+        global_index,
+        ntile_expr,
+        ntile_global,
+    )
 
     rng = random.Random(11)
     rows = [(i, rng.random()) for i in range(5000)]
@@ -345,3 +353,38 @@ def test_global_index_dense_and_ordered(spark):
     by_idx = sorted(out, key=lambda r: r["row_idx"])
     keys = [(r["v"], r["id"]) for r in by_idx]
     assert keys == sorted(keys)
+
+    # rfm_segments' shape: three chained tilings, mixed asc/desc orders
+    # over tie-heavy values with a unique tie-breaker, 8 range partitions
+    orders = [
+        ("r", [F.col("a").asc(), F.col("id").asc()]),
+        ("f", [F.col("b").desc(), F.col("id").asc()]),
+        ("m", [F.col("c").desc(), F.col("a").asc(), F.col("id").asc()]),
+    ]
+    for m, n in ((1003, 5), (3, 5), (10, 5), (0, 5)):
+        data = [
+            (i, rng.randint(0, 9), rng.randint(0, 3), rng.randint(0, 40))
+            for i in range(m)
+        ]
+        base = spark.createDataFrame(
+            data, "id long, a int, b int, c long"
+        ).repartition(4)
+        # ntile_global per level, and rfm_segments' form: one shared count
+        tiled = want = base
+        shared = base.crossJoin(base.agg(F.count(F.lit(1)).alias("n_total")))
+        for name, order in orders:
+            tiled = ntile_global(
+                tiled, n, order, out_col=name, num_partitions=8
+            )
+            shared = global_index(shared, order, num_partitions=8).withColumn(
+                name, ntile_expr(F.col("row_idx"), F.col("n_total"), n)
+            ).drop("row_idx")
+            want = want.withColumn(
+                name, F.ntile(n).over(Window.orderBy(*order))
+            )
+        cols = ["id", "r", "f", "m"]
+        expected = sorted(want.select(cols).collect())
+        assert sorted(tiled.select(cols).collect()) == expected, (m, n)
+        assert sorted(shared.select(cols).collect()) == expected, (m, n)
+    empty = spark.createDataFrame([], "id long, v double")
+    assert global_index(empty, ["v", "id"], num_partitions=8).count() == 0

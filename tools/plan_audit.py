@@ -65,6 +65,8 @@ FEATURES = {
     "cartesian": r"CartesianProduct",
     "python_batch": r"BatchEvalPython",
     "python_arrow": r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas",
+    # Spark's dense zipWithIndex operator (windows.global_index)
+    "sequence_attach": r"AttachDistributedSequence",
     "take_ordered": r"TakeOrderedAndProject",
     # a Sort node whose global flag is true: formatted "Arguments: […],
     # true, 0" / simple "Sort […], true, 0"

@@ -584,9 +584,8 @@ def merge_intervals(
 
 def global_index(
     df: DataFrame,
-    order_cols: list[str],
+    order_cols: list,
     num_partitions: int | None = None,
-    start: int = 0,
     with_total: bool = False,
 ):
     """Dense global row index (0,1,2,…) in the total order given by
@@ -594,67 +593,45 @@ def global_index(
     funnelling the data through a single-task global sort window.
 
     Plan: ``repartitionByRange`` on the order (parallel range exchange) +
-    sort within partitions, then per-partition counts roll up to a tiny
-    driver-side offset table (one row per partition, broadcast back), and
-    one Arrow pass adds ``offset + local position``.  A global
-    ``row_number()`` window is the single-partition anti-pattern this
-    avoids; per-partition work stays parallel at any scale.
+    sort within partitions, then ``row_idx`` from Spark's internal
+    ``distributed_sequence_id`` — the ``AttachDistributedSequence``
+    operator behind pandas-on-Spark's ``distributed-sequence`` index, so
+    the public DataFrame API has no equivalent.  It runs ``zipWithIndex``
+    over its child's partitions in partition order: a count sub-job and
+    the indexing pass read one cached child RDD inside the final action,
+    so both see the same sampled range bounds, and Spark releases that
+    cache when the action ends (its level is pandas-on-Spark's
+    ``compute.default_index_cache``, MEMORY_AND_DISK_SER by default).  A
+    streaming micro-batch skips that release, so an index on a stream's
+    static side stays cached until JVM GC frees the batch's plan.
+    The result is a lazy plan; a global ``row_number()`` window is the
+    single-partition anti-pattern this avoids.  ``order_cols`` should be
+    a total order (include a unique tie-breaker) so the index is
+    reproducible across runs.
 
-    The ranged frame is persisted before the counts job and released after
-    the index pass materializes: ``repartitionByRange`` SAMPLES its
-    boundaries with a per-RDD seed, so two separate jobs over an
-    unpersisted frame can disagree on the partitioning and silently skew
-    every offset (caught by the sf0.1 oracle check; sf0.01 passed by
-    luck).  The persist is the correctness barrier, not an optimization.
-    Consequence: the result comes back as an eager localCheckpoint — fine
-    for result-sized frames; for corpus-scale indexing write the indexed
-    frame to durable storage instead of holding it on executors.
-    ``order_cols`` should be a total order (include a unique tie-breaker)
-    so the index is reproducible across runs.
-
-    ``with_total=True`` returns ``(indexed_df, total_rows)``: the row
-    count is already known from the per-partition size rollup, so callers
-    that need it (ntile arithmetic) avoid a redundant count() job.
+    ``with_total=True`` returns ``(indexed_df, m)``: ``m`` is a Column
+    holding the input's row count, from a broadcast 1-row ``count`` of the
+    range-partitioned input cross-joined into ``indexed_df`` as
+    ``__global_index_total``.  When ``df`` holds only columns the count
+    branch keeps (the order columns), the count reads the index's range
+    exchange through exchange reuse, also inside a streaming micro-batch
+    where AQE is off; otherwise column pruning gives it its own.  A row
+    count does not depend on the partitioning, so the count cannot
+    disagree with the index either way.  Counting an input that is itself
+    indexed re-runs that index, so a chain of tilings should share one
+    count (``q_rfm_segments`` does).
     """
-    import numpy as np
-    from pyspark.sql import types as T
-
-    from ..session import materialize_and_release  # noqa: PLC0415
+    from pyspark.sql.internal import InternalFunction  # noqa: PLC0415
 
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    d = (
-        df.repartitionByRange(n, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .persist()
+    ranged = df.repartitionByRange(n, *order_cols)
+    out = ranged.sortWithinPartitions(*order_cols).withColumn(
+        "row_idx", InternalFunction.distributed_sequence_id()
     )
-    sizes = {
-        r["__pid"]: r["count"]
-        for r in d.groupBy(F.spark_partition_id().alias("__pid")).count().collect()
-    }
-    offsets, acc = {}, start
-    for pid in range(max(sizes) + 1 if sizes else 0):
-        offsets[pid] = acc
-        acc += sizes.get(pid, 0)
-    b = df.sparkSession.sparkContext.broadcast(offsets)
-    schema = T.StructType(
-        list(d.schema.fields) + [T.StructField("row_idx", T.LongType(), False)]
-    )
-
-    def gen(batches):
-        from pyspark import TaskContext  # noqa: PLC0415
-
-        nxt = b.value.get(TaskContext.get().partitionId(), 0)
-        for pdf in batches:
-            k = len(pdf)
-            pdf = pdf.copy()
-            pdf["row_idx"] = np.arange(nxt, nxt + k, dtype="int64")
-            nxt += k
-            yield pdf
-
-    out = materialize_and_release(d.mapInPandas(gen, schema), d)
-    if with_total:
-        return out, sum(sizes.values())
-    return out
+    if not with_total:
+        return out
+    total = ranged.agg(F.count(F.lit(1)).alias("__global_index_total"))
+    return out.crossJoin(F.broadcast(total)), F.col("__global_index_total")
 
 
 def ntile_global(
@@ -671,45 +648,42 @@ def ntile_global(
     ``q, r = divmod(m, n)``, the first ``r`` tiles get ``q + 1`` rows and
     the rest get ``q`` — computed arithmetically from the dense global
     row index that :func:`global_index` assigns via a parallel range
-    exchange.  Because the semantics match, existing ``ntile`` SQL
-    oracles stay valid verbatim (VERDICT r6 item 2: this replaces the
-    last unbounded-cardinality global-order windows — rfm_segments and
-    the user-tier dim — whose one-partition sort was the only remaining
-    100x-suspect plan).
+    exchange and Spark's internal distributed sequence.  Because the
+    semantics match, existing ``ntile`` SQL oracles stay valid verbatim.
 
     ``order_cols`` must be a total order (include a unique tie-breaker)
     exactly as the window form required for engine-stable tiling.  The
-    result is an eager localCheckpoint (inherited from global_index) —
-    sized for per-entity frames; for corpus-scale tiling write the
-    indexed frame to durable storage instead.
+    result is lazy; the index's child is cached only for the duration of
+    the action that runs it.
     """
     if n < 1:
         raise ValueError("ntile_global: n must be >= 1")
-    # with_total reuses the per-partition size rollup global_index already
-    # collected — no extra count() job (review catch r7: three chained
-    # tilings in rfm_segments were paying three redundant actions)
     idx, m = global_index(
         df, order_cols, num_partitions=num_partitions, with_total=True
     )
     return idx.withColumn(
         out_col, ntile_expr(F.col("row_idx"), m, n)
-    ).drop("row_idx")
+    ).drop("row_idx", "__global_index_total")
 
 
-def ntile_expr(index_col, m: int, n: int):
+def ntile_expr(index_col, m, n: int):
     """SQL-``ntile(n)`` tile id (1-based int) computed arithmetically from
     a dense 0-based global row index over ``m`` rows: with
     ``q, r = divmod(m, n)`` the first ``r`` tiles take ``q + 1`` rows and
-    the rest ``q`` — the exact window-function convention.  Shared by
-    :func:`ntile_global` and callers that need the raw index AND the tile
-    (e.g. the gini rank query), so the subtle tiling arithmetic lives in
-    one place."""
-    q, r = divmod(m, n)
+    the rest ``q`` — the exact window-function convention.  ``m`` is a
+    row-count Column in the same frame, e.g. the one :func:`global_index`
+    returns with ``with_total``, so the count is evaluated inside the same
+    lazy plan as the index (Spark's internal distributed sequence, whose
+    cache lives only for the action).  Shared by :func:`ntile_global` and
+    callers that need the raw index AND the tile (e.g. the gini rank
+    query), so the subtle tiling arithmetic lives in one place."""
+    q = F.floor(m / n)
+    r = m - q * n
     big = r * (q + 1)  # rows covered by the (q+1)-sized leading tiles
-    tile = F.when(index_col < big, index_col / (q + 1)).otherwise(
+    tile = F.when(index_col < big, F.floor(index_col / (q + 1))).otherwise(
         # q == 0 can only happen when m < n, where every row lands in the
-        # `index_col < big` branch (big == m); max(q, 1) just keeps the
-        # dead branch from dividing by zero.
-        r + (index_col - big) / max(q, 1)
+        # `index_col < big` branch (big == m); greatest(q, 1) just keeps
+        # the dead branch from dividing by zero.
+        r + F.floor((index_col - big) / F.greatest(q, F.lit(1)))
     )
-    return F.floor(tile).cast("int") + F.lit(1)
+    return tile.cast("int") + F.lit(1)

@@ -260,13 +260,14 @@ def q_gini_purchase_concentration(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale (VERDICT r8 item 3 — was three single-partition global-order
     windows): the rank comes from `operators/windows.global_index`
-    (parallel range exchange + broadcast per-partition offsets), the
-    decile is ntile arithmetic over that dense index (semantics
-    bit-identical to SQL ntile, same derivation as `ntile_global` — kept
-    inline because the gini sum needs the raw index too), and the
-    running sum collapses to a 10-row prefix over the DECILE aggregate
-    (cum_us is only consumed at decile granularity).  No per-user-scale
-    frame ever funnels through one task."""
+    (parallel range exchange + Spark's distributed sequence, one lazy
+    plan), the decile is ntile arithmetic over that dense index and its
+    row-count Column (semantics bit-identical to SQL ntile, same
+    derivation as `ntile_global` — kept inline because the gini sum needs
+    the raw index too), and the running sum collapses to a 10-row prefix
+    over the DECILE aggregate (cum_us is only consumed at decile
+    granularity).  No per-user-scale frame ever funnels through one
+    task."""
     from .operators import windows as win_ops
 
     (events,) = _t(spark, sf_dir, "events")
@@ -286,48 +287,45 @@ def q_gini_purchase_concentration(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     # ntile(10) via the shared tile arithmetic (windows.ntile_expr) on the
     # dense 0-based index — kept inline rather than ntile_global because
-    # the gini sum needs the raw index too
-    ranked = indexed.select(
-        "user_id",
-        "x_us",
-        (F.col("row_idx") + 1).alias("i"),
-        win_ops.ntile_expr(F.col("row_idx"), m, 10).alias("decile"),
-    )
-    gini = ranked.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("x_us").cast("decimal(38,0)")).alias("s"),
-        F.sum(
-            F.col("i").cast("decimal(38,0)") * F.col("x_us")
-        ).alias("s1"),
-    ).select(
-        F.expr(
-            "CAST(((2 * s1 - (n + 1) * s) * 1000000) div (CAST(n AS"
-            " DECIMAL(38,0)) * s) AS BIGINT)"
-        ).alias("gini_ppm")
-    )
-    # cum_us (prefix of per-user x_us up to each decile's last row) ==
-    # running sum of decile totals — a 10-row bounded window, so the
-    # unpartitioned orderBy is a fixed-size frame, not a fact-sized one
-    deciles = ranked.groupBy("decile").agg(
+    # the gini sum needs the raw index too.  Every per-user sum folds into
+    # the ONE decile aggregate, so the indexed frame is read once; the
+    # running share and the gini totals are sums over its 10 rows — a
+    # bounded window, so the unpartitioned orderBy is a fixed-size frame,
+    # not a fact-sized one.
+    deciles = indexed.groupBy(
+        win_ops.ntile_expr(F.col("row_idx"), m, 10).alias("decile")
+    ).agg(
         F.count(F.lit(1)).alias("n_users"),
         F.sum("x_us").alias("decile_us"),
+        F.sum(
+            (F.col("row_idx") + 1).cast("decimal(38,0)") * F.col("x_us")
+        ).alias("decile_s1"),
     )
-    wd = Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)
-    deciles = deciles.withColumn("cum_us", F.sum("decile_us").over(wd))
-    total = ranked.agg(F.sum("x_us").alias("total_us"))
-    return (
-        deciles.crossJoin(F.broadcast(total))
-        .crossJoin(F.broadcast(gini))
-        .select(
-            "decile",
-            "n_users",
-            "decile_us",
-            F.expr(
-                "CAST((CAST(cum_us AS DECIMAL(38,0)) * 1000000)"
-                " div total_us AS BIGINT)"
-            ).alias("cum_share_ppm"),
-            "gini_ppm",
-        )
+    wd = Window.orderBy("decile")
+    whole = wd.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    return deciles.select(
+        "decile",
+        "n_users",
+        "decile_us",
+        F.sum("decile_us")
+        .over(wd.rowsBetween(Window.unboundedPreceding, 0))
+        .alias("cum_us"),
+        F.sum("decile_us").over(whole).alias("total_us"),
+        F.sum("n_users").over(whole).alias("n"),
+        F.sum("decile_s1").over(whole).alias("s1"),
+    ).select(
+        "decile",
+        "n_users",
+        "decile_us",
+        F.expr(
+            "CAST((CAST(cum_us AS DECIMAL(38,0)) * 1000000)"
+            " div total_us AS BIGINT)"
+        ).alias("cum_share_ppm"),
+        F.expr(
+            "CAST(((2 * s1 - (n + 1) * CAST(total_us AS DECIMAL(38,0)))"
+            " * 1000000) div (CAST(n AS DECIMAL(38,0))"
+            " * CAST(total_us AS DECIMAL(38,0))) AS BIGINT)"
+        ).alias("gini_ppm"),
     )
 
 

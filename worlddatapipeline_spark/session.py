@@ -112,22 +112,17 @@ def materialize_and_release(result, *cached):
     intermediate meet at one exchange, Spark's exchange reuse already
     computes it once, and a persist + checkpoint only moves execution into
     the builder and pins a checkpoint RDD.  A barrier is allowed only
-    where (a) two readers of an intermediate share no exchange AND an
-    interleaved A/B shows the lazy plan re-reading it, or (b) the barrier
-    guards correctness.  The remaining callers, each with the second
-    reader named at its call site:
-
-    * ``windows.global_index`` — correctness: ``repartitionByRange``
-      samples its bounds per job, so the counts job and the index pass
-      must read one materialized partitioning;
-    * measured re-reads (lazy time over barrier time, sf0.1, 4 cores):
-      ``queries_analytics.q_curation_pipeline_stats`` (4.0×),
-      ``queries_mining.q_short_text_editdups`` (1.76×),
-      ``mining.association_rules`` (1.50×), ``mining.cooccurrence_cosine``
-      (1.29×), ``dedup.ngram_jaccard_pairs`` (1.24×),
-      ``queries_mining.q_kaplan_meier_churn`` (1.19×),
-      ``queries_ext.q_embedding_lsh_recall`` (1.18×) and
-      ``aggregates.skyline_2d`` (1.13×).
+    where two readers of an intermediate share no exchange AND an
+    interleaved A/B shows the lazy plan re-reading it.  The remaining
+    callers, each with the second reader named at its call site (lazy
+    time over barrier time, sf0.1, 4 cores):
+    ``queries_analytics.q_curation_pipeline_stats`` (4.0×),
+    ``queries_mining.q_short_text_editdups`` (1.76×),
+    ``mining.association_rules`` (1.50×), ``mining.cooccurrence_cosine``
+    (1.29×), ``dedup.ngram_jaccard_pairs`` (1.24×),
+    ``queries_mining.q_kaplan_meier_churn`` (1.19×),
+    ``queries_ext.q_embedding_lsh_recall`` (1.18×) and
+    ``aggregates.skyline_2d`` (1.13×).
 
     Persisting without this helper would leak the cache: the returned
     frame is lazy, so there is no point inside the builder where the cache
