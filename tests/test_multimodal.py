@@ -2601,3 +2601,193 @@ def test_jpeg_truncation_refuses_with_value_error():
             except ValueError:
                 pass
         assert decoded >= 1, name  # the whole stream at least
+
+
+def test_jpeg_entropy_encode_refuses_ac_category_above_15():
+    """An AC coefficient of magnitude 2^15 or more has category 16+,
+    which the (run, size) symbol byte cannot carry: it would alias into
+    the run nibble and emit a wrong stream without complaint.  The
+    encoder refuses it with KeyError before building symbols, as it
+    refuses a DC category beyond the DHT.  Columns alternating +-50000
+    around 128 keep the block's DC at 0 and give its AC coefficients
+    categories 17 and 19, which alias to symbols the table holds, so
+    no other check catches them."""
+    import numpy as np
+
+    plane = np.full((1, 8, 8), 128.0)
+    plane[0, :, 0::2] += 50000.0
+    plane[0, :, 1::2] -= 50000.0
+    with pytest.raises(KeyError):
+        mm._jpeg_entropy_encode([plane], mm._jpeg_quant(None))
+    plane[0] = 128.0 + (plane[0] - 128.0) / 5000.0  # +-10
+    assert mm._jpeg_entropy_encode([plane], mm._jpeg_quant(None))[0]
+
+
+def test_decode_jpeg_batch_matches_per_stream():
+    """``_decode_jpeg_batch`` returns ``[_decode_jpeg(s) for s in
+    streams]`` bit for bit: gray and RGB 4:4:4, 4:2:0, 4:2:2 and 4:4:0,
+    restart intervals 0-3, a real and a 16-bit quantization table,
+    dimensions that are not multiples of 8, streams whose scan or
+    restart segment ends on a stuffed 0xFF, two headers in one batch
+    with progressive and lossless streams mixed in, and batch sizes
+    around the lane crossover.  Same-header groups of at least
+    ``_LANE_MIN_STREAMS`` streams must actually take the lanes."""
+    import numpy as np
+
+    rng = np.random.default_rng(2222)
+    cross = mm._LANE_MIN_STREAMS
+
+    def check(streams, lanes_expected):
+        lanes = mm._decode_jpeg_lanes(streams)
+        got = mm._decode_jpeg_batch(streams)
+        assert len(got) == len(lanes) == len(streams)
+        for s, g, lane in zip(streams, got, lanes):
+            want = mm._decode_jpeg(s)
+            assert g.dtype == want.dtype and np.array_equal(g, want)
+            assert lane is None or np.array_equal(lane, want)
+        assert sum(lane is not None for lane in lanes) == lanes_expected
+
+    def batch(layout, h, w, n, ri=0, quant=None):
+        if layout == "gray":
+            px = rng.integers(0, 256, (n, h, w), dtype=np.uint8)
+            return mm._encode_jpeg_batch(px, quant, "4:4:4", ri)
+        if layout in ("4:4:4", "4:2:0"):
+            px = rng.integers(0, 256, (n, h, w, 3), dtype=np.uint8)
+            return mm._encode_jpeg_batch(px, quant, layout, ri)
+        # the public encoders emit only 4:4:4 and 4:2:0: assemble the
+        # rest from the shared entropy coder and container
+        sampling = {"4:2:2": [(2, 1), (1, 1), (1, 1)],
+                    "4:4:0": [(1, 2), (1, 1), (1, 1)]}[layout]
+        mx, my = -(-w // (8 * sampling[0][0])), -(-h // (8 * sampling[0][1]))
+        planes = [
+            rng.integers(0, 256, (n, my * vs * 8, mx * hs * 8)).astype(float)
+            for hs, vs in sampling
+        ]
+        q = mm._jpeg_quant(quant)
+        scans = mm._jpeg_entropy_encode(planes, q, sampling, ri)
+        return mm._jpeg_container(h, w, q, 3, scans, sampling, ri)
+
+    q_real = np.arange(1, 65) * 2
+    q16 = np.full(64, 3)
+    q16[[0, 9]] = 300  # forces a 16-bit DQT under SOF1
+    layouts = ["gray", "4:4:4", "4:2:0", "4:2:2", "4:4:0"]
+    for i, layout in enumerate(layouts):
+        for ri in (0, 1, 2, 3):
+            quant = (None, q_real, q16)[(i + ri) % 3]
+            check(batch(layout, 13, 29, cross, ri, quant), cross)
+    assert b"\xff\xc1" in batch("gray", 8, 8, 1, 0, q16)[0]
+
+    # scans and restart segments that end on a stuffed 0xFF
+    for ri, ends in [(0, [b"\xff\x00\xff\xd9"]),
+                     (1, [bytes([0xFF, 0x00, 0xFF, 0xD0 + m])
+                          for m in range(8)])]:
+        streams = batch("gray", 16, 16, 4 * cross, ri)
+        assert any(e in s for s in streams for e in ends), ri
+        check(streams, 4 * cross)
+
+    # batch sizes around the crossover
+    for n, lanes_expected in [(1, 0), (cross - 1, 0), (cross, cross),
+                              (2 * cross, 2 * cross)]:
+        check(batch("4:2:0", 16, 16, n, 2), lanes_expected)
+
+    # a whole group whose scans are missing: every lane fails
+    bare = [
+        s[: mm._jpeg_scan_start(s)] + b"\xff\xd9"
+        for s in batch("gray", 16, 16, cross, 1)
+    ]
+    assert mm._decode_jpeg_lanes(bare) == [None] * cross
+
+    # two headers, progressive and lossless streams, shuffled together
+    mixed = batch("gray", 16, 16, cross, 1) + batch("4:2:2", 16, 16, cross)
+    img = rng.integers(0, 256, (16, 16), dtype=np.uint8)
+    mixed += [mm.encode_jpeg_progressive(img), mm.encode_jpeg_lossless(img)]
+    order = rng.permutation(len(mixed))
+    check([mixed[i] for i in order], 2 * cross)
+
+    # the stacked IDCT equals the per-block 2-D matmul bit for bit
+    a = mm._dct_basis()
+    zz = rng.integers(-1024, 1024, (300, 64))
+    zz[:, 20:] //= 50
+    for q in (mm._jpeg_quant(None), q_real):
+        unzz = np.argsort(mm._JPEG_ZIGZAG)
+        per_block = np.stack(
+            [a.T @ (z * q)[unzz].reshape(8, 8) @ a for z in zz]
+        )
+        assert np.array_equal(mm._jpeg_idct(zz, q), per_block)
+
+
+def test_single_bit_flips_decode_or_refuse_with_value_error():
+    """Flip every bit of one small stream per decoder (PNG gray, PNG RGB
+    Adam7, BMP indexed-8, BMP RLE8, WAV 16-bit, JPEG gray restart-1,
+    JPEG progressive, JPEG lossless RGB): each flipped stream decodes or
+    refuses with ValueError, the refusal ``_decode_bytes`` relies on.
+    Flipped table ids, component ids, a cut-short WAV fmt chunk and
+    zero lossless frame dimensions all used to escape as other errors.
+    Then the flipped restart-1 corpus and a 4:2:0 corpus flipped in its
+    entropy-coded bytes go through one lane decode: each lane is None or
+    equal to ``_decode_jpeg``, and None wherever that refuses."""
+    import numpy as np
+
+    rng = np.random.default_rng(2121)
+    gray = rng.integers(0, 256, (8, 8), dtype=np.uint8)
+    rgb = rng.integers(0, 256, (8, 8, 3), dtype=np.uint8)
+    pal = rng.integers(0, 256, (16, 3), dtype=np.uint8)
+    runs = np.repeat(gray[:, :2] % 16, 4, axis=1)
+    wav = rng.integers(-3000, 3000, 64).astype(np.int16)
+    rst1 = mm.encode_jpeg_gray8(
+        rng.integers(0, 256, (8, 16), dtype=np.uint8), restart_interval=1
+    )
+    streams = {
+        "png_gray": (mm._decode_png, mm.encode_png(gray, 0)),
+        "png_rgb_adam7": (
+            mm._decode_png, mm.encode_png(rgb, 2, interlace=True)
+        ),
+        "bmp_indexed8": (
+            mm._decode_bmp, mm.encode_bmp_indexed(gray % 16, pal)
+        ),
+        "bmp_rle8": (
+            mm._decode_bmp, mm.encode_bmp_indexed(runs, pal, rle=True)
+        ),
+        "wav16": (mm._decode_wav, mm.encode_wav_pcm(wav)),
+        "jpeg_gray_rst1": (mm._decode_jpeg, rst1),
+        "jpeg_progressive": (
+            mm._decode_jpeg, mm.encode_jpeg_progressive(gray)
+        ),
+        "jpeg_lossless_rgb": (
+            mm._decode_jpeg, mm.encode_jpeg_lossless(rgb)
+        ),
+    }
+
+    def flips(s, lo=0):
+        out = []
+        for i in range(lo * 8, len(s) * 8):
+            b = bytearray(s)
+            b[i >> 3] ^= 1 << (i & 7)
+            out.append(bytes(b))
+        return out
+
+    def decode(dec, s):
+        try:
+            return dec(s)
+        except ValueError:
+            return None
+
+    results = {}
+    for name, (dec, s) in streams.items():
+        results[name] = [decode(dec, f) for f in flips(s)]
+        assert any(r is None for r in results[name]), name
+
+    c420 = mm.encode_jpeg_rgb24(
+        rng.integers(0, 256, (16, 16, 3), dtype=np.uint8),
+        subsampling="4:2:0", restart_interval=1,
+    )
+    n_rst1 = len(results["jpeg_gray_rst1"])
+    corpus = flips(rst1) + flips(c420, mm._jpeg_scan_start(c420))
+    want = results["jpeg_gray_rst1"] + [
+        decode(mm._decode_jpeg, f) for f in corpus[n_rst1:]
+    ]
+    lanes = mm._decode_jpeg_lanes(corpus)
+    for lane, w in zip(lanes, want):
+        assert lane is None or (w is not None and np.array_equal(lane, w))
+    for part in (lanes[:n_rst1], lanes[n_rst1:]):
+        assert sum(lane is not None for lane in part) > len(part) // 4

@@ -63,8 +63,8 @@ Spark-side concerns (all real, all tested):
 from __future__ import annotations
 
 import functools
-import types
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterator, Mapping
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -759,6 +759,8 @@ def _decode_wav(data: bytes) -> np.ndarray:
         cid, clen = struct.unpack_from("<4sI", data, pos)
         body = data[pos + 8 : pos + 8 + clen]
         if cid == b"fmt ":
+            if len(body) < 16:
+                raise ValueError("truncated WAV fmt chunk")
             audio_fmt, _, _, _, _, bits = struct.unpack_from("<HHIIHH", body, 0)
             if audio_fmt != 1:
                 raise ValueError(f"unsupported WAV format code {audio_fmt}")
@@ -1126,9 +1128,11 @@ def _jpeg_entropy_encode(
     run = pos - prevpos - 1
     ac_size, ac_amp = _jpeg_magnitude_arrays(acs[bi, pj])
     nzrl = run >> 4
-    # (run & 15) << 4 | size is always <= 255 (size <= 17 for int64 input
-    # sets only low bits 0-4), so the 0..255 table covers every symbol;
-    # _jpeg_quant's entries >= 1 keep size <= 11, so no symbol aliases
+    # an AC category above 15 would alias into the run nibble of the
+    # (run, size) byte; _jpeg_quant's entries >= 1 keep size <= 11, so
+    # this is the old per-symbol KeyError for a category beyond any DHT
+    if int(ac_size.max(initial=0)) > 15:
+        raise KeyError(int(ac_size.max()))
     sym = ((run & 15) << 4) | ac_size
     acc_tab, acl_tab = _JPEG_AC_ARRS_K
     ac_lens = acl_tab[sym]
@@ -1410,22 +1414,55 @@ def _parse_dqt(body: bytes, qtables: dict[int, np.ndarray]) -> None:
         i += 65
 
 
-_DHT_CACHE: dict = {}
+class _HuffTable(Mapping):
+    """One parsed DHT table: a read-only ``{(length, code): symbol}``
+    view plus its flat lookup forms, each built on first use.
+    ``_parse_dht`` hands out one instance per table payload, so a form
+    built for one stream serves every later stream carrying the same
+    table: the scalar LUT (:func:`_huff_lut`) and the 16-bit lane LUTs
+    of :func:`_decode_jpeg_lanes`.  There is no item assignment or
+    deletion: a caller that mutated a shared table would corrupt every
+    later stream carrying it."""
+
+    def __init__(self, bits: list[int], vals: list[int]) -> None:
+        self._codes = _huff_lookup(bits, vals)
+
+    def __getitem__(self, key: tuple[int, int]) -> int:
+        return self._codes[key]
+
+    def __iter__(self):
+        return iter(self._codes)
+
+    def __len__(self) -> int:
+        return len(self._codes)
+
+    @functools.cached_property
+    def lut(self) -> tuple[bytes, bytes, int]:
+        return _huff_lut(self._codes)
+
+    @functools.cached_property
+    def lane_dc(self) -> np.ndarray:
+        return _lane_lut(self.lut, ac=False)
+
+    @functools.cached_property
+    def lane_ac(self) -> np.ndarray:
+        return _lane_lut(self.lut, ac=True)
+
+
+_DHT_CACHE: dict[bytes, _HuffTable] = {}
 
 
 def _parse_dht(
-    body: bytes, htables: dict[tuple[int, int], dict[tuple[int, int], int]]
+    body: bytes, htables: dict[tuple[int, int], _HuffTable]
 ) -> None:
     """DHT segment parse shared by the sequential, progressive and
     lossless-frame decoders: one or more canonical tables per segment,
-    keyed (tc, th).  The decoder dict for each table payload is cached
-    (bounded, keyed on the raw bits+vals bytes): every stream this repo's
-    encoders emit carries the same Annex-K pair, so per-image
-    re-derivation was pure waste (§4.5); foreign tables still build
-    correctly and the cache clears itself at 64 entries.  Cached
-    tables are shared by every later decode, so they are handed out as
-    read-only ``MappingProxyType`` views: a caller that mutated one would
-    corrupt every later stream carrying the same table."""
+    keyed (tc, th).  Each table is cached (bounded, keyed on the raw
+    bits+vals bytes): every stream this repo's encoders emit carries the
+    same Annex-K pair, so per-image re-derivation was pure waste (§4.5);
+    foreign tables still build correctly and the cache clears itself at
+    64 entries.  The cached :class:`_HuffTable` carries the table's
+    lookup forms, so they too are built once per payload."""
     i = 0
     while i < len(body):
         tc, th = body[i] >> 4, body[i] & 0x0F
@@ -1436,8 +1473,7 @@ def _parse_dht(
         key = bytes(body[i + 1 : i + 17 + nv])
         hit = _DHT_CACHE.get(key)
         if hit is None:
-            vals = list(body[i + 17 : i + 17 + nv])
-            hit = types.MappingProxyType(_huff_lookup(bits, vals))
+            hit = _HuffTable(bits, list(body[i + 17 : i + 17 + nv]))
             if len(_DHT_CACHE) > 64:
                 _DHT_CACHE.clear()
             _DHT_CACHE[key] = hit
@@ -1617,36 +1653,49 @@ def _jpeg_extend(amp: int, size: int) -> int:
     return amp if amp >= (1 << (size - 1)) else amp - (1 << size) + 1
 
 
-_HUFF_LUT_CACHE: dict = {}
-
-
 def _huff_lut(
-    tab: dict[tuple[int, int], int],
-) -> tuple[list[int], list[int], int]:
+    tab: Mapping[tuple[int, int], int],
+) -> tuple[bytes, bytes, int]:
     """Flat decode table for a canonical-huffman dict {(length, code):
     sym}: ``(syms, lens, L)`` where indexing with the next ``L`` stream
     bits yields the symbol and its true length in one lookup (length 0 =
     invalid prefix).  Prefix-freeness makes this exactly equivalent to
     the bit-at-a-time ``_read_huff_sym`` walk kept as the reference in
-    ``tests/ref_bitio.py``.  Cached — the Annex-K tables recur on every
-    decode call (§4.5)."""
-    key = tuple(sorted(tab.items()))
-    hit = _HUFF_LUT_CACHE.get(key)
-    if hit is not None:
-        return hit
+    ``tests/ref_bitio.py``.  Both tables are ``bytes`` (a DHT symbol is
+    one byte, a code at most 16 bits long): indexing them is about as
+    fast as indexing a list, and a 16-bit table takes 64 KB instead of a
+    list's 512 KB.  A :class:`_HuffTable`, the form every decoder
+    parses, builds it once per DHT payload and keeps it; any other
+    mapping builds it per call."""
+    if isinstance(tab, _HuffTable):
+        return tab.lut
     max_len = max((ln for ln, _ in tab), default=1)
-    syms = np.zeros(1 << max_len, dtype=np.int32)
-    lens = np.zeros(1 << max_len, dtype=np.int32)
-    for (ln, code), sym in key:
+    syms = np.zeros(1 << max_len, dtype=np.uint8)
+    lens = np.zeros(1 << max_len, dtype=np.uint8)
+    for (ln, code), sym in tab.items():
         base = code << (max_len - ln)
         span = 1 << (max_len - ln)
         syms[base : base + span] = sym
         lens[base : base + span] = ln
-    if len(_HUFF_LUT_CACHE) > 64:  # foreign corpora: bound the cache
-        _HUFF_LUT_CACHE.clear()
-    out = (syms.tolist(), lens.tolist(), max_len)
-    _HUFF_LUT_CACHE[key] = out
-    return out
+    return syms.tobytes(), lens.tobytes(), max_len
+
+
+def _lane_lut(lut: tuple[bytes, bytes, int], ac: bool) -> np.ndarray:
+    """A scalar LUT expanded to a 16-bit index, one packed int64 entry
+    per window for the lane decoder: code length (bits 0-4), magnitude
+    size (5-9), zero run (10-13), end of block (14).  A DC table's
+    symbol is its size with no run; a DC size above 16 gets length 0,
+    so the lane refuses and the stream falls to the scalar decoder.  An
+    AC symbol of size 0 ends the block unless it is ZRL (run 15)."""
+    syms, lens, max_len = lut
+    idx = np.arange(1 << 16) >> (16 - max_len)
+    sym = np.frombuffer(syms, dtype=np.uint8).astype(np.int64)[idx]
+    ln = np.frombuffer(lens, dtype=np.uint8).astype(np.int64)[idx]
+    if not ac:
+        return np.where(sym > 16, 0, ln | (sym << 5))
+    run, size = sym >> 4, sym & 0x0F
+    eob = (size == 0) & (run != 15)
+    return ln | (size << 5) | (run << 10) | (eob.astype(np.int64) << 14)
 
 
 class _FastBits:
@@ -1730,28 +1779,46 @@ class _FastBits:
         )
 
 
-def _decode_jpeg(data: bytes) -> np.ndarray:
-    """Real baseline-JPEG decode with stdlib struct + numpy alone: marker
-    walk, canonical huffman entropy decode, dequantize, inverse zigzag,
-    orthonormal IDCT, level shift.  Supports baseline sequential (SOF0),
-    8-bit AND 16-bit (pq=1) quantization tables, restart intervals
-    (DRI/RSTm with marker-cycle verification and DC-predictor reset),
-    1-component grayscale and 3-component YCbCr at ANY integer-ratio
-    sampling-factor layout — 4:4:4, 4:2:0 (interleaved 16×16 MCUs, the
-    layout virtually all real JPEGs use), 4:2:2, 4:4:0 — with
-    nearest-neighbor chroma upsampling.  SOF2 (huffman progressive)
-    delegates to ``_decode_jpeg_progressive``; SOF3 (huffman lossless)
-    and DHP (hierarchical sequences, Annex J) delegate to
-    ``_decode_jpeg_lossless_frames``; arithmetic coding, bare differential
-    frames, and differential-DCT hierarchical frames raise ValueError so
-    ``_decode_bytes`` falls back to the byte-view stub (the documented
-    swap point for a full codec library at deployment).
-    Returns a FLAT uint8 array —
-    grayscale values, or interleaved per-channel RGB byte samples (the
-    ``_decode_bmp`` 24-bit convention), cropped to the true SOF dims.
-    """
+class _SeqFrame(NamedTuple):
+    """A sequential (SOF0/SOF1) frame, parsed from the bytes before its
+    entropy-coded scan: everything the sequential decoders need apart
+    from the scan itself.  ``tables`` holds each component's (DC, AC)
+    huffman tables and ``quant`` its quantization table (zigzag order),
+    both in frame component order; ``scan_pos`` is the offset of the
+    entropy-coded data."""
+
+    h: int
+    w: int
+    comps: list[tuple[int, int, int, int]]  # (id, hs, vs, tq)
+    hmax: int
+    vmax: int
+    mcus_x: int
+    mcus_y: int
+    n_blocks: int
+    restart_interval: int
+    scan_pos: int
+    tables: list[tuple[_HuffTable, _HuffTable]]
+    quant: list[np.ndarray]
+
+    def mcu_comps(self) -> list[int]:
+        """Component index of each block of one MCU, in scan order:
+        per component, its vs×hs blocks row-major."""
+        return [
+            ci
+            for ci, (_, hs, vs, _) in enumerate(self.comps)
+            for _ in range(hs * vs)
+        ]
+
+
+def _jpeg_seq_frame(
+    data: bytes,
+) -> _SeqFrame | Callable[[bytes], np.ndarray]:
+    """The marker walk of the sequential decoders, up to the first SOS.
+    Returns the parsed frame, or the decoder a stream of another process
+    delegates to.  It reads nothing past the SOS segment, so streams that
+    agree up to there share one parse."""
     qtables: dict[int, np.ndarray] = {}
-    htables: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
+    htables: dict[tuple[int, int], _HuffTable] = {}
     comps: list[tuple[int, int, int, int]] = []  # (id, hs, vs, tq)
     h = w = None
     scan_comps: list[tuple[int, int, int]] = []  # (id, dc_table, ac_table)
@@ -1766,9 +1833,9 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
         # the lossless-frame decoder; everything else (arithmetic, bare
         # differential) refuses to the stub.
         if marker == 0xC2:
-            return _decode_jpeg_progressive(data)
+            return _decode_jpeg_progressive
         if marker in (0xC3, 0xDE):  # SOF3, or DHP (hierarchical, Annex J)
-            return _decode_jpeg_lossless_frames(data)
+            return _decode_jpeg_lossless_frames
         # bare differential frames (SOF5-7 without a DHP reference) are
         # illegal; arithmetic stays refused (see NOTES_round9.md)
         if marker in (0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
@@ -1788,13 +1855,76 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
             break
     if h is None or scan_pos is None or not comps:
         raise ValueError("JPEG missing SOF/SOS")
+    if len(scan_comps) != len(comps):
+        raise ValueError("partial (non-interleaved multi-component) scan")
+    hmax, vmax, mcus_x, mcus_y, n_blocks = _jpeg_geometry(comps, h, w)
+    # Untrusted-input guard (ADVICE r6): SOF dimensions are attacker/corpus
+    # controlled, so bound the plane allocation BEFORE it happens: cap
+    # absolute pixels so a crafted 65535x65535x3 header can never drive a
+    # ~100 GB allocation (the decoders also check the payload floor).
+    if n_blocks * 64 > 268_435_456:  # 256M samples ≈ 2 GB float64
+        raise ValueError("JPEG dimensions exceed decode cap")
+    # a flipped table or component id is corruption, refused like any other
+    tabs = {cid: (dc, ac) for cid, dc, ac in scan_comps}
+    try:
+        tables = [
+            (htables[(0, tabs[cid][0])], htables[(1, tabs[cid][1])])
+            for cid, _, _, _ in comps
+        ]
+        quant = [qtables[tq] for _, _, _, tq in comps]
+    except KeyError:
+        raise ValueError(
+            "JPEG scan names a table or component it lacks"
+        ) from None
+    return _SeqFrame(
+        h, w, comps, hmax, vmax, mcus_x, mcus_y, n_blocks,
+        restart_interval, scan_pos, tables, quant,
+    )
 
-    def read_block(p, dc_lut, ac_lut, pred):
+
+def _decode_jpeg(data: bytes) -> np.ndarray:
+    """Real baseline-JPEG decode with stdlib struct + numpy alone: marker
+    walk, canonical huffman entropy decode, dequantize, inverse zigzag,
+    orthonormal IDCT, level shift.  Supports baseline sequential (SOF0),
+    8-bit AND 16-bit (pq=1) quantization tables, restart intervals
+    (DRI/RSTm with marker-cycle verification and DC-predictor reset),
+    1-component grayscale and 3-component YCbCr at ANY integer-ratio
+    sampling-factor layout — 4:4:4, 4:2:0 (interleaved 16×16 MCUs, the
+    layout virtually all real JPEGs use), 4:2:2, 4:4:0 — with
+    nearest-neighbor chroma upsampling.  SOF2 (huffman progressive)
+    delegates to ``_decode_jpeg_progressive``; SOF3 (huffman lossless)
+    and DHP (hierarchical sequences, Annex J) delegate to
+    ``_decode_jpeg_lossless_frames``; arithmetic coding, bare differential
+    frames, and differential-DCT hierarchical frames raise ValueError so
+    ``_decode_bytes`` falls back to the byte-view stub (the documented
+    swap point for a full codec library at deployment).
+    Returns a FLAT uint8 array —
+    grayscale values, or interleaved per-channel RGB byte samples (the
+    ``_decode_bmp`` 24-bit convention), cropped to the true SOF dims.
+
+    This is the decoder for one stream.  A batch of streams goes through
+    :func:`_decode_jpeg_batch`, which returns exactly this function's
+    results: groups of at least ``_LANE_MIN_STREAMS`` sequential streams
+    that share a header decode in numpy lanes, one huffman symbol per
+    lane per step, and the rest come here.
+    """
+    frame = _jpeg_seq_frame(data)
+    if not isinstance(frame, _SeqFrame):
+        return frame(data)
+    # A valid baseline scan needs at least 2 bits per 8x8 block, the EXACT
+    # floor here (DC symbol + EOB symbol from two distinct tables, each
+    # >= 1 bit) — unlike the lossless paths, which derive theirs from the
+    # parsed DHTs (_min_bits_per_lossless_sample) — so the payload bytes
+    # bound the plausible block count; a header that lies falls to the
+    # byte-view stub via the caller's ValueError path.
+    if frame.n_blocks > max(0, len(data) - frame.scan_pos) * 4 + 64:
+        raise ValueError("JPEG scan too short for declared dimensions")
+
+    def read_block(p, dc_lut, ac_lut, pred, zz):
         # table-driven fast form of the per-bit _read_huff_sym/bits walk
         # (reference kept in tests/ref_bitio.py) over the preprocessed
         # _FastBits segment (§4.2) — one LUT hit per symbol;
         # prefix-freeness makes it exactly equivalent
-        zz = np.zeros(64, dtype=np.int64)
         dsyms, dlens, dl = dc_lut
         asyms, alens, al = ac_lut
         idx = ((words[p >> 3] >> (16 - (p & 7))) & 0xFFFF) >> (16 - dl)
@@ -1841,84 +1971,298 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
                 amp if amp >= (1 << (size - 1)) else amp - (1 << size) + 1
             )
             k += 1
-        return zz, pred, p
+        return pred, p
 
-    a = _dct_basis()
-    inv_zz = np.argsort(_JPEG_ZIGZAG)
-    if len(scan_comps) != len(comps):
-        raise ValueError("partial (non-interleaved multi-component) scan")
-    hmax, vmax, mcus_x, mcus_y, n_blocks = _jpeg_geometry(comps, h, w)
-    # Untrusted-input guard (ADVICE r6): SOF dimensions are attacker/corpus
-    # controlled, so bound the plane allocation BEFORE it happens.  A valid
-    # baseline scan needs at least ~2 bits (DC size sym + EOB) per 8x8
-    # block, so payload bytes give a hard ceiling on plausible block count;
-    # also cap absolute pixels so a crafted 65535x65535x3 header can never
-    # drive a ~100 GB allocation — oversized headers fall to the byte-view
-    # stub via the caller's ValueError path.
-    scan_bytes = max(0, len(data) - scan_pos)
-    if n_blocks * 64 > 268_435_456:  # 256M samples ≈ 2 GB float64
-        raise ValueError("JPEG dimensions exceed decode cap")
-    # 2 bits/block is the EXACT floor here (DC symbol + EOB symbol from two
-    # distinct tables, each >= 1 bit) — unlike the lossless paths, which
-    # derive theirs from the parsed DHTs (_min_bits_per_lossless_sample)
-    if n_blocks > scan_bytes * 4 + 64:  # < 2 bits/block ⇒ header lies
-        raise ValueError("JPEG scan too short for declared dimensions")
-    planes = [
-        np.zeros((mcus_y * 8 * vs, mcus_x * 8 * hs), dtype=np.float64)
-        for _, hs, vs, _ in comps
-    ]
+    coefs = np.zeros((frame.n_blocks, 64), dtype=np.int64)
     # all 0xFF offsets found once: each restart segment's reader then scans
     # only its own bytes (was O(rest-of-buffer) per segment — ADVICE r11)
     ff_abs = np.flatnonzero(np.frombuffer(data, dtype=np.uint8) == 0xFF)
-    fbr = _FastBits(data, scan_pos, ff_abs)
+    fbr = _FastBits(data, frame.scan_pos, ff_abs)
     words, navail = fbr.words, fbr.nbits
     p = 0
-    preds = [0] * len(comps)
-    tabs = {cid: (dc, ac) for cid, dc, ac in scan_comps}
-    luts = [
-        (_huff_lut(htables[(0, tabs[cid][0])]),
-         _huff_lut(htables[(1, tabs[cid][1])]))
-        for cid, _hs, _vs, _tq in comps
+    preds = [0] * len(frame.comps)
+    luts = [(_huff_lut(dc), _huff_lut(ac)) for dc, ac in frame.tables]
+    mcu_comps = frame.mcu_comps()
+    ri = frame.restart_interval
+    blk = 0
+    for mcu_idx in range(frame.mcus_x * frame.mcus_y):
+        if ri and mcu_idx and mcu_idx % ri == 0:
+            # RSTm between every `restart_interval` MCUs: byte-align,
+            # check the 0–7 marker cycle, reset every DC predictor
+            # (T.81 §E.2.4 — the property that makes restart spans
+            # independently decodable, i.e. parallelizable).  The
+            # marker must terminate THIS segment exactly where the
+            # bit cursor stands (= the old restart_sync position
+            # check), then decoding resumes in the next segment.
+            fbr.pos = p
+            if (
+                fbr.term is None
+                or not 0xD0 <= fbr.term <= 0xD7
+                or fbr.orig_pos() != fbr.term_pos
+            ):
+                raise ValueError("missing JPEG restart marker")
+            if (fbr.term & 0x07) != (mcu_idx // ri - 1) & 0x07:
+                raise ValueError("JPEG restart marker out of sequence")
+            fbr = _FastBits(data, fbr.term_pos + 2, ff_abs)
+            words, navail = fbr.words, fbr.nbits
+            p = 0
+            preds = [0] * len(frame.comps)
+        for ci in mcu_comps:
+            preds[ci], p = read_block(p, *luts[ci], preds[ci], coefs[blk])
+            blk += 1
+    return _jpeg_seq_pixels(frame, coefs[None])[0]
+
+
+# Lane decoding pays from this many same-header streams up; below it the
+# per-step numpy overhead outweighs the per-symbol Python it replaces.
+# Measured on one x86 core with 16x16 audit streams: lanes break even at
+# ~48 gray, ~40 4:2:0 and ~25 restart-2 streams, and are 1.25-2.4x
+# faster at 64.
+_LANE_MIN_STREAMS = 64
+# Blocks one lane pass holds (~512 bytes of coefficients each): a bigger
+# group is decoded in slices, and images too large for a slice of
+# _LANE_MIN_STREAMS streams stay on the scalar decoder.
+_LANE_MAX_BLOCKS = 1 << 15
+
+
+def _decode_jpeg_batch(streams: list[bytes]) -> list[np.ndarray]:
+    """``[_decode_jpeg(s) for s in streams]``, by construction: the
+    streams :func:`_decode_jpeg_lanes` decodes come from there and every
+    other stream from ``_decode_jpeg``, so each refusal is that
+    decoder's own ValueError."""
+    return [
+        _decode_jpeg(s) if got is None else got
+        for s, got in zip(streams, _decode_jpeg_lanes(streams))
     ]
-    mcu_idx = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_idx and mcu_idx % restart_interval == 0:
-                # RSTm between every `restart_interval` MCUs: byte-align,
-                # check the 0–7 marker cycle, reset every DC predictor
-                # (T.81 §E.2.4 — the property that makes restart spans
-                # independently decodable, i.e. parallelizable).  The
-                # marker must terminate THIS segment exactly where the
-                # bit cursor stands (= the old restart_sync position
-                # check), then decoding resumes in the next segment.
-                fbr.pos = p
-                if (
-                    fbr.term is None
-                    or not 0xD0 <= fbr.term <= 0xD7
-                    or fbr.orig_pos() != fbr.term_pos
-                ):
-                    raise ValueError("missing JPEG restart marker")
-                if (fbr.term & 0x07) != (
-                    mcu_idx // restart_interval - 1
-                ) & 0x07:
-                    raise ValueError("JPEG restart marker out of sequence")
-                fbr = _FastBits(data, fbr.term_pos + 2, ff_abs)
-                words, navail = fbr.words, fbr.nbits
-                p = 0
-                preds = [0] * len(comps)
-            mcu_idx += 1
-            for ci, (cid, hs, vs, tq) in enumerate(comps):
-                dc_lut, ac_lut = luts[ci]
-                for byy in range(vs):
-                    for bxx in range(hs):
-                        zz, preds[ci], p = read_block(
-                            p, dc_lut, ac_lut, preds[ci]
-                        )
-                        coef = (zz * qtables[tq])[inv_zz].reshape(8, 8)
-                        by = (my * vs + byy) * 8
-                        bx = (mx * hs + bxx) * 8
-                        planes[ci][by : by + 8, bx : bx + 8] = a.T @ coef @ a
-    return _planes_to_pixels(planes, comps, hmax, vmax, h, w)
+
+
+def _jpeg_scan_start(data: bytes) -> int | None:
+    """Offset just past the first SOS segment, where the entropy-coded
+    data starts: the marker walk up to there reads no byte past it, so
+    every stream that starts with the same bytes walks the same way.
+    None if the walk refuses first, or the SOS length field is short or
+    runs past the data (the walk would read beyond the header)."""
+    try:
+        walk = _JpegMarkers(data)
+        for marker, _ in walk:
+            if marker == 0xDA:
+                ok = walk.start + 4 <= walk.pos <= len(data)
+                return walk.pos if ok else None
+    except ValueError:
+        pass
+    return None
+
+
+def _decode_jpeg_lanes(streams: list[bytes]) -> list[np.ndarray | None]:
+    """Decode a batch of sequential JPEG streams in numpy lanes: each
+    entry is ``_decode_jpeg``'s result bit for bit, or None where the
+    stream is left to it.
+
+    The streams are grouped by their header bytes (everything before
+    the entropy-coded data), and each header is parsed once.  A group of
+    at least ``_LANE_MIN_STREAMS`` SOF0/SOF1 streams is decoded by
+    :func:`_jpeg_lane_coefs`, then one stacked dequantize + IDCT and one
+    upsample and colour tail (:func:`_jpeg_seq_pixels`).  Every check the
+    scalar decoder makes is made per lane; a stream failing any of them
+    gets None, as do other processes and smaller groups."""
+    out: list[np.ndarray | None] = [None] * len(streams)
+    groups: dict[bytes, list[int]] = {}
+    head = None
+    for i, s in enumerate(streams):
+        if head is None or not s.startswith(head):
+            pos = _jpeg_scan_start(s)
+            if pos is None:
+                continue
+            head = s[:pos]
+        groups.setdefault(head, []).append(i)
+    for head, idx in groups.items():
+        if len(idx) < _LANE_MIN_STREAMS:
+            continue
+        try:
+            frame = _jpeg_seq_frame(head)
+        except ValueError:
+            continue
+        if not isinstance(frame, _SeqFrame) or not frame.n_blocks:
+            continue
+        step = _LANE_MAX_BLOCKS // frame.n_blocks
+        if step < _LANE_MIN_STREAMS:
+            continue
+        for lo in range(0, len(idx), step):
+            part = idx[lo : lo + step]
+            done, coefs = _jpeg_lane_coefs(frame, [streams[i] for i in part])
+            if not len(done):
+                continue
+            for j, px in zip(done.tolist(), _jpeg_seq_pixels(frame, coefs)):
+                out[part[j]] = px
+    return out
+
+
+def _jpeg_lane_coefs(
+    frame: _SeqFrame, streams: list[bytes]
+) -> tuple[np.ndarray, np.ndarray]:
+    """Entropy-decode streams that share ``frame``'s header, one lane
+    per (stream, restart segment).  Returns the indices of the streams
+    that decoded and their quantized blocks, (decoded, n_blocks, 64)
+    int64 in zigzag and scan order, as ``_decode_jpeg`` fills them.
+
+    The streams' entropy-coded bytes are split at their markers and
+    unstuffed in one pass.  Then each step reads one huffman symbol and
+    its magnitude bits for every live lane, through the lane LUTs of the
+    frame's tables stacked in one array.  A lane fails on what fails the
+    scalar decoder: an invalid code, a read past its segment, an AC run
+    past 63, a restart marker missing, out of cycle or not where the
+    previous segment ends; and a stream fails with any of its lanes or
+    when its scan is shorter than the 2-bits-per-block floor."""
+    n = len(streams)
+    mcu_comps = frame.mcu_comps()
+    n_mcu = frame.mcus_x * frame.mcus_y
+    per_seg = frame.restart_interval or n_mcu
+    n_seg = -(-n_mcu // per_seg)
+    nb = per_seg * len(mcu_comps)  # blocks in a full segment
+
+    tails = [s[frame.scan_pos :] for s in streams]
+    lens = np.fromiter(map(len, tails), dtype=np.int64, count=n)
+    ends = np.cumsum(lens)
+    buf = np.frombuffer(b"".join(tails), dtype=np.uint8)
+    ok = frame.n_blocks <= lens * 4 + 64
+    # A 0xFF is stuffing when a 0x00 follows it inside its stream; any
+    # other 0xFF is a marker, one ending its stream included.  The first
+    # n_seg - 1 markers of a stream must be RST0-7 in cycle; segment j
+    # runs from just past marker j - 1 up to marker j (or the stream end).
+    ff = np.flatnonzero(buf == 0xFF)
+    sid = np.searchsorted(ends, ff, side="right")
+    last = ff + 1 == ends[sid]
+    code = buf[np.minimum(ff + 1, len(buf) - 1)].astype(np.int64)
+    code[last] = -1
+    stuffed = code == 0
+    mk, msid, mcode = ff[~stuffed], sid[~stuffed], code[~stuffed]
+    first = np.searchsorted(msid, np.arange(n))
+    count = np.searchsorted(msid, np.arange(n), side="right") - first
+    rank = np.arange(len(mk)) - first[msid]
+    ok &= count >= n_seg - 1
+    rst = rank < n_seg - 1
+    ok[msid[rst & (mcode != 0xD0 + (rank & 7))]] = False
+    seg_lo = np.zeros((n, n_seg), dtype=np.int64)
+    seg_lo[:, 0] = ends - lens
+    seg_lo[msid[rst], rank[rst] + 1] = mk[rst] + 2
+    seg_hi = np.repeat(ends[:, None], n_seg, axis=1)
+    m = rank < n_seg
+    seg_hi[msid[m], rank[m]] = mk[m]
+    # unstuff, and read 32-bit big-endian windows at every byte
+    keep = np.ones(len(buf), dtype=bool)
+    keep[ff[stuffed] + 1] = False
+    at = np.concatenate(([0], np.cumsum(keep))) * 8  # bit offset per byte
+    u = np.concatenate((buf[keep], np.zeros(8, dtype=np.uint8)))
+    u = u.astype(np.int64)
+    w32 = (u[:-3] << 24) | (u[1:-2] << 16) | (u[2:-1] << 8) | u[3:]
+
+    decoded = np.flatnonzero(ok)
+    p = at[seg_lo[decoded]].reshape(-1)
+    end = seg_end = at[seg_hi[decoded]].reshape(-1)
+    left = np.full((len(decoded), n_seg), nb, dtype=np.int64)
+    left[:, -1] = (n_mcu - (n_seg - 1) * per_seg) * len(mcu_comps)
+    left = left.reshape(-1)
+    n_lanes = len(p)
+    # stacked lane LUTs; sched[2b] / sched[2b + 1] is the offset of the
+    # DC / AC table of a segment's block b
+    stack, offset = [], {}
+    for dc, ac in frame.tables:
+        for lut in (dc.lane_dc, ac.lane_ac):
+            if id(lut) not in offset:
+                offset[id(lut)] = len(stack) << 16
+                stack.append(lut)
+    lut_all = np.concatenate(stack)
+    per_mcu = [
+        offset[id(lut)]
+        for ci in mcu_comps
+        for lut in (frame.tables[ci][0].lane_dc, frame.tables[ci][1].lane_ac)
+    ]
+    sched = np.array(per_mcu * per_seg, dtype=np.int64)
+
+    flat = np.zeros(n_lanes * nb * 64, dtype=np.int64)
+    failed = np.zeros(n_lanes, dtype=bool)
+    p_end = np.zeros(n_lanes, dtype=np.int64)
+    lane = np.arange(n_lanes)
+    b = np.zeros(n_lanes, dtype=np.int64)
+    k = np.zeros(n_lanes, dtype=np.int64)  # 0: DC next, else AC index
+    while len(lane):
+        e = lut_all[
+            sched[2 * b + (k > 0)] + ((w32[p >> 3] >> (16 - (p & 7))) & 0xFFFF)
+        ]
+        ln = e & 31
+        size = (e >> 5) & 31
+        p = p + ln
+        amp = (w32[p >> 3] >> (32 - size - (p & 7))) & ((1 << size) - 1)
+        p += size
+        pos = k + ((e >> 10) & 15)
+        flat[(lane * nb + b) * 64 + np.minimum(pos, 63)] = np.where(
+            amp < (1 << size) >> 1, amp - (1 << size) + 1, amp
+        )
+        bad = (ln == 0) | (p > end) | ((size > 0) & (pos > 63))
+        k = pos + 1
+        block_end = ((e >> 14) & 1).astype(bool) | (k >= 64)
+        b += block_end
+        k[block_end] = 0
+        stop = bad | (b >= left)
+        if stop.any():
+            failed[lane[bad]] = True
+            p_end[lane[stop]] = p[stop]
+            go = ~stop
+            lane, p, end, left, b, k = (
+                x[go] for x in (lane, p, end, left, b, k)
+            )
+    # a segment before the last must end within its final byte, where
+    # the next restart marker stands
+    inner = np.tile(np.arange(n_seg) < n_seg - 1, len(decoded))
+    failed |= inner & (seg_end - p_end >= 8)
+    good = ~failed.reshape(len(decoded), n_seg).any(axis=1)
+
+    coefs = flat.reshape(n_lanes, nb, 64)
+    # DC values are differences: a running sum per component per lane
+    # (each restart segment resets the predictors)
+    block_comps = np.array(mcu_comps * per_seg)
+    for ci in range(len(frame.comps)):
+        cols = np.flatnonzero(block_comps == ci)
+        coefs[:, cols, 0] = np.cumsum(coefs[:, cols, 0], axis=1)
+    coefs = coefs.reshape(len(decoded), n_seg * nb, 64)[good]
+    return decoded[good], coefs[:, : frame.n_blocks]
+
+
+_JPEG_UNZIGZAG = np.argsort(_JPEG_ZIGZAG)
+
+
+def _jpeg_idct(zz: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """Dequantize, un-zigzag and inverse-DCT a stack of blocks: (..., 64)
+    quantized zigzag coefficients and their quantization table in,
+    (..., 8, 8) level-shifted samples out.  One stacked
+    ``a.T @ coef @ a``, bit-identical to the per-block 2-D matmul; an
+    einsum is not (see _quantized_block_coefs)."""
+    a = _dct_basis()
+    coef = (zz * q)[..., _JPEG_UNZIGZAG].reshape(*zz.shape[:-1], 8, 8)
+    return a.T @ coef @ a
+
+
+def _jpeg_seq_pixels(frame: _SeqFrame, coefs: np.ndarray) -> np.ndarray:
+    """The shared tail of the sequential decoders.  ``coefs`` holds n
+    streams' quantized blocks of one frame, (n, n_blocks, 64) int64 in
+    zigzag and scan order.  One stacked IDCT per component, its blocks
+    laid out on the component plane, then one upsample and colour tail;
+    returns (n, pixels) uint8."""
+    n = len(coefs)
+    my, mx = frame.mcus_y, frame.mcus_x
+    units = coefs.reshape(n, my, mx, -1, 64)
+    planes, at = [], 0
+    for (_, hs, vs, _), q in zip(frame.comps, frame.quant):
+        blocks = _jpeg_idct(units[:, :, :, at : at + hs * vs], q)
+        at += hs * vs
+        planes.append(
+            blocks.reshape(n, my, mx, vs, hs, 8, 8)
+            .transpose(0, 1, 3, 5, 2, 4, 6)
+            .reshape(n, my * vs * 8, mx * hs * 8)
+        )
+    return _planes_to_pixels(
+        planes, frame.comps, frame.hmax, frame.vmax, frame.h, frame.w
+    )
 
 
 def _planes_to_pixels(planes, comps, hmax, vmax, h, w) -> np.ndarray:
@@ -1927,16 +2271,18 @@ def _planes_to_pixels(planes, comps, hmax, vmax, h, w) -> np.ndarray:
     — the spec-legal baseline upsampler; the exact inverse of the
     encoder's box average on per-2×2-constant chroma, which is what the
     analytic round-trip envelope relies on), crop to the true SOF dims,
-    level-shift, and for color invert the YCbCr transform."""
+    level-shift, and for color invert the YCbCr transform.  Planes may
+    carry leading batch axes; each image comes out flat."""
+    lead = planes[0].shape[:-2]
     out = []
     for plane, (_, hs, vs, _) in zip(planes, comps):
         if hs != hmax:
-            plane = np.repeat(plane, hmax // hs, axis=1)
+            plane = np.repeat(plane, hmax // hs, axis=-1)
         if vs != vmax:
-            plane = np.repeat(plane, vmax // vs, axis=0)
-        out.append(np.clip(np.round(plane[:h, :w] + 128.0), 0, 255))
+            plane = np.repeat(plane, vmax // vs, axis=-2)
+        out.append(np.clip(np.round(plane[..., :h, :w] + 128.0), 0, 255))
     if len(out) == 1:
-        return out[0].astype(np.uint8).reshape(-1)
+        return out[0].astype(np.uint8).reshape(*lead, -1)
     y, cb, cr = out
     r = y + 1.402 * (cr - 128.0)
     g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
@@ -1944,7 +2290,7 @@ def _planes_to_pixels(planes, comps, hmax, vmax, h, w) -> np.ndarray:
     rgb = np.stack(
         [np.clip(np.round(c), 0, 255) for c in (r, g, b)], axis=-1
     )
-    return rgb.astype(np.uint8).reshape(-1)
+    return rgb.astype(np.uint8).reshape(*lead, -1)
 
 
 # ---------------------------------------------------------------------------
@@ -2269,10 +2615,10 @@ def _decode_jpeg_progressive(data: bytes) -> np.ndarray:
                 raise ValueError("JPEG scan before SOF")
             sos_comps, ss, se, ah, al = _parse_sos(body)
             ns = len(sos_comps)
-            scom = [
-                (next(i for i, c in enumerate(comps) if c[0] == cid), td, ta)
-                for cid, td, ta in sos_comps
-            ]
+            index = {c[0]: i for i, c in enumerate(comps)}
+            if any(cid not in index for cid, _, _ in sos_comps):
+                raise ValueError("JPEG scan names a component the frame lacks")
+            scom = [(index[cid], td, ta) for cid, td, ta in sos_comps]
             if ss > se or se > 63 or al > 13:
                 raise ValueError("bad progressive scan parameters")
             # Table-driven fast reads over preprocessed _FastBits segments
@@ -2558,25 +2904,18 @@ def _decode_jpeg_progressive(data: bytes) -> np.ndarray:
             walk.pos = next_marker(fbr.orig_pos())
     if h is None or not got_scan or not coefs:
         raise ValueError("JPEG missing SOF/SOS")
-    a = _dct_basis()
-    inv_zz = np.argsort(_JPEG_ZIGZAG)
     planes = []
-    # Per-block 2-D matmuls, the EXACT expression the sequential decoder
-    # uses.  A stacked ``@`` gives the same bits; an einsum differs in the
-    # last ulp and flips the final pixel rounding, breaking
-    # progressive==sequential bit-identity (see _quantized_block_coefs).
+    # The sequential decoders' stacked IDCT: the same bits, which the
+    # progressive==sequential bit-identity contract relies on.
     for ci, (cid, hs, vs, tq) in enumerate(comps):
         if tq not in qtables:
             raise ValueError("missing quantization table")
         bh, bw = coefs[ci].shape[:2]
-        plane = np.zeros((bh * 8, bw * 8), dtype=np.float64)
-        for by in range(bh):
-            for bx in range(bw):
-                coef = (coefs[ci][by, bx] * qtables[tq])[inv_zz].reshape(8, 8)
-                plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                    a.T @ coef @ a
-                )
-        planes.append(plane)
+        planes.append(
+            _jpeg_idct(coefs[ci], qtables[tq])
+            .transpose(0, 2, 1, 3)
+            .reshape(bh * 8, bw * 8)
+        )
     return _planes_to_pixels(planes, comps, hmax, vmax, h, w)
 
 
@@ -2674,18 +3013,22 @@ def jpeg_roundtrip_audit(
     Scale: a pure Arrow-batched ``mapInPandas`` — no shuffle, constant
     memory per batch.  Each Arrow batch is encoded in one vectorized call
     (``_encode_jpeg_batch``, whose batch of one is ``encode_jpeg_gray8``)
-    and each stream decoded on its own — the shape a real decode stage
-    has at 100 TB (where this Python baseline swaps for a codec library
-    via the pinned ``_decode_bytes`` boundary).
+    and decoded in one ``_decode_jpeg_batch`` call, which returns
+    exactly the per-stream ``_decode_jpeg`` results.  At 100 TB this
+    Python baseline swaps for a codec library via the pinned
+    ``_decode_bytes`` boundary.
     """
 
-    def row(payload, raw):
-        return _is_jfif(payload), _max_err_le_3(_decode_jpeg(payload), raw)
+    def row(payload, decoded, raw):
+        return _is_jfif(payload), _max_err_le_3(decoded, raw)
+
+    def check(raws):
+        payloads = _encode_jpeg_batch(raws)
+        return list(map(row, payloads, _decode_jpeg_batch(payloads), raws))
 
     return _roundtrip_audit(
         df, id_col, text_col, side * side, (side, side), "n_pixels",
-        ("is_jfif", "max_err_le_3"),
-        lambda raws: list(map(row, _encode_jpeg_batch(raws), raws)),
+        ("is_jfif", "max_err_le_3"), check,
     )
 
 
@@ -2713,20 +3056,21 @@ def jpeg420_roundtrip_audit(
     IDCT gain 3.49 + final rounding 0.5 < 4, i.e. an integer deviation
     of 4+ is impossible for a correct codec.  An MCU-order slip, a
     swapped chroma block, or a broken upsampler lands far outside.
-    Each Arrow batch is encoded in one ``_encode_jpeg_batch`` call."""
+    Each Arrow batch is encoded in one ``_encode_jpeg_batch`` call and
+    decoded in one ``_decode_jpeg_batch`` call."""
 
-    def row(payload, rgb):
+    def row(payload, decoded, rgb):
         sof_at = payload.find(b"\xff\xc0")
         return (
             _is_jfif(payload),
             sof_at >= 0 and payload[sof_at + 11] == 0x22,
-            _max_err_le_3(_decode_jpeg(payload), rgb),
+            _max_err_le_3(decoded, rgb),
         )
 
     def check(raws):
         rgbs = np.repeat(raws[..., None], 3, axis=3)
         payloads = _encode_jpeg_batch(rgbs, subsampling="4:2:0")
-        return list(map(row, payloads, rgbs))
+        return list(map(row, payloads, _decode_jpeg_batch(payloads), rgbs))
 
     return _roundtrip_audit(
         df, id_col, text_col, side * side, (side, side), "n_pixels",
@@ -2762,21 +3106,22 @@ def jpeg_restart_roundtrip_audit(
 
     Scale: pure Arrow-batched ``mapInPandas`` behind an explicit
     repartition — same shape as the other codec audits, each Arrow batch
-    encoded in one ``_encode_jpeg_batch`` call."""
+    encoded in one ``_encode_jpeg_batch`` call and decoded in one
+    ``_decode_jpeg_batch`` call (one lane per restart segment)."""
 
-    def row(payload, raw):
+    def row(payload, decoded, raw):
         sos = payload.find(b"\xff\xda")
         scan = payload[sos:]
         return (
             _is_jfif(payload),
             b"\xff\xdd" in payload[:sos]
             and any(bytes([0xFF, 0xD0 + m]) in scan for m in range(8)),
-            _max_err_le_3(_decode_jpeg(payload), raw),
+            _max_err_le_3(decoded, raw),
         )
 
     def check(raws):
         payloads = _encode_jpeg_batch(raws, restart_interval=restart_interval)
-        return list(map(row, payloads, raws))
+        return list(map(row, payloads, _decode_jpeg_batch(payloads), raws))
 
     return _roundtrip_audit(
         df, id_col, text_col, side * side, (side, side), "n_pixels",
@@ -2802,21 +3147,27 @@ def jpeg_progressive_roundtrip_audit(
     scan-ordering, EOB-run, or refinement bug breaks equality outright —
     plus the SOF2 marker check and the |Δ| ≤ 3 envelope inherited from
     the sequential contract.  Scale: pure Arrow-batched ``mapInPandas``
-    behind an explicit repartition, same as the other codec audits."""
+    behind an explicit repartition, same as the other codec audits.  Each
+    progressive stream is encoded and decoded on its own; the sequential
+    reference of a batch is one ``_encode_jpeg_batch`` call (the bytes
+    of ``encode_jpeg_gray8``) and one ``_decode_jpeg_batch`` call."""
 
-    def row(raw):
+    def row(raw, sequential):
         prog = encode_jpeg_progressive(raw)
         dec_p = _decode_jpeg(prog)
         return (
             0 <= prog.find(b"\xff\xc2") < prog.find(b"\xff\xda"),
-            np.array_equal(dec_p, _decode_jpeg(encode_jpeg_gray8(raw))),
+            np.array_equal(dec_p, sequential),
             _max_err_le_3(dec_p, raw),
         )
 
+    def check(raws):
+        sequential = _decode_jpeg_batch(_encode_jpeg_batch(raws))
+        return list(map(row, raws, sequential))
+
     return _roundtrip_audit(
         df, id_col, text_col, side * side, (side, side), "n_pixels",
-        ("is_sof2", "matches_sequential", "max_err_le_3"),
-        lambda raws: list(map(row, raws)),
+        ("is_sof2", "matches_sequential", "max_err_le_3"), check,
     )
 
 
@@ -3231,6 +3582,8 @@ def _decode_jpeg_lossless_frames(data: bytes) -> np.ndarray:
             if cur is not None:
                 raise ValueError("hierarchical frame missing its scan")
             fh, fw, fcomps = _parse_sof(body)
+            if not fh or not fw:
+                raise ValueError(f"empty {kind} frame")
             if [c[0] for c in fcomps] != [c[0] for c in full[2]] or any(
                 hs != 1 or vs != 1 for _, hs, vs, _ in fcomps
             ):
