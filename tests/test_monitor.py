@@ -321,80 +321,6 @@ def test_interval_join_streams_cross_batch_state(spark, tmp_path):
     assert rows[0]["user_id"] == 1 and rows[0]["value"] == 10.0
 
 
-def _has_protobuf():
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs google.protobuf (absent in this container)",
-)
-def test_streaming_running_totals_two_batch_parity(spark, tmp_path):
-    """Spark 4 typed-state API: running (count, cents) per key over a
-    two-run availableNow stream must equal the batch window sums exactly
-    (int64 state — no float tolerance)."""
-    import datetime as dt
-
-    base = dt.datetime(2024, 1, 1)
-    rows = [
-        (u, i * 10 + u, int((base + dt.timedelta(minutes=i)).timestamp() * 1_000_000), (u + i) * 7)
-        for u in (1, 2)
-        for i in range(6)
-    ]
-    df = spark.createDataFrame(
-        rows, "user_id long, event_id long, event_us long, cents long"
-    )
-    src, out, ckpt = str(tmp_path / "s"), str(tmp_path / "o"), str(tmp_path / "c")
-    mid = rows[2][2]
-    df.filter(F.col("event_us") <= mid).write.parquet(src)
-
-    def run_batch():
-        stream = spark.readStream.schema(
-            "user_id long, event_id long, event_us long, cents long"
-        ).parquet(src)
-        q = (
-            monitor.streaming_running_totals(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    run_batch()
-    df.filter(F.col("event_us") > mid).write.mode("append").parquet(src)
-    run_batch()
-
-    from pyspark.sql import Window
-
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("event_us", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    expected = {
-        (r["user_id"], r["event_id"]): (r["rn"], r["rc"])
-        for r in df.select(
-            "user_id",
-            "event_id",
-            F.count(F.lit(1)).over(w).alias("rn"),
-            F.sum("cents").over(w).alias("rc"),
-        ).collect()
-    }
-    got = {
-        (r["user_id"], r["event_id"]): (r["running_n"], r["running_cents"])
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got == expected
-
-
 def test_windowed_agg_forced_kill_mid_stream_resumes(spark, tmp_path):
     """Forced stop/restart MID-STREAM for the watermarked tumbling-window
     pipeline (VERDICT r5 item 6): run 1's foreachBatch is poisoned to crash

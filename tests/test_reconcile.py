@@ -655,11 +655,10 @@ def test_purge_rows_erases_history(spark, tmp_path):
     assert {r["k"] for r in after.collect()} == {1, 3}
 
 
-def test_delta_routing_predicate_and_fallback(spark, tmp_path):
-    """The Delta backend routes ONLY when delta-spark is importable AND the
-    path has a _delta_log — a versioned-parquet table never reinterprets,
-    so enabling the library on a cluster cannot change existing tables'
-    behavior.  The fallback merge is exercised end-to-end."""
+def test_legacy_layout_merge_null_coalesce(spark, tmp_path):
+    """A merge into a never-versioned plain-parquet directory commits the
+    first versioned table; a NULL source value keeps the target's value
+    (coalesce semantics), and the merge runs end-to-end."""
     from worlddatapipeline_spark.operators import reconcile
 
     path = str(tmp_path / "tbl")
@@ -667,7 +666,6 @@ def test_delta_routing_predicate_and_fallback(spark, tmp_path):
         [(1, "a", 10), (2, "b", 20)], "id long, name string, v long"
     )
     t0.write.parquet(path)
-    assert reconcile._is_delta_table(path) is False
     upd = spark.createDataFrame(
         [(2, None, 25), (3, "c", 30)], "id long, name string, v long"
     )
@@ -679,100 +677,16 @@ def test_delta_routing_predicate_and_fallback(spark, tmp_path):
     }
     # NULL source value preserved the target's name (coalesce semantics)
     assert out == {1: ("a", 10), 2: ("b", 25), 3: ("c", 30)}
-    # still a versioned-parquet table afterwards, not delta
-    assert reconcile._is_delta_table(path) is False
+    # a versioned-parquet table afterwards
     assert reconcile.table_versions(path)
-
-
-def test_delta_backend_native_merge(spark, tmp_path):
-    """Native DeltaTable MERGE path — runs only where delta-spark is
-    installed (production cluster image); auto-skips in this container."""
-    from worlddatapipeline_spark.operators import reconcile
-
-    if not reconcile._HAS_DELTA:
-        pytest.skip("delta-spark not installed in this container")
-    path = str(tmp_path / "dtbl")
-    spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20)], "id long, name string, v long"
-    ).write.format("delta").save(path)
-    assert reconcile._is_delta_table(path) is True
-    upd = spark.createDataFrame(
-        [(2, None, 25), (3, "c", 30)], "id long, name string, v long"
-    )
-    out = {
-        r["id"]: (r["name"], r["v"])
-        for r in reconcile.merge_upsert_parquet(
-            spark, path, upd, ["id"]
-        ).collect()
-    }
-    assert out == {1: ("a", 10), 2: ("b", 25), 3: ("c", 30)}
-    # time travel through the same read surface (delta integer versions)
-    v0 = reconcile.read_parquet_table(spark, path, version=0)
-    assert v0.count() == 2
-
-
-def test_delta_backend_native_purge(spark, tmp_path):
-    """Native purge path — MERGE-delete + scoped VACUUM(0) — runs only
-    where delta-spark is installed (cluster image; runbook in
-    NOTES_round8_session.md).  Expected operationMetrics:
-    numTargetRowsDeleted == 2, numTargetRowsUpdated/Inserted == 0."""
-    from worlddatapipeline_spark.operators import reconcile
-
-    if not reconcile._HAS_DELTA:
-        pytest.skip("delta-spark not installed in this container")
-    from delta.tables import DeltaTable
-
-    path = str(tmp_path / "dtbl")
-    spark.createDataFrame(
-        [(i, f"n{i}") for i in range(1, 5)], "id long, name string"
-    ).write.format("delta").save(path)
-    keys = spark.createDataFrame([(2,), (3,)], "id long")
-    out = reconcile.purge_rows(spark, path, ["id"], keys)
-    assert {r["id"] for r in out.collect()} == {1, 4}
-    hist = DeltaTable.forPath(spark, path).history().collect()
-    merges = [h for h in hist if h["operation"] == "MERGE"]
-    assert merges, [h["operation"] for h in hist]
-    m = merges[0]["operationMetrics"]
-    assert int(m["numTargetRowsDeleted"]) == 2
-    assert int(m.get("numTargetRowsUpdated", 0)) == 0
-    assert int(m.get("numTargetRowsInserted", 0)) == 0
-    # VACUUM(0) erased the pre-delete snapshot: time travel to v0 must
-    # fail (that is the point of a GDPR purge — history really gone)
-    with pytest.raises(Exception):
-        spark.read.format("delta").option("versionAsOf", 0).load(
-            path
-        ).collect()
-
-
-def test_delta_backend_native_schema_evolution(spark, tmp_path):
-    """Native MERGE schema evolution — source-only columns append to the
-    target (parity with the versioned-parquet fallback).  On Delta >= 3.1
-    this is the withSchemaEvolution builder; older images take the
-    child-session autoMerge fallback — either way the merged read shows
-    the new column.  Runs only where delta-spark is installed."""
-    from worlddatapipeline_spark.operators import reconcile
-
-    if not reconcile._HAS_DELTA:
-        pytest.skip("delta-spark not installed in this container")
-    path = str(tmp_path / "dtbl")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b")], "id long, name string"
-    ).write.format("delta").save(path)
-    upd = spark.createDataFrame(
-        [(2, "b2", 25), (3, "c", 30)], "id long, name string, extra long"
-    )
-    out = reconcile.merge_upsert_parquet(spark, path, upd, ["id"])
-    assert "extra" in out.columns
-    got = {r["id"]: (r["name"], r["extra"]) for r in out.collect()}
-    assert got == {1: ("a", None), 2: ("b2", 25), 3: ("c", 30)}
 
 
 def test_delta_layout_guard_on_destructive_maintenance(spark, tmp_path):
     """A directory carrying a _delta_log must never receive the
     versioned-parquet pointer-file surgery: purge_rows' history sweep
-    would rmtree the Delta log (silent table destruction).  When
-    delta-spark is NOT importable the routing predicate is false, so the
-    guard must fire on the layout itself."""
+    would rmtree the Delta log (silent table destruction), and reading it
+    as a legacy layout would return the part files the log has removed.
+    Every writer and the reader refuse it."""
     import os
 
     import pytest
@@ -785,41 +699,19 @@ def test_delta_layout_guard_on_destructive_maintenance(spark, tmp_path):
     )
     os.makedirs(os.path.join(path, "_delta_log"))
     keys = spark.createDataFrame([(1,)], "id long")
-    if reconcile._HAS_DELTA:
-        pytest.skip("delta importable: destructive ops route natively")
-    with pytest.raises(ValueError, match="delta-spark is not importable"):
+    root_files = sorted(os.listdir(path))
+    with pytest.raises(ValueError, match="is a Delta table"):
+        reconcile.read_parquet_table(spark, path)
+    with pytest.raises(ValueError, match="is a Delta table"):
         reconcile.purge_rows(spark, path, ["id"], keys)
-    with pytest.raises(ValueError, match="delta-spark is not importable"):
+    with pytest.raises(ValueError, match="is a Delta table"):
         reconcile.vacuum_table(path)
     # merge goes through the same lease, so it refuses too — every time:
     # a second merge must not sweep the log and the root data files
-    root_files = sorted(os.listdir(path))
     src = spark.createDataFrame([(2, "b")], "id long, name string")
     for _ in range(2):
-        with pytest.raises(ValueError, match="delta-spark is not importable"):
+        with pytest.raises(ValueError, match="is a Delta table"):
             reconcile.merge_upsert_parquet(spark, path, src, ["id"])
     # the log directory and the root files are untouched
     assert os.path.isdir(os.path.join(path, "_delta_log"))
     assert sorted(os.listdir(path)) == root_files
-
-
-def test_child_session_with_semantics_mirrors_caller_confs(spark):
-    """The Delta<3.1 autoMerge fallback runs its MERGE in a child session;
-    the child must mirror EVERY semantics-affecting runtime conf of the
-    caller (ADVICE r8: previously only timeZone was copied, so ANSI mode /
-    case sensitivity silently didn't apply to the fallback MERGE)."""
-    # mutate a throwaway session, not the shared fixture
-    parent = spark.newSession()
-    parent.conf.set("spark.sql.session.timeZone", "America/New_York")
-    parent.conf.set("spark.sql.ansi.enabled", "true")
-    parent.conf.set("spark.sql.caseSensitive", "true")
-    parent.conf.set("spark.sql.legacy.timeParserPolicy", "CORRECTED")
-    child = reconcile._child_session_with_semantics(parent)
-    assert child is not parent
-    assert child.conf.get("spark.sql.session.timeZone") == "America/New_York"
-    assert child.conf.get("spark.sql.ansi.enabled") == "true"
-    assert child.conf.get("spark.sql.caseSensitive") == "true"
-    assert child.conf.get("spark.sql.legacy.timeParserPolicy") == "CORRECTED"
-    # the child's conf is ISOLATED — setting on it must not leak back
-    child.conf.set("spark.sql.caseSensitive", "false")
-    assert parent.conf.get("spark.sql.caseSensitive") == "true"

@@ -14,14 +14,18 @@ Scale design
   functions at once) → band buckets → self-join per bucket over the
   16-bytes/doc signature frame.  Candidate pairs only ever meet
   inside a band bucket, so the shuffle is O(docs × bands), never O(docs²).
-  (`minhash_signatures`/`minhash_signature` remain as the JVM xxhash64
-  expression forms for array-typed callers.)
 - SimHash: 63-bit weighted-bit signature (`fused_simhash_signatures`, same
   fused kernel + add.reduceat bit-count); near-dup = small Hamming distance;
   banding the bits into k chunks gives the same bucket-join trick.
 - n-gram Jaccard: exact pairwise similarity *within candidate buckets* (or
   small corpora) via shingle-set intersection — exposed both as verification
   for LSH and as a standalone operator.
+
+All three hashed paths share one shingle kernel, ``_doc_shingle_set``
+(each word blake2b-hashed once, shingles mixed vectorized in numpy), run
+once per Arrow batch in a mapInPandas pass: ``exploded_shingle_hashes``
+(long-format shingle rows), ``fused_minhash_signatures`` and
+``fused_simhash_signatures``.
 """
 
 from __future__ import annotations
@@ -86,22 +90,15 @@ def exploded_shingle_hashes(
     """Per-document distinct word-n-gram shingle hashes in long format
     (id, sh), generated in ONE Arrow-batched mapInPandas pass.
 
-    The expression form (``explode(array_distinct(shingle_hashes(...)))``)
-    runs as interpreted Catalyst lambdas — no codegen for higher-order
-    functions — and measures ~2x slower on the same corpus than this batched
-    Python pass (hashlib.blake2b is C-speed; the loop is per shingle, not
-    per character).  Hash identity == normalized-string identity modulo
-    64-bit collisions, same contract as ``shingle_hashes`` (which remains
-    the expression-level form for operators that keep shingles array-typed,
-    e.g. simhash/minhash signatures).
+    Hash identity == normalized-string identity modulo 64-bit collisions
+    (~k²/2⁶⁴ for k distinct shingles), so the downstream shuffle key is 8
+    bytes instead of the shingle text.
 
     Reference analog: the dedup-before-work family (`scene_copy.py:236-266`).
 
     Shingle identity comes from the shared ``_doc_shingle_set`` kernel (each
-    word blake2b-hashed once, shingles mixed vectorized) — ~2x the previous
-    per-shingle-string blake2b and injective modulo the same 64-bit collision
-    budget, so set sizes / intersections (all any consumer reads) are
-    unchanged in distribution.
+    word blake2b-hashed once, shingles mixed vectorized), the same kernel
+    the two fused signature passes use.
     """
     import hashlib
     import re as _re
@@ -168,73 +165,6 @@ def shingles(text: Column, n: int = 5, word: bool = True) -> Column:
     num = F.greatest(F.length(t) - (n - 1), F.lit(1))
     idx = F.sequence(F.lit(1), num)
     return F.transform(idx, lambda i: F.substring(t, i, n))
-
-
-def shingle_hashes(text: Column, n: int = 5) -> Column:
-    """Word n-gram shingles as 64-bit hashes, never strings.
-
-    Each word is xxhash64'd ONCE, then shingle identity is the hash of the n
-    word hashes — no per-shingle string concat (the interpreted-lambda hot
-    spot) and an 8-byte shuffle key instead of a text key downstream.  Hash
-    identity equals string identity modulo 64-bit collisions (~(k²/2⁶⁴) for k
-    distinct shingles — negligible at any realistic corpus size per bucket).
-    Null-safety matches the string form: out-of-range F.get() yields null,
-    which xxhash64 skips, exactly as concat_ws skips nulls.
-    """
-    t = normalize_text(text)
-    words = F.split(t, " ")
-    word_hashes = F.transform(words, lambda w: F.xxhash64(w))
-    num = F.greatest(F.size(words) - (n - 1), F.lit(1))
-    idx = F.sequence(F.lit(0), num - 1)
-    return F.transform(
-        idx,
-        lambda i: F.xxhash64(*[F.get(word_hashes, i + j) for j in range(n)]),
-    )
-
-
-def minhash_signature(shingle_col: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature as a single array expression (for small num_hashes;
-    the scalable path is ``minhash_signatures`` below, which computes all
-    hash functions in ONE pass over exploded shingles).
-
-    xxhash64 is a JVM built-in (no Python in the loop); distinct seeds give
-    independent hash functions.  Returns array<bigint>(num_hashes).
-    """
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingle_col, lambda sh: F.xxhash64(sh, F.lit(s)))
-            ).alias(f"h{s}")
-            for s in range(num_hashes)
-        ]
-    )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 64,
-    shingle_n: int = 5,
-) -> DataFrame:
-    """Per-doc MinHash signature via explode + multi-min aggregation.
-
-    One pass over the exploded shingle rows computes ALL hash functions
-    (num_hashes min-aggregates in a single groupBy) — versus the array-
-    expression form which re-traverses the shingle array per seed.  Shuffle:
-    one, keyed by doc id, carrying 8-byte hashes only.
-    Returns (id, h0..h{n-1}).
-    """
-    sh = _widen(df).select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.array_distinct(shingle_hashes(F.col(text_col), n=shingle_n))
-        ).alias("sh"),
-    )
-    # seed-rehash of the 64-bit shingle hash gives the independent hash family
-    return sh.groupBy("id").agg(
-        *[F.min(F.xxhash64("sh", F.lit(s))).alias(f"h{s}") for s in range(num_hashes)]
-    )
 
 
 def minhash_lsh_candidates(
@@ -378,13 +308,12 @@ def ngram_jaccard_pairs(
     Returns (id_a, id_b, jaccard) with jaccard >= threshold, id_a < id_b.
 
     Physical notes: shingles travel as 64-bit hashes
-    (``exploded_shingle_hashes`` — one Arrow-batched mapInPandas pass, ~2x
-    the interpreted-lambda expression form), so the posting shuffle key is 8
-    bytes.  The pair-generation path (capped or not) persists ONE
-    (id, sh, df) frame that feeds the prefix build, both sides of the
-    exact-verify join and the size lookups (released via the materializing
-    checkpoint on the way out); the candidate-verify path re-runs the
-    cheap shingle pass per branch.
+    (``exploded_shingle_hashes`` — one Arrow-batched mapInPandas pass), so
+    the posting shuffle key is 8 bytes.  The pair-generation path (capped
+    or not) persists ONE (id, sh, df) frame that feeds the prefix build,
+    both sides of the exact-verify join and the size lookups (released via
+    the materializing checkpoint on the way out); the candidate-verify path
+    re-runs the cheap shingle pass per branch.
 
     ``max_df`` bounds the quadratic tail: posting lists longer than
     ``max_df`` are excluded from pair GENERATION only (the quadratic term is
@@ -622,7 +551,7 @@ def _doc_shingle_set(text: str, shingle_n: int, ws, blake2b) -> "np.ndarray":
     Each WORD is blake2b-hashed once (C speed); shingle identity is a
     vectorized multiply-xorshift mix of the n word hashes — no Python work
     per shingle.  Short docs yield one partial shingle over all words
-    (mirrors the expression form's `greatest(size-n+1, 1)` contract).
+    (mirrors ``shingles``' `greatest(size-n+1, 1)` contract).
     """
     words = ws.sub(" ", (text or "").strip()).lower().split(" ")
     wb = b"".join(
@@ -658,11 +587,9 @@ def fused_minhash_signatures(
     with the blake2b+mix kernel (``_doc_shingle_set``), then ALL hash
     functions evaluate as one (shingles × num_hashes) uint64 multiply-mix
     matrix with a ``np.minimum.reduceat`` per-doc min — no explode, no
-    shuffle at all (the JVM form shuffles (id, sh) rows into 64 min-aggs).
-    Hash family differs from ``minhash_signatures`` (blake2b+mix vs
-    xxhash64); identical shingle sets still yield identical signatures, and
-    band-collision probability tracks Jaccard exactly as before.
-    Returns (id, h0..h{n-1}) — same schema as ``minhash_signatures``.
+    shuffle at all.  Identical shingle sets yield identical signatures, and
+    band-collision probability tracks Jaccard.
+    Returns (id, h0..h{n-1}).
     """
     import hashlib
     import re as _re
@@ -709,18 +636,16 @@ def fused_simhash_signatures(
     pass — normalize → word-hash → shingle-mix → bit-count, no JVM/Python
     round-trip per stage.
 
-    Speed shape (measured at 5k docs / ~300 words each): the expression-form
-    ``simhash`` costs ~5.5s (interpreted per-word + per-shingle lambda
-    xxhash64) vs ~1s here.  Each WORD is blake2b-hashed once (C speed);
-    shingle identity is then a vectorized uint64 multiply-xorshift mix of the
-    n word hashes — zero Python per shingle — and the 63-bit count runs as
-    one ``np.add.reduceat`` over the batch's concatenated shingle matrix.
-
-    Hash-family note: signatures are NOT bit-compatible with the
-    ``simhash()`` column form (blake2b+mix vs xxhash64 chain).  Near-dup
-    GEOMETRY is preserved (hamming distance tracks shingle-set overlap for
-    any well-mixed hash); exact-dup docs still collide exactly.  Use one form
-    consistently within a pipeline.  Returns (id, sig) with sig in [0, 2^63).
+    Per bit b: sum over shingles of (+1 if bit b of the shingle hash else
+    -1); the sign of the sum gives the output bit.  63 bits (not 64) so the
+    signature is a plain non-negative long — all downstream chunk/Hamming
+    math stays in exact integer bitwise ops.  Each WORD is blake2b-hashed
+    once (C speed); shingle identity is then a vectorized uint64
+    multiply-xorshift mix of the n word hashes — zero Python per shingle —
+    and the 63-bit count runs as one ``np.add.reduceat`` over the batch's
+    concatenated shingle matrix.  Near-dup geometry: hamming distance
+    tracks shingle-set overlap; exact-dup docs collide exactly.
+    Returns (id, sig) with sig in [0, 2^63).
     """
     import hashlib
     import re as _re
@@ -758,53 +683,6 @@ def fused_simhash_signatures(
         _widen(df.select(id_col, text_col))
         .mapInPandas(gen, "id long, sig long")
     )
-
-
-def _simhash_from_hashes():
-    """Arrow-batched SimHash bit-count: array<long> shingle hashes → 63-bit
-    signature.  One Python invocation per Arrow batch; per doc the 63×k bit
-    matrix is a single vectorized numpy op.  Replaces the interpreted
-    aggregate/zip_with form, which walked a 63-wide lambda per shingle
-    (~9× slower at 5k docs / 150 shingles each)."""
-    import pandas as pd
-    from pyspark.sql.types import LongType
-
-    @F.pandas_udf(LongType())
-    def udf(hashes: pd.Series) -> pd.Series:
-        import numpy as np
-
-        bitpos = np.arange(63, dtype=np.uint64)
-        out = np.empty(len(hashes), dtype=np.int64)
-        for i, arr in enumerate(hashes):
-            h = np.asarray(arr, dtype=np.int64).view(np.uint64)
-            if h.size == 0:
-                out[i] = 0
-                continue
-            ones = ((h[:, None] >> bitpos) & np.uint64(1)).astype(np.int64)
-            counts = 2 * ones.sum(axis=0) - h.size
-            out[i] = int(((counts > 0).astype(np.uint64) << bitpos).sum())
-        return pd.Series(out)
-
-    return udf
-
-
-def simhash(text_col: Column, shingle_n: int = 3, bits: int = 63) -> Column:
-    """63-bit SimHash of the shingle set, as a non-negative BIGINT.
-
-    Per bit b: sum over shingles of (+1 if bit b of xxhash64(shingle) else -1);
-    sign of the sum gives the output bit.  63 bits (not 64) so the signature
-    is a plain non-negative long — all downstream chunk/Hamming math stays in
-    exact integer bitwise ops (decimal/double forms lose low bits above 2^53).
-    Shingle hashing stays JVM-side (each shingle hashed exactly once); the
-    63-way bit count runs as an Arrow-batched numpy kernel — bit-identical to
-    the pure-expression form it replaced (arithmetic shiftright on a signed
-    long extracts the same two's-complement bit as the uint64 logical shift
-    for b < 63).
-    """
-    if bits != 63:
-        raise ValueError("simhash is fixed at 63 bits (non-negative long)")
-    hashes = F.array_distinct(shingle_hashes(text_col, n=shingle_n))
-    return _simhash_from_hashes()(hashes)
 
 
 def simhash_near_dups(

@@ -8,13 +8,16 @@ The reference's catalog maintenance is SQLite upserts + per-scene existence prob
 - skip-if-exists idempotence (`scene_copy.py:408-422`),
 - delete-then-insert child refresh (`scene_scanner.py:513-524`).
 
-Spark-first restatement: ALL of these are joins + a partitioned-parquet (or
-Delta, when available) rewrite.  The N-per-row probe loop becomes ONE
-full-outer join between catalog and listing — at 100 TB that is the
-difference between N API calls and one shuffle.  Delta Lake's MERGE INTO is
-the production sink; this module implements engine-level merge semantics on
-plain DataFrames so it runs in this environment and the write layer can bind
-to Delta/Iceberg later.
+Spark-first restatement: ALL of these are joins + a versioned-parquet
+rewrite.  The N-per-row probe loop becomes ONE full-outer join between
+catalog and listing — at 100 TB that is the difference between N API calls
+and one shuffle.  The upsert's commit is ``_commit_version``: every writer
+(``merge_upsert_parquet``, ``purge_rows``) stages the rewrite as the next
+``_v*`` directory and moves the ``_CURRENT`` pointer; ``read_parquet_table``
+resolves that pointer.  A Delta table (a ``_delta_log`` directory) is
+refused on both sides by ``_guard_delta_layout``; binding the pointer
+commit to a table format's ``MERGE INTO`` is the documented swap point in
+``_commit_version``.
 """
 
 from __future__ import annotations
@@ -27,76 +30,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-try:  # optional Delta Lake backend — present on a production cluster
-    # image, absent in this container (pip is out of scope here); the
-    # versioned-parquet engine below is the behavior-identical fallback.
-    # The 1:1 API mapping is documented in NOTES_round6_session.md.
-    from delta.tables import DeltaTable  # type: ignore
-
-    _HAS_DELTA = True
-except Exception:  # pragma: no cover - container has no delta-spark
-    DeltaTable = None
-    _HAS_DELTA = False
-
-
-# Session confs that change QUERY SEMANTICS (not tuning): the Delta<3.1
-# autoMerge fallback runs its MERGE in a child session, which starts from
-# cluster defaults — every conf here is copied from the caller's session so
-# the fallback resolves casts/identifiers/timestamps under the same rules.
-_SEMANTIC_SESSION_CONFS = (
-    "spark.sql.session.timeZone",
-    "spark.sql.ansi.enabled",
-    "spark.sql.caseSensitive",
-    "spark.sql.storeAssignmentPolicy",
-    "spark.sql.legacy.timeParserPolicy",
-    "spark.sql.datetime.java8API.enabled",
-    "spark.sql.parquet.datetimeRebaseModeInRead",
-    "spark.sql.parquet.datetimeRebaseModeInWrite",
-    "spark.sql.parquet.int96RebaseModeInRead",
-    "spark.sql.parquet.int96RebaseModeInWrite",
-)
-
-
-def _child_session_with_semantics(spark):
-    """A child session (isolated SQLConf, shared SparkContext) whose
-    semantics-affecting runtime confs mirror the caller's.  newSession()
-    starts from cluster defaults, not the caller's runtime confs — without
-    the copy, a Delta<3.1 fallback MERGE would silently resolve casts,
-    identifiers, and timestamps under different ANSI/case-sensitivity/
-    timezone rules than the caller's session (ADVICE r8; previously only
-    timeZone was copied)."""
-    child = spark.newSession()
-    for key in _SEMANTIC_SESSION_CONFS:
-        try:
-            val = spark.conf.get(key, None)
-        except Exception:  # unknown key on this Spark build
-            val = None
-        if val is not None:
-            child.conf.set(key, val)
-    return child
-
-
-def _is_delta_table(path: str) -> bool:
-    """True when delta-spark is importable AND ``path`` is a real Delta
-    table (has a ``_delta_log``).  Routing key for the merge/read surface:
-    existing versioned-parquet tables keep using the engine's own commit
-    protocol even when the library is present, so enabling Delta never
-    reinterprets a table in place."""
-    return _HAS_DELTA and os.path.isdir(os.path.join(path, "_delta_log"))
-
-
 def _guard_delta_layout(path: str) -> None:
-    """Refuse to write the versioned-parquet layout into a directory that
-    carries a ``_delta_log`` when delta-spark is NOT importable: without
-    the library the routing predicate is false, so a merge would read the
-    Delta data files as a legacy layout and the next sweep would rmtree
-    the Delta log — silent table destruction.  With the library present
-    the caller routes to the native Delta path instead.  Called only from
+    """Refuse a directory that carries a ``_delta_log``: its part files
+    include the ones the log has removed, so reading it as a legacy layout
+    returns stale rows, and a commit's sweep would rmtree the log — silent
+    table destruction.  Runs in ``read_parquet_table`` and in
     ``_acquire_lease``, which every versioned-table writer goes through."""
-    if not _HAS_DELTA and os.path.isdir(os.path.join(path, "_delta_log")):
+    if os.path.isdir(os.path.join(path, "_delta_log")):
         raise ValueError(
-            f"{path} is a Delta table but delta-spark is not importable — "
-            "refusing to write its layout as a versioned-parquet table"
+            f"{path} is a Delta table — refusing to read or write it as a "
+            "versioned-parquet table"
         )
 
 
@@ -220,17 +163,9 @@ def read_parquet_table(spark, path: str, version: str | None = None) -> DataFram
     a reader cannot hold versions alive — same contract as Delta's vacuum
     horizon.
 
-    Delta routing: when delta-spark is importable and ``path`` is a real
-    Delta table, reads go through the delta source (``versionAsOf`` for
-    time travel, with Delta's integer version ids) — same call surface,
-    Delta's own log provides the snapshot isolation the pointer file
-    provides here.
+    A directory holding ``_delta_log`` is refused (``_guard_delta_layout``).
     """
-    if _is_delta_table(path):
-        reader = spark.read.format("delta")
-        if version is not None:
-            reader = reader.option("versionAsOf", int(version))
-        return reader.load(path)
+    _guard_delta_layout(path)
     if version is not None:
         avail = table_versions(path)
         if version not in avail:
@@ -388,75 +323,7 @@ def merge_upsert_parquet(
     rows), target columns absent from the source pass through — each
     version directory is self-describing parquet, so old versions keep
     their old schema and time travel reads it unchanged.
-
-    Delta routing: when delta-spark is importable and ``path`` is already
-    a Delta table, the merge executes as a native ``MERGE INTO``
-    (``whenMatchedUpdate(All)`` + ``whenNotMatchedInsertAll``) — Delta's
-    optimistic concurrency replaces the writer lease, its log retention
-    replaces ``keep_versions``, and the return value is the same re-read
-    merged table.  A plain/versioned-parquet path NEVER auto-converts;
-    create the Delta table explicitly first (one-time migration step in
-    NOTES_round6_session.md).
     """
-    if _is_delta_table(path):
-        tgt = DeltaTable.forPath(spark, path)
-        # Plain equality, NOT null-safe <=>: the versioned-parquet
-        # fallback joins on the keys with full_outer semantics where
-        # NULL never matches NULL — a NULL-key source row INSERTS there,
-        # so it must insert here too or the two backends diverge on the
-        # same call (review catch r7).
-        cond = " AND ".join(f"t.`{k}` = u.`{k}`" for k in keys)
-        cols = update_cols or [c for c in source.columns if c not in keys]
-        target_cols = set(read_parquet_table(spark, path).columns)
-        # Mirror merge_upsert's NULL-preserving update exactly: a NULL in
-        # the source keeps the target value (coalesce), columns new to the
-        # target take the source value outright.  The `set` expressions
-        # are unbound Column refs, so one dict serves both sessions below.
-        update_set = {
-            c: (
-                F.coalesce(F.col(f"u.`{c}`"), F.col(f"t.`{c}`"))
-                if c in target_cols
-                else F.col(f"u.`{c}`")
-            )
-            for c in cols
-        }
-
-        def _build_merge(tbl, src):
-            return (
-                tbl.alias("t")
-                .merge(src.alias("u"), cond)
-                .whenMatchedUpdate(set=update_set)
-                .whenNotMatchedInsertAll()
-            )
-
-        m = _build_merge(tgt, source)
-        # Schema evolution parity with the fallback (which appends
-        # source-only columns automatically): Delta >= 3.1 exposes it on
-        # the merge builder; older releases need the session-conf flag.
-        # Scope that flag to a CHILD session (isolated SQLConf, shared
-        # SparkContext) instead of toggling the caller's — a concurrent
-        # Delta operation on the shared session would otherwise silently
-        # execute with autoMerge enabled, and a concurrent restore could
-        # clobber the flag (ADVICE r7; same pattern as purge_rows'
-        # retention-check override).  The source DataFrame crosses
-        # sessions via a global temp view (session-scoped views don't).
-        if hasattr(m, "withSchemaEvolution"):
-            m.withSchemaEvolution().execute()
-        else:  # pragma: no cover - only reachable on Delta < 3.1 images
-            child = _child_session_with_semantics(spark)
-            child.conf.set(
-                "spark.databricks.delta.schema.autoMerge.enabled", "true"
-            )
-            gview = f"wdp_merge_src_{os.getpid()}_{id(source):x}"
-            source.createOrReplaceGlobalTempView(gview)
-            try:
-                _build_merge(
-                    DeltaTable.forPath(child, path),
-                    child.table(f"global_temp.{gview}"),
-                ).execute()
-            finally:
-                spark.catalog.dropGlobalTempView(gview)
-        return read_parquet_table(spark, path)
     return _commit_version(
         spark, path,
         lambda target: merge_upsert(target, source, keys, update_cols),
@@ -482,28 +349,7 @@ def purge_rows(
     Committed by ``_commit_version`` like a merge (crash at any step
     leaves the table readable; retry completes), with the delete expressed
     as a broadcast-friendly left_anti join.  Returns the re-read table.
-
-    Delta routing (review catch r7 — the pointer-file surgery below would
-    rmtree ``_delta_log`` on a Delta table): on a real Delta table the
-    delete runs as a native ``MERGE … WHEN MATCHED DELETE``, then the
-    history purge is Delta's own ``VACUUM(0)`` — executed on a CHILD
-    session so the retention-check override never leaks into shared conf
-    (the kcore_contract scoping pattern).
     """
-    if _is_delta_table(path):
-        tgt = DeltaTable.forPath(spark, path)
-        cond = " AND ".join(f"t.`{k}` = u.`{k}`" for k in keys)
-        tgt.alias("t").merge(
-            key_rows.select(*keys).distinct().alias("u"), cond
-        ).whenMatchedDelete().execute()
-        # history purge: vacuum(0) needs the retention check off; scope
-        # it to a child session so concurrent work is unaffected
-        child = spark.newSession()
-        child.conf.set(
-            "spark.databricks.delta.retentionDurationCheck.enabled", "false"
-        )
-        DeltaTable.forPath(child, path).vacuum(0)
-        return read_parquet_table(spark, path)
     return _commit_version(
         spark, path,
         lambda target: target.join(
@@ -528,14 +374,6 @@ def vacuum_table(path: str, keep_last: int = 1) -> list[str]:
     """
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1 (the live version)")
-    if _is_delta_table(path):
-        # version-COUNT trimming has no Delta analog (Delta vacuums by
-        # retention TIME) and the _v*/_CURRENT sweep below would destroy
-        # a Delta layout — refuse loudly (review catch r7)
-        raise ValueError(
-            "vacuum_table manages versioned-parquet history; for a Delta "
-            "table use DeltaTable.vacuum(retention_hours)"
-        )
     lease = _acquire_lease(path)
     try:
         keep = set(table_versions(path)[-keep_last:])

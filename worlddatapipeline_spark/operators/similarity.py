@@ -244,7 +244,7 @@ def cosine_pairs(
     then a theta self-join on id_a < id_b; the pair expression is a single
     dot product + divide.  Thresholding on the ROUNDED value keeps the
     boundary deterministic across engines.  At 100 TB scale the pair space is
-    pruned first with `lsh_bucket` / `ivf_topk`-style inverted lists and this
+    pruned first with `lsh_topk` / `ivf_topk`-style inverted lists and this
     same exact expression verifies candidates only.
     """
     spark = corpus.sparkSession
@@ -360,15 +360,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     """Deterministic random hyperplanes (public numpy RNG, fixed seed)."""
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim)).tolist()
-
-
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-pattern bucket id: bit b = sign(vec · plane_b)."""
-    bucket = F.lit(0)
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(v)) for v in p])
-        bucket = bucket + F.when(dot(vec, plane) > 0, F.lit(2**i)).otherwise(F.lit(0))
-    return bucket
 
 
 def lsh_topk(
@@ -714,7 +705,7 @@ def bucketed_cosine_dedup(
     The bucket column is the quadratic bound: pairs are only ever formed
     within a bucket, so cost is sum(bucket²), never corpus².  Callers choose
     the bucketing: a data column (label / source / language), an LSH sign
-    pattern (``lsh_bucket``), or a trained k-means cluster
+    pattern (``lsh_topk``'s table buckets), or a trained k-means cluster
     (``semantic_dedup``).  Scoring is one GEMM per bucket over Arrow batches
     (``applyInPandas``); only (id, bucket, dup_of) rows come back — vectors
     never leave the executor.  A bucket larger than ``max_bucket`` fails

@@ -3999,11 +3999,6 @@ def q_streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame
     constant."""
     import uuid
 
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:  # pragma: no cover
-        pass
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from .operators import windows as win_ops
 
     (events,) = _t(spark, sf_dir, "events")

@@ -4763,7 +4763,6 @@ def q_streaming_stall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .streaming.monitor import stateful_stall_detector
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     (events,) = _t(spark, sf_dir, "events")
     status = events.select(
         F.col("user_id").cast("string").alias("task_id"),

@@ -347,92 +347,6 @@ def streaming_ewma(
     )
 
 
-def streaming_running_totals(
-    series_stream: DataFrame,
-    key_col: str = "user_id",
-    order_col: str = "event_us",
-    id_col: str = "event_id",
-    cents_col: str = "cents",
-) -> DataFrame:
-    """Per-key running (count, sum) via ``transformWithStateInPandas`` —
-    Spark 4's typed-state streaming API (StatefulProcessor + ValueState),
-    the successor surface to ``applyInPandasWithState`` that the EWMA
-    smoother uses; the engine covers BOTH so callers can pick either.
-
-    The summed column is an INTEGER (cents/micro-units, produced by the
-    caller as ``floor(value*100 + 0.5)`` — the repo's portable-rounding
-    pattern), so the int64 state accumulates exactly: no float drift
-    across micro-batch boundaries, and the batch window-sum oracle matches
-    bit-for-bit.  Ordering contract is the EWMA one: rows sorted by the
-    composite (order, id) within a batch, batches time-partitioned, rows
-    at or behind the state's composite high-water mark dropped
-    defensively.  State per key is four int64 scalars; keys hash-partition
-    across executors, so at production rates this scales with distinct
-    keys, not stream length.
-
-    ENVIRONMENT-BOUNDED: transformWithStateInPandas speaks a protobuf
-    state protocol to the JVM, and ``google.protobuf`` is not installed in
-    this container — the plan builds but fails at stream start with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE.  The parity test
-    (tests/test_monitor.py) auto-skips when protobuf is absent; on a
-    normal cluster image (protobuf ships with every Spark distro's Python
-    env) this runs as-is.  The applyInPandasWithState EWMA above is the
-    registry-verified stateful path."""
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.streaming import StatefulProcessor  # noqa: PLC0415
-
-    out_schema = f"{key_col} long, {id_col} long, running_n long, running_cents long"
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle):
-            self._tot = handle.getValueState(
-                "tot", "n long, cents long, t long, i long"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            pdf = pd.concat(list(rows), ignore_index=True)
-            if len(pdf) == 0:
-                return
-            pdf = pdf.sort_values([order_col, id_col], kind="mergesort")
-            prev = self._tot.get() if self._tot.exists() else None
-            n0, c0 = (0, 0) if prev is None else (prev[0], prev[1])
-            if prev is not None:
-                pdf = pdf[
-                    (pdf[order_col] > prev[2])
-                    | ((pdf[order_col] == prev[2]) & (pdf[id_col] > prev[3]))
-                ]
-                if len(pdf) == 0:
-                    return
-            run_n = n0 + pd.RangeIndex(1, len(pdf) + 1)
-            run_c = c0 + pdf[cents_col].to_numpy(dtype="int64").cumsum()
-            self._tot.update(
-                (
-                    int(run_n[-1]),
-                    int(run_c[-1]),
-                    int(pdf[order_col].iloc[-1]),
-                    int(pdf[id_col].iloc[-1]),
-                )
-            )
-            yield pd.DataFrame(
-                {
-                    key_col: key[0],
-                    id_col: pdf[id_col].to_numpy(),
-                    "running_n": run_n.to_numpy(),
-                    "running_cents": run_c,
-                }
-            )
-
-        def close(self):
-            pass
-
-    return series_stream.groupBy(key_col).transformWithStateInPandas(
-        RunningTotals(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="None",
-    )
-
-
 def interval_join_streams(
     left: DataFrame,
     right: DataFrame,
