@@ -1,7 +1,6 @@
 """Dedup operator tests: exact, jaccard, minhash recall, simhash."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from worlddatapipeline_spark.operators import dedup
 
@@ -71,10 +70,21 @@ def test_simhash_near_dups(spark):
     assert (0, 1) in pairs  # near-dup within hamming 8
 
 
-def test_shingles(spark):
-    df = spark.createDataFrame([("a b c d",)], ["t"])
-    out = df.select(dedup.shingles(F.col("t"), n=3).alias("sh")).collect()[0]["sh"]
-    assert out == ["a b c", "b c d"]
+def test_short_doc_yields_one_shingle():
+    """A doc shorter than n words is one partial shingle over all its
+    words; from n words on there is one shingle per start position."""
+    import hashlib
+    import re
+
+    ws = re.compile(r"\s+")
+
+    def ids(text):
+        return dedup._doc_shingle_set(text, 5, ws, hashlib.blake2b)
+
+    for text in ("", "a", "a b", "a  B c d"):
+        assert len(ids(text)) == 1, text
+    assert len(ids("a b c d e")) == 1 and len(ids("a b c d e f")) == 2
+    assert ids("a b")[0] != ids("a c")[0]
 
 
 def test_ngram_jaccard_max_df_drops_boilerplate(spark):

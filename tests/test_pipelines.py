@@ -101,6 +101,48 @@ def test_sequence_job_deterministic_and_exports(spark, tmp_path):
     ), plan
 
 
+def test_sequence_job_export_job_count(spark, tmp_path):
+    """The sequence job with its CSV export runs six Spark jobs, counted by
+    job group: the resample reads its input in one window pass, with no
+    broadcast side of its own."""
+    from test_schema_memo import jobs_launched
+
+    maps = spark.createDataFrame([("Demo",)], "map_name string")
+    man = {"sequences_per_map": 2, "resample_points": 16, "n_segments": 3,
+           "steps_per_segment": 10}
+    _, jobs = jobs_launched(spark, lambda: pipelines.run_sequence_job(
+        spark, maps, man, output_dir=str(tmp_path / "cams")))
+    assert jobs == 6
+
+
+def test_export_read_back_lists_with_at_most_core_count_tasks(spark, tmp_path):
+    """Reading back an export of more ``sequence_id=`` directories than
+    Spark's parallel-listing threshold (32) launches no job with more tasks
+    than the session has cores, the listing jobs included."""
+    from test_schema_memo import job_ids
+
+    n_seq = 40
+    poses = spark.createDataFrame(
+        [(f"S_{i:03d}", f, 1.0 * i, 2.0, 3.0, 10.0, 5.0, 0.0)
+         for i in range(n_seq) for f in range(2)],
+        "sequence_id string, frame int, x double, y double, z double, "
+        "yaw double, pitch double, roll double",
+    )
+    out_dir = str(tmp_path / "cams")
+    assert export_ops.write_camera_csvs(poses, out_dir) == 2 * n_seq
+    n, ids = job_ids(spark, lambda: spark.read.csv(
+        f"{out_dir}/transform", header=True
+    ).select("sequence_id").distinct().count())
+    assert n == n_seq
+    tracker = spark.sparkContext.statusTracker()
+    tasks = {
+        j: max(tracker.getStageInfo(s).numTasks
+               for s in tracker.getJobInfo(j).stageIds)
+        for j in ids
+    }
+    assert ids and max(tasks.values()) <= spark.sparkContext.defaultParallelism, tasks
+
+
 def test_render_plan_prefix_match_and_date_suffix(spark):
     sequences = spark.createDataFrame(
         [("Demo001",), ("Demo002",), ("Other9",)], "sequence_name string"

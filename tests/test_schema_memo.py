@@ -17,8 +17,8 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 
-def jobs_launched(spark, fn):
-    """(``fn()``, the number of Spark jobs it launched), counted by job
+def job_ids(spark, fn):
+    """(``fn()``, the ids of the Spark jobs it launched), found by job
     group as perfbench's tracer attributes them."""
     sc = spark.sparkContext
     group = f"jobs-{uuid.uuid4().hex}"
@@ -27,7 +27,13 @@ def jobs_launched(spark, fn):
         out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def jobs_launched(spark, fn):
+    """(``fn()``, the number of Spark jobs it launched)."""
+    out, ids = job_ids(spark, fn)
+    return out, len(ids)
 
 
 @pytest.fixture

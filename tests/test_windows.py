@@ -4,6 +4,8 @@ import math
 
 import numpy as np
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from worlddatapipeline_spark.operators import windows
@@ -219,6 +221,75 @@ def test_arc_length_resample_stationary_path(spark):
     assert len(out) == 5
     assert sorted(r["k"] for r in out) == [0, 1, 2, 3, 4]
     assert all(r["x"] == 7.0 and r["y"] == -3.0 and r["z"] == 2.0 for r in out)
+
+
+def test_arc_length_resample_refuses_bad_n_points(spark):
+    """N is a Python int of at least 2, checked when the plan is built: N=1
+    would divide by N-1 = 0, and a column name cannot size the grid."""
+    df = _path_df(spark, [(0, 0, 0), (1, 0, 0)])
+    for bad in (1, 0, -3):
+        with pytest.raises(ValueError, match="n_points >= 2"):
+            windows.arc_length_resample(df, "seq", "ord", bad)
+    with pytest.raises(TypeError):
+        windows.arc_length_resample(df, "seq", "ord", "n_points")
+
+
+# one path: fresh vertices, repeats of the previous vertex (zero-length
+# segments), an optional zero-length tail, or a stationary point
+_coord = st.one_of(
+    st.integers(-20, 20).map(float),
+    st.floats(-1e3, 1e3, allow_nan=False, allow_infinity=False),
+)
+_vertex = st.tuples(_coord, _coord, _coord)
+
+
+@st.composite
+def _paths(draw):
+    if draw(st.booleans()) and draw(st.booleans()):
+        return [draw(_vertex)] * draw(st.integers(1, 4))
+    pts = [draw(_vertex)]
+    for _ in range(draw(st.integers(0, 7))):
+        pts.append(pts[-1] if draw(st.booleans()) else draw(_vertex))
+    return pts + [pts[-1]] * draw(st.integers(0, 2))
+
+
+def _seq_df(spark, paths):
+    return spark.createDataFrame(
+        [(f"s{i}", j, *p) for i, path in enumerate(paths) for j, p in enumerate(path)],
+        "seq string, ord int, x double, y double, z double",
+    )
+
+
+@given(st.lists(_paths(), min_size=1, max_size=4), st.sampled_from([2, 3, 7, 24]))
+@example([[(0.0, 0.0, 0.0), (1.0, 0.0, 0.0), (1.0, 0.0, 0.0), (3.0, 0.0, 0.0)]], 7)
+@example([[(0.0, 0.0, 0.0), (0.1, 0.2, 0.3), (0.1, 0.2, 0.3), (0.1, 0.2, 0.3)]], 3)
+@example([[(5.0, 5.0, 5.0)] * 3, [(1.0, 2.0, 3.0)], [(0.0, 0.0, 0.0), (0.3, 0.0, 0.0)]], 24)
+@settings(max_examples=20, deadline=None)
+def test_arc_length_resample_one_pass_matches_join_form(spark, paths, n):
+    """The one-pass resample gives exactly the rows of the grid ⋈ segment
+    join form (tests/ref_windows.py): repeated vertices, zero-length tails,
+    stationary and single-vertex paths, several sequences at once."""
+    from ref_windows import arc_length_resample_join
+
+    df = _seq_df(spark, paths)
+    got = windows.arc_length_resample(df, "seq", "ord", n).collect()
+    ref = arc_length_resample_join(df, "seq", "ord", n).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, ref))
+    assert len(got) == n * sum(len(p) > 1 for p in paths)
+
+
+def test_arc_length_resample_reads_input_once(spark, tmp_path):
+    """One window pass: the physical plan has no join and no broadcast, and
+    scans the input once."""
+    path = str(tmp_path / "path.parquet")
+    _seq_df(spark, [[(0.0, 0.0, 0.0), (3.0, 4.0, 0.0), (3.0, 4.0, 12.0)],
+                   [(1.0, 1.0, 1.0)] * 2]) \
+        .write.parquet(path)
+    out = windows.arc_length_resample(spark.read.parquet(path), "seq", "ord", 5)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+    assert plan.count("FileScan parquet") == 1, plan
+    assert out.count() == 10
 
 
 def test_clip_segments_after_truncation(spark):

@@ -147,26 +147,6 @@ def exact_dedup(
     return reps.select(id_col, "dup_count")
 
 
-def shingles(text: Column, n: int = 5, word: bool = True) -> Column:
-    """n-gram shingle array (word shingles by default — rarer than char
-    3-grams, so bucket joins don't explode on common grams)."""
-    t = normalize_text(text)
-    if word:
-        words = F.split(t, " ")
-        num = F.greatest(F.size(words) - (n - 1), F.lit(1))
-        idx = F.sequence(F.lit(0), num - 1)
-        # unrolled get() concat: O(1) per shingle vs O(n) slice-copy; F.get is
-        # 0-based and null-safe (short docs yield the partial shingle, like
-        # slice+concat_ws did, instead of an ANSI out-of-bounds error)
-        return F.transform(
-            idx,
-            lambda i: F.concat_ws(" ", *[F.get(words, i + j) for j in range(n)]),
-        )
-    num = F.greatest(F.length(t) - (n - 1), F.lit(1))
-    idx = F.sequence(F.lit(1), num)
-    return F.transform(idx, lambda i: F.substring(t, i, n))
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str,
@@ -550,8 +530,10 @@ def _doc_shingle_set(text: str, shingle_n: int, ws, blake2b) -> "np.ndarray":
 
     Each WORD is blake2b-hashed once (C speed); shingle identity is a
     vectorized multiply-xorshift mix of the n word hashes — no Python work
-    per shingle.  Short docs yield one partial shingle over all words
-    (mirrors ``shingles``' `greatest(size-n+1, 1)` contract).
+    per shingle.  A doc of m words yields the ``max(m - n + 1, 1)``
+    shingles starting at words 0..m-n; one shorter than n words (the empty
+    doc included) yields exactly one partial shingle over all its words, so
+    every doc has a non-empty set and short docs still compare.
     """
     words = ws.sub(" ", (text or "").strip()).lower().split(" ")
     wb = b"".join(

@@ -160,43 +160,61 @@ def arc_length_resample(
     df: DataFrame,
     seq_col: str,
     order_col: str,
-    n_points_col_or_lit,
+    n_points: int,
     pos_cols=("x", "y", "z"),
 ) -> DataFrame:
-    """Resample each sequence's polyline to N points equally spaced in arc
-    length, linear interpolation inside segments.
+    """Resample each sequence's polyline to ``n_points`` points equally
+    spaced in arc length, linear interpolation inside segments.
 
-    Reference analog: `nav_utils.py:233-271` (imperative walk).  Spark form:
-    1. cumulative distance per vertex (window sum),
-    2. generate the target grid ``d_k = k * L/(N-1)`` via sequence+explode,
-    3. as-of match each target to its bracketing segment (window fill),
-    4. lerp.
-    All joins are per-sequence equi-joins — shuffle on seq only.
+    Reference analog: `nav_utils.py:233-271` (imperative walk).  Spark form,
+    one window pass over the input per sequence, no join:
+    1. cumulative distance per vertex (window sum); each segment row (a
+       vertex and its ``lead``) also carries the path length ``L`` as
+       ``max(__cum)`` over the sequence window,
+    2. each segment explodes only its candidate grid indices
+       ``[floor(d0·(N−1)/L) − 1, ceil(d1·(N−1)/L) + 1] ∩ [0, N−1]`` (every k
+       for segment 1 of a zero-length path), so the work per sequence is
+       O(N+S) for N grid points and S segments, not O(N·S),
+    3. each candidate's target ``d_k = k·L/(N−1)`` is matched to its
+       bracketing segment by the predicate below, then lerped.
+
+    The ±1 of slack covers float rounding.  ``d_k = fl(fl(k·L)/(N−1))``
+    and the bound ``fl(fl(d/L)·(N−1))`` (``d/L`` first, so it cannot
+    overflow) are two correctly rounded operations each, so each is within
+    a relative 2⁻⁵² of its exact value.  Cumulative distances are
+    DECIMAL(28,12) sums, so ``L`` is 0 or at least 1e-12, never subnormal,
+    and the relative bounds hold.  In units of k the error is then below
+    (N−1)·2⁻⁵⁰ < 1 for any 32-bit N, so every k whose ``d_k`` lands in
+    [d0, d1] already lies in ``[floor(d0·(N−1)/L), ceil(d1·(N−1)/L)]``;
+    the extra 1 on each side is margin.  Candidates are a superset only:
+    the match predicate below, the same one the grid ⋈ segment band join
+    used, decides which k a segment keeps.
     """
+    if n_points < 2:
+        raise ValueError(f"arc_length_resample needs n_points >= 2, got {n_points}")
     x, y, z = pos_cols
     cum = cumulative_distance(df, seq_col, order_col, pos_cols, "__cum")
-    # segment table: start vertex of each segment with its end
     w = Window.partitionBy(seq_col).orderBy(order_col)
     seg = cum.select(
         seq_col,
         F.col("__cum").alias("d0"),
         F.lead("__cum").over(w).alias("d1"),
         F.row_number().over(w).alias("__segno"),
+        F.max("__cum").over(Window.partitionBy(seq_col)).alias("L"),
         *[F.col(c).alias(f"{c}0") for c in (x, y, z)],
         *[F.lead(c).over(w).alias(f"{c}1") for c in (x, y, z)],
     ).filter(F.col("d1").isNotNull())
-    total = cum.groupBy(seq_col).agg(F.max("__cum").alias("L"))
-    n = (
-        F.lit(n_points_col_or_lit)
-        if isinstance(n_points_col_or_lit, int)
-        else F.col(n_points_col_or_lit)
+    last = F.lit(n_points - 1)
+    d0, d1, L = F.col("d0"), F.col("d1"), F.col("L")
+    lo = F.greatest(F.floor(d0 / L * last) - 1, F.lit(0)).cast("int")
+    hi = F.least(F.ceil(d1 / L * last) + 1, last).cast("int")
+    # explode(null) emits no rows: the other segments of a zero-length path
+    candidates = F.when(L > 0.0, F.sequence(lo, hi)).when(
+        F.col("__segno") == 1, F.sequence(F.lit(0), last)
     )
-    grid = total.select(
-        seq_col,
-        "L",
-        (n - 1).alias("last_k"),
-        F.explode(F.sequence(F.lit(0), n - 1)).alias("k"),
-    ).withColumn("target_d", F.col("k") * F.col("L") / (n - 1))
+    grid = seg.select("*", F.explode(candidates).alias("k")).withColumn(
+        "target_d", F.col("k") * L / last
+    )
     # Match target to segment [d0, d1).  The last grid point is matched
     # STRUCTURALLY (k == N-1 → the final non-zero-length segment) rather than
     # by float equality target_d == L: k*L/(N-1) for k=N-1 is within ulps of
@@ -205,33 +223,24 @@ def arc_length_resample(
     # (L == 0: every segment zero-length) matches its FIRST segment for
     # every k, yielding N copies of the stationary point instead of
     # silently dropping the sequence.
-    g, s = grid.alias("g"), seg.alias("s")
-    j = g.join(
-        s,
-        (F.col(f"g.{seq_col}") == F.col(f"s.{seq_col}"))
-        & (
-            (
-                (F.col("g.target_d") >= F.col("s.d0"))
-                & (
-                    (F.col("g.target_d") < F.col("s.d1"))
-                    | (
-                        (F.col("g.k") == F.col("g.last_k"))
-                        & (F.col("s.d1") == F.col("g.L"))
-                        & (F.col("s.d0") < F.col("s.d1"))
-                    )
-                )
+    target = F.col("target_d")
+    matched = grid.filter(
+        (
+            (target >= d0)
+            & (
+                (target < d1)
+                | ((F.col("k") == last) & (d1 == L) & (d0 < d1))
             )
-            | ((F.col("g.L") == 0.0) & (F.col("s.__segno") == 1))
-        ),
-        "inner",
+        )
+        | ((L == 0.0) & (F.col("__segno") == 1))
     )
-    t = F.when(F.col("s.d1") > F.col("s.d0"), (F.col("g.target_d") - F.col("s.d0")) / (F.col("s.d1") - F.col("s.d0"))).otherwise(F.lit(0.0))
-    out = j.select(
-        F.col(f"g.{seq_col}").alias(seq_col),
-        F.col("g.k").alias("k"),
-        F.col("g.target_d").alias("target_d"),
+    t = F.when(d1 > d0, (target - d0) / (d1 - d0)).otherwise(F.lit(0.0))
+    out = matched.select(
+        seq_col,
+        "k",
+        "target_d",
         *[
-            (F.col(f"s.{c}0") + t * (F.col(f"s.{c}1") - F.col(f"s.{c}0"))).alias(c)
+            (F.col(f"{c}0") + t * (F.col(f"{c}1") - F.col(f"{c}0"))).alias(c)
             for c in (x, y, z)
         ],
     )

@@ -17,11 +17,20 @@ Scale notes
   only the *initial* value — AQE coalesces/splits at runtime.
 - Arrow is enabled for every pandas_udf / applyInPandas operator (the stateful
   scans and simulation operators are Arrow-batched, never row-at-a-time).
+- File listing runs with as many tasks as the session has cores
+  (``spark.sql.sources.parallelPartitionDiscovery.parallelism``).  Above
+  ``parallelPartitionDiscovery.threshold`` (32) paths Spark lists in a job
+  with one task per path up to that cap, 10,000 by default.  The listing
+  work is the same at any task count, so tasks beyond the cores only add
+  launches: reading back a camera export of 64 ``sequence_id=``
+  directories ran two 64-task listing jobs.  A cluster with more listing
+  throughput than cores raises it through ``extra_conf``.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -42,6 +51,8 @@ def get_spark(
     """
     master = master or f"local[{DEFAULT_CPUS}]"
     shuffle_partitions = shuffle_partitions or DEFAULT_CPUS
+    local = re.fullmatch(r"local\[(\d+)\]", master)
+    cores = int(local.group(1)) if local else DEFAULT_CPUS
     b = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -55,6 +66,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cores))
     )
     if not SparkSession.getActiveSession():
         b = b.master(master)
