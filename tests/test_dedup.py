@@ -208,3 +208,52 @@ def test_widen_passes_preshaped_frames_through(spark):
     widened = dedup._widen(narrow)
     assert widened is not narrow
     assert "Repartition" in widened._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_bucket_pairs_fans_out_each_bucket_once(spark):
+    """Each pair sharing a bucket comes out once per shared bucket with
+    a < b; singleton and over-max_bucket buckets emit nothing, and keep
+    drops a pair before it is built."""
+    from pyspark.sql import functions as F
+
+    members = spark.createDataFrame(
+        [
+            ("b1", 3), ("b1", 1), ("b1", 2),   # 3 pairs
+            ("b2", 5),                          # singleton: none
+            ("b3", 9), ("b3", 7),               # 1 pair
+            ("big", 10), ("big", 11), ("big", 12), ("big", 13),  # > max_bucket
+        ],
+        "bk string, id long",
+    )
+
+    def pair(x, y):
+        return F.struct(x.alias("a"), y.alias("b"))
+
+    def pairs(**kw):
+        out = dedup.bucket_pairs(members, ["bk"], "id", pair, **kw).collect()
+        return sorted((r["a"], r["b"]) for r in out)
+
+    assert pairs(max_bucket=3) == [(1, 2), (1, 3), (2, 3), (7, 9)]
+    assert len(pairs()) == 4 + 6  # unguarded: the 4-member bucket's 6 pairs
+    assert pairs(max_bucket=3, keep=lambda x, y: y - x == 1) == [(1, 2), (2, 3)]
+
+
+def test_ngram_jaccard_all_candidates_equals_default_path(spark):
+    """Verifying every doc pair as a candidate returns exactly the rows of
+    the prefix-filtered default path, jaccard included."""
+    from pyspark.sql import functions as F
+
+    docs = _docs(spark)
+    a = docs.select(F.col("doc_id").alias("id_a"))
+    b = docs.select(F.col("doc_id").alias("id_b"))
+    every = a.join(b, F.col("id_a") < F.col("id_b"))
+    for threshold in (0.3, 0.5, 0.8):
+        default = dedup.ngram_jaccard_pairs(
+            docs, "text", "doc_id", n=3, threshold=threshold
+        ).collect()
+        verified = dedup.ngram_jaccard_pairs(
+            docs, "text", "doc_id", n=3, threshold=threshold,
+            candidate_pairs=every,
+        ).collect()
+        assert default, threshold
+        assert sorted(map(tuple, verified)) == sorted(map(tuple, default))

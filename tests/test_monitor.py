@@ -96,11 +96,11 @@ def test_streaming_status_counts(spark, tmp_path):
         spark, str(p), schemas.TASK_STATUS_EVENTS, watermark="10 minutes"
     )
     counts = monitor.status_counts(stream)
-    monitor.run_stream_to_memory(counts, "status_counts_test")
-    got = {
-        r["status"]: r["n"]
-        for r in spark.sql("SELECT * FROM status_counts_test").collect()
-    }
+    views = {t.name for t in spark.catalog.listTables()}
+    out = monitor.run_stream_to_memory(counts)
+    # the runner drops its sink's view: repeated runs leak no table
+    assert {t.name for t in spark.catalog.listTables()} == views
+    got = {r["status"]: r["n"] for r in out.collect()}
     assert got == {"rendering": 2, "completed": 1}
 
 
@@ -200,8 +200,8 @@ def test_dedup_stream(spark, tmp_path):
     (drop / "a.json").write_text("\n".join(json.dumps(r) for r in rows))
     stream = spark.readStream.schema(schema).json(str(drop))
     deduped = dedup_stream(stream, ["task_id"], watermark="5 minutes")
-    run_stream_to_memory(deduped, "dedup_test", output_mode="append")
-    got = spark.sql("SELECT task_id FROM dedup_test ORDER BY task_id").collect()
+    out = run_stream_to_memory(deduped, output_mode="append")
+    got = out.select("task_id").orderBy("task_id").collect()
     assert [r["task_id"] for r in got] == ["t1", "t2"]
 
 

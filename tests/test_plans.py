@@ -259,8 +259,9 @@ def test_token_shard_packing_single_window_shuffle(spark):
 
 
 def test_minhash_bucket_guard_shares_join_exchange(spark):
-    """The max_bucket window count must not add a join branch — the guard
-    rides the (band,bucket) shuffle of the in-bucket self-join."""
+    """The max_bucket guard must not add a join branch — it is a size
+    filter on each collected (band, bucket), inside the one bucket shuffle
+    of ``bucket_pairs``; the operator has no self-join and no window."""
     from worlddatapipeline_spark.operators import dedup
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -270,8 +271,10 @@ def test_minhash_bucket_guard_shares_join_exchange(spark):
     plan = out._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
-    # guard is a Window + Filter, not an extra aggregate-plus-semi-join
+    # guard is a Filter on the collected bucket, not an extra
+    # aggregate-plus-semi-join
     assert "LeftSemi" not in plan
+    assert "Join" not in plan and "Window" not in plan
 
 
 def test_bloom_probe_is_map_side(spark):
@@ -674,7 +677,6 @@ _SMJ_OK = {
     "embedding_ivf_recall",
     "embedding_lsh_recall",
     "int8_ann_recall",
-    "minhash_recall_check",
     "simulate_contract",
     # TPC-H-shaped fact⋈fact (Q2/Q20 analogs)
     "excess_stock_suppliers",
@@ -694,9 +696,6 @@ _SMJ_OK = {
     "brand_affinity_topk",
     # shingle posting-list self-join
     "ngram_jaccard_pairs",
-    # candidate-pairs ∩ exact-pairs semi-join, both fact-derived (same
-    # class as minhash_recall_check above)
-    "minhash_verified_dups",
     # full-outer join of the two halves' BOUNDED bin frames — full_outer
     # can never broadcast, so SMJ on a tiny frame is the only plan
     "distribution_drift",

@@ -9,17 +9,25 @@ scale.
 Scale design
 ------------
 - exact dedup: hash-groupBy on a fingerprint — one shuffle, combiner-friendly.
+- Near-dup pairs: every operator below is one candidate generator plus one
+  exact verifier (the split of the prefix-filtering work, Chaudhuri, Ganti
+  and Kaushik ICDE'06).  The one generator is ``bucket_pairs``: group
+  members by bucket, collect each bucket sorted, fan out its ``i < j``
+  pairs in-array — one shuffle on the bucket key, no self-join, so pairs
+  only ever meet inside a bucket and the shuffle is O(members), never
+  O(docs²).
 - MinHash-LSH: fused Arrow-pass signatures (`fused_minhash_signatures`:
   word-blake2b + vectorized shingle mix + minimum.reduceat over all hash
-  functions at once) → band buckets → self-join per bucket over the
-  16-bytes/doc signature frame.  Candidate pairs only ever meet
-  inside a band bucket, so the shuffle is O(docs × bands), never O(docs²).
+  functions at once) → one (band, band_hash) bucket per doc and band →
+  ``bucket_pairs`` with a bucket-size skew guard.
 - SimHash: 63-bit weighted-bit signature (`fused_simhash_signatures`, same
-  fused kernel + add.reduceat bit-count); near-dup = small Hamming distance;
-  banding the bits into k chunks gives the same bucket-join trick.
-- n-gram Jaccard: exact pairwise similarity *within candidate buckets* (or
-  small corpora) via shingle-set intersection — exposed both as verification
-  for LSH and as a standalone operator.
+  fused kernel + add.reduceat bit-count); the bits split into chunks, each
+  (chunk, value) a bucket for ``bucket_pairs``; near-dup = small Hamming
+  distance, checked on the generated pair.
+- n-gram Jaccard: prefix-filtered shingle postings as the buckets of
+  ``bucket_pairs`` (or caller-supplied candidates, e.g. the MinHash pairs),
+  then ``_verify_jaccard``, the one exact verifier: array-intersect of the
+  two docs' full shingle sets.
 
 All three hashed paths share one shingle kernel, ``_doc_shingle_set``
 (each word blake2b-hashed once, shingles mixed vectorized in numpy), run
@@ -147,6 +155,62 @@ def exact_dedup(
     return reps.select(id_col, "dup_count")
 
 
+def bucket_pairs(
+    members: DataFrame,
+    bucket_cols,
+    member,
+    pair,
+    keep=None,
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """Every pair of members that share a bucket — the one in-bucket
+    candidate generator of the MinHash, SimHash and n-gram Jaccard
+    operators (and of the exact-fingerprint containment check).
+
+    Groups ``members`` by ``bucket_cols`` and collects each bucket's
+    ``member`` values (a column or column name) sorted ascending, so in
+    every generated pair ``x`` sorts before ``y`` (a struct member sorts on
+    its first field).  Singleton buckets cannot form a pair and are
+    dropped; with ``max_bucket`` set, buckets of more members are dropped
+    too — the skew guard for degenerate buckets, whose pair fan-out is
+    quadratic.  ``keep(x, y)``, when given, prunes a pair inside the
+    fan-out before it is built; ``pair(x, y)`` builds the output struct,
+    whose fields become the returned columns.  One row per (bucket, pair):
+    a pair sharing several buckets repeats, so callers that need a set add
+    ``.distinct()``.  One shuffle on the bucket key, no self-join.
+
+    Pair generation is an interpreted higher-order lambda: CPU-bound, not
+    byte-bound.  AQE's size-based coalescing sees a few MB of buckets and
+    squeezes them into ONE partition, serializing the O(|bucket|²) fan-out
+    on a single core (measured 23s vs 3s at sf0.1), so the buckets are
+    spread over ``defaultParallelism`` before the fan-out.
+    """
+    ms = F.col("ms")
+    size_ok = F.size(ms) > 1
+    if max_bucket is not None:
+        size_ok = size_ok & (F.size(ms) <= max_bucket)
+    buckets = (
+        members.groupBy(*bucket_cols)
+        .agg(F.sort_array(F.collect_list(member)).alias("ms"))
+        .filter(size_ok)
+        .repartition(members.sparkSession.sparkContext.defaultParallelism)
+    )
+
+    def partners(x, i):
+        ys = F.slice(ms, i + 2, F.greatest(F.size(ms) - i - 1, F.lit(0)))
+        if keep is not None:
+            ys = F.filter(ys, lambda y: keep(x, y))
+        return F.transform(ys, lambda y: pair(x, y))
+
+    return buckets.select(
+        F.explode(F.flatten(F.transform(ms, partners))).alias("p")
+    ).select("p.*")
+
+
+def _id_pair(x: Column, y: Column) -> Column:
+    return F.struct(x.alias("id_a"), y.alias("id_b"))
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str,
@@ -162,18 +226,15 @@ def minhash_lsh_candidates(
     signatures is identical.  Returns (id_a, id_b) with id_a < id_b, distinct.
 
     Shuffle profile: explode to (doc, band, band_hash) — docs × bands rows —
-    then groupBy bucket; pairs are generated inside buckets only.  Skew guard:
-    buckets larger than ``max_bucket`` are dropped before pair generation (a
-    bucket that big means a degenerate signature — e.g. empty or boilerplate
-    docs — not a real near-dup cluster; keeping it makes the in-bucket join
-    quadratic).  The size count shares the (band, bucket) shuffle key with
-    the self-join, so AQE reuses the exchange; the guard costs one map-side
-    combined aggregation, not an extra full shuffle.
+    then ``bucket_pairs`` collects each (band, bucket)'s doc ids in one
+    shuffle and fans out the pairs inside it; the signature pass runs once.
+    Skew guard: buckets larger than ``max_bucket`` are dropped before pair
+    generation (a bucket that big means a degenerate signature — e.g. empty
+    or boilerplate docs — not a real near-dup cluster; keeping it makes the
+    in-bucket fan-out quadratic).  The guard is a size filter on the
+    collected bucket, so it costs no extra shuffle, window or join.
     """
     rows_per_band = num_hashes // bands
-    # the banded self-join reads the signature frame on BOTH sides through
-    # one (band, bucket) exchange, which Spark reuses, so the text scan +
-    # signature pass runs once
     with_sig = fused_minhash_signatures(
         df, text_col, id_col, num_hashes, shingle_n
     )
@@ -199,27 +260,9 @@ def minhash_lsh_candidates(
             )
         ).alias("bb"),
     ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    if max_bucket is not None:
-        # window count over the SAME (band, bucket) key the self-join
-        # shuffles on — one shared exchange, no separate aggregate branch +
-        # semi-join (measured faster than the join form of this guard)
-        wb = Window.partitionBy("band", "bucket")
-        banded = (
-            banded.withColumn("__bsz", F.count(F.lit(1)).over(wb))
-            .filter(F.col("__bsz") <= max_bucket)
-            .drop("__bsz")
-        )
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    return bucket_pairs(
+        banded, ["band", "bucket"], "id", _id_pair, max_bucket=max_bucket
+    ).distinct()
 
 
 # Finite-by-default pair-generation cap for exact Jaccard: no caller gets a
@@ -230,42 +273,33 @@ def minhash_lsh_candidates(
 DEFAULT_MAX_DF = 2000
 
 
-def _pairs_from_posting_lists(postings: DataFrame) -> DataFrame:
-    """(ids: sorted array<long>) → exploded (id_a, id_b) pairs, one output
-    row per shared shingle (NOT distinct)."""
-    postings = (
-        postings
-        # pair generation is an interpreted higher-order lambda: CPU-bound,
-        # not byte-bound.  AQE's size-based coalescing sees a few MB of
-        # postings and squeezes them into ONE partition, serializing the
-        # O(|ids|²) pair fan-out on a single core (measured 23s vs 3s at
-        # sf0.1).  Spread it explicitly before the expensive stage.
-        .repartition(postings.sparkSession.sparkContext.defaultParallelism)
-    )
-    ids = F.col("ids")
-    pair_arr = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.greatest(F.size(ids) - i - 1, F.lit(0))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
+def _verify_jaccard(
+    cand: DataFrame, docsets: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact Jaccard of each candidate pair — the one verifier of
+    ``ngram_jaccard_pairs``.  ``cand`` is (id_a, id_b); ``docsets`` is
+    (id, shs), each doc's full distinct shingle array.  Both docs' arrays
+    join onto the candidate row and ``array_intersect`` recomputes the
+    intersection, so the value is exact whatever generated the candidate.
+    Returns (id_a, id_b, jaccard) with jaccard >= threshold."""
+    side_a = docsets.select(F.col("id").alias("id_a"), F.col("shs").alias("sa"))
+    side_b = docsets.select(F.col("id").alias("id_b"), F.col("shs").alias("sb"))
+    inter, sza, szb = F.col("inter"), F.col("sza"), F.col("szb")
+    return (
+        cand.join(side_a, "id_a")
+        .join(side_b, "id_b")
+        # intersection sized once, in its own projection: folded into the
+        # quotient it would be evaluated twice per candidate
+        .select(
+            "id_a",
+            "id_b",
+            F.size(F.array_intersect("sa", "sb")).alias("inter"),
+            F.size("sa").alias("sza"),
+            F.size("sb").alias("szb"),
         )
+        .select("id_a", "id_b", (inter / (sza + szb - inter)).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
     )
-    return postings.select(F.explode(pair_arr).alias("p")).select(
-        F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b")
-    )
-
-
-def _posting_list_pairs(sh: DataFrame) -> DataFrame:
-    """(id, sh) → candidate (id_a, id_b) pairs from per-shingle posting
-    lists.  Singleton shingles pruned — they cannot contribute a pair."""
-    postings = (
-        sh.groupBy("sh")
-        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    return _pairs_from_posting_lists(postings)
 
 
 def ngram_jaccard_pairs(
@@ -290,18 +324,19 @@ def ngram_jaccard_pairs(
     Physical notes: shingles travel as 64-bit hashes
     (``exploded_shingle_hashes`` — one Arrow-batched mapInPandas pass), so
     the posting shuffle key is 8 bytes.  The pair-generation path (capped
-    or not) persists ONE (id, sh, df) frame that feeds the prefix build,
-    both sides of the exact-verify join and the size lookups (released via
-    the materializing checkpoint on the way out); the candidate-verify path
-    re-runs the cheap shingle pass per branch.
+    or not) persists ONE ranked (id, sh, df, sz, rk) frame that feeds the
+    prefix postings and the per-doc shingle arrays of the verify (released
+    via the materializing checkpoint on the way out).  Both paths verify
+    through ``_verify_jaccard``; the candidate-verify path collects its
+    per-doc arrays straight from the shingle pass.
 
     ``max_df`` bounds the quadratic tail: posting lists longer than
     ``max_df`` are excluded from pair GENERATION only (the quadratic term is
     per-shingle posting-list length, so one mega-frequent shingle —
     boilerplate, licence headers — makes one reducer O(n²)).  The Jaccard
     values themselves stay EXACT: pairs surfaced by any sub-cap shingle are
-    verified against the full, uncapped shingle sets (same candidate-verify
-    join as the LSH path).  A true pair is missed only if EVERY shingle the
+    verified against the full, uncapped shingle sets (the same verifier as
+    the LSH path).  A true pair is missed only if EVERY shingle the
     two docs share occurs in more than ``max_df`` documents — at any
     meaningful threshold that means the overlap is pure boilerplate.  The
     default is finite so no composition is silently quadratic; pass
@@ -404,79 +439,23 @@ def ngram_jaccard_pairs(
         # survivors die in the exact verify).  Measured: cuts candidates
         # ~7x at sf1.0 / threshold 0.8.
         tcoef = threshold / (1.0 + threshold)
-        postings = (
-            prefix.groupBy(F.col("sh"))
-            .agg(
-                F.sort_array(
-                    F.collect_list(F.struct("id", "sz", "rk"))
-                ).alias("ms")
-            )
-            .filter(F.size("ms") > 1)
-            .repartition(df.sparkSession.sparkContext.defaultParallelism)
-        )
-        ms = F.col("ms")
-        pair_arr = F.flatten(
-            F.transform(
-                ms,
-                lambda x, i: F.transform(
-                    F.filter(
-                        F.slice(
-                            ms,
-                            i + 2,
-                            F.greatest(F.size(ms) - i - 1, F.lit(0)),
-                        ),
-                        lambda y: (
-                            F.lit(1.0)
-                            + F.least(x["sz"] - x["rk"], y["sz"] - y["rk"])
-                        )
-                        >= (x["sz"] + y["sz"]) * F.lit(tcoef) - F.lit(1e-6),
-                    ),
-                    lambda y: F.struct(
-                        x["id"].alias("id_a"), y["id"].alias("id_b")
-                    ),
-                ),
-            )
-        )
-        cand = (
-            postings.select(F.explode(pair_arr).alias("p"))
-            .select(
-                F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b")
-            )
-            .distinct()
-        )
+
+        def positional_ok(x, y):
+            return (
+                F.lit(1.0) + F.least(x["sz"] - x["rk"], y["sz"] - y["rk"])
+            ) >= (x["sz"] + y["sz"]) * F.lit(tcoef) - F.lit(1e-6)
+
+        cand = bucket_pairs(
+            prefix,
+            ["sh"],
+            F.struct("id", "sz", "rk"),
+            lambda x, y: _id_pair(x["id"], y["id"]),
+            keep=positional_ok,
+        ).distinct()
         # per-doc shingle sets, derived from the window output so the
         # groupBy reuses the id-hash partitioning (no extra exchange)
         docsets = ranked.groupBy("id").agg(F.collect_list("sh").alias("shs"))
-        out = (
-            cand.join(
-                docsets.select(
-                    F.col("id").alias("id_a"), F.col("shs").alias("sa")
-                ),
-                "id_a",
-            )
-            .join(
-                docsets.select(
-                    F.col("id").alias("id_b"), F.col("shs").alias("sb")
-                ),
-                "id_b",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                F.size(F.array_intersect("sa", "sb")).alias("inter"),
-                F.size("sa").alias("sza"),
-                F.size("sb").alias("szb"),
-            )
-            .select(
-                "id_a",
-                "id_b",
-                (
-                    F.col("inter")
-                    / (F.col("sza") + F.col("szb") - F.col("inter"))
-                ).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
+        out = _verify_jaccard(cand, docsets, threshold)
         # Barrier: ranked is read by the prefix-pair branch (shuffled by
         # shingle) and by docsets (grouped by id), which share no exchange
         # (A/B: lazy 1.24×).  Materialize the (candidate-bounded) pair set
@@ -486,32 +465,8 @@ def ngram_jaccard_pairs(
         from ..session import materialize_and_release  # noqa: PLC0415
 
         return materialize_and_release(out, ranked)
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    cand = candidate_pairs
-    inter = (
-        sh.alias("a")
-        .join(cand, F.col("a.id") == F.col("id_a"))
-        .join(
-            sh.alias("b"),
-            (F.col("b.id") == F.col("id_b")) & (F.col("a.sh") == F.col("b.sh")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    out = (
-        inter.join(sizes.alias("sa"), F.col("id_a") == F.col("sa.id"))
-        .join(sizes.alias("sb"), F.col("id_b") == F.col("sb.id"))
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("inter")
-                / (F.col("sa.sz") + F.col("sb.sz") - F.col("inter"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return out
+    docsets = sh.groupBy("id").agg(F.collect_list("sh").alias("shs"))
+    return _verify_jaccard(candidate_pairs, docsets, threshold)
 
 
 _SHINGLE_PRIMES = [
@@ -706,35 +661,23 @@ def simhash_near_dups(
             )
         ).alias("cc"),
     ).select("id", "sig", F.col("cc.chunk_idx").alias("ci"), F.col("cc.chunk_val").alias("cv"))
-    # Posting-list pair generation (same pattern as ngram_jaccard_pairs):
-    # one shuffle on the (chunk_idx, chunk_val) bucket, members sorted by id,
-    # pairs generated in-array — the signature subtree (shingle hashing +
-    # Arrow bit-count) executes ONCE, where the previous self-join evaluated
-    # it on both sides and shuffled the full chunk table twice.  The Hamming
-    # filter runs BEFORE the cross-band distinct so the dedup shuffle only
-    # carries surviving pairs.
-    buckets = (
-        chunks.groupBy("ci", "cv")
-        .agg(F.sort_array(F.collect_list(F.struct("id", "sig"))).alias("ms"))
-        .filter(F.size("ms") > 1)
-        .repartition(df.sparkSession.sparkContext.defaultParallelism)
+    # In-bucket pair generation (``bucket_pairs``): one shuffle on the
+    # (chunk_idx, chunk_val) bucket, members sorted by id — the signature
+    # subtree (shingle hashing + Arrow bit-count) executes ONCE, where a
+    # self-join would evaluate it on both sides and shuffle the chunk table
+    # twice.  The Hamming filter runs BEFORE the cross-band distinct so the
+    # dedup shuffle only carries surviving pairs.
+    pairs = bucket_pairs(
+        chunks,
+        ["ci", "cv"],
+        F.struct("id", "sig"),
+        lambda x, y: F.struct(
+            x["id"].alias("id_a"),
+            y["id"].alias("id_b"),
+            x["sig"].alias("sig_a"),
+            y["sig"].alias("sig_b"),
+        ),
     )
-    ms = F.col("ms")
-    pair_arr = F.flatten(
-        F.transform(
-            ms,
-            lambda x, i: F.transform(
-                F.slice(ms, i + 2, F.greatest(F.size(ms) - i - 1, F.lit(0))),
-                lambda y: F.struct(
-                    x["id"].alias("id_a"),
-                    y["id"].alias("id_b"),
-                    x["sig"].alias("sig_a"),
-                    y["sig"].alias("sig_b"),
-                ),
-            ),
-        )
-    )
-    pairs = buckets.select(F.explode(pair_arr).alias("p")).select("p.*")
     ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     return (
         pairs.withColumn("hamming", ham)

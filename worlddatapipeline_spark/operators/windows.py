@@ -222,7 +222,10 @@ def arc_length_resample(
     # equality match silently drops endpoints.  A fully stationary path
     # (L == 0: every segment zero-length) matches its FIRST segment for
     # every k, yielding N copies of the stationary point instead of
-    # silently dropping the sequence.
+    # silently dropping the sequence.  Each k keeps exactly one segment, so
+    # no dedup pass follows: the half-open test matches at most one
+    # positive-length segment, the k == N-1 clause only the last one, and
+    # the L == 0 clause only fires when no segment has length.
     target = F.col("target_d")
     matched = grid.filter(
         (
@@ -235,7 +238,7 @@ def arc_length_resample(
         | ((L == 0.0) & (F.col("__segno") == 1))
     )
     t = F.when(d1 > d0, (target - d0) / (d1 - d0)).otherwise(F.lit(0.0))
-    out = matched.select(
+    return matched.select(
         seq_col,
         "k",
         "target_d",
@@ -244,10 +247,6 @@ def arc_length_resample(
             for c in (x, y, z)
         ],
     )
-    # duplicate matches can only arise at exact segment boundaries; keep first
-    from .joins import first_occurrence
-
-    return first_occurrence(out, [seq_col, "k"], [F.col("target_d")])
 
 
 def fixed_speed_truncate(

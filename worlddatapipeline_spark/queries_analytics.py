@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from .operators import bloom as bloom_ops
 from .session import (
     _t,
-    drain_memory_sink,
     literal_frame,
     materialize_and_release,
     route_by_rows,
@@ -3997,8 +3996,6 @@ def q_streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame
     against the batch restatement on DuckDB.  Scale: the dim is
     broadcast-sized per tier design; state is the (tier × type) count grid,
     constant."""
-    import uuid
-
     from .operators import windows as win_ops
 
     (events,) = _t(spark, sf_dir, "events")
@@ -4035,9 +4032,7 @@ def q_streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame
             ).alias("value_us"),
         )
     )
-    sink = "stream_enrich_" + uuid.uuid4().hex[:8]
-    run_stream_to_memory(enriched, sink)
-    return drain_memory_sink(spark, sink)
+    return run_stream_to_memory(enriched)
 
 
 SQL_STREAMING_STATIC_ENRICHMENT = """

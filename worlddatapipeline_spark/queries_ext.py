@@ -38,7 +38,7 @@ from .operators import similarity as sim_ops
 from .operators import simulate as sim_gen
 from .operators import stateful as stateful_ops
 from .operators import windows as win_ops
-from .session import _t, drain_memory_sink, literal_frame, streaming_events
+from .session import _t, literal_frame, streaming_events
 from .sources import listings as listing_src
 from .streaming import monitor as monitor_ops
 
@@ -3863,13 +3863,15 @@ FROM walk GROUP BY user_id
 
 
 def q_minhash_verified_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full 100 TB dedup pipeline as a CONTAINMENT + RECALL-FLOOR
-    contract: MinHash-LSH candidate generation audited against the full
-    exact n-gram Jaccard pair set (J ≥ 0.8) — verified = exact ∩
-    candidates via a semi-join, which is mathematically what the
-    production verify step (`ngram_jaccard_pairs(candidate_pairs=…)`,
-    the scale path that never computes the full pair space; exercised by
-    tests/test_dedup.py) produces, at half the pipeline runs here.
+    """The MinHash dedup pipeline as a CONTAINMENT + RECALL-FLOOR
+    contract: the MinHash-LSH candidate pairs (band buckets fanned out by
+    `bucket_pairs`) are audited against the full exact n-gram Jaccard pair
+    set (J ≥ 0.8).  verified = exact ∩ candidates, a semi-join; that is
+    the set the production verify step
+    `ngram_jaccard_pairs(candidate_pairs=…)` returns, since both verify
+    through the same exact `_verify_jaccard`.  The production step never
+    builds the full pair space; tests/test_dedup.py runs it, and checks it
+    against the full pair set on a small corpus.
 
     Through sf0.5 the banded LSH (32 hashes / 8 bands) had full recall on
     this corpus and the query returned the verified PAIR LIST, oracled by
@@ -4291,8 +4293,6 @@ def q_streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-least-once-source idempotence contract (`scene_copy.py:408-422`
     skip-if-exists) stated as a hash check.  Scale: state is bounded by
     (keys within the 2h watermark), not the stream's history."""
-    import uuid
-
     from .streaming.monitor import dedup_stream
 
     stream = streaming_events(spark, sf_dir)
@@ -4303,9 +4303,7 @@ def q_streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="2 hours",
     )
     agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
-    sink = "stream_dedup_" + uuid.uuid4().hex[:8]
-    monitor_ops.run_stream_to_memory(agg, sink)
-    return drain_memory_sink(spark, sink)
+    return monitor_ops.run_stream_to_memory(agg)
 
 
 SQL_STREAMING_DEDUP_COUNTS = """
@@ -4327,8 +4325,6 @@ def q_streaming_hourly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     execution).  Scale: on a live feed the same code runs with a processing
     trigger and update mode; watermark bounds state by (2h / window) per key.
     """
-    import uuid
-
     stream = streaming_events(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "2 hours")
@@ -4346,9 +4342,7 @@ def q_streaming_hourly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    sink = "stream_hourly_" + uuid.uuid4().hex[:8]
-    monitor_ops.run_stream_to_memory(agg, sink)
-    return drain_memory_sink(spark, sink)
+    return monitor_ops.run_stream_to_memory(agg)
 
 
 EXT_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
@@ -4582,7 +4576,9 @@ def q_simhash_exact_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("id"),
         F.md5(dedup_ops.normalize_text(F.col("text"))).alias("sh"),
     )
-    exact_pairs = dedup_ops._posting_list_pairs(fp).distinct()
+    exact_pairs = dedup_ops.bucket_pairs(
+        fp, ["sh"], "id", lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b"))
+    ).distinct()
     sim_pairs = dedup_ops.simhash_near_dups(
         documents, "text", "doc_id", max_hamming=6, bands=4
     ).select("id_a", "id_b")
@@ -5176,8 +5172,6 @@ def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the same semantics (break when gap >= 30 min).  The streaming analog
     of the batch `sessionize` query; at scale the same code runs with a
     processing trigger and the watermark bounds per-user session state."""
-    import uuid
-
     stream = streaming_events(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "2 hours")
@@ -5198,9 +5192,7 @@ def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    sink = "stream_sessions_" + uuid.uuid4().hex[:8]
-    monitor_ops.run_stream_to_memory(agg, sink)
-    return drain_memory_sink(spark, sink)
+    return monitor_ops.run_stream_to_memory(agg)
 
 
 SQL_STREAMING_SESSION_WINDOWS = """

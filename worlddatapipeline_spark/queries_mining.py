@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from .operators import mining as mining_ops
 from .session import (
     _t,
-    drain_memory_sink,
     materialize_and_release,
     route_by_rows,
     streaming_events,
@@ -2182,8 +2181,6 @@ def q_streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     live feed the same code runs with a processing trigger + update mode
     and the watermark bounds state to (lookback / window) rows per type.
     Tenth real streaming-vs-batch parity in the registry."""
-    import uuid  # noqa: PLC0415
-
     stream = streaming_events(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "6 hours")
@@ -2200,9 +2197,7 @@ def q_streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    sink = "stream_trend_" + uuid.uuid4().hex[:8]
-    run_stream_to_memory(agg, sink)
-    drained = drain_memory_sink(spark, sink)
+    drained = run_stream_to_memory(agg)
     wr = Window.partitionBy("win_start").orderBy(
         F.col("n_events").desc(), F.col("event_type").asc()
     )
@@ -3630,8 +3625,6 @@ def q_streaming_ohlc_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     TIMESTAMPTZ lesson).  Scale: on a live feed the same code runs with a
     processing trigger and update mode; watermark bounds state to ~2 days
     of keys."""
-    import uuid  # noqa: PLC0415
-
     stream = streaming_events(spark, sf_dir)
     base = stream.select(
         "ts",
@@ -3663,9 +3656,7 @@ def q_streaming_ohlc_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(__sum_us div n_events AS BIGINT)").alias("avg_us"),
         )
     )
-    sink = "stream_ohlc_" + uuid.uuid4().hex[:8]
-    run_stream_to_memory(agg, sink)
-    return drain_memory_sink(spark, sink)
+    return run_stream_to_memory(agg)
 
 
 MINING_QUERIES = {

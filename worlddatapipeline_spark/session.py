@@ -157,20 +157,6 @@ def materialize_and_release(result, *cached):
     return out
 
 
-def drain_memory_sink(spark: SparkSession, sink: str):
-    """Materialize a finished memory-sink table and DROP its temp view.
-
-    Streaming parity queries run availableNow into a uniquely-named memory
-    sink; without the drop every invocation leaks a driver-memory table
-    holding the full aggregate (bench loops re-run queries, so the leak
-    compounds — ADVICE r4).  The eager localCheckpoint severs the returned
-    frame from the sink so dropping the view is safe immediately.
-    """
-    out = spark.table(sink).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(sink)
-    return out
-
-
 def streaming_events(spark: SparkSession, sf_dir: str):
     """Normalized ``readStream`` over the input events.parquet — the ONE
     place a stream over that table is opened.  It pins

@@ -17,6 +17,8 @@ adds `withWatermark` for late data, which the reference has no answer to.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -127,20 +129,32 @@ def stream_status_files(
 
 
 def run_stream_to_memory(
-    stream_df: DataFrame, query_name: str, output_mode: str = "complete"
-):
-    """Execute a streaming aggregation with availableNow into an in-memory
-    sink and return the finished query — the one memory-sink runner: the
-    streaming parity queries call it, then ``session.drain_memory_sink``."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    stream_df: DataFrame, output_mode: str = "complete"
+) -> DataFrame:
+    """Run a streaming query with availableNow into an in-memory sink and
+    return its finished output as a batch frame — the one memory-sink
+    runner of the streaming parity queries.
+
+    The sink gets its own unique name.  Its table is drained with an eager
+    ``localCheckpoint``, which severs the returned frame from the sink, and
+    then the sink's temp view is dropped: without the drop every call
+    leaks a driver-memory table holding the full output (bench loops
+    re-run queries, so the leak compounds — ADVICE r4).
+    """
+    spark = stream_df.sparkSession
+    sink = "memory_sink_" + uuid.uuid4().hex
+    try:
+        (
+            stream_df.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        return spark.table(sink).localCheckpoint(eager=True)
+    finally:
+        spark.catalog.dropTempView(sink)
 
 
 def stateful_stall_detector(
