@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from worlddatapipeline_spark.operators.joins import first_occurrence
+from worlddatapipeline_spark.operators.joins import top_k_per_group
 from worlddatapipeline_spark.operators.windows import cumulative_distance
 
 
@@ -81,4 +81,4 @@ def arc_length_resample_join(
             for c in (x, y, z)
         ],
     )
-    return first_occurrence(out, [seq_col, "k"], [F.col("target_d")])
+    return top_k_per_group(out, [seq_col, "k"], [F.col("target_d")], 1)

@@ -85,7 +85,7 @@ def test_first_occurrence(spark):
     df = spark.createDataFrame(
         [("k1", "bbb", 2), ("k1", "aa", 1), ("k2", "c", 3)], ["key", "path", "id"]
     )
-    out = joins.first_occurrence(df, ["key"], [F.length("path").asc()]).collect()
+    out = joins.top_k_per_group(df, ["key"], [F.length("path").asc()], 1).collect()
     got = {r["key"]: r["path"] for r in out}
     assert got == {"k1": "aa", "k2": "c"}
 

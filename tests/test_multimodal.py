@@ -1350,8 +1350,8 @@ def test_png_palette_roundtrip_all_depths():
     enc = mm.encode_png_indexed(idx, gray_pal)
     assert mm._decode_png(enc).tolist() == idx.reshape(-1).tolist()
     # bit packing is MSB-first per spec §7.2 (external-decoder compat)
-    assert mm._png_pack_row(np.array([0, 1, 2, 3]), 2) == b"\x1b"
-    assert mm._png_pack_row(np.array([1, 0, 1]), 1) == b"\xa0"
+    assert mm._png_pack_rows(np.array([0, 1, 2, 3]).reshape(1, -1), 2).tobytes() == b"\x1b"
+    assert mm._png_pack_rows(np.array([1, 0, 1]).reshape(1, -1), 1).tobytes() == b"\xa0"
 
 
 def test_png_adam7_gray_roundtrip():
@@ -1716,6 +1716,17 @@ def test_bmp_surface_roundtrip_indexed_and_rle():
     with pytest.raises(ValueError, match="decode cap"):
         mm._decode_bmp(bytes(bomb))
     assert mm._decode_bytes(bytes(bomb)).tolist() == list(bytes(bomb))
+    # one flipped height bit (8 -> 2**24 + 8 rows) stays under the cap,
+    # but no RLE8 payload this short covers 134M pixels: refused before
+    # allocation by the payload bound
+    tall = bytearray(mm.encode_bmp_indexed(
+        np.arange(64, dtype=np.uint8).reshape(8, 8) % 4, pal[:4], rle=True
+    ))
+    tall[25] ^= 0x01
+    assert struct.unpack_from("<i", tall, 22)[0] == 2**24 + 8
+    with pytest.raises(ValueError, match="payload bound"):
+        mm._decode_bmp(bytes(tall))
+    assert mm._decode_bytes(bytes(tall)).tolist() == list(bytes(tall))
     delta = bytearray(good)
     off = struct.unpack_from("<I", delta, 10)[0]
     delta[off : off + 2] = b"\x00\x02"

@@ -656,31 +656,23 @@ _SINGLE_EXCHANGE_OK = {
     "distribution_drift",
 }
 
-# Queries allowed to contain SortMergeJoin: all large⋈large by design
-# (fact-to-fact joins where neither side is broadcastable at scale).  A
-# NEW query appearing with an SMJ usually means a broadcast fell back —
-# inspect before allowlisting.
+# Exactly the queries whose committed plan contains a SortMergeJoin: all
+# large⋈large by design (fact-to-fact joins where neither side is
+# broadcastable at scale).  A NEW query appearing with an SMJ usually means
+# a broadcast fell back — inspect before allowlisting; a query whose plan
+# loses its SMJ leaves the set, so a later fallback there fails too.
 _SMJ_OK = {
-    # trajectory fact ⋈ resampled fact
-    "behavior_resample",
-    "behavior_resample_checked",
     # merge/reconcile of two table-sized sides
     "catalog_upsert",
     "customer_order_reconcile",
     "incremental_agg_maintenance",
     # edge⋈edge iterative graph kernels
-    "connected_components",
-    "dedup_cluster_keep",
     "entity_resolution_clusters",
     "triangle_count",
     # derived-frame equality joins in recall/bit-replay contracts
     "embedding_ivf_recall",
     "embedding_lsh_recall",
-    "int8_ann_recall",
     "simulate_contract",
-    # TPC-H-shaped fact⋈fact (Q2/Q20 analogs)
-    "excess_stock_suppliers",
-    "min_cost_supplier",
     # TPC-H Q5/Q7-shaped lineitem⋈orders on orderkey: each fact side is
     # pruned by its own broadcast dimension hops, then the two facts meet
     # in the one orderkey shuffle (plans/r11/*_after.txt)
@@ -694,8 +686,6 @@ _SMJ_OK = {
     "pagerank_scores",
     # lineitem⋈orders fact⋈fact + the basket self-join
     "brand_affinity_topk",
-    # shingle posting-list self-join
-    "ngram_jaccard_pairs",
     # full-outer join of the two halves' BOUNDED bin frames — full_outer
     # can never broadcast, so SMJ on a tiny frame is the only plan
     "distribution_drift",
@@ -736,9 +726,10 @@ def test_fingerprints_single_exchange_only_on_bounded_frames():
 def test_fingerprints_smj_only_where_large_large():
     fps = _fingerprints()
     smj = {n for n, fp in fps.items() if fp.get("sort_merge_join", 0) > 0}
-    rogue = smj - _SMJ_OK
-    assert rogue == set(), (
-        f"new sort-merge joins (did a broadcast fall back?): {sorted(rogue)}"
+    assert smj == _SMJ_OK, (
+        f"new sort-merge joins (did a broadcast fall back?): "
+        f"{sorted(smj - _SMJ_OK)}; allowlisted with none: "
+        f"{sorted(_SMJ_OK - smj)}"
     )
 
 

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
+from ref_similarity import cosine_pairs, cosine_topk
 from worlddatapipeline_spark.operators import similarity
 
 
@@ -27,7 +28,7 @@ def test_cosine_topk_matches_numpy(spark):
     queries = corpus.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = similarity.cosine_topk(corpus, queries, k=4).collect()
+    out = cosine_topk(corpus, queries, k=4).collect()
     norms = mat / np.linalg.norm(mat, axis=1, keepdims=True)
     sims = norms @ norms.T
     for q in range(3):
@@ -39,16 +40,18 @@ def test_cosine_topk_matches_numpy(spark):
 
 
 def test_lsh_topk_recall(spark):
-    """Approximate top-k finds the planted near-identical vector."""
+    """Approximate top-k finds the planted near-identical vector at either
+    dimension: the hyperplanes take theirs from the vectors."""
     rng = np.random.default_rng(9)
-    mat = rng.standard_normal((60, 16))
-    mat[42] = mat[0] + 0.001 * rng.standard_normal(16)  # planted near-dup of 0
-    corpus = _emb_df(spark, mat)
-    queries = corpus.filter(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = similarity.lsh_topk(corpus, queries, k=3, dim=16, n_planes=4, seed=1).collect()
-    assert 42 in {r["vec_id"] for r in out}
+    for dim in (16, 40):
+        mat = rng.standard_normal((60, dim))
+        mat[42] = mat[0] + 0.001 * rng.standard_normal(dim)  # near-dup of 0
+        corpus = _emb_df(spark, mat)
+        queries = corpus.filter(F.col("vec_id") == 0).select(
+            F.col("vec_id").alias("query_id"), "embedding"
+        )
+        out = similarity.lsh_topk(corpus, queries, k=3, n_planes=4, seed=1).collect()
+        assert 42 in {r["vec_id"] for r in out}, dim
 
 
 def test_dot_and_norm(spark):
@@ -65,7 +68,7 @@ def test_ivf_topk_recall(spark):
     """IVF with enough probes recalls most of the exact top-k."""
     import pyspark.sql.functions as F
 
-    from worlddatapipeline_spark.operators.similarity import cosine_topk, ivf_topk
+    from worlddatapipeline_spark.operators.similarity import ivf_topk
     from worlddatapipeline_spark.session import load_tables
 
     emb = load_tables(spark, "/root/testdata/sf0.001", ["embeddings"])["embeddings"]
@@ -101,7 +104,7 @@ def test_cosine_pairs_matches_numpy(spark):
     mat[7] = mat[2] + 0.01 * rng.standard_normal(16)  # planted near-dup
     mat[19] = mat[5] + 0.02 * rng.standard_normal(16)
     corpus = _emb_df(spark, mat)
-    out = similarity.cosine_pairs(corpus, threshold=0.8)
+    out = cosine_pairs(corpus, threshold=0.8)
     got = {(r["id_a"], r["id_b"]) for r in out.collect()}
     norms = mat / np.linalg.norm(mat, axis=1, keepdims=True)
     sims = norms @ norms.T
@@ -124,7 +127,7 @@ def test_cosine_pairs_batched_matches_expression_form(spark):
     corpus = _emb_df(spark, mat)
     ref = {
         (r["id_a"], r["id_b"]): r["cosine_sim"]
-        for r in similarity.cosine_pairs(corpus, threshold=0.5).collect()
+        for r in cosine_pairs(corpus, threshold=0.5).collect()
     }
     fast = {
         (r["id_a"], r["id_b"]): r["cosine_sim"]
@@ -149,11 +152,10 @@ def test_kmeans_centroids_unit_norm_and_count(spark):
 
 
 def test_kmeans_cache_scans_source_once(spark):
-    """With cache=True (default) the corpus source is scanned exactly once —
-    the init job materializes the persisted frame and every Lloyd's
-    iteration reads the cache.  Measured behaviorally: an accumulator
-    counting rows flowing out of the source sees n_rows once with the
-    cache, and (1 + n_iter) times without it."""
+    """The corpus source is scanned exactly once — the init job
+    materializes the persisted frame and every Lloyd's iteration reads the
+    cache.  Measured behaviorally: an accumulator counting rows flowing
+    out of the source sees n_rows once, not (1 + n_iter) times."""
     from worlddatapipeline_spark.operators.similarity import kmeans_centroids
 
     base = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
@@ -171,13 +173,9 @@ def test_kmeans_cache_scans_source_once(spark):
 
         return df.mapInPandas(tag, schema=df.schema), acc
 
-    corpus, acc_cached = counted(base)
-    kmeans_centroids(corpus, k=4, n_iter=3, cache=True)
-    assert acc_cached.value == n_rows
-
-    corpus2, acc_uncached = counted(base)
-    kmeans_centroids(corpus2, k=4, n_iter=3, cache=False)
-    assert acc_uncached.value == n_rows * 4  # init + 3 iterations
+    corpus, acc = counted(base)
+    kmeans_centroids(corpus, k=4, n_iter=3)
+    assert acc.value == n_rows
 
 
 def test_kmeans_centroids_improve_ivf_recall(spark):
@@ -185,7 +183,6 @@ def test_kmeans_centroids_improve_ivf_recall(spark):
     budget) on the test corpus."""
     import numpy as np
     from worlddatapipeline_spark.operators.similarity import (
-        cosine_topk,
         ivf_topk,
         kmeans_centroids,
     )
@@ -428,8 +425,8 @@ def test_batched_topk_ties_keep_smallest_ids(spark, op, case):
 
 @pytest.mark.parametrize("op", BATCHED_TOPK)
 def test_batched_topk_matches_exact_reference(spark, op):
-    """Batched top-k equals the expression-form cosine_topk on a random
-    corpus (the differential cross-check for the vectorized cut)."""
+    """Batched top-k equals the expression-form reference cosine_topk on a
+    random corpus (the differential cross-check for the vectorized cut)."""
     rng = np.random.default_rng(17)
     rows = [
         (i, [float(x) for x in rng.normal(size=8)]) for i in range(40)
@@ -441,7 +438,7 @@ def test_batched_topk_matches_exact_reference(spark, op):
     a = {(r["query_id"], r["rank"]): r["vec_id"]
          for r in _batched_topk(op, corpus, queries, 5).collect()}
     b = {(r["query_id"], r["rank"]): r["vec_id"]
-         for r in similarity.cosine_topk(corpus, queries, k=5).collect()}
+         for r in cosine_topk(corpus, queries, k=5).collect()}
     assert a == b
 
 
@@ -462,7 +459,7 @@ def test_topk_self_contract_columns(spark):
         corpus.vec_id.alias("query_id"), "embedding"
     )
     out = topk_self_contract(
-        lsh_topk(corpus, queries, k=5, dim=16, n_planes=4, seed=1, n_tables=8)
+        lsh_topk(corpus, queries, k=5, n_planes=4, seed=1, n_tables=8)
     )
     got = out.collect()
     assert len(got) > 0

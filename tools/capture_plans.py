@@ -9,10 +9,8 @@ thresholds, shuffle partitions) match what the bench actually executes.
 
 from __future__ import annotations
 
-import io
 import os
 import sys
-from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -27,6 +25,7 @@ def main() -> None:
     )
     os.makedirs(out_dir, exist_ok=True)
 
+    from plan_audit import CAPTURED, _explain_formatted, install_capture
     from worlddatapipeline_spark import get_spark
     from worlddatapipeline_spark.queries import QUERIES
 
@@ -35,44 +34,20 @@ def main() -> None:
 
     # Builders that keep a barrier (session.materialize_and_release) and
     # the iterative graph kernels return a lineage-truncated ExistingRDD
-    # scan; capture the
-    # PRE-checkpoint plan at each truncation point (the plan_audit /
-    # test_plans interception) so the committed file shows the physical
-    # plan that actually executed.
-    from pyspark.sql.classic.dataframe import DataFrame as _CDF
-
-    def _fmt(df):
-        return df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-
+    # scan; plan_audit's interception records the PRE-checkpoint plan at
+    # each truncation point (and each streaming micro-batch plan), so the
+    # committed file shows the physical plan that actually executed.
+    install_capture()
     for name in names:
-        captured: list[str] = []
-        orig = _CDF.localCheckpoint
-
-        def lc(self, *a, **k):
-            try:
-                captured.append(_fmt(self))
-            except Exception:
-                pass
-            return orig(self, *a, **k)
-
-        _CDF.localCheckpoint = lc
-        try:
-            df = QUERIES[name](spark, sf_dir)
-        finally:
-            _CDF.localCheckpoint = orig
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        text = buf.getvalue()
-        if "Scan ExistingRDD" in text and captured:
+        CAPTURED.clear()
+        df = QUERIES[name](spark, sf_dir)
+        text = _explain_formatted(df) or ""
+        if "Scan ExistingRDD" in text and CAPTURED:
             text = (
                 "-- pre-checkpoint plan(s) captured at localCheckpoint "
-                "(lineage is truncated in the final frame) --\n\n"
-                + "\n".join(captured)
+                "or streaming runs (lineage is truncated in the final "
+                "frame) --\n\n"
+                + "\n".join(CAPTURED)
                 + "\n-- final (post-checkpoint) frame --\n"
                 + text
             )

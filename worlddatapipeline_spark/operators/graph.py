@@ -13,9 +13,10 @@ history, and convergence is O(log² n) rounds regardless of graph diameter.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .joins import top_k_per_group
 from .windows import dist3
 
 
@@ -61,8 +62,9 @@ def knn_edges(
             F.col(f"b.{x}"), F.col(f"b.{y}"), F.col(f"b.{z}"),
         ).alias("dist"),
     )
-    w = Window.partitionBy(*group_cols, "src").orderBy(F.col("dist").asc(), F.col("dst").asc())
-    return pairs.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k).drop("rank")
+    return top_k_per_group(
+        pairs, [*group_cols, "src"], [F.col("dist").asc(), F.col("dst").asc()], k
+    )
 
 
 def connected_components(

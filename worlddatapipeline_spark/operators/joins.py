@@ -9,7 +9,8 @@ these re-express them as scale-aware DataFrame joins:
   sampling (`camera_exporter.py:221-232`),
 - a **range/interval join** replacing the frame→behavior-segment dict expansion
   (`worker_create.py:720-730`),
-- **first-occurrence dedup** via a ranking window (`scene_copy.py:236-310`),
+- **top-k per group** via a ranking window, k=1 being first-occurrence
+  dedup (`scene_copy.py:236-310`),
 - **prefix (startswith) joins** (`run_render_job_headless.py:636-650`,
   `render_engine.py:87-158`).
 
@@ -352,25 +353,6 @@ def prefix_join(
     return l.join(F.broadcast(r), cond, how)
 
 
-def first_occurrence(
-    df: DataFrame,
-    key_cols: list[str],
-    order_cols: list,
-) -> DataFrame:
-    """Keep one row per key — the first under ``order_cols``.
-
-    Reference analog: first-occurrence Content-dir dedup / shortest fallback
-    path per scene (`scene_copy.py:236-310`), done with python dict insertion
-    order; here ``row_number() over (partition by key order by …) = 1``.
-    """
-    w = Window.partitionBy(*key_cols).orderBy(*order_cols)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def top_k_per_group(
     df: DataFrame,
     key_cols: list[str],
@@ -378,18 +360,22 @@ def top_k_per_group(
     k: int,
     rank_col: str | None = None,
 ) -> DataFrame:
-    """Top-k rows per group via ranking window (KNN-style truncation).
+    """Top-k rows per group via ranking window (KNN-style truncation):
+    ``row_number() over (partition by key order by …) <= k``, the one rank
+    filter of the engine (cosine top-k, k-NN edges, first occurrence).
 
-    Reference analog: k=8 nearest neighbours per sample point
-    (`navmesh_connectivity.py:132-135`).  Map-side partial aggregation of the
-    window is handled by Spark's WindowExec; for extreme skew pre-aggregate
-    with AQE skew handling on.
+    Reference analogs: k=8 nearest neighbours per sample point
+    (`navmesh_connectivity.py:132-135`); with k=1, first-occurrence
+    Content-dir dedup / shortest fallback path per scene
+    (`scene_copy.py:236-310`), done there with dict insertion order.
+    Map-side partial aggregation of the window is handled by Spark's
+    WindowExec; for extreme skew pre-aggregate with AQE skew handling on.
+    With ``rank_col`` the row number is kept under that name.
     """
+    rn = rank_col or "__rn"
     w = Window.partitionBy(*key_cols).orderBy(*order_cols)
-    out = df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k)
-    if rank_col:
-        return out.withColumnRenamed("__rn", rank_col)
-    return out.drop("__rn")
+    out = df.withColumn(rn, F.row_number().over(w)).filter(F.col(rn) <= k)
+    return out if rank_col else out.drop(rn)
 
 
 def anti_diff(

@@ -307,12 +307,6 @@ def _png_pack_rows(vals: np.ndarray, bitd: int) -> np.ndarray:
     return out.astype(np.uint8)
 
 
-def _png_pack_row(vals: np.ndarray, bitd: int) -> bytes:
-    """Pack per-pixel values into a PNG scanline byte string at bit depth
-    1/2/4/8 (single-row convenience over :func:`_png_pack_rows`)."""
-    return _png_pack_rows(np.asarray(vals).reshape(1, -1), bitd).tobytes()
-
-
 def _png_unpack_rows(rows: np.ndarray, n: int, bitd: int) -> np.ndarray:
     """Inverse of :func:`_png_pack_rows`: the first ``n`` per-pixel values
     of each scanline of a (h, stride) byte grid, as (h, n)."""
@@ -689,6 +683,10 @@ def _decode_bmp(data: bytes) -> np.ndarray:
         return (pal.sum(axis=1) // 3).astype(np.uint8)
 
     if compression == 1:  # BI_RLE8 (always bottom-up per spec)
+        # payload bound: with delta moves refused, each 2-byte run covers
+        # at most 255 pixels, so a stream can fill at most 128 per byte
+        if h * w > 128 * (len(data) - offset):
+            raise ValueError("BMP RLE8 dimensions exceed payload bound")
         grid = np.zeros((h, w), dtype=np.uint8)
         pos, x, y = offset, 0, h - 1
         while pos + 1 < len(data):

@@ -4,28 +4,34 @@ LLM-data-pipeline extension surface (BASELINE.json north_star): nearest
 neighbours, near-duplicate pairs and dedup over
 ``embeddings(vec_id, embedding, label)``.
 
-Expression reference forms — ``cosine_pairs``, ``cosine_topk``,
-``lsh_topk`` and ``ivf_topk`` score with Catalyst expressions
-(``F.zip_with`` + ``F.aggregate``, codegen'd, no Python worker in the
-scoring loop).  ``cosine_topk`` is the exact correctness baseline.
-``lsh_topk`` (random-hyperplane buckets; one pandas_udf GEMM per batch
-computes every sign bit) and ``ivf_topk`` (inverted lists over sampled or
-k-means centroids) are the approximate 100 TB paths.  Hyperplanes and
-centroid samples are seeded, so results reproduce across retries (same
-requirement as the reference's seeded sequences,
-`behavior_executor.py:681-696`).
+Expression form — ``lsh_topk`` (random-hyperplane buckets; one pandas_udf
+GEMM per batch computes every sign bit) and ``ivf_topk`` (inverted lists
+over sampled or k-means centroids) are the approximate 100 TB paths.  They
+differ only in their candidate join (the bucket equi-join, the ``list_id``
+join); both project each side once with ``norm_side`` (id, vector, L2
+norm) and score every candidate pair with the one exact expression
+``cosine_sim``, ``F.zip_with`` + ``F.aggregate`` codegen'd with no Python
+worker in the scoring loop.  The exact expression-form references
+``cosine_topk`` and ``cosine_pairs`` live in ``tests/ref_similarity.py``:
+only tests call them, to pin the batched forms.  Hyperplanes and centroid
+samples are seeded, so results reproduce across retries (same requirement
+as the reference's seeded sequences, `behavior_executor.py:681-696`).
 
 Batched forms — ``cosine_pairs_batched``, ``cross_cosine_flags``,
 ``cosine_topk_batched`` and ``filtered_cosine_topk`` return the same rows
-as the expression forms, scored by numpy BLAS on Python workers.  They
-share one frame: ``_collect_side`` brings the small side to the driver,
+as the references, scored by numpy BLAS on Python workers.  They share
+one frame: ``_collect_side`` brings the small side to the driver,
 ``_matrix`` turns vectors into a float64 matrix with zero-safe L2 norms,
 and ``_gemm_stream`` broadcasts that matrix and streams the other side
 through ``mapInPandas``, one GEMM per Arrow batch.  The top-k forms cut
-each batch with ``_topk_cut`` under the final total order, and every
-top-k operator here ranks with ``_rank_topk``.  ``bucketed_cosine_dedup``
-(and ``semantic_dedup`` on top of it) runs one GEMM per bucket through
-the same ``_matrix``.
+each batch with ``_topk_cut`` under the final total order.
+``bucketed_cosine_dedup`` (and ``semantic_dedup`` on top of it) runs one
+GEMM per bucket through the same ``_matrix``.
+
+Every cosine rounds to ``DIGITS`` places, the SQL oracles' round(…, 6);
+every top-k ranks with ``joins.top_k_per_group`` under (cosine_sim DESC,
+vec_id ASC); and every literal-centroid expression (k-means assignment,
+semantic-dedup clusters, IVF list ranking) is built by ``centroid_dots``.
 """
 
 from __future__ import annotations
@@ -36,6 +42,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import literal_frame
+from .joins import top_k_per_group
+
+DIGITS = 6
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -59,17 +68,52 @@ def l2_norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Rank (query_id, vec_id, cosine_sim) rows per query under the total
-    order (cosine_sim DESC, vec_id ASC) and keep ranks 1..k."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id").asc()
+def norm_side(
+    df: DataFrame, id_col: str, vec_col: str, id_out: str, side: str, *extra: Column
+) -> DataFrame:
+    """One side of an exact cosine join as (id_out, __{side}v, __{side}n,
+    *extra), ``side`` being "q" or "c".  Norms are per row, not per pair:
+    computing them here, BEFORE the join, leaves one dot product per pair."""
+    v = F.col(vec_col)
+    return df.select(
+        F.col(id_col).alias(id_out), v.alias(f"__{side}v"), l2_norm(v).alias(f"__{side}n"),
+        *extra,
     )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def cosine_sim() -> Column:
+    """The exact cosine of a joined row of a q and a c ``norm_side``:
+    round(dot / (|q|·|c|), DIGITS), the IEEE order of the SQL oracles."""
+    return F.round(
+        dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")), DIGITS
+    ).alias("cosine_sim")
+
+
+def centroid_dots(vec: Column, cents) -> Column:
+    """array(dot(vec, c) for c in cents), every centroid inlined as a
+    literal array: one codegen'd expression, no join."""
+    return F.array(*[dot(vec, F.array(*[F.lit(float(x)) for x in c])) for c in cents])
+
+
+def nearest_centroid(vec: Column, cents) -> Column:
+    """0-based index of the centroid with the largest dot (the first max
+    wins a tie) — the k-means assignment step."""
+    dots = centroid_dots(vec, cents)
+    return F.array_position(dots, F.array_max(dots)) - 1
+
+
+def _hash_sample(df: DataFrame, id_col: str, vec_col: str, n: int) -> list:
+    """The n (cid, cvec) rows with the smallest xxhash64(id), ties by id:
+    a reproducible pseudo-random spread fetched with TakeOrderedAndProject
+    (per-partition heap + driver merge).  NOT a global row_number window,
+    which would move the whole corpus to one partition at 100 TB.  Only
+    the sampled rows reach the driver."""
+    return (
+        df.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
+        .orderBy(F.xxhash64(F.col("cid")), F.col("cid"))
+        .limit(n)
+        .collect()
+    )
 
 
 def _id_vec(df: DataFrame, id_col: str, vec_col: str, *extra: Column) -> DataFrame:
@@ -106,10 +150,10 @@ def _matrix(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
     return m, n
 
 
-def _cosines(a, an, b, bn, digits: int) -> np.ndarray:
-    """round(a·bᵀ / (|a|·|b|), digits): the division follows the matmul,
+def _cosines(a, an, b, bn) -> np.ndarray:
+    """round(a·bᵀ / (|a|·|b|), DIGITS): the division follows the matmul,
     the same algebraic form as the expression path's dot/(|a|·|b|)."""
-    return np.round((a @ b.T) / (an[:, None] * bn[None, :]), digits)
+    return np.round((a @ b.T) / (an[:, None] * bn[None, :]), DIGITS)
 
 
 def _gemm_stream(
@@ -219,53 +263,15 @@ def _batched_topk(
         if qa_b is not None:  # predicate mask
             ca = pdf["a"].to_numpy(dtype=np.int64)
             sims[ca[:, None] != qa_b[None, :]] = -np.inf
-        return _topk_cut(ids, np.round(sims, 6), q_ids_b, k)
+        return _topk_cut(ids, np.round(sims, DIGITS), q_ids_b, k)
 
     c_extra = [attrs[1].alias("a")] if attrs else []
     cand = _gemm_stream(
         corpus, id_col, vec_col, (q_ids, qm / qn[:, None], q_attrs), kernel,
         "query_id long, vec_id long, cosine_sim double", *c_extra,
     )
-    return _rank_topk(cand, k)
-
-
-def cosine_pairs(
-    corpus: DataFrame,
-    threshold: float,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: all (id_a < id_b) with rounded
-    cosine >= threshold.  Exact brute-force verify — the LLM-pipeline dedup
-    complement to `cosine_topk` (search) and `dedup.py` (text dedup).
-
-    Plan shape: norms precomputed per row BEFORE the pair join (one pass),
-    then a theta self-join on id_a < id_b; the pair expression is a single
-    dot product + divide.  Thresholding on the ROUNDED value keeps the
-    boundary deterministic across engines.  At 100 TB scale the pair space is
-    pruned first with `lsh_topk` / `ivf_topk`-style inverted lists and this
-    same exact expression verifies candidates only.
-    """
-    spark = corpus.sparkSession
-    withn = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-    ).withColumn("n", l2_norm(F.col("v")))
-    # spread the interpreted pair-gen stage across cores (AQE would coalesce)
-    par = spark.sparkContext.defaultParallelism
-    a = withn.repartition(par).select(
-        F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("n").alias("na")
-    )
-    b = withn.select(
-        F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("n").alias("nb")
-    )
-    j = a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
-    cs = F.round(
-        dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), round_digits
-    )
-    return (
-        j.select("id_a", "id_b", cs.alias("cosine_sim"))
-        .filter(F.col("cosine_sim") >= threshold)
+    return top_k_per_group(
+        cand, ["query_id"], [F.col("cosine_sim").desc(), F.col("vec_id").asc()], k, "rank"
     )
 
 
@@ -274,14 +280,16 @@ def cosine_pairs_batched(
     threshold: float,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    round_digits: int = 6,
     max_collect: int = 200_000,
 ) -> DataFrame:
-    """Embedding-cosine near-dup pairs via batched BLAS scoring — the fast
-    form of ``cosine_pairs`` (same results, same thresholded contract).
+    """Embedding-cosine near-dup pairs via batched BLAS scoring: all
+    (id_a < id_b) with round(cosine, 6) >= threshold, the same rows as the
+    expression-form reference ``tests/ref_similarity.py::cosine_pairs``.
+    Thresholding on the ROUNDED value keeps the boundary deterministic
+    across engines.
 
     One side of the self-join is collected and broadcast as a dense float64
-    matrix (the same bounded-broadcast contract the expression form's
+    matrix (the same bounded-broadcast contract the reference's
     ``F.broadcast`` join has — ≤ ~100k×64-d); the other side streams through
     ``mapInPandas`` and scores each Arrow batch against the whole broadcast
     matrix in a single numpy matmul, emitting only the (id_a < id_b,
@@ -306,7 +314,7 @@ def cosine_pairs_batched(
 
     def pairs(aids, am, an, pdf, side_v):
         ids_b, bm_b, bn_b = side_v
-        sims = _cosines(am, an, bm_b, bn_b, round_digits)
+        sims = _cosines(am, an, bm_b, bn_b)
         keep = (aids[:, None] < ids_b[None, :]) & (sims >= threshold)
         ai, bi = np.nonzero(keep)
         return pd.DataFrame(
@@ -319,54 +327,10 @@ def cosine_pairs_batched(
     )
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Exact cosine top-k: for each query vector the k nearest corpus vectors.
-
-    Plan shape: broadcast(queries) × corpus scan → score → ranking window on
-    query_id.  Excludes self-matches when ids collide.
-    Returns (query_id, vec_id, cosine_sim, rank).
-    """
-    # norms are per-row, not per-pair: compute them BEFORE the join so the
-    # pair loop does exactly one dot product (the division below reproduces
-    # dot/(||q||*||c||) in the same IEEE order as the naive form)
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("__cv"),
-        l2_norm(F.col(vec_col)).alias("__cn"),
-    )
-    scored = c.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        "vec_id",
-        F.round(
-            dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")), 6
-        ).alias("cosine_sim"),
-    )
-    return _rank_topk(scored, k)
-
-
-def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
-    """Deterministic random hyperplanes (public numpy RNG, fixed seed)."""
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_planes, dim)).tolist()
-
-
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    dim: int,
     n_planes: int = 8,
     seed: int = 42,
     vec_col: str = "embedding",
@@ -383,7 +347,9 @@ def lsh_topk(
     measured ~5% recall@5 on the test corpus).  Unioning candidates over L
     independent tables lifts recall to 1-(1-p)^L while candidate volume
     stays ~L × corpus/2^n_planes — the classic recall/cost dial
-    (n_planes ↓ recall, n_tables ↑ recall).
+    (n_planes ↓ recall, n_tables ↑ recall).  Table t's planes are drawn
+    from ``default_rng(seed + t)`` at the vectors' own dimension, so they
+    depend only on (seed, n_planes, n_tables) and the dimension.
 
     Plan shape: corpus and queries each explode to (table, bucket) rows;
     candidates meet in an equi-join on (table, bucket) and dedup to
@@ -392,34 +358,24 @@ def lsh_topk(
     by (table, bucket) making the probe join shuffle-free; the explode is
     n_tables × 8-byte keys per vector, not a vector copy per table.
     """
-    all_planes = [_hyperplanes(dim, n_planes, seed + t) for t in range(n_tables)]
+    bit_weights = (2 ** np.arange(n_planes)).astype(np.int64)
+
     # one GEMM per Arrow batch computes ALL n_tables × n_planes sign bits:
     # (batch, dim) @ (dim, n_tables*n_planes) — the expression form would
     # evaluate 96 interpreted array-dot folds per row (measured ~50x slower
     # at 16 tables); same bucket ids (sign of the same float dot).
-    planes_mat = np.asarray(all_planes, dtype=np.float64).reshape(
-        n_tables * n_planes, dim
-    )
-    bit_weights = (2 ** np.arange(n_planes)).astype(np.int64)
-
     @F.pandas_udf("array<long>")
     def table_buckets(vs: pd.Series) -> pd.Series:
         mat = np.vstack(vs.to_numpy())
-        signs = (mat @ planes_mat.T) > 0
-        signs = signs.reshape(len(mat), n_tables, n_planes)
-        ids = (signs * bit_weights).sum(axis=2)
-        return pd.Series(list(ids))
+        planes = np.vstack([
+            np.random.default_rng(seed + t).standard_normal((n_planes, mat.shape[1]))
+            for t in range(n_tables)
+        ])
+        signs = ((mat @ planes.T) > 0).reshape(len(mat), n_tables, n_planes)
+        return pd.Series(list((signs * bit_weights).sum(axis=2)))
 
-    c_vec = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("__cv"),
-        l2_norm(F.col(vec_col)).alias("__cn"),
-    )
-    q_vec = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
-    )
+    c_vec = norm_side(corpus, id_col, vec_col, "vec_id", "c")
+    q_vec = norm_side(queries, query_id_col, vec_col, "query_id", "q")
 
     def bucketed(df, id_out, vcol):
         return df.select(
@@ -439,16 +395,11 @@ def lsh_topk(
     scored = (
         cand.join(c_vec, "vec_id")
         .join(F.broadcast(q_vec), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")),
-                6,
-            ).alias("cosine_sim"),
-        )
+        .select("query_id", "vec_id", cosine_sim())
     )
-    return _rank_topk(scored, k)
+    return top_k_per_group(
+        scored, ["query_id"], [F.col("cosine_sim").desc(), F.col("vec_id").asc()], k, "rank"
+    )
 
 
 def ivf_topk(
@@ -465,102 +416,56 @@ def ivf_topk(
     """IVF-style approximate top-k: coarse quantize the corpus into inverted
     lists, probe only the query's ``n_probe`` nearest lists.
 
-    The coarse "centroids" are a deterministic corpus sample (every
-    ``len/n_centroids``-th vector by id order) — no iterative k-means pass,
-    which keeps the operator a fixed 3-stage DAG; swapping in trained
-    centroids is a drop-in (they arrive as the same small DataFrame).
+    The coarse centroids are either ``centroids`` (a trained quantizer such
+    as ``kmeans_centroids``, k rows) or the ``n_centroids`` corpus rows with
+    the smallest xxhash64(id) — no iterative k-means pass, which keeps the
+    operator a fixed 3-stage DAG.
 
-    Plan shape: centroids are collected once (n_centroids rows — driver-safe
-    by construction) and broadcast inside expressions; corpus → (list_id,
-    vec) via argmin over centroid dots; queries fan out to n_probe lists;
-    candidates meet in a hash join on list_id.  At 100 TB the corpus can be
-    written bucketed by list_id, making the probe join shuffle-free.
+    Plan shape: centroids are collected once (driver-safe by construction)
+    and inlined as literals; corpus → (list_id, vec) via the top centroid
+    cosine; queries fan out to their n_probe lists, ranked by (sim, cid)
+    descending; candidates meet in a hash join on list_id.  At 100 TB the
+    corpus can be written bucketed by list_id, making the probe join
+    shuffle-free.
     Returns (query_id, vec_id, cosine_sim, rank).
     """
     if centroids is not None:
-        # trained quantizer (e.g. kmeans_centroids) — k rows, driver-safe
         cents = centroids.select("cid", "cvec").collect()
-        return _ivf_with_cents(
-            corpus, queries, k, n_probe, vec_col, id_col, query_id_col, cents
-        )
-    # deterministic coarse centroids: the n_centroids rows with the smallest
-    # xxhash64(id) — a pseudo-random but reproducible spread, fetched with
-    # TakeOrderedAndProject (per-partition heap + driver merge).  NOT a
-    # global row_number window, which would move the whole corpus to one
-    # partition at 100 TB.  Only the sampled ROWS reach the driver.
-    cents = (
-        corpus.select(
-            F.col(id_col).alias("cid"),
-            F.col(vec_col).alias("cvec"),
-        )
-        .orderBy(F.xxhash64(F.col("cid")), F.col("cid"))
-        .limit(n_centroids)
-        .collect()
-    )
-    return _ivf_with_cents(
-        corpus, queries, k, n_probe, vec_col, id_col, query_id_col, cents
+    else:
+        cents = _hash_sample(corpus, id_col, vec_col, n_centroids)
+    cids = F.array(*[F.lit(r["cid"]) for r in cents])
+    c_norms = F.array(
+        *[F.lit(float(sum(float(x) * float(x) for x in r["cvec"]) ** 0.5)) for r in cents]
     )
 
-
-def _ivf_with_cents(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_probe: int,
-    vec_col: str,
-    id_col: str,
-    query_id_col: str,
-    cents: list,
-) -> DataFrame:
-    """Shared IVF probe stage over a collected centroid set (sampled or
-    k-means-trained — same 3-stage DAG either way)."""
-
-    def nearest_lists(vec: Column, n: int) -> Column:
-        """ids of the n centroids with highest cosine to vec (expression)."""
-        scored = F.array(
-            *[
-                F.struct(
-                    (
-                        dot(vec, F.array(*[F.lit(float(x)) for x in row["cvec"]]))
-                        / (
-                            l2_norm(vec)
-                            * F.lit(
-                                float(
-                                    sum(float(x) * float(x) for x in row["cvec"]) ** 0.5
-                                )
-                            )
-                        )
-                    ).alias("sim"),
-                    F.lit(row["cid"]).alias("cid"),
-                )
-                for row in cents
-            ]
+    def nearest_lists(n: int) -> Column:
+        """ids of the n centroids with highest cosine to the vector."""
+        vec = F.col(vec_col)
+        v_norm = l2_norm(vec)
+        scored = F.transform(
+            centroid_dots(vec, [r["cvec"] for r in cents]),
+            lambda d, i: F.struct(
+                (d / (v_norm * c_norms[i])).alias("sim"), cids[i].alias("cid")
+            ),
         )
         top = F.slice(F.reverse(F.array_sort(scored)), 1, n)
         return F.transform(top, lambda s: s["cid"])
 
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("__cv"),
-        l2_norm(F.col(vec_col)).alias("__cn"),
-        F.element_at(nearest_lists(F.col(vec_col), 1), 1).alias("list_id"),
+    c = norm_side(
+        corpus, id_col, vec_col, "vec_id", "c",
+        F.element_at(nearest_lists(1), 1).alias("list_id"),
     )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
-        F.explode(nearest_lists(F.col(vec_col), n_probe)).alias("list_id"),
+    q = norm_side(
+        queries, query_id_col, vec_col, "query_id", "q",
+        F.explode(nearest_lists(n_probe)).alias("list_id"),
     )
     scored = c.join(F.broadcast(q), ["list_id"]).filter(
         F.col("vec_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        "vec_id",
-        F.round(
-            dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")), 6
-        ).alias("cosine_sim"),
+    ).select("query_id", "vec_id", cosine_sim())
+    return top_k_per_group(
+        scored.dropDuplicates(["query_id", "vec_id"]),
+        ["query_id"], [F.col("cosine_sim").desc(), F.col("vec_id").asc()], k, "rank",
     )
-    return _rank_topk(scored.dropDuplicates(["query_id", "vec_id"]), k)
 
 
 def kmeans_centroids(
@@ -569,29 +474,28 @@ def kmeans_centroids(
     n_iter: int = 5,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    cache: bool = True,
 ) -> DataFrame:
     """Spherical k-means (Lloyd's) over an embedding column, DataFrame-native.
 
     The trained coarse quantizer for ``ivf_topk`` and the clustering step of
     semantic dedup (cluster-then-dedup-within-cluster).  Per iteration:
 
-    1. assignment — argmax of dot(vec, centroid) over the k centroids,
-       evaluated as ONE codegen'd array expression (centroids are literals,
-       L2-normalized so dot == cosine ranking); no join, no UDF;
+    1. assignment — ``nearest_centroid``: argmax of dot(vec, centroid) over
+       the k centroids, evaluated as ONE codegen'd array expression
+       (centroids are literals, L2-normalized so dot == cosine ranking); no
+       join, no UDF;
     2. update — element-wise mean per cluster via posexplode →
        groupBy(cluster, pos).avg (map-side partial agg) → re-assemble the
        array with collect_list sorted by position.
 
-    Only k centroid rows ever reach the driver per iteration.  With
-    ``cache=True`` (default) the projected (id, vec) frame is persisted
-    before the loop, so the source is SCANNED ONCE — init materializes the
-    cache and every Lloyd's iteration reads it (verified by a
-    statusTracker-based test); ``cache=False`` re-scans per iteration for
-    corpora larger than cluster cache capacity (there, train on a sample —
-    the quantizer doesn't need every row).  Empty clusters keep their
-    previous centroid.  Deterministic: min-hash-of-id init (same as
-    ivf_topk's sampled centroids), first-max tiebreak.
+    Only k centroid rows ever reach the driver per iteration.  The
+    projected (id, vec) frame is persisted before the loop (the default
+    storage level spills to disk), so the source is SCANNED ONCE — init
+    materializes the cache and every Lloyd's iteration reads it (verified
+    by a statusTracker-based test).  For a corpus far past cluster memory,
+    train on a sample: the quantizer doesn't need every row.  Empty
+    clusters keep their previous centroid.  Deterministic: min-hash-of-id
+    init (``ivf_topk``'s sample), first-max tiebreak.
 
     Iterative-algorithm family, like graph.connected_components — a
     driver-side loop over declarative steps, the reference's batch-loop
@@ -599,35 +503,20 @@ def kmeans_centroids(
     Returns a k-row DataFrame (cid int, cvec array<double>), unit-norm.
     """
     spark = corpus.sparkSession
-    work = corpus.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
-    if cache:
-        work = work.persist()
+    work = corpus.select(
+        F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
+    ).persist()
     try:
-        # init: k rows with the smallest xxhash64(id) — deterministic spread
-        # via TakeOrderedAndProject; no global-order window (single-partition
-        # hazard).  This job also materializes the cache when enabled.
-        init = (
-            work.select(F.col("__v").alias("cvec"))
-            .orderBy(F.xxhash64(F.col("__id")), F.col("__id"))
-            .limit(k)
-            .collect()
-        )
+        # init: the k hash-sampled rows; this job also materializes the cache
         cents = []
-        for row in init:
+        for row in _hash_sample(work, "__id", "__v", k):
             v = np.asarray(row["cvec"], dtype=np.float64)
             n = np.linalg.norm(v)
             cents.append(v / n if n > 0 else v)
 
         for _ in range(n_iter):
-            dots = F.array(
-                *[
-                    dot(F.col("__v"), F.array(*[F.lit(float(x)) for x in c]))
-                    for c in cents
-                ]
-            )
             assigned = work.select(
-                (F.array_position(dots, F.array_max(dots)) - 1).alias("cluster"),
-                "__v",
+                nearest_centroid(F.col("__v"), cents).alias("cluster"), "__v"
             )
             means = (
                 assigned.select("cluster", F.posexplode("__v").alias("pos", "val"))
@@ -650,8 +539,7 @@ def kmeans_centroids(
                     new_cents[int(row["cluster"])] = v / n
             cents = new_cents
     finally:
-        if cache:
-            work.unpersist()
+        work.unpersist()
 
     return literal_frame(
         spark,
@@ -668,12 +556,14 @@ def cosine_topk_batched(
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """Exact cosine top-k via batched BLAS scoring — the fast form of
-    ``cosine_topk`` (same results, same bounded-query-set contract).
+    """Exact cosine top-k via batched BLAS scoring: for each query vector
+    the k nearest corpus vectors, self-matches excluded — the same rows as
+    the expression-form reference ``tests/ref_similarity.py::cosine_topk``.
+    Returns (query_id, vec_id, cosine_sim, rank).
 
     The query matrix is collected once (bounded by the broadcast contract —
-    ≤ ~100k×64-d float64, same limit the expression form's broadcast join
-    has), L2-normalized, and shipped to executors as a broadcast variable.
+    ≤ ~100k×64-d float64, same limit the reference's broadcast join has),
+    L2-normalized, and shipped to executors as a broadcast variable.
     Each corpus Arrow batch scores against ALL queries in one numpy matmul
     (C·Qᵀ — hundreds of MFLOPs per batch at BLAS speed instead of
     interpreted per-pair zip_with lambdas), keeps its per-batch top-k per
@@ -693,7 +583,6 @@ def bucketed_cosine_dedup(
     threshold: float,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    round_digits: int = 6,
     max_bucket: int = 100_000,
 ) -> DataFrame:
     """Within-bucket embedding-cosine dedup (the SemDeDup removal rule,
@@ -730,7 +619,7 @@ def bucketed_cosine_dedup(
         pdf = pdf.sort_values("id").reset_index(drop=True)
         ids = pdf["id"].to_numpy(dtype=np.int64)
         m, n = _matrix(pdf)
-        sims = _cosines(m, n, m, n, round_digits)
+        sims = _cosines(m, n, m, n)
         hit = np.tril(sims >= thr, k=-1)  # [j, i] with i < j in id order
         removed = hit.any(axis=1)
         first = hit.argmax(axis=1)  # min row index == min id (sorted)
@@ -773,8 +662,8 @@ def semantic_dedup(
 
     Composition of two existing primitives: ``kmeans_centroids`` (spherical
     Lloyd's, corpus scanned once per iteration off a persisted projection)
-    trains the quantizer; assignment is the same codegen'd argmax expression
-    the trainer uses (centroids inlined as literals — no join); then
+    trains the quantizer; assignment is the trainer's own
+    ``nearest_centroid`` (centroids inlined as literals — no join); then
     ``bucketed_cosine_dedup`` applies the lower-id keep-rule per cluster.
 
     Approximate by design (a true near-dup pair split across two clusters is
@@ -788,14 +677,10 @@ def semantic_dedup(
     cents = kmeans_centroids(
         corpus, k=k, n_iter=n_iter, vec_col=vec_col, id_col=id_col
     ).collect()
-    cvecs = [[float(x) for x in r["cvec"]] for r in sorted(cents, key=lambda r: r["cid"])]
-    dots = F.array(
-        *[dot(F.col(vec_col).cast("array<double>"), F.array(*[F.lit(x) for x in c]))
-          for c in cvecs]
-    )
+    cvecs = [r["cvec"] for r in sorted(cents, key=lambda r: r["cid"])]
     assigned = corpus.select(
         F.col(id_col),
-        (F.array_position(dots, F.array_max(dots)) - 1).cast("long").alias("cluster"),
+        nearest_centroid(F.col(vec_col).cast("array<double>"), cvecs).alias("cluster"),
         F.col(vec_col),
     )
     return bucketed_cosine_dedup(
@@ -814,7 +699,6 @@ def cross_cosine_flags(
     threshold: float,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    round_digits: int = 6,
     max_probes: int = 200_000,
 ) -> DataFrame:
     """Cross-corpus embedding contamination flags: for every corpus row,
@@ -843,7 +727,7 @@ def cross_cosine_flags(
     thr = float(threshold)
 
     def flags(ids, am, an, pdf, side_v):
-        sims = _cosines(am, an, *side_v, round_digits)
+        sims = _cosines(am, an, *side_v)
         n_hits = (sims >= thr).sum(axis=1)
         keep = n_hits > 0
         return pd.DataFrame(

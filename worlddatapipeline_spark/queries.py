@@ -352,8 +352,8 @@ def q_first_part_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-occurrence dedup via ranking window (`scene_copy.py:236-310`):
     cheapest part (ties → lowest key) per brand."""
     (part,) = _t(spark, sf_dir, "part")
-    return join_ops.first_occurrence(
-        part, ["p_brand"], [F.col("p_retailprice").asc(), F.col("p_partkey").asc()]
+    return join_ops.top_k_per_group(
+        part, ["p_brand"], [F.col("p_retailprice").asc(), F.col("p_partkey").asc()], 1
     ).select("p_brand", "p_partkey", "p_name", "p_retailprice")
 
 
@@ -860,7 +860,8 @@ def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/similarity.py::cosine_topk_batched): every 50th vector queries
     the corpus; scoring is one numpy matmul per Arrow batch against the
     broadcast query matrix with per-batch top-k (~2.7x the interpreted
-    zip_with expression form, which cosine_topk keeps as reference)."""
+    zip_with expression form, which tests/ref_similarity.py::cosine_topk
+    keeps as reference)."""
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     corpus = embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
@@ -975,9 +976,7 @@ def q_embedding_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = corpus.filter(F.col("vec_id") % 8 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = sim_ops.lsh_topk(
-        corpus, queries, k=5, dim=64, n_planes=6, seed=42, n_tables=16
-    )
+    out = sim_ops.lsh_topk(corpus, queries, k=5, n_planes=6, seed=42, n_tables=16)
     return sim_ops.topk_self_contract(out)
 
 

@@ -2708,8 +2708,7 @@ def q_embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition: every cluster has exactly its 8 group members.  The
     full iterative path still executes — init, 3 assignment/update
     rounds, final assignment.  Self-check columns stay."""
-    from .operators.similarity import dot as vdot
-    from .operators.similarity import kmeans_centroids
+    from .operators.similarity import kmeans_centroids, nearest_centroid
 
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     corpus = _planted_kmeans_corpus(embeddings)
@@ -2720,16 +2719,9 @@ def q_embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cluster long, n_vectors long, cluster_in_range boolean, "
             "size_positive boolean, sizes_sum_to_corpus boolean",
         )
-    cents = kmeans_centroids(corpus, k=8, n_iter=3)
-    rows = cents.collect()
-    dots = F.array(
-        *[
-            vdot(F.col("embedding"), F.array(*[F.lit(float(x)) for x in r["cvec"]]))
-            for r in rows
-        ]
-    )
+    cents = [r["cvec"] for r in kmeans_centroids(corpus, k=8, n_iter=3).collect()]
     sizes = (
-        corpus.select((F.array_position(dots, F.array_max(dots)) - 1).alias("cluster"))
+        corpus.select(nearest_centroid(F.col("embedding"), cents).alias("cluster"))
         .groupBy("cluster")
         .agg(F.count(F.lit(1)).alias("n_vectors"))
     )
@@ -3537,9 +3529,10 @@ GROUP BY 1
 
 def q_embedding_cosine_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs
-    (operators/similarity.py::cosine_pairs): exact brute-force verify at test
-    scale; at 100 TB the identical verify expression runs over LSH/IVF
-    candidates instead of the full pair space.  Threshold applies to the
+    (operators/similarity.py::cosine_pairs_batched): exact brute-force
+    verify at test scale, one BLAS matmul per Arrow batch; at 100 TB the
+    identical batch scorer runs over LSH/IVF candidates instead of the full
+    pair space.  Threshold applies to the
     rounded cosine on both engines → boundary-deterministic → oracle-checked."""
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     corpus = embeddings.select(
@@ -4622,7 +4615,7 @@ def q_embedding_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     approx = sim_ops.lsh_topk(
-        corpus, queries, k=5, dim=64, n_planes=6, seed=42, n_tables=16
+        corpus, queries, k=5, n_planes=6, seed=42, n_tables=16
     ).select("query_id", "vec_id")
     hits = exact.join(approx, ["query_id", "vec_id"], "left_semi")
     out = (
@@ -4694,8 +4687,7 @@ def q_kmeans_objective_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment and update steps preserve.  Emits (k, n_vectors, improved)
     vs a constant oracle; a broken update step (e.g. an un-normalized mean
     or a shuffled centroid index) flips `improved` and breaks the hash."""
-    from .operators.similarity import dot as vdot
-    from .operators.similarity import kmeans_centroids, l2_norm
+    from .operators.similarity import centroid_dots, kmeans_centroids, l2_norm
 
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     corpus = embeddings.select(
@@ -4703,15 +4695,8 @@ def q_kmeans_objective_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def objective(cents_df) -> float:
-        rows = cents_df.collect()
-        dots = F.array(
-            *[
-                vdot(
-                    F.col("embedding"),
-                    F.array(*[F.lit(float(x)) for x in r["cvec"]]),
-                )
-                for r in rows
-            ]
+        dots = centroid_dots(
+            F.col("embedding"), [r["cvec"] for r in cents_df.collect()]
         )
         return corpus.select(
             (F.array_max(dots) / l2_norm(F.col("embedding"))).alias("c")
@@ -5028,23 +5013,17 @@ def q_semantic_dedup_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     a constant oracle, so an invalid pair breaks the driver hash."""
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     removed = sim_ops.semantic_dedup(embeddings, threshold=0.35, k=8, n_iter=3)
-    va = embeddings.select(
-        F.col("vec_id").alias("dup_of"),
-        F.col("embedding").cast("array<double>").alias("va"),
+    vecs = embeddings.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    vb = embeddings.select(
-        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("vb")
-    )
+    q = sim_ops.norm_side(vecs, "vec_id", "embedding", "dup_of", "q")
+    c = sim_ops.norm_side(vecs, "vec_id", "embedding", "vec_id", "c")
     checked = (
-        removed.join(va, "dup_of")
-        .join(vb, "vec_id")
+        removed.join(q, "dup_of")
+        .join(c, "vec_id")
         .select(
             (F.col("dup_of") < F.col("vec_id")).alias("order_ok"),
-            (
-                F.round(
-                    sim_ops.cosine(F.col("va"), F.col("vb")), 6
-                ) >= 0.35
-            ).alias("sim_ok"),
+            (sim_ops.cosine_sim() >= 0.35).alias("sim_ok"),
         )
     )
     return checked.agg(

@@ -121,7 +121,7 @@ def content_subdir_first_occurrence(
     the reference's first-occurrence dedup over listing keys
     (`scene_copy.py:236-310`), via ranking window instead of dict insertion
     order.  Scene = first segment; content dir = segment after 'Content'."""
-    from ..operators.joins import first_occurrence
+    from ..operators.joins import top_k_per_group
 
     parts = F.split(F.col(key_col), "/")
     content_idx = F.array_position(parts, "Content")
@@ -136,10 +136,11 @@ def content_subdir_first_occurrence(
         )
         .filter(F.col("content_dir").isNotNull() & (F.col("content_dir") != ""))
     )
-    return first_occurrence(
+    return top_k_per_group(
         with_dir,
         ["scene", "content_dir"],
         [F.length("key").asc(), F.col("key").asc()],
+        1,
     ).select("scene", "content_dir", F.col("key").alias("first_key"))
 
 
